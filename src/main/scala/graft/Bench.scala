@@ -1,8 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
 
-/** Benchmark main: one JSON line with per-query wall seconds.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Benchmark main: one JSON line with per-query wall seconds, plus
+  * per-query Spark counters in the shard lines.
+  *
+  *   [SPARK_GRAFT_SF_DIR=...] [SPARK_GRAFT_CPUS=N] [SPARK_GRAFT_BENCH_REPS=N] \
+  *     sbt "runMain graft.Bench [name,name,...]"
+  *
+  * The optional argument is Verify's query-name filter: only the named
+  * queries are warmed up and timed. An unknown name fails before any
+  * query runs.
   *
   * Load-proofing (rounds 5-7 — three rounds of driver records were
   * burned on measurement artifacts, not regressions):
@@ -29,21 +40,79 @@ import org.apache.spark.sql.SparkSession
   *    the sf0.001 sibling is missing, warmup is SKIPPED (running the
   *    full suite at the measured SF would silently double wall time and
   *    turn "measured" numbers into warm-cache reruns) and the record
-  *    says so instead of hiding it.
+  *    says so instead of hiding it;
+  *  - each run carries its own Spark job group, and a listener sums
+  *    jobs, stages, tasks, scan input bytes and shuffle read/write bytes
+  *    per group. The listener bus is drained once after the last pass,
+  *    so the timed path pays no sleep and no extra Spark job.
   */
 object Bench {
+  /** Spark counters of one query run. */
+  final case class Counters(jobs: Int, stages: Int, tasks: Int, inputBytes: Long,
+                            shuffleReadBytes: Long, shuffleWriteBytes: Long) {
+    def +(o: Counters): Counters = Counters(jobs + o.jobs, stages + o.stages,
+      tasks + o.tasks, inputBytes + o.inputBytes,
+      shuffleReadBytes + o.shuffleReadBytes, shuffleWriteBytes + o.shuffleWriteBytes)
+    def toSeq: Seq[Long] =
+      Seq(jobs, stages, tasks, inputBytes, shuffleReadBytes, shuffleWriteBytes)
+  }
+  object Counters {
+    val Zero: Counters = Counters(0, 0, 0, 0L, 0L, 0L)
+    val Fields: Seq[String] = Seq("jobs", "stages", "tasks", "input_bytes",
+      "shuffle_read_bytes", "shuffle_write_bytes")
+  }
+
+  /** Sums [[Counters]] per job group. A job counts toward the group its
+    * submitting thread had set (Spark carries the group into broadcast
+    * and subquery threads); its stages count through the job's stage
+    * ids. Read a group only after `ListenerBridge.drain`. */
+  final class GroupCounters extends SparkListener {
+    private val stageGroup = new ConcurrentHashMap[Int, String]
+    private val byGroup = new ConcurrentHashMap[String, Counters]
+    private def add(group: String, c: Counters): Unit = byGroup.merge(group, c, _ + _)
+
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .foreach { g =>
+          j.stageIds.foreach(stageGroup.put(_, g))
+          add(g, Counters.Zero.copy(jobs = 1))
+        }
+
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      Option(stageGroup.get(s.stageInfo.stageId)).foreach { g =>
+        val m = s.stageInfo.taskMetrics
+        add(g, Counters(0, 1, s.stageInfo.numTasks, m.inputMetrics.bytesRead,
+          m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten))
+      }
+
+    def apply(group: String): Counters = byGroup.getOrDefault(group, Counters.Zero)
+  }
+
+  /** One run of a query under job group `group`: wall seconds, or -1
+    * when it failed (the failure is printed). Outside the timed section
+    * it drops the query's internal caches, so the next run starts
+    * cache-cold and isn't squeezed by accumulated storage memory. */
+  def timeQuery(spark: SparkSession, name: String,
+                fn: (SparkSession, String) => DataFrame, sfDir: String,
+                group: String): Double = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, name)
+    val t0 = System.nanoTime()
+    val err = try { fn(spark, sfDir).count(); None } catch { case e: Throwable => Some(e) }
+    val sec = (System.nanoTime() - t0) / 1e9
+    sc.clearJobGroup()
+    spark.catalog.clearCache()
+    err.foreach(SparkEntry.printFailure("bench", name, _))
+    if (err.isEmpty) sec else -1.0
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = SparkEntry.select(args.headOption)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val counters = new GroupCounters
+    spark.sparkContext.addSparkListener(counters)
 
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
@@ -52,9 +121,9 @@ object Bench {
     // window (round 6's record needed forensic inference instead)
     val loadAvgs = scala.collection.mutable.ArrayBuffer(loadAvg())
 
-    // warmup (uncounted): run EVERY query once at the smallest SF — same
-    // plan shapes, trivial data — so each measured timing below pays for
-    // the plan, not first-touch Janino/JIT compilation. (Per-family
+    // warmup (uncounted): run every selected query once at the smallest
+    // SF — same plan shapes, trivial data — so each measured timing below
+    // pays for the plan, not first-touch Janino/JIT compilation. (Per-family
     // spot-warmup proved insufficient: the first query of any untouched
     // family absorbed that family's whole codegen cost, misattributing
     // ~5 s to innocent plans.) Caches built during warmup are keyed on
@@ -63,10 +132,9 @@ object Bench {
     val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
     val warmup =
       if (sibling.isDirectory && sibling.getAbsolutePath != new java.io.File(sfDir).getAbsolutePath) {
-        SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-          try fn(spark, sibling.getAbsolutePath).count() catch { case _: Throwable => () }
+        names.foreach { case (name, fn) =>
+          timeQuery(spark, name, fn, sibling.getAbsolutePath, "warmup")
         }
-        spark.catalog.clearCache()
         sibling.getAbsolutePath
       } else "skipped_no_small_sf"
 
@@ -79,21 +147,18 @@ object Bench {
     // every rep of a few (the round-6 record's failure mode). Cache
     // clearing after each query keeps the passes independent, so the
     // per-query samples are exchangeable and the median is still valid.
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
     val perRep = Array.fill(names.length)(Vector.empty[Double])
-    for (_ <- 1 to reps) {
-      names.zipWithIndex.foreach { case ((_, fn), i) =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-        val sec = (System.nanoTime() - t0) / 1e9
-        // outside the timed section: drop this query's internal caches so
-        // later queries (and the next pass) start cache-cold and aren't
-        // squeezed by accumulated storage memory
-        spark.catalog.clearCache()
-        perRep(i) :+= (if (ok) sec else -1.0)
+    def group(name: String, rep: Int) = s"$name#$rep"
+    for (rep <- 1 to reps) {
+      names.zipWithIndex.foreach { case ((name, fn), i) =>
+        perRep(i) :+= timeQuery(spark, name, fn, sfDir, group(name, rep))
       }
       loadAvgs += loadAvg()
     }
+    // the counters of each query's LAST pass: by then any store the
+    // query serves from is built, so they are the steady serve cost
+    org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
+    val lastCounters = names.map { case (name, _) => counters(group(name, reps)) }.toVector
     // a failed rep is DROPPED before the median (round 6): -1 sentinels
     // sort first, so with reps=3 one intermittent failure used to hide
     // behind a clean positive median while two poisoned the total with
@@ -143,11 +208,16 @@ object Bench {
     // lines each well under any capture window: medians can be recomputed
     // and a poisoned window spotted (one rep >> the others) from the
     // driver artifact alone even if the long line above is truncated
+    // — each shard also carries its queries' last-pass counters, in the
+    // order its "counter_fields" names
+    val counterFields = Counters.Fields.map("\"" + _ + "\"").mkString("[", ",", "]")
     val shardLines = names.zipWithIndex.grouped(10).zipWithIndex.map { case (grp, s) =>
-      val m = grp.map { case ((n, _), i) =>
-        "\"" + n + "\":" + perRep(i).map(f3).mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      s"""{"metric":"bench_shard","shard":$s,"reps":$m}"""
+      def perQuery(v: Int => String) = grp.map { case ((n, _), i) => "\"" + n + "\":" + v(i) }
+        .mkString("{", ",", "}")
+      val m = perQuery(i => perRep(i).map(f3).mkString("[", ",", "]"))
+      val c = perQuery(i => lastCounters(i).toSeq.mkString("[", ",", "]"))
+      s"""{"metric":"bench_shard","shard":$s,"reps":$m,""" +
+        s""""counter_fields":$counterFields,"counters":$c}"""
     }.toVector
     // per-query MEDIAN lines — round 9: the WHOLE set must fit the
     // driver's ~2000-char tail window TOGETHER with the headline total

@@ -26,10 +26,15 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
-  /** Local session for tests: one per JVM, shared across suites. */
-  lazy val test: SparkSession = {
-    val s = builder("local[4]", 4).getOrCreate()
+  /** The one way a main gets a session: `local[cpus]` with `cpus`
+    * shuffle partitions and WARN logging. A main that needs another SQL
+    * conf sets it with `spark.conf.set` on the returned session. */
+  def local(cpus: Int): SparkSession = {
+    val s = builder(s"local[$cpus]", cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Local session for tests: one per JVM, shared across suites. */
+  lazy val test: SparkSession = local(4)
 }

@@ -17,10 +17,7 @@ object Main {
     args.sliding(2).collectFirst { case Array(`name`, v) => v }.getOrElse(default)
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_MASTER", "local[4]"),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     try run(spark, args)
     finally spark.stop()
   }

@@ -1,40 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare in tools/check.py.
+  *
+  *   runMain graft.Verify <sfDir> <outDir> [name,name,...]
+  *
+  * The optional 3rd arg filters by query name (iteration aid; the gate
+  * runs with 2 args = everything). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter (iteration aid;
-    // the driver always runs with 2 args = everything)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.select(args.lift(2))
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        // surface the ROOT cause too — a fatal error inside Spark's
-        // broadcast/codegen futures reaches here as a wrapper whose
-        // message ("Boxed Exception") names nothing
-        var root: Throwable = e
-        while (root.getCause != null && (root.getCause ne root)) root = root.getCause
-        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}" +
-          (if (root ne e) s" | root: ${root.getClass.getName}: ${root.getMessage}" else ""))
-        root.getStackTrace.take(6)
-          .foreach(f => System.err.println(s"[verify]   at $f"))
-      }
+      catch { case e: Throwable => SparkEntry.printFailure("verify", name, e) }
       // operator-internal caches served their query; drop them so 71
       // queries in one session don't accumulate storage memory
       spark.catalog.clearCache()

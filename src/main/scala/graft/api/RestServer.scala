@@ -77,10 +77,10 @@ object RestServer {
           case None => Resp(400, obj("error" -> "No input path given"))
           case Some(path) =>
             val outDir = q.getOrElse("output_dir", "extracted_papers")
+            val numPapers = intParam(q, "num_papers").getOrElse(1000)
+            val seed = intParam(q, "seed").getOrElse(42)
             val id = Jobs.submitAsync("parquet", outDir) {
-              Extractor.extractPapers(spark, path, outDir,
-                q.getOrElse("num_papers", "1000").toInt,
-                q.getOrElse("seed", "42").toInt)
+              Extractor.extractPapers(spark, path, outDir, numPapers, seed)
             }
             ok(obj("job_id" -> id, "status" -> "running",
               "message" -> s"Processing $path in the background"))
@@ -109,17 +109,13 @@ object RestServer {
           case None => Resp(400, obj("error" -> "No input path given"))
           case Some(path) =>
             val outDir = q.getOrElse("output_dir", "wikir_pdfs")
-            scala.util.Try(q.getOrElse("limit", "100").toInt) match {
-              case scala.util.Failure(_) =>
-                Resp(400, obj("error" -> "Limit must be an integer"))
-              case scala.util.Success(limit) =>
-                val id = Jobs.submitAsync("wikir", outDir) {
-                  WikirSource.extract(spark, spark.read.parquet(path), outDir, limit)
-                }
-                ok(obj("job_id" -> id, "status" -> "running",
-                  "message" -> (s"Processing wikir dataset $path in the background " +
-                    s"(limit: ${math.min(limit, 500)})")))
+            val limit = intParam(q, "limit").getOrElse(100)
+            val id = Jobs.submitAsync("wikir", outDir) {
+              WikirSource.extract(spark, spark.read.parquet(path), outDir, limit)
             }
+            ok(obj("job_id" -> id, "status" -> "running",
+              "message" -> (s"Processing wikir dataset $path in the background " +
+                s"(limit: ${math.min(limit, 500)})")))
         }
       }
     })
@@ -145,55 +141,51 @@ object RestServer {
             "No listing_path given (local category snapshot parquet; live crawl is out of engine scope)"))
           case Some(path) =>
             val outDir = q.getOrElse("output_dir", "ww2_articles")
-            scala.util.Try(q.getOrElse("limit", "200").toInt) match {
-              case scala.util.Failure(_) =>
-                Resp(400, obj("error" -> "Limit must be an integer"))
-              case scala.util.Success(limit) =>
-                val capped = graft.sources.CrawlSource.clampLimit(limit)
-                val contentPath = q.get("content_path")
-                val id = Jobs.submitAsync("ww2_wiki", outDir) {
-                  import spark.implicits._
-                  import org.apache.spark.sql.functions._
-                  val titles = graft.sources.CrawlSource.articleTitles(
-                    graft.sources.CrawlSource.parquetProvider(spark, path), capped)
-                  val docs = contentPath match {
-                    case None =>
-                      // provider route: the injected live fetch (or the
-                      // no-network default, whose misses all keep the
-                      // placeholder — byte-identical to the r11 arm)
-                      graft.sources.CrawlSource.fetchBodies(spark, titles, ww2Bodies)
-                    case Some(cp) =>
-                      val raw = spark.read.parquet(cp)
-                      val bodyCol =
-                        if (raw.columns.contains("content")) col("content")
-                        else col("text")
-                      val sel = titles.zipWithIndex
-                        .map { case (t, i) => (i.toLong, t) }
-                        .toDF("doc_id", "title")
-                      // body table may be corpus-sized; the bounded
-                      // selection is the broadcast side, and max()
-                      // makes a multi-revision snapshot deterministic
-                      val hit = raw.select(col("title"), bodyCol.as("content"))
-                        .join(broadcast(sel), Seq("title"))
-                        .groupBy(col("doc_id"), col("title"))
-                        .agg(max(col("content")).as("content"))
-                      val miss = sel
-                        .join(hit.select(col("doc_id")), Seq("doc_id"), "left_anti")
-                        .select(col("doc_id"), col("title"),
-                          concat(lit("Wikipedia article: "), col("title"),
-                            lit("\n\n(Article body download requires " +
-                              "live wiki access - out of engine scope. Title " +
-                              "selected from the local category snapshot.)"))
-                            .as("content"))
-                      hit.unionByName(miss)
-                  }
-                  graft.sinks.DocumentExportSink.export(
-                    docs.repartition(math.max(spark.sparkContext.defaultParallelism, 4)),
-                    outDir, graft.sinks.DocumentExportSink.PdfRenderer, prefix = "ww2")
-                }
-                ok(obj("job_id" -> id, "status" -> "running",
-                  "message" -> s"Downloading WW2 Wikipedia articles in the background (limit: $capped)"))
+            val limit = intParam(q, "limit").getOrElse(200)
+            val capped = graft.sources.CrawlSource.clampLimit(limit)
+            val contentPath = q.get("content_path")
+            val id = Jobs.submitAsync("ww2_wiki", outDir) {
+              import spark.implicits._
+              import org.apache.spark.sql.functions._
+              val titles = graft.sources.CrawlSource.articleTitles(
+                graft.sources.CrawlSource.parquetProvider(spark, path), capped)
+              val docs = contentPath match {
+                case None =>
+                  // provider route: the injected live fetch (or the
+                  // no-network default, whose misses all keep the
+                  // placeholder — byte-identical to the r11 arm)
+                  graft.sources.CrawlSource.fetchBodies(spark, titles, ww2Bodies)
+                case Some(cp) =>
+                  val raw = spark.read.parquet(cp)
+                  val bodyCol =
+                    if (raw.columns.contains("content")) col("content")
+                    else col("text")
+                  val sel = titles.zipWithIndex
+                    .map { case (t, i) => (i.toLong, t) }
+                    .toDF("doc_id", "title")
+                  // body table may be corpus-sized; the bounded
+                  // selection is the broadcast side, and max()
+                  // makes a multi-revision snapshot deterministic
+                  val hit = raw.select(col("title"), bodyCol.as("content"))
+                    .join(broadcast(sel), Seq("title"))
+                    .groupBy(col("doc_id"), col("title"))
+                    .agg(max(col("content")).as("content"))
+                  val miss = sel
+                    .join(hit.select(col("doc_id")), Seq("doc_id"), "left_anti")
+                    .select(col("doc_id"), col("title"),
+                      concat(lit("Wikipedia article: "), col("title"),
+                        lit("\n\n(Article body download requires " +
+                          "live wiki access - out of engine scope. Title " +
+                          "selected from the local category snapshot.)"))
+                        .as("content"))
+                  hit.unionByName(miss)
+              }
+              graft.sinks.DocumentExportSink.export(
+                docs.repartition(math.max(spark.sparkContext.defaultParallelism, 4)),
+                outDir, graft.sinks.DocumentExportSink.PdfRenderer, prefix = "ww2")
             }
+            ok(obj("job_id" -> id, "status" -> "running",
+              "message" -> s"Downloading WW2 Wikipedia articles in the background (limit: $capped)"))
         }
       }
     })
@@ -203,18 +195,14 @@ object RestServer {
         q.get("path") match {
           case None => Resp(400, obj("error" -> "No input path given"))
           case Some(path) =>
-            scala.util.Try(q.get("limit").map(_.toInt)) match {
-              case scala.util.Failure(_) =>
-                Resp(400, obj("error" -> "Limit must be an integer"))
-              case scala.util.Success(limit) =>
-                val id = Jobs.submitAsync("wikir_analysis", "", singleRowJson) {
-                  val docs = WikirSource.normalize(spark.read.parquet(path))
-                  val capped = limit.fold(docs)(n => docs.orderBy("doc_id").limit(n))
-                  Extractor.analyzeTokens(capped, "content")
-                }
-                ok(obj("job_id" -> id, "status" -> "running",
-                  "message" -> s"Analyzing wikir dataset $path in the background"))
+            val limit = intParam(q, "limit")
+            val id = Jobs.submitAsync("wikir_analysis", "", singleRowJson) {
+              val docs = WikirSource.normalize(spark.read.parquet(path))
+              val capped = limit.fold(docs)(n => docs.orderBy("doc_id").limit(n))
+              Extractor.analyzeTokens(capped, "content")
             }
+            ok(obj("job_id" -> id, "status" -> "running",
+              "message" -> s"Analyzing wikir dataset $path in the background"))
         }
       }
     })
@@ -269,10 +257,22 @@ object RestServer {
   }
   private def ok(json: String) = Resp(200, json)
 
+  /** A malformed query parameter: [[handle]] answers it with a 400. */
+  private final class BadParam(msg: String) extends Exception(msg)
+
+  /** Integer query parameter `name`, `None` when absent; a value that is
+    * not an integer is the caller's error (400), not the server's (500). */
+  private def intParam(q: Map[String, String], name: String): Option[Int] =
+    q.get(name).map(v => v.toIntOption.getOrElse(
+      throw new BadParam(s"${name.capitalize} must be an integer")))
+
   private def handle(ex: HttpExchange)(f: Map[String, String] => Resp): Unit = {
     val resp =
       try f(query(ex))
-      catch { case e: Exception => Resp(500, obj("error" -> String.valueOf(e.getMessage))) }
+      catch {
+        case e: BadParam => Resp(400, obj("error" -> e.getMessage))
+        case e: Exception => Resp(500, obj("error" -> String.valueOf(e.getMessage)))
+      }
     ex.getResponseHeaders.set("Content-Type", resp.contentType)
     ex.sendResponseHeaders(resp.code, resp.body.length)
     ex.getResponseBody.write(resp.body)

@@ -1663,7 +1663,7 @@ object Similarity {
     // filter the later label===clabel join condition subsumed anyway.
     // (Distinct on the driver over the collected probe rows — label
     // values are groupable atomics, so Seq.distinct == Spark distinct.)
-    val probedLabels = probeRows.map(_.get(2)).toSeq.distinct
+    val probedLabels = probeRows.map(_.getAs[Any]("clabel")).toSeq.distinct
     val codesProbed =
       if (probedLabels.isEmpty) codes.filter(lit(false))
       else codes.filter(col("label").isInCollection(probedLabels))
@@ -1746,8 +1746,10 @@ object Similarity {
     // whole set (so no separate count), over budget the semi-join path
     // serves without the full id set ever reaching the driver (the
     // round-15 concern, preserved — at most budget+1 rows land here).
+    // The budget is clamped BEFORE the +1: a Long.MaxValue conf would
+    // otherwise overflow into a wrong limit.
     val budget = refineLiteralMax(spark)
-    val idsHead = ids.limit(math.min(budget + 1, Int.MaxValue.toLong).toInt)
+    val idsHead = ids.limit((math.min(budget, Int.MaxValue - 1L) + 1).toInt)
       .collect().map(_.get(0))
     val overBudget = idsHead.length > budget
     // ADAPTIVE refine source (round 14, the bm25ServeStored pattern):

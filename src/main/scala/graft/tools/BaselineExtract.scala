@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** The graft side of BASELINE.md's re-measure recipe, as a committed
   * main so every round can refresh the 2×-bar numbers the same way
   * (VERDICT r11 #8): times `Extractor.extractPapers` itself — JVM/sbt
@@ -20,11 +18,7 @@ import org.apache.spark.sql.SparkSession
   */
 object BaselineExtract {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
 
     def timed(label: String, path: String, n: Int): Unit = {
       for (rep <- 0 to 1) {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Full-suite decade record: every SparkEntry query timed once at sf0.1
   * and once at synthesized sf1 (ScaleSf1's FK-consistent 10× corpus),
   * growth factor = sf1/sf0.1 per query. The headliner decade studies
@@ -17,29 +15,15 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchSf1 {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     ScaleSf1.ensureCorpus(spark)
 
-    val names = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-    // codegen warmup: every query once at the smallest SF
-    names.foreach { case (_, fn) =>
-      try fn(spark, "/root/testdata/sf0.001").count() catch { case _: Throwable => () }
-    }
-    spark.catalog.clearCache()
-
+    val names = graft.SparkEntry.select(None)
     def timeAt(dir: String): Map[String, Double] =
       names.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, dir).count(); true } catch { case _: Throwable => false }
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        name -> (if (ok) sec else -1.0)
+        name -> graft.Bench.timeQuery(spark, name, fn, dir, group = dir)
       }.toMap
+    timeAt("/root/testdata/sf0.001") // codegen warmup: every query once at the smallest SF
 
     val at01 = timeAt(ScaleSf1.Src)
     val at1 = timeAt(ScaleSf1.Dir)

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-level profile of cdcChunkDedup at the 1 M-doc replicated
@@ -7,11 +6,7 @@ import org.apache.spark.sql.functions._
   * (cdcChunkFrame), the chunk-hash rank, or the reassembly agg? */
 object ProfCdc {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     val dir = "target/tmp/bigsf"
     Corpora.linkBigDocuments(spark, dir)
     val docs = graft.sources.Tables.documents(spark, dir)

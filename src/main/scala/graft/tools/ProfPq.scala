@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Phase timing for the inline PQ path: train+encode (pqIndexOf) vs
@@ -12,12 +11,7 @@ import org.apache.spark.sql.functions._
 object ProfPq {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     def t[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"[profpq] $name%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s"); r

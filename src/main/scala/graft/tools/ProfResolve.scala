@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.Layout
 
 /** Local FS with a fixed per-metadata-op latency — the S3-shaped
@@ -36,10 +35,7 @@ object SlowLocalFs { val LatencyMs = 30L }
   */
 object ProfResolve {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(4)
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("profres").toString
     spark.conf.set("spark.graft.cache.root", root)

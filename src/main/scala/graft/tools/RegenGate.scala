@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFns
 
@@ -43,11 +42,7 @@ object RegenGate {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "target/tmp/regen5000"
     val srcDir = "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(8)
 
     new java.io.File(outDir).mkdirs()
     for (t <- Seq("region", "nation", "customer", "supplier", "part",

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.api.Extractor
 
@@ -7,10 +6,7 @@ import graft.api.Extractor
   * (the reference's pandas path is timed separately from python). */
 object Scale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     val big = Corpora.ensureBigDocuments(spark)
     spark.read.parquet(big).count() // warm
     val out = "target/tmp/big_extract"

@@ -1,14 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 object ScaleAll {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     val dir = "target/tmp/bigsf"
     // big events (1M) and embeddings (100k) alongside the 1M docs
     if (!new java.io.File(s"$dir/events.parquet").exists()) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.functions.Bloom
@@ -26,16 +25,12 @@ import graft.functions.Bloom
   */
 object ScaleBloom {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      // BloomFilterAggregate clamps to these session caps (defaults:
-      // 4 M items / 8 MiB — runtime-filter sizing, not catalog sizing);
-      // raise them or a 10 M-key build silently degrades to ~11% fpp
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "100000000")
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "1073741824")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
+    // BloomFilterAggregate clamps to these session caps (defaults:
+    // 4 M items / 8 MiB — runtime-filter sizing, not catalog sizing);
+    // raise them or a 10 M-key build silently degrades to ~11% fpp
+    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "100000000")
+    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "1073741824")
 
     def time[T](label: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f

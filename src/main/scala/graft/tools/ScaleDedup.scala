@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import graft.operators.Dedup
 
 /** Stress the dedup pipeline on the 1M-doc replicated corpus: 200 exact
@@ -8,11 +7,7 @@ import graft.operators.Dedup
   * exact-first pipeline. */
 object ScaleDedup {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     val dir = "target/tmp/bigsf"
     // Tables.documents expects <dir>/documents.parquet; builds the big
     // corpus too if no other tool has yet (was: a bare symlink that

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale stress for the round-7 operators on the shared big corpus
@@ -19,11 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleDsirPq {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     val dir = "target/tmp/bigsf"
 
     // same corpus pieces as Scale/ScaleDedup/ScaleAll, built if absent

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
 
@@ -24,17 +24,16 @@ import graft.operators.Multimodal
   * candidate mass is the operator's honest profile — the cap's job is
   * the skew outlier, not the uniform mass.
   *
-  *   java -cp ... graft.tools.ScaleMmDedup
+  * The 1M leg needs a 16 GB driver heap. The heap is fixed when the JVM
+  * starts, so set it there, not as a session conf:
+  *
+  *   SPARK_DRIVER_MEM=16g sbt "runMain graft.tools.ScaleMmDedup"
   */
 object ScaleMmDedup {
   private def f2(d: Double) = f"$d%.2f"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(16)
     import spark.implicits._
 
     val Hot = 0xBEEF

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
 import graft.operators.{Curation, Layout, TextAnalysis}
@@ -31,11 +31,7 @@ object ScalePackBpe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/tmp/sf1")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(16)
 
     def time[A](what: String)(f: => A): (A, Double) = {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.ShardExport
 
@@ -24,20 +23,16 @@ import graft.operators.ShardExport
   */
 object ScaleShards {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      // emulate the 100 TB manifest regime: the manifest write's
-      // parallelism is AQE's byte-targeted post-shuffle coalesce (the
-      // round-15 coalesce(1) was a HARD-CODED 1 at any size; this run
-      // proves the partition count now follows data volume) — a ~10 k-row
-      // manifest is a few hundred KB, so shrink the advisory target to
-      // make the volume-proportional fan-out observable at gate scale
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8192")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "8192")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
+    // emulate the 100 TB manifest regime: the manifest write's
+    // parallelism is AQE's byte-targeted post-shuffle coalesce (the
+    // round-15 coalesce(1) was a HARD-CODED 1 at any size; this run
+    // proves the partition count now follows data volume) — a ~10 k-row
+    // manifest is a few hundred KB, so shrink the advisory target to
+    // make the volume-proportional fan-out observable at gate scale
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8192")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "8192")
     import spark.implicits._
 
     def time[T](label: String)(f: => T): (T, Double) = {

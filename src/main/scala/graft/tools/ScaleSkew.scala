@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Analytics, AsOfJoin}
 
@@ -8,11 +7,7 @@ import graft.operators.{Analytics, AsOfJoin}
   * shape AQE cannot split (windows need whole key groups). */
 object ScaleSkew {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     val dir = "target/tmp/skewsf"
     if (!new java.io.File(s"$dir/events.parquet").exists()) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1,16 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStream
 import graft.operators.{Analytics, Curation, Dedup}
 
 object ScaleStream {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
     val dir = "target/tmp/bigsf"
     // self-sufficient: build the 1M-event corpus if no prior ScaleAll/
     // ScaleDedup run left it behind (same construction as ScaleAll)

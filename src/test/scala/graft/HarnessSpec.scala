@@ -1,0 +1,61 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** The entry-point mains share one session factory and one timing
+  * harness: every main gets its session from `GraftSession.local`,
+  * Verify and Bench select queries through `SparkEntry.select`, and
+  * Bench's per-run counters repeat exactly on a gated query. */
+class HarnessSpec extends AnyFunSuite {
+  lazy val spark = GraftSession.test
+
+  test("SparkSession.builder appears only in GraftSession; local(n) carries its confs") {
+    val main = Paths.get("src", "main", "scala")
+    val files = Files.walk(main).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toVector
+    assert(files.nonEmpty, s"no sources under ${main.toAbsolutePath}")
+    val builders = files
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains("SparkSession.builder"))
+      .map(p => main.relativize(p).toString)
+    assert(builders == Vector(Paths.get("graft", "GraftSession.scala").toString),
+      s"hand-built sessions outside GraftSession: $builders")
+
+    val s = GraftSession.local(4)
+    assert(s eq spark)
+    assert(s.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled") == "false")
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+  }
+
+  test("SparkEntry.select: filters and sorts, and fails fast on an unknown name") {
+    assert(SparkEntry.select(None).map(_._1) == SparkEntry.queries.keys.toSeq.sorted)
+    assert(SparkEntry.select(Some("sim_mmr_rerank, q1_pricing_summary,sim_mmr_rerank"))
+      .map(_._1) == Seq("q1_pricing_summary", "sim_mmr_rerank"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Some("sim_mmr_rerank,sim_mmr_rerankk")))
+    assert(e.getMessage.contains("sim_mmr_rerankk"))
+    // Bench selects before it builds a session, so a typo costs no query
+    intercept[IllegalArgumentException](Bench.main(Array("no_such_query")))
+  }
+
+  test("Bench counters: two runs of a gated query count the same jobs, stages and tasks") {
+    val sf = "/root/testdata/sf0.001"
+    val (name, fn) = SparkEntry.select(Some("sim_mmr_rerank")).head
+    val counters = new Bench.GroupCounters
+    spark.sparkContext.addSparkListener(counters)
+    try {
+      assert(Bench.timeQuery(spark, name, fn, sf, "spec#1") >= 0)
+      assert(Bench.timeQuery(spark, name, fn, sf, "spec#2") >= 0)
+      org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
+      val (a, b) = (counters("spec#1"), counters("spec#2"))
+      assert((a.jobs, a.stages, a.tasks) == (b.jobs, b.stages, b.tasks), s"$a vs $b")
+      // the job count the standalone per-query profiler printed for this
+      // query at sf0.001 before the listener moved into Bench
+      assert(a.jobs == 8, s"$a")
+      assert(a.inputBytes > 0 && a.shuffleWriteBytes > 0, s"$a")
+    } finally spark.sparkContext.removeSparkListener(counters)
+  }
+}

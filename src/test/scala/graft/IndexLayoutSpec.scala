@@ -178,6 +178,11 @@ class IndexLayoutSpec extends AnyFunSuite {
       assert(viaJoin.queryExecution.executedPlan.toString.contains("LeftSemi"),
         "over-budget refine should prune via a broadcast semi-join")
       assert(rJoin == rLiteral, "semi-join refine diverged from literal-IN refine")
+      // an unbounded budget must not overflow the bounded id collect
+      spark.conf.set("spark.graft.ann.refineLiteralMaxIds", Long.MaxValue.toString)
+      val rMax = Similarity.topkIvfPqIndexed(spark, sf)
+        .as[(Long, Long, Double, Int)].collect().toSet
+      assert(rMax == rLiteral, "Long.MaxValue refine budget diverged from the default")
     } finally spark.conf.unset("spark.graft.ann.refineLiteralMaxIds")
   }
 

@@ -116,6 +116,8 @@ class RestServerSpec extends AnyFunSuite {
     assert(http("GET", "/api/files?output_dir=/no/such/dir")._1 == 404)
     assert(http("GET", "/api/extract/parquet?path=x")._1 == 405)
     assert(http("POST", "/api/extract/parquet")._1 == 400)
+    assert(http("POST", "/api/extract/parquet?path=x&num_papers=abc")._1 == 400)
+    assert(http("POST", "/api/extract/parquet?path=x&seed=abc")._1 == 400)
   }
 
   test("ApiClient drives the full flow: health, extract --wait, list, download, cleanup") {

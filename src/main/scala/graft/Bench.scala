@@ -88,6 +88,53 @@ object Bench {
     def apply(group: String): Counters = byGroup.getOrDefault(group, Counters.Zero)
   }
 
+  /** Log captures that keep only the last ~2000 chars of output must
+    * still hold the whole tail block, with room for sbt's trailing
+    * [success] line. */
+  val TailBudget = 1820
+
+  /** (code, prefix) of the median lines' query groups — first match
+    * wins; TPC-H keys (q<N>_...) collapse to "h" and their bare number. */
+  private val MedianGroups = Vector(
+    "e" -> "q_events_", "s" -> "sim_topk_", "c" -> "curation_",
+    "d" -> "dedup_", "t" -> "text_", "m" -> "mm_", "r" -> "ref_",
+    "q" -> "q_")
+  private val TpcH = "^q(\\d+)_.*$".r
+
+  /** The tail block Bench prints last: compact `{"g":..,"q":..}` median
+    * lines, then `totalLine`. Queries are grouped by family prefix (the
+    * prefix ships once per line as a one-letter code) and values are
+    * 2-dp seconds with a redundant trailing zero dropped. The block
+    * carries the SLOWEST queries' medians (ties by name), as many as fit
+    * [[TailBudget]] together with the total line — one deterministic
+    * rule that always fits, whatever the number of queries. */
+  def tailBlock(medians: Seq[(String, Double)], totalLine: String): Vector[String] = {
+    def groupOf(k: String): (String, String) = k match {
+      case TpcH(n) => ("h", n)
+      case _ => MedianGroups.find { case (_, p) => k.startsWith(p) }
+        .map { case (c, p) => (c, k.stripPrefix(p)) }
+        .getOrElse(("x", k))
+    }
+    def fmt(v: Double): String = {
+      val s = "%.2f".formatLocal(java.util.Locale.ROOT, v)
+      if (s.endsWith("0")) s.dropRight(1) else s
+    }
+    def lines(ms: Seq[(String, Double)]): Vector[String] =
+      ms.map { case (n, v) => (groupOf(n), v) }
+        .groupBy(_._1._1).toVector.sortBy(_._1)
+        .map { case (code, grp) =>
+          val m = grp.sortBy(_._1._2)
+            .map { case ((_, k), v) => "\"" + k + "\":" + fmt(v) }
+            .mkString("{", ",", "}")
+          s"""{"g":"$code","q":$m}"""
+        } :+ totalLine
+    def fits(block: Vector[String]) = block.map(_.length + 1).sum <= TailBudget
+    val slowest = medians.sortBy { case (n, v) => (-v, n) }
+    // `inits` runs longest first, so this is the largest slowest-first
+    // prefix that fits; the total line alone is the floor
+    lines(slowest.inits.find(ms => fits(lines(ms))).getOrElse(Nil))
+  }
+
   /** One run of a query under job group `group`: wall seconds, or -1
     * when it failed (the failure is printed). Outside the timed section
     * it drops the query's internal caches, so the next run starts
@@ -219,61 +266,20 @@ object Bench {
       s"""{"metric":"bench_shard","shard":$s,"reps":$m,""" +
         s""""counter_fields":$counterFields,"counters":$c}"""
     }.toVector
-    // per-query MEDIAN lines — round 9: the WHOLE set must fit the
-    // driver's ~2000-char tail window TOGETHER with the headline total
-    // (round 8 still clipped the first ~3 of 10 shard lines: 40 of 91
-    // medians existed only in target/bench.json). Three compressions,
-    // all documented by the legend line below (which prints early — it
-    // may be clipped from the tail, but survives in the full log and in
-    // target/bench.json):
-    //  - queries are grouped by family prefix and the prefix is hoisted
-    //    into a one-letter "g" code, so each key ships once per line
-    //    instead of once per query;
-    //  - the 22 TPC-H keys (q<N>_...) collapse to their bare number;
-    //  - values are 2-dp seconds with a redundant trailing zero dropped
-    //    ("0.50"→"0.5"); if the block still exceeds the budget the whole
-    //    set rebuilds at 1 dp (never silently truncates).
-    val groupDefs = Vector( // (code, prefix) — first match wins
-      "e" -> "q_events_", "s" -> "sim_topk_", "c" -> "curation_",
-      "d" -> "dedup_", "t" -> "text_", "m" -> "mm_", "r" -> "ref_",
-      "q" -> "q_")
-    val TpcH = "^q(\\d+)_.*$".r
-    def groupOf(k: String): (String, String) = k match {
-      case TpcH(n) => ("h", n)
-      case _ => groupDefs.find { case (_, p) => k.startsWith(p) }
-        .map { case (c, p) => (c, k.stripPrefix(p)) }
-        .getOrElse(("x", k))
-    }
-    val legend = groupDefs.map { case (c, p) => "\"" + c + "\":\"" + p + "\"" }
+    // per-query MEDIAN lines (every median stays in the long record and
+    // the shard lines above); the legend prints early — it may be
+    // clipped from the tail, but survives in the full log and in
+    // target/bench.json
+    val legend = MedianGroups.map { case (c, p) => "\"" + c + "\":\"" + p + "\"" }
       .mkString("""{"metric":"bench_medians_legend","groups":{""",
         ",", ""","h":"q<N>_ (TPC-H, bare number)","x":""},""") +
-      """"note":"median seconds; keys = group prefix + short key"}"""
-    def fmt(v: Double, dp: Int): String = {
-      val s = s"%.${dp}f".formatLocal(java.util.Locale.ROOT, v)
-      if (dp == 2 && s.endsWith("0")) s.dropRight(1) else s
-    }
-    def medianLines(dp: Int): Vector[String] =
-      results.map { case (n, v, _) => (groupOf(n), v) }
-        .groupBy(_._1._1).toVector.sortBy(_._1)
-        .map { case (code, grp) =>
-          val m = grp.sortBy(_._1._2)
-            .map { case ((_, k), v) => "\"" + k + "\":" + fmt(v, dp) }
-            .mkString("{", ",", "}")
-          s"""{"g":"$code","q":$m}"""
-        }
-    // the tail block = every median line + the total line; it must fit
-    // the driver's ~2000-char window with room for sbt's trailing
-    // [success] line. Try 2 dp first, fall back to 1 dp; if even that
-    // overflows (far more queries than today), print anyway — partial
-    // clipping then degrades exactly like round 8, never worse.
-    val TailBudget = 1820
-    val medianShards = Iterator(2, 1).map(medianLines)
-      .find(ls => ls.map(_.length + 1).sum + totalLine.length + 1 <= TailBudget)
-      .getOrElse(medianLines(1))
+      """"note":"median seconds of the slowest queries that fit the tail; """ +
+      """keys = group prefix + short key"}"""
+    val tail = tailBlock(results.map { case (n, v, _) => (n, v) }, totalLine)
     // file first (survives log truncation/interleaving), then stdout
     // twice — once immediately, once after stop() — each line separated
     // so the record stays intact even if a logger write lands mid-buffer
-    val fileBody = (json +: totalLine +: legend +: (shardLines ++ medianShards))
+    val fileBody = (json +: totalLine +: legend +: (shardLines ++ tail.init))
       .mkString("", "\n", "\n")
     try {
       val out = java.nio.file.Paths.get("target", "bench.json")
@@ -290,8 +296,7 @@ object Bench {
       println(json)
       shardLines.foreach(println)
       println(legend)
-      medianShards.foreach(println)
-      println(totalLine)
+      tail.foreach(println)
       Console.flush()
     }
     printAll()

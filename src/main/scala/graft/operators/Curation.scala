@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
@@ -232,142 +232,52 @@ object Curation {
   // is a global prefix sum over doc order — which Spark's window API
   // would plan as ONE unpartitioned WindowExec (every row through a
   // single task: the classic 100 TB straggler). Instead, a distributed
-  // prefix sum: range-partition by doc_id, per-partition local cumsums
-  // in one mapPartitions pass, per-partition subtotals (one tiny row
-  // each) collected and turned into broadcast offsets, global cumsum =
-  // offset(partition) + local cumsum. The only driver traffic is
-  // numPartitions subtotal rows.
+  // prefix sum: range-partition by the order key, per-partition local
+  // cumsums in one mapPartitions pass, per-partition subtotals (one tiny
+  // row each) collected and turned into broadcast offsets, global
+  // cumsum = offset(partition) + local cumsum. The only driver traffic
+  // is numPartitions subtotal rows.
   private[graft] val BlockTokens = 1024L
 
-  final case class TokRow(doc_id: Long, n: Long)
-  final case class CumRow(doc_id: Long, n: Long, pid: Int, localCum: Long)
-
-  /** The packing core over ANY (doc_id, n) token-count frame — the
-    * distributed prefix sum described above, reusable by the gated
-    * [[packSequences]] and the release manifest's per-split packing
-    * (round 14). Rows with n <= 0 must already be filtered. */
-  private[graft] def packOf(counts0: DataFrame): DataFrame = {
-    val spark = counts0.sparkSession
+  /** The ONE packing core, shared by [[packSequences]], [[packBpe]] and
+    * the shard export/refresh ([[ShardExport.shardAssignFrom]]): the
+    * distributed prefix sum above over ANY frame carrying a long token
+    * count `n` (rows with n <= 0 must already be filtered). The token
+    * stream follows `order` (e.g. doc_id for ingest order, or the shard
+    * export's (okey, doc_id) md5 shuffle). `startTokens` (round 16)
+    * shifts the whole stream: the incremental shard refresh packs a new
+    * batch AS A CONTINUATION of an already-exported stream, so its
+    * cumulative sums start at the exported total instead of 0. Generic
+    * over the row (no case class): the input columns pass through in
+    * order, `n` renamed to `n_tokens`, then first_block, last_block. */
+  private[graft] def packOf(counts: DataFrame, order: Seq[String],
+                            startTokens: Long = 0L): DataFrame = {
+    val spark = counts.sparkSession
     import spark.implicits._
     val parts = spark.sessionState.conf.numShufflePartitions
-    val counts = counts0
-      .repartitionByRange(parts, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .as[TokRow]
-    val local = counts.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var cum = 0L
-      it.map { r => cum += r.n; CumRow(r.doc_id, r.n, pid, cum) }
-    }.cache() // feeds the subtotal action AND the final join (Verify/Bench clear it)
-    val subtotals = local.groupBy(col("pid")).agg(max(col("localCum")).as("sub"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = {
-      var acc = 0L
-      (0 until parts).map { p => val o = acc; acc += subtotals.getOrElse(p, 0L); (p, o) }
-    }
-    val offDf = offsets.toDF("pid", "offset")
-    local.join(broadcast(offDf), Seq("pid"))
-      .select(col("doc_id"), col("n").as("n_tokens"),
-        expr(s"(offset + localCum - n) div $BlockTokens").as("first_block"),
-        expr(s"(offset + localCum - 1) div $BlockTokens").as("last_block"))
-  }
-
-  final case class OTokRow(okey: String, doc_id: Long, n: Long)
-  final case class OCumRow(okey: String, doc_id: Long, n: Long, pid: Int, localCum: Long)
-
-  /** [[packOf]] with an EXPLICIT ordering key — the token stream
-    * follows (okey, doc_id) order instead of ingest order. This is
-    * what the shard export rides: okey = namespaced md5 gives the
-    * deterministic pre-training shuffle, and the pack arithmetic stays
-    * the SAME distributed prefix sum (range partition on the order
-    * key, one subtotal row per partition to the driver — never a
-    * global window). `counts0` = (okey string, doc_id, n), n > 0.
-    * `startTokens` (round 16) shifts the whole stream: the incremental
-    * shard refresh packs a new batch AS A CONTINUATION of an already-
-    * exported stream, so its cumulative sums start at the exported
-    * total instead of 0 — same arithmetic, one added literal. */
-  private[graft] def packOfOrdered(counts0: DataFrame,
-                                   startTokens: Long = 0L): DataFrame = {
-    val spark = counts0.sparkSession
-    import spark.implicits._
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val counts = counts0
-      .select(col("okey"), col("doc_id"), col("n"))
-      .repartitionByRange(parts, col("okey"), col("doc_id"))
-      .sortWithinPartitions(col("okey"), col("doc_id"))
-      .as[OTokRow]
-    val local = counts.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var cum = 0L
-      it.map { r => cum += r.n; OCumRow(r.okey, r.doc_id, r.n, pid, cum) }
-    }.cache() // feeds the subtotal action AND the final join
+    val nIdx = counts.schema.fieldIndex("n")
+    val localSchema = counts.schema
+      .add("pid", org.apache.spark.sql.types.IntegerType, nullable = false)
+      .add("localCum", org.apache.spark.sql.types.LongType, nullable = false)
+    val local = counts
+      .repartitionByRange(parts, order.map(col): _*)
+      .sortWithinPartitions(order.map(col): _*)
+      .mapPartitions { it =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        var cum = 0L
+        it.map { r => cum += r.getLong(nIdx); Row.fromSeq(r.toSeq :+ pid :+ cum) }
+      }(Encoders.row(localSchema))
+      .cache() // feeds the subtotal action AND the final join (Verify/Bench clear it)
     val subtotals = local.groupBy(col("pid")).agg(max(col("localCum")).as("sub"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets = {
       var acc = startTokens
       (0 until parts).map { p => val o = acc; acc += subtotals.getOrElse(p, 0L); (p, o) }
     }
-    val offDf = offsets.toDF("pid", "offset")
-    local.join(broadcast(offDf), Seq("pid"))
-      .select(col("doc_id"), col("okey"), col("n").as("n_tokens"),
+    local.join(broadcast(offsets.toDF("pid", "offset")), Seq("pid"))
+      .select(counts.columns.map(c => if (c == "n") col(c).as("n_tokens") else col(c)) ++ Seq(
         expr(s"(offset + localCum - n) div $BlockTokens").as("first_block"),
-        expr(s"(offset + localCum - 1) div $BlockTokens").as("last_block"))
-  }
-
-  final case class GTokRow(g: String, doc_id: Long, n: Long)
-  final case class GCumRow(g: String, doc_id: Long, n: Long, pid: Int, localCum: Long)
-
-  /** Per-GROUP packing in ONE pass (round 14): [[packOf]]'s
-    * distributed prefix sum generalized to independent token streams
-    * per group — range partitioning on (group, doc_id) keeps each
-    * group contiguous across ordered partitions, the local cumsum
-    * resets at group boundaries inside the one mapPartitions pass,
-    * and the driver collects one subtotal row per (group, partition)
-    * instead of re-running the whole pass once per group (the
-    * releaseManifest caller packs train/val/test in one job instead
-    * of three). */
-  private[graft] def packOfBy(counts0: DataFrame, by: String): DataFrame = {
-    val spark = counts0.sparkSession
-    import spark.implicits._
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val counts = counts0
-      .select(col(by).cast("string").as("g"), col("doc_id"), col("n"))
-      .repartitionByRange(parts, col("g"), col("doc_id"))
-      .sortWithinPartitions(col("g"), col("doc_id"))
-      .as[GTokRow]
-    val local = counts.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var cur: String = null
-      var cum = 0L
-      it.map { r =>
-        if (r.g != cur) { cur = r.g; cum = 0L }
-        cum += r.n
-        GCumRow(r.g, r.doc_id, r.n, pid, cum)
-      }
-    }.cache() // feeds the subtotal action AND the final join
-    val subtotals = local.groupBy(col("g"), col("pid"))
-      .agg(max(col("localCum")).as("sub"))
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-    // contract guard: the driver sees |groups| × partitions subtotal
-    // rows and broadcasts |groups| × partitions offsets — right for
-    // SPLIT-cardinality groups (train/val/test), wrong for per-source
-    // or per-domain packing at corpus scale. Fail loudly instead of
-    // silently materializing a corpus-sized offset table.
-    val nGroups = subtotals.keys.map(_._1).toSet.size
-    require(nGroups <= 4096,
-      s"packOfBy: $nGroups groups — this grouped prefix sum is for " +
-        "split-cardinality groups; pack high-cardinality groups per-group " +
-        "or re-key them first")
-    val offDf = subtotals.keys.map(_._1).toSeq.distinct.flatMap { g =>
-      var acc = 0L
-      (0 until parts).map { p =>
-        val o = acc; acc += subtotals.getOrElse((g, p), 0L); (g, p, o)
-      }
-    }.toDF("g", "pid", "offset")
-    local.join(broadcast(offDf), Seq("g", "pid"))
-      .select(col("g"), col("doc_id"), col("n").as("n_tokens"),
-        expr(s"(offset + localCum - n) div $BlockTokens").as("first_block"),
-        expr(s"(offset + localCum - 1) div $BlockTokens").as("last_block"))
+        expr(s"(offset + localCum - 1) div $BlockTokens").as("last_block")): _*)
   }
 
   /** BPE-unit packing (round 15): [[packSequences]] with the stream
@@ -388,7 +298,7 @@ object Curation {
       .groupBy(col("doc_id"))
       .agg(sum(col("n_sym")).cast("long").as("n"))
       .filter(col("n") > 0)
-    packOf(counts)
+    packOf(counts, Seq("doc_id"))
       .select(col("doc_id"), col("n_tokens").as("n_bpe"),
         col("first_block"), col("last_block"))
       .orderBy(col("doc_id"))
@@ -415,7 +325,7 @@ object Curation {
   def packSequences(spark: SparkSession, dir: String): DataFrame =
     packOf(Tables.documents(spark, dir)
         .select(col("doc_id"), size(TextFns.tokens(col("text"))).cast("long").as("n"))
-        .filter(col("n") > 0))
+        .filter(col("n") > 0), Seq("doc_id"))
       .orderBy(col("doc_id"))
 
   val packSequencesOracle: String = s"""
@@ -1014,22 +924,28 @@ object Curation {
     FROM f
     ORDER BY doc_id"""
 
-  /** Stage 1-3 of the curation pipeline under the v2 tokenizer (round
-    * 20): v2 tokens → ML gate → exact dedup by v2-token fingerprint —
-    * the [[pipelineCurateOf]] survivors computation with every
-    * tokenizer-touching stage swapped to script-aware, consumed by the
-    * ML release chain. Same tokenize-once seam: one cached (doc_id, t)
-    * projection feeds the gate's three passes and the fingerprint. */
-  private[graft] def curateMlOf(docs: DataFrame): DataFrame = {
+  /** Stages 1-2 of curation over ANY (doc_id, text, …) frame, under one
+    * tokenizer and its gate: tokenize ONCE → quality gate → exact dedup
+    * by token fingerprint, the min doc_id of each fingerprint surviving.
+    * One definition for both tokenizers — ([[TextFns.tokens]],
+    * [[qualityGateOf]]) for v1, ([[TextFns.tokensScript]],
+    * [[qualityGateMlOf]]) for the v2 release chain (round 20). Returns
+    * the cached (doc_id, t) tokens (the lang-id stage of
+    * [[pipelineCurateOf]] reads them too) and the survivors
+    * (doc_id, n_tokens, n_copies). */
+  private[graft] def survivorsOf(docs: DataFrame, tokenize: Column => Column,
+                                 gate: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     val toks = docs
-      .select(col("doc_id"), TextFns.tokensScript(col("text")).as("t"))
-      .cache()
-    val kept = qualityGateMlOf(toks).filter(col("keep"))
+      .select(col("doc_id"), tokenize(col("text")).as("t"))
+      .cache() // the single tokenize: gate stats + grams, fp, lang
+    val kept = gate(toks).filter(col("keep"))
       .select(col("doc_id"), col("n_tokens"))
-    // GATE ONCE (r21 — the pipelineCurateOf r20 fix, mirrored): fp has
-    // two consumers (survivor aggregate + final join) and each used to
-    // re-run the whole ML gate chain over the cached tokens; the frame
-    // is corpus-sized but narrow (id + count + one hash)
+    // GATE ONCE (r20, guide §1.2): fp has two consumers — the exact-dup
+    // survivor aggregate and the final per-doc join — and each used to
+    // re-run the whole gate chain (per-doc stats + BOTH gram-fraction
+    // shuffles) plus the md5 fingerprint pass over the cached tokens.
+    // The frame is corpus-sized but narrow (id + count + one hash);
+    // caching it halves the gate/fingerprint work (harness clears).
     val fp = toks
       .join(kept, Seq("doc_id"))
       .select(col("doc_id"), col("n_tokens"),
@@ -1037,8 +953,8 @@ object Curation {
       .cache()
     val surv = fp.groupBy(col("content_fp"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
-    surv.join(fp.select(col("doc_id"), col("n_tokens")), Seq("doc_id"))
-      .select(col("doc_id"), col("n_tokens"), col("n_copies"))
+    (toks, surv.join(fp.select(col("doc_id"), col("n_tokens")), Seq("doc_id"))
+      .select(col("doc_id"), col("n_tokens"), col("n_copies")))
   }
 
   // ---- composed curation pipeline (round 11) ---------------------------
@@ -1059,31 +975,12 @@ object Curation {
   def pipelineCurate(spark: SparkSession, dir: String): DataFrame =
     pipelineCurateOf(Tables.documents(spark, dir))
 
-  /** The pipeline over ANY (doc_id, text, …) frame — the seam the
-    * release manifests share (v2 runs it over a seeded corpus union,
-    * round 15). */
+  /** The pipeline over ANY (doc_id, text, …) frame: the v1
+    * [[survivorsOf]] plus the lang-id column. */
   def pipelineCurateOf(docs: DataFrame): DataFrame = {
-    val toks = docs
-      .select(col("doc_id"), TextFns.tokens(col("text")).as("t"))
-      .cache() // the single tokenize: gate stats + grams, fp, lang
-    val kept = qualityGateOf(toks).filter(col("keep"))
-      .select(col("doc_id"), col("n_tokens"))
-    // GATE ONCE (r20, guide §1.2): fp has two consumers — the exact-dup
-    // survivor aggregate and the final per-doc join — and each used to
-    // re-run the whole gate chain (per-doc stats + BOTH gram-fraction
-    // shuffles) plus the md5 fingerprint pass over the cached tokens.
-    // The frame is corpus-sized but narrow (id + count + one hash);
-    // caching it halves the gate/fingerprint work (harness clears).
-    val fp = toks
-      .join(kept, Seq("doc_id"))
-      .select(col("doc_id"), col("n_tokens"),
-        md5(concat_ws(" ", col("t"))).as("content_fp"))
-      .cache()
-    val surv = fp.groupBy(col("content_fp"))
-      .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
+    val (toks, surv) = survivorsOf(docs, TextFns.tokens, qualityGateOf)
     toks
-      .join(surv.select(col("doc_id"), col("n_copies")), Seq("doc_id"))
-      .join(fp.select(col("doc_id"), col("n_tokens")), Seq("doc_id"))
+      .join(surv, Seq("doc_id"))
       .select(col("doc_id"),
         TextAnalysis.predictedLangT(col("t")).as("predicted_lang"),
         col("n_tokens"), col("n_copies"))
@@ -1270,18 +1167,17 @@ object Curation {
   // The artifact a user actually SHIPS: one gated entry composing the
   // full release chain — curate (pipelineCurate: gate → exact dedup →
   // survivors) → leak-safe split (splitLeakSafeOf over the materialized
-  // cluster table, the composed 26q2 form) → pack each split's token
-  // stream (packOf, the gated packing core) → per-(split, source)
-  // corpus card. Every stage IS its gated definition (no re-derivation,
-  // the 26j2 discipline), and the oracle is assembled from the same
+  // cluster table, the composed 26q2 form) → blocks per split (the
+  // packing core's closed form) → per-(split, source) corpus card.
+  // Every stage IS its gated definition (no re-derivation, the 26j2
+  // discipline), and the oracle is assembled from the same
   // shared fragments (pipelineCtes / clustersCteSql / splitAssignSql),
   // so the composition cannot drift from the parts.
   //
   // Scale shape: the pipeline's one tokenize scan + gate aggregates +
-  // fingerprint shuffle, the cluster join, then a group-by rollup; the
-  // per-split packing adds three bounded prefix-sum passes over the
-  // CURATED counts (each a range partition + numPartitions subtotal
-  // rows to the driver — never a global window).
+  // fingerprint shuffle, the cluster join, then a group-by rollup;
+  // blocks per split come from the card's own token sums in closed
+  // form (see [[releaseCardOf]]) — no prefix-sum pass at all.
   def releaseManifest(spark: SparkSession, dir: String): DataFrame =
     releaseManifestOf(
       Tables.documents(spark, dir),
@@ -1292,44 +1188,20 @@ object Curation {
     * (round 15). */
   def releaseManifestOf(docs: DataFrame, clusters: DataFrame): DataFrame = {
     // stage 1: curated survivors — the gated pipeline definition
-    val curated = pipelineCurateOf(docs)
-      .select(col("doc_id"), col("n_tokens"), col("n_copies"))
+    val (_, curated) = survivorsOf(docs, TextFns.tokens, qualityGateOf)
     // stage 2: leak-safe split from the cluster table
     val splits = splitLeakSafeOf(
       docs.select(col("doc_id"), col("source")), clusters)
       .select(col("doc_id"), col("source"), col("split"))
-    // single consumer (the card aggregate) — no cache needed (r21; the
-    // cached frame previously fed two passes: the card AND a packOfBy
-    // prefix sum whose only surviving value was max(last_block))
-    val cur = curated.join(splits, Seq("doc_id"))
-    // stages 3+4 fused into ONE pass over the curated rows (r21, guide
-    // §1.2/§2.4): the card aggregate is computed first, and blocks per
-    // split derive from the CARD's own per-(split, source) token sums —
-    // for a contiguous stream of non-negative counts, the packing
-    // core's max(last_block) + 1 is exactly (Σn − 1) div BlockTokens + 1
-    // (the cumulative position of the final token; the oracle has
-    // always computed this same closed form, and PackSpec proves the
-    // packOfBy identity on adversarial inputs incl. zero counts). The
-    // grouped prefix-sum pass — a full range-partition exchange, a
-    // mapPartitions cumsum, its cache, and a per-partition subtotal
-    // collect — bought nothing the sum already knows. A split with no
-    // curated docs has no card0 row and therefore no packs row, exactly
-    // the packOfBy group-by semantics.
-    val card0 = cur.groupBy(col("split"), col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("n_tokens"),
-        sum(col("n_copies") - 1).as("n_dupes_collapsed"))
-      .cache() // card-sized; feeds the packs rollup AND the final join
-    val packs = card0.groupBy(col("split"))
-      .agg(sum(col("n_tokens")).as("tot"))
-      .select(col("split"), expr(s"(tot - 1) div $BlockTokens + 1").as("split_blocks"))
-    val out = card0
-      .join(broadcast(packs), Seq("split"))
-      .orderBy(col("split"), col("source"))
-      .cache() // the CARD is what's returned — cache it, not just upstream,
-    out.count() // so the caller's first action reads card-sized state instead
-    card0.unpersist() // of re-running the whole chain after card0 is dropped
-    out
+    // stages 3+4: the v2 card ([[releaseCardOf]]) over a release frame
+    // that contaminates nothing and redacts nothing — the shipped
+    // tokens are the curated tokens. Every survivor passed the gate
+    // (n_tokens >= GateMinTok), so the card's `tot > 0` drops no split.
+    releaseCardOf(curated.join(splits, Seq("doc_id"))
+        .select(col("split"), col("source"), col("n_copies"),
+          col("n_tokens").as("n_ship_tokens"), lit(0L).as("n_pii"),
+          lit(false).as("contaminated")))
+      .drop("n_contaminated", "n_redacted")
   }
 
   /** Composed from the SAME fragments as the stage oracles:
@@ -1406,7 +1278,7 @@ object Curation {
     * script-aware tokenizer through the release chain: under
     * [[TextFns.TokVersion2]] the corpus is seeded with the 20 held-out
     * multilingual docs, stage 1 runs the v2 tokens + ML gate
-    * ([[curateMlOf]]) and the SHIPPED token counts re-tokenize with v2
+    * ([[survivorsOf]]) and the SHIPPED token counts re-tokenize with v2
     * — so a CJK/Cyrillic doc ships with its real token count where the
     * v1 chain drops it at the gate (zero v1 tokens → too_short;
     * English-only stopword floor → low_stop; spec-proven). Winnow
@@ -1416,26 +1288,37 @@ object Curation {
   private[graft] def releaseV2Frame(spark: SparkSession, dir: String,
                                     tokVersion: Int = TextFns.TokVersion): DataFrame = {
     import spark.implicits._
-    val ml = tokVersion >= TextFns.TokVersion2
     val docsBase = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), col("text"))
       .unionByName(ReleaseSeeds.toDF("doc_id", "source", "text"))
     val docsPlus =
-      if (!ml) docsBase
+      if (tokVersion < TextFns.TokVersion2) docsBase
       else docsBase.unionByName(
         TextAnalysis.HoldoutDocs.map(h => (h._2, "holdout", h._3))
           .toDF("doc_id", "source", "text"))
-    // stage 1: curate — the gated pipeline over the release corpus
-    val curated =
-      (if (ml) curateMlOf(docsPlus) else pipelineCurateOf(docsPlus))
-        .select(col("doc_id"), col("n_tokens"), col("n_copies"))
+    releaseFrameOf(docsPlus, Dedup.clustersCached(spark, dir), dir, tokVersion)
+  }
+
+  /** The release frame over ANY (doc_id, source, text) frame and
+    * cluster table: the seeded corpus with [[Dedup.clustersCached]]
+    * ([[releaseV2Frame]]) or one nightly batch with the extended
+    * cluster table ([[releaseShardsRefresh]]). `dir` names the corpus
+    * whose persisted probe index decontaminates. */
+  private def releaseFrameOf(docs: DataFrame, clusters: DataFrame, dir: String,
+                             tokVersion: Int = TextFns.TokVersion): DataFrame = {
+    val spark = docs.sparkSession
+    val ml = tokVersion >= TextFns.TokVersion2
+    val tokenize: Column => Column = if (ml) TextFns.tokensScript else TextFns.tokens
+    // stage 1: curate — the gated survivors under the release tokenizer
+    val (_, curated) = survivorsOf(docs, tokenize,
+      if (ml) qualityGateMlOf else qualityGateOf)
     // stage 2: decontaminate — corpus-side winnow fingerprints joined
     // against the PERSISTED probe index (round 16: the benchmark slice
     // is static — [[winnowProbeFpCached]] — so a release run only
     // fingerprints the corpus; winnowing is per-doc, so the filtered
     // corpus side computes the same fingerprints the union form did)
     val contam = TextAnalysis.winnowFingerprintOf(
-        docsPlus.select(col("doc_id"), col("text"))
+        docs.select(col("doc_id"), col("text"))
           .filter(col("doc_id") >= ProbeDocs))
       .join(broadcast(winnowProbeFpCached(spark, dir)), Seq("fp"))
       .select(col("doc_id")).distinct()
@@ -1445,22 +1328,21 @@ object Curation {
     val afterEmail = regexp_replace(col("text"), TextAnalysis.EmailRe, "<EMAIL>")
     val afterIp    = regexp_replace(afterEmail, TextAnalysis.Ipv4Re, "<IP>")
     val afterPhone = regexp_replace(afterIp, TextAnalysis.PhoneRe, "<PHONE>")
-    val shipToks = if (ml) TextFns.tokensScript(afterPhone) else TextFns.tokens(afterPhone)
-    val red = docsPlus.select(col("doc_id"),
+    val red = docs.select(col("doc_id"),
       (regexp_count(col("text"), lit(TextAnalysis.EmailRe)) +
        regexp_count(afterEmail, lit(TextAnalysis.Ipv4Re)) +
        regexp_count(afterIp, lit(TextAnalysis.PhoneRe))).cast("long").as("n_pii"),
-      size(shipToks).cast("long").as("n_ship_tokens"),
+      size(tokenize(afterPhone)).cast("long").as("n_ship_tokens"),
       afterPhone.as("ship_text"))
-    // stage 4: leak-safe split from the materialized cluster table,
-    // singleton fallback for docs the table has never seen (the seed)
-    val cluPlus = docsPlus.select(col("doc_id"))
-      .join(Dedup.clustersCached(spark, dir)
-        .select(col("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
+    // stage 4: leak-safe split from the cluster table, singleton
+    // fallback for docs the table has never seen (the seeds, a batch's
+    // novel docs)
+    val cluPlus = docs.select(col("doc_id"))
+      .join(clusters.select(col("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
     val splits = splitLeakSafeOf(
-        docsPlus.select(col("doc_id"), col("source")), cluPlus)
+        docs.select(col("doc_id"), col("source")), cluPlus)
       .select(col("doc_id"), col("source"), col("split"))
     curated.select(col("doc_id"), col("n_copies"))
       .join(splits, Seq("doc_id"))
@@ -1534,18 +1416,20 @@ object Curation {
     releaseCardOf(
       releaseV2FrameCached(spark, dir, TextFns.TokVersion2).drop("ship_text"))
 
-  /** Stages 5-6 of the v2 release over any per-doc release frame — ONE
-    * definition consumed by the inline and the composed card entries. */
+  /** Stages 5-6 of the release over any per-doc release frame — ONE
+    * definition consumed by the v1 ([[releaseManifestOf]]), inline,
+    * composed, v3 and ML card entries. */
   private def releaseCardOf(frame: DataFrame): DataFrame = {
     // stages 5+6 fused into ONE pass over the release frame (r21, guide
-    // §1.2/§2.4 — the releaseManifestOf rationale): blocks per split
-    // derive from the card's own kept-token sums via the closed form
-    // max(last_block) + 1 == (Σn − 1) div BlockTokens + 1 (PackSpec).
-    // Presence semantics preserved exactly: the packOfBy input was
-    // kept docs with n_ship_tokens > 0, so a split emits a packs row
-    // iff its kept-token total is positive — the `tot > 0` filter
-    // (NULL-safe false for all-contaminated splits, whose kept sum is
-    // NULL) reproduces the old inner-join drop of such splits' rows.
+    // §1.2/§2.4): blocks per split derive from the card's own kept-token
+    // sums — for a contiguous stream of non-negative counts, the packing
+    // core's max(last_block) + 1 is exactly (Σn − 1) div BlockTokens + 1
+    // (the cumulative position of the final token; the oracles compute
+    // this same closed form, and ScaleOpsSpec "pack closed form" proves
+    // the identity on adversarial inputs incl. zero counts), so no
+    // prefix-sum pass runs. A split with no kept tokens packs no blocks
+    // and has no packs row: the `tot > 0` filter (NULL-safe false for
+    // all-contaminated splits, whose kept sum is NULL) drops it.
     val card0 = frame.groupBy(col("split"), col("source"))
       .agg(
         count(when(!col("contaminated"), lit(1))).as("n_docs"),
@@ -1610,32 +1494,12 @@ object Curation {
   def releaseShardsRefresh(batch: DataFrame, clusters2: DataFrame,
                            dir: String, outDir: String,
                            blocksPerShard: Long = ShardExport.DefaultBlocksPerShard): DataFrame = {
-    val spark = batch.sparkSession
-    val curated = pipelineCurateOf(batch).select(col("doc_id"))
-    val contam = TextAnalysis.winnowFingerprintOf(
-        batch.select(col("doc_id"), col("text"))
-          .filter(col("doc_id") >= ProbeDocs))
-      .join(broadcast(winnowProbeFpCached(spark, dir)), Seq("fp"))
-      .select(col("doc_id")).distinct()
-      .withColumn("contaminated", lit(true))
-    val afterEmail = regexp_replace(col("text"), TextAnalysis.EmailRe, "<EMAIL>")
-    val afterIp    = regexp_replace(afterEmail, TextAnalysis.Ipv4Re, "<IP>")
-    val afterPhone = regexp_replace(afterIp, TextAnalysis.PhoneRe, "<PHONE>")
-    val red = batch.select(col("doc_id"), afterPhone.as("ship_text"))
-    val cluPlus = batch.select(col("doc_id"))
-      .join(clusters2.select(col("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-    val splits = splitLeakSafeOf(
-        batch.select(col("doc_id"), col("source")), cluPlus)
-      .select(col("doc_id"), col("split"))
-    val kept = curated
-      .join(contam, Seq("doc_id"), "left")
-      .filter(col("contaminated").isNull)
-      .join(red, Seq("doc_id"))
+    val kept = releaseFrameOf(
+        batch.select(col("doc_id"), col("source"), col("text")), clusters2, dir)
+      .filter(!col("contaminated"))
     ShardExport.refreshSplitShards(
       kept.select(col("doc_id"), col("ship_text").as("text")),
-      splits, outDir, blocksPerShard)
+      kept.select(col("doc_id"), col("split")), outDir, blocksPerShard)
   }
 
   /** The per-doc release-frame CTE chain (everything through `cur` —

@@ -20,8 +20,8 @@ import graft.sources.Tables
   *    (portable, rerunnable on any cluster layout, and independent of
   *    the hash any OTHER stage ordered by, so stages don't correlate).
   *  - pack: the shuffled token stream cuts into [[Curation.BlockTokens]]
-  *    blocks via [[Curation.packOfOrdered]] — the SAME distributed
-  *    prefix sum as the gated packing core, never a global window.
+  *    blocks via [[Curation.packOf]] ordered by (okey, doc_id) — the
+  *    gated packing core, never a global window.
   *  - shard: `shard_id = first_block div blocksPerShard`. Shards are
   *    DOCUMENT-ALIGNED (a doc belongs to the shard where its first
   *    token block lands), so shard files hold whole documents and sizes
@@ -49,7 +49,7 @@ object ShardExport {
   final val DefaultBlocksPerShard = 1024L
 
   /** Shard assignment over any (doc_id, text) frame:
-    * (doc_id, okey, n_tokens, first_block, last_block, shard_id).
+    * (okey, doc_id, n_tokens, first_block, last_block, shard_id).
     * Empty docs (0 tokens) are excluded, matching the packing core. */
   def shardAssign(docs: DataFrame,
                   blocksPerShard: Long = DefaultBlocksPerShard): DataFrame =
@@ -72,7 +72,7 @@ object ShardExport {
       col("doc_id"),
       size(TextFns.tokens(col("text"))).cast("long").as("n"))
       .filter(col("n") > 0)
-    Curation.packOfOrdered(counts, startTokens)
+    Curation.packOf(counts, Seq("okey", "doc_id"), startTokens)
       .withColumn("shard_id", expr(s"first_block div $blocksPerShard"))
   }
 
@@ -166,9 +166,8 @@ object ShardExport {
     * shard independently (a dataloader never mixes train/val/test
     * files), written under `<outDir>/split=<s>/shard_id=N` with each
     * split's own `_shard_manifest`. The driver loop is bounded by
-    * SPLIT cardinality — exactly the "pack high-cardinality groups
-    * per-group" case the packOfBy guard points at. Returns the union
-    * manifest with a `split` column. */
+    * SPLIT cardinality (the `require` below), so each split packs as
+    * its own stream. Returns the union manifest with a `split` column. */
   def exportSplitShards(docs: DataFrame, splits: DataFrame, outDir: String,
                         blocksPerShard: Long = DefaultBlocksPerShard): DataFrame = {
     val withSplit = docs

@@ -60,7 +60,7 @@ object ScalePackBpe {
         .join(vocab, Seq("w"))
         .groupBy(col("doc_id")).agg(sum(col("n_sym")).cast("long").as("n"))
         .filter(col("n") > 0)
-      Curation.packOf(counts).agg(max(col("last_block"))).first().getLong(0) + 1
+      Curation.packOf(counts, Seq("doc_id")).agg(max(col("last_block"))).first().getLong(0) + 1
     }
     val corpus = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -131,7 +131,7 @@ object ScalePackBpe {
             .join(vocab, Seq("w"))
             .groupBy(col("doc_id")).agg(sum(col("n_sym")).cast("long").as("n"))
             .filter(col("n") > 0)
-          Curation.packOf(counts).agg(max(col("last_block"))).first().getLong(0) + 1
+          Curation.packOf(counts, Seq("doc_id")).agg(max(col("last_block"))).first().getLong(0) + 1
         }
         require(Layout.resolveGeneration(spark, deepKey, "vocab").contains(deepGen),
           "the deep pack must not touch the stored generation")

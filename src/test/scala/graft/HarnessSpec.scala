@@ -41,6 +41,28 @@ class HarnessSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Bench.main(Array("no_such_query")))
   }
 
+  test("Bench tail block: fits TailBudget over every gated query and ends with the total line") {
+    // synthetic medians with wide values (up to 6 chars each at 2 dp)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val medians = names.zipWithIndex.map { case (n, i) => n -> (i * 7919 % 99991) / 100.0 }
+    val totalLine = """{"metric":"total","value":12345.67,"unit":"sec",""" +
+      """"serve_only":12000.01,"n_queries":153,"n_failed":0,"failed_reps":0,""" +
+      """"loadavg":[12.3,14.5,16.7,18.9,20.1],"sf":"data/tpch/sf0.01"}"""
+    val block = Bench.tailBlock(medians, totalLine)
+    assert(block.map(_.length + 1).sum <= Bench.TailBudget,
+      s"tail block is ${block.map(_.length + 1).sum} chars")
+    assert(block.last == totalLine)
+    assert(block.init.nonEmpty && block.init.forall(_.startsWith("""{"g":"""")))
+    // the slowest median always ships, the fastest never (153 queries
+    // cannot all fit)
+    def shown(v: Double) = {
+      val s = "%.2f".formatLocal(java.util.Locale.ROOT, v)
+      val k = ":" + (if (s.endsWith("0")) s.dropRight(1) else s)
+      block.init.exists(l => l.contains(k + ",") || l.contains(k + "}"))
+    }
+    assert(shown(medians.map(_._2).max) && !shown(medians.map(_._2).min), block)
+  }
+
   test("Bench counters: two runs of a gated query count the same jobs, stages and tasks") {
     val sf = "/root/testdata/sf0.001"
     val (name, fn) = SparkEntry.select(Some("sim_mmr_rerank")).head

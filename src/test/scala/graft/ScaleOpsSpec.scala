@@ -55,32 +55,29 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(got.collect().toSeq.map(_.toSeq) == naive.collect().toSeq.map(_.toSeq))
     assert(!got.queryExecution.executedPlan.toString.contains("Window"),
       "shipped packing plan must not contain a global WindowExec")
-  }
 
-  test("packOfBy: one grouped pass == packOf per group; groups reset the stream") {
-    // skewed group sizes + interleaved doc_ids so group boundaries
-    // land mid-partition and the cumsum reset is actually exercised
-    val rows = (0L until 300L).map { i =>
-      (Seq("train", "val", "test")(((i * 7) % 3).toInt), i, 1L + i % 97)
-    }
-    val counts = rows.toDF("split", "doc_id", "n")
-    val grouped = Curation.packOfBy(counts, "split")
-      .select($"g", $"doc_id", $"n_tokens", $"first_block", $"last_block")
-      .collect().map(_.toSeq).toSet
-    val perGroup = Seq("train", "val", "test").flatMap { s =>
-      Curation.packOf(counts.filter($"split" === s).select($"doc_id", $"n"))
-        .select(lit(s).as("g"), $"doc_id", $"n_tokens", $"first_block", $"last_block")
-        .collect().map(_.toSeq)
-    }.toSet
-    assert(grouped == perGroup && grouped.nonEmpty,
-      "grouped one-pass packing diverged from per-group packing")
-    // contract guard: high-cardinality groups must fail loudly instead
-    // of materializing a corpus-sized offset table on the driver
-    val highCard = (0L until 5000L).map(i => (s"g$i", i, 1L)).toDF("split", "doc_id", "n")
-    val e = intercept[IllegalArgumentException] {
-      Curation.packOfBy(highCard, "split").count()
-    }
-    assert(e.getMessage.contains("split-cardinality"))
+    // the same core under an explicit (okey, doc_id) order continuing an
+    // existing stream (the shard refresh shape): == the naive window over
+    // that order, shifted by startTokens
+    val counts = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), md5(col("doc_id").cast("string")).as("okey"),
+        size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("n"))
+      .filter(col("n") > 0)
+    val start = 5000L
+    val shifted = Curation.packOf(counts, Seq("okey", "doc_id"), startTokens = start)
+    assert(shifted.columns.toSeq ==
+      Seq("doc_id", "okey", "n_tokens", "first_block", "last_block"))
+    val wo = Window.orderBy("okey", "doc_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val naiveShifted = counts
+      .withColumn("cum", sum("n").over(wo) + start)
+      .select(col("doc_id"), col("okey"), col("n").as("n_tokens"),
+        expr("(cum - n) div 1024").as("first_block"),
+        expr("(cum - 1) div 1024").as("last_block"))
+    def byId(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("doc_id").collect().toSeq.map(_.toSeq)
+    assert(byId(shifted) == byId(naiveShifted) && byId(shifted).nonEmpty,
+      "ordered, shifted packing diverged from the naive window")
   }
 
   test("pack closed form: max(last_block)+1 == (sum(n)-1) div B + 1 per group") {
@@ -97,9 +94,12 @@ class ScaleOpsSpec extends AnyFunSuite {
       (g, i, n)
     } ++ Seq(("edge", 9001L, 1024L), ("edge", 9002L, 1024L), ("edge2", 9003L, 1025L))
     val counts = rows.toDF("split", "doc_id", "n")
-    val viaPack = Curation.packOfBy(counts, "split")
-      .groupBy($"g").agg((max($"last_block") + 1L).as("blocks"))
-      .as[(String, Long)].collect().toMap
+    // one run of the packing core per group: each split packs as its
+    // own stream in doc_id order
+    val viaPack = rows.map(_._1).distinct.map { g =>
+      g -> Curation.packOf(counts.filter($"split" === g).select($"doc_id", $"n"), Seq("doc_id"))
+        .agg(max($"last_block") + 1L).as[Long].head()
+    }.toMap
     val viaSum = counts.groupBy($"split")
       .agg(expr("(sum(n) - 1) div 1024 + 1").as("blocks"))
       .as[(String, Long)].collect().toMap

@@ -167,7 +167,7 @@ class ShardExportSpec extends AnyFunSuite {
     // documented structural difference)
     val counts = back.select(col("okey"), col("doc_id"),
       size(graft.functions.TextFns.tokens(col("text"))).cast("long").as("n"))
-    val repack = Curation.packOfOrdered(counts)
+    val repack = Curation.packOf(counts, Seq("okey", "doc_id"))
       .withColumn("shard_id", expr("first_block div 2"))
     val reman = repack
       .join(back.select(col("doc_id"), octet_length(col("text")).cast("long").as("nb")), Seq("doc_id"))

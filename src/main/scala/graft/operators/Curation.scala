@@ -175,8 +175,7 @@ object Curation {
     * union form's probe slice — spec-proven stored == inline. */
   private[graft] def winnowProbeFpCached(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docsPath = s"$dir/documents.parquet"
-    val key = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${Layout.stateTag(spark, docsPath)}"
+    val key = Layout.storeKey(spark, dir, "documents")
     // generation protocol (round 18): fresh gen-dir + _CURRENT commit
     val path = Layout.generation(spark,
       s"${Layout.cacheRoot(spark)}/winnow_probe_cache/$key") { g =>
@@ -1378,11 +1377,9 @@ object Curation {
   private[graft] def releaseV2CachePath(spark: SparkSession, dir: String,
                                         version: Int = ReleaseV2CodeVersion,
                                         tokVersion: Int = TextFns.TokVersion): String = {
-    val docsPath = s"$dir/documents.parquet"
     val maxDf = Dedup.effectiveMaxShingleDf(spark)
     val tok = if (tokVersion == TextFns.TokVersion) "" else s"_tok$tokVersion"
-    val key = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${Layout.stateTag(spark, docsPath)}" +
-      s"_df${maxDf}_v$version$tok"
+    val key = s"${Layout.storeKey(spark, dir, "documents")}_df${maxDf}_v$version$tok"
     s"${Layout.cacheRoot(spark)}/release_v2_cache/$key"
   }
 

@@ -482,9 +482,8 @@ object Dedup {
     * itself stays the inline build: it IS the operator under test; the
     * consumers are compositions and should not re-pay it. */
   def clustersCached(spark: SparkSession, dir: String): DataFrame = {
-    val docsPath = s"$dir/documents.parquet"
     val maxDf = effectiveMaxShingleDf(spark)
-    val key = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${Layout.stateTag(spark, docsPath)}_df$maxDf"
+    val key = s"${Layout.storeKey(spark, dir, "documents")}_df$maxDf"
     // generation protocol (round 18): each build lands in its own fresh
     // gen-dir and commits via the _CURRENT pointer — object-store-exact
     // (a lost lease race costs a duplicate build, never a torn store)

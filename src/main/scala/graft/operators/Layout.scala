@@ -91,6 +91,12 @@ private[graft] object Layout {
     }
   }
 
+  /** Key of a store built from `<dir>/<table>.parquet`: the corpus dir
+    * made path-safe, then the table's [[stateTag]]. Each store family
+    * appends the build constants baked into its artifact. */
+  def storeKey(spark: SparkSession, dir: String, table: String): String =
+    s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${stateTag(spark, s"$dir/$table.parquet")}"
+
   /** Drop the memoized tag for `path` — call after rewriting a table
     * so the next [[stateTag]] re-lists regardless of the TTL. */
   def invalidateStateTag(path: String): Unit = tagMemo.remove(memoKey(path))

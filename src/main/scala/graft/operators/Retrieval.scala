@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import graft.sources.Tables
 import graft.functions.{TextFns, VectorFns}
 
@@ -324,11 +325,9 @@ object Retrieval {
   // out for one corpus size must not serve a regenerated corpus that
   // derives a different count, and a flat round-12 store must not
   // serve under the bucketed DDL at all
-  private[graft] def bm25StoreKey(spark: SparkSession, dir: String): String = {
-    val docsPath = s"$dir/documents.parquet"
-    s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${Layout.stateTag(spark, docsPath)}" +
+  private[graft] def bm25StoreKey(spark: SparkSession, dir: String): String =
+    Layout.storeKey(spark, dir, "documents") +
       s"_tok${TextFns.TokVersion}_b${postingsBuckets(spark, dir)}"
-  }
 
   /** The SAME stored postings files read as plain parquet — identical
     * rows, no bucket metadata, so the scan splits files arbitrarily
@@ -629,7 +628,9 @@ object Retrieval {
     * (nid, cos, vec), already sorted by nid — K rounds of
     * argmax(λ·cos − (1−λ)·max-sim-to-selected), ties to the lowest
     * nid, every score 6-dp-rounded exactly like the Spark expressions
-    * ([[mmrRound6]]/[[mmrDot6]]). Emits (nid, mmr, rn). */
+    * ([[mmrRound6]]/[[mmrDot6]]). Scores compare in Spark's double
+    * order (NaN greatest, -0.0 == 0.0), the order of the window's sort
+    * and of the penalty's max. Emits (nid, mmr, rn). */
   private[graft] def mmrGreedy(
       cands: Array[(Long, Double, Seq[Double])]): Seq[(Long, Double, Int)] = {
     val picked = scala.collection.mutable.ArrayBuffer[(Long, Double, Int)]()
@@ -652,11 +653,12 @@ object Retrieval {
               var pen = Double.NegativeInfinity
               selVecs.foreach { sv =>
                 val d = mmrDot6(vec, sv)
-                if (d > pen) pen = d
+                if (SQLOrderingUtil.compareDoubles(d, pen) > 0) pen = d
               }
               mmrRound6((MmrNum * cos - (10 - MmrNum) * pen) / 10d)
             }
-          if (bi < 0 || score > bScore || (score == bScore && nid < bNid)) {
+          val c = if (bi < 0) 1 else SQLOrderingUtil.compareDoubles(score, bScore)
+          if (c > 0 || (c == 0 && nid < bNid)) {
             bi = i; bScore = score; bNid = nid
           }
         }

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
+import org.apache.spark.sql.types.DataType
 import graft.sources.Tables
 import graft.functions.{VecNative, VectorFns}
 
@@ -33,13 +36,94 @@ object Similarity {
     * the schedule's lower bound and the IVF2 within-top width. */
   private[graft] final val Probes = 4
 
+  // ---- 0. the ANN search skeleton --------------------------------------
+  // Every sim_topk_* entry composes the stages below: a query batch, a
+  // candidate generator (none, label cells, k-means cells, two-level
+  // cells, LSH buckets) that turns the batch into probes, the
+  // probed-cell scan with a scorer (exact dot, SQ8 reconstruction, PQ
+  // ADC), optionally [[refineOf]], and the rank cut. Each oracle
+  // composes the SQL twins of the same stages (the *Sql builders).
+
+  /** The query batch: the first `nq` corpus rows as (qid, `qcols`) —
+    * by default the unit vector as `qvec`. */
+  private def queryBatch(all: DataFrame, nq: Int = NQueries,
+                         qcols: Seq[Column] = Seq(col("vec").as("qvec"))): DataFrame =
+    all.filter(col("vec_id") < nq).select(col("vec_id").as("qid") +: qcols: _*)
+
+  /** The exact scorer: dot of the unit query and corpus vectors. */
+  private def exactDot: Column = VectorFns.dot6(col("qvec"), col("vec"))
+
+  /** The probed-cell scan: corpus rows joined against the broadcast
+    * probe batch on the generator's cell match `on` (none: every row),
+    * a stored query never matching itself (the gated self-exclusion) —
+    * (qid, nid, `as`). */
+  private def scanProbed(cells: DataFrame, probes: DataFrame, score: Column,
+                         as: String, on: Column*): DataFrame =
+    cells.join(broadcast(probes), (on :+ (col("vec_id") =!= col("qid"))).reduce(_ && _))
+      .select(col("qid"), col("vec_id").as("nid"), score.as(as))
+
+  /** Each query's top `k` rows by `score` desc, ties to the lowest
+    * `tie`, numbered in column `rn`. */
+  private def topPerQuery(scored: DataFrame, score: String, k: Int,
+                          rn: String = "rn", tie: String = "nid"): DataFrame =
+    scored.withColumn(rn, row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col(score).desc, col(tie))))
+      .filter(col(rn) <= k)
+
+  /** The rank cut every entry ends with: (qid, nid, `score`, rn) for
+    * rn ≤ `k`, in (qid, rn) order. */
+  private def rankCut(scored: DataFrame, score: String = "cos", k: Int = K): DataFrame =
+    topPerQuery(scored, score, k).orderBy(col("qid"), col("rn"))
+
+  /** The rank cut's shape with no rows: an empty index has no neighbors. */
+  private def emptyTopk(spark: SparkSession, score: String = "cos"): DataFrame = {
+    import spark.implicits._
+    spark.emptyDataset[(Long, Long, Double, Int)].toDF("qid", "nid", score, "rn")
+  }
+
+  /** `serve`, or the empty rank cut when the codebooks are empty. */
+  private def withBooks(books: DataFrame, score: String = "cos")(
+      serve: => DataFrame): DataFrame =
+    if (books.isEmpty) emptyTopk(books.sparkSession, score) else serve
+
+  /** Serve from the stored index of `family` over `dir`'s embeddings:
+    * the key is the corpus state plus the build `constants` baked into
+    * the store, `write` builds a generation under the key dir once per
+    * corpus version and returns the committed generation dir, and
+    * `serve` reads that dir. */
+  private def servedIndex(spark: SparkSession, dir: String, family: String,
+      constants: String)(write: (SparkSession, String, String) => String)(
+      serve: String => DataFrame): DataFrame =
+    serve(write(spark, dir, s"${Layout.cacheRoot(spark)}/$family/" +
+      s"${Layout.storeKey(spark, dir, "embeddings")}$constants"))
+
+  /** SQL twin of [[emb]]: opens the WITH clause with CTEs `nv` and
+    * `unit`(vec_id[, label], vec). */
+  private def unitSql(label: Boolean = false, unit: String = "unit",
+                      recursive: Boolean = false): String = {
+    val l = if (label) "label, " else ""
+    s"""
+    WITH ${if (recursive) "RECURSIVE " else ""}nv AS (
+      SELECT vec_id, ${l}CAST(embedding AS DOUBLE[]) AS raw,
+        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
+      FROM embeddings),
+    $unit AS (SELECT vec_id, ${l}list_transform(raw, x -> x / nrm) AS vec FROM nv)"""
+  }
+
+  /** SQL twin of [[rankCut]] over CTE `from`(qid, nid, `score`). */
+  private def rankSql(score: String = "cos", from: String = "sc"): String = s"""
+    SELECT qid, nid, $score,
+      CAST(row_number() OVER (PARTITION BY qid ORDER BY $score DESC, nid) AS INT) AS rn
+    FROM $from
+    QUALIFY rn <= $K
+    ORDER BY qid, rn"""
+
   // ---- 1. exact brute-force top-k -------------------------------------
   /** Parameterized exact ranking (also feeds [[Retrieval.hybridRrf]]):
     * (qid, nid, cos, rn) for rn ≤ `k` over the first `nq` probe ids. */
   def cosineRanked(spark: SparkSession, dir: String, nq: Int, k: Int): DataFrame = {
     val all = emb(spark, dir)
-    cosineRankedOf(all.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("qid"), col("vec").as("qvec")), all, k)
+    cosineRankedOf(queryBatch(all, nq), all, k)
   }
 
   /** Composable exact-cosine top-`k`: any (qid, qvec) unit-vector query
@@ -47,15 +131,8 @@ object Similarity {
     * by [[cosineRanked]] and the streaming hybrid serve. Queries
     * broadcast against the ONE corpus-sized scan; a stored query id
     * never matches itself (the gated self-exclusion). */
-  def cosineRankedOf(qs: DataFrame, vecs: DataFrame, k: Int): DataFrame = {
-    val scored = vecs.join(broadcast(qs), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        VectorFns.dot6(col("qvec"), col("vec")).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .orderBy(col("qid"), col("rn"))
-  }
+  def cosineRankedOf(qs: DataFrame, vecs: DataFrame, k: Int): DataFrame =
+    rankCut(scanProbed(vecs, qs, exactDot, "cos"), k = k)
 
   def topkBruteforce(spark: SparkSession, dir: String): DataFrame =
     cosineRanked(spark, dir, NQueries, K)
@@ -243,20 +320,16 @@ object Similarity {
             org.apache.spark.sql.types.DoubleType, containsNull = true)))))
   }
 
-  /** Probe selection against a GIVEN centroid table — (qid, qvec,
-    * clabel), the `nProbes` nearest cells per query by 6-dp centroid
-    * cosine. */
-  private def probesFrom(q: DataFrame, centroids: DataFrame,
-                         nProbes: Int = Probes): DataFrame = {
-    val probeW = Window.partitionBy(col("qid"))
-      .orderBy(col("ccos").desc, col("clabel"))
-    q.join(broadcast(centroids), lit(true))
-      .select(col("qid"), col("qvec"), col("clabel"),
-        VectorFns.cosine6(col("qvec"), col("cvec")).as("ccos"))
-      .withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= nProbes)
-      .select(col("qid"), col("qvec"), col("clabel"))
-  }
+  /** Probe selection against a GIVEN centroid table (`cell`, cvec) —
+    * (qid, qvec, `cell`), the `nProbes` nearest cells per query by 6-dp
+    * centroid cosine, ties to the lowest cell. */
+  private def probesFrom(q: DataFrame, centroids: DataFrame, nProbes: Int,
+                         cell: String = "clabel"): DataFrame =
+    topPerQuery(q.join(broadcast(centroids), lit(true))
+        .select(col("qid"), col("qvec"), col(cell),
+          VectorFns.cosine6(col("qvec"), col("cvec")).as("ccos")),
+        "ccos", nProbes, rn = "pr", tie = cell)
+      .select(col("qid"), col("qvec"), col(cell))
 
   /** Probe selection shared by [[topkIvf]] and [[topkIvfSq8]]: the
     * [[probeScheduleFor]] nearest label-cells per query by
@@ -265,11 +338,31 @@ object Similarity {
     * recall ceiling the same way it did for IVFPQ.) */
   private def ivfProbes(all: DataFrame): DataFrame = {
     val cents = labelCentroids(all) // driver-local already (r21)
-    probesFrom(
-      all.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec")),
-      cents, probeScheduleFor(cents.count().toInt))
+    probesFrom(queryBatch(all), cents, probeScheduleFor(cents.count().toInt))
   }
+
+  /** The label-cell candidate match of a probe batch (qid, clabel). */
+  private def labelCells: Column = col("label") === col("clabel")
+
+  /** SQL twin of [[ivfProbes]]: label centroids `cvecs`(clabel, cvec),
+    * the query batch `qs`(qid, qvec) and its probes `pr`(qid, clabel),
+    * over a `unit`(vec_id, label, vec) CTE. */
+  private def labelProbeSql: String = s"""
+    cexp AS (SELECT label, unnest(range(len(vec))) AS pos, unnest(vec) AS v
+             FROM unit),
+    cpos AS (SELECT label, pos,
+               CAST(sum(CAST(v AS DECIMAL(28,12))) / count(*) AS DOUBLE) AS c
+             FROM cexp GROUP BY label, pos),
+    cvecs AS (SELECT label AS clabel, list(c ORDER BY pos) AS cvec
+              FROM cpos GROUP BY label),
+    qs AS (SELECT vec_id AS qid, vec AS qvec FROM unit WHERE vec_id < $NQueries),
+    pr AS (
+      SELECT qid, clabel FROM (
+        SELECT qid, clabel,
+          CAST(row_number() OVER (PARTITION BY qid
+            ORDER BY round(list_cosine_similarity(qvec, cvec), 6) DESC, clabel) AS INT) AS prn
+        FROM qs CROSS JOIN cvecs)
+      WHERE prn <= (${probeScheduleSql("cvecs")}))"""
 
   /** Collect a MODEL-SIZED frame (centroid/cell tables — one row per
     * cell, never corpus-sized) into a driver-local relation. Every
@@ -286,15 +379,7 @@ object Similarity {
 
   def topkIvf(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir).cache()
-    val probes = ivfProbes(all)
-    val scored = all.join(broadcast(probes),
-      col("label") === col("clabel") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        VectorFns.dot6(col("qvec"), col("vec")).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .orderBy(col("qid"), col("rn"))
+    rankCut(scanProbed(all, ivfProbes(all), exactDot, "cos", labelCells))
   }
 
   /** Exact twin of [[topkIvf]]. Vectors normalize the same way (divide
@@ -303,39 +388,14 @@ object Similarity {
     * final ranking round cosines to 6 decimals with the same
     * tie-breaks. Pair scores come from raw-embedding cosine, which the
     * brute-force oracle already proves equals dot-of-normalized. */
-  val topkIvfOracle: String = s"""
-    WITH nv AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS raw,
-        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
-      FROM embeddings),
-    unit AS (SELECT vec_id, label, list_transform(raw, x -> x / nrm) AS vec FROM nv),
-    cexp AS (SELECT label, unnest(range(len(vec))) AS pos, unnest(vec) AS v
-             FROM unit),
-    cpos AS (SELECT label, pos,
-               CAST(sum(CAST(v AS DECIMAL(28,12))) / count(*) AS DOUBLE) AS c
-             FROM cexp GROUP BY label, pos),
-    cvecs AS (SELECT label AS clabel, list(c ORDER BY pos) AS cvec
-              FROM cpos GROUP BY label),
-    qs AS (SELECT vec_id AS qid, vec AS qvec FROM unit WHERE vec_id < $NQueries),
-    pr AS (
-      SELECT qid, clabel FROM (
-        SELECT qid, clabel,
-          CAST(row_number() OVER (PARTITION BY qid
-            ORDER BY round(list_cosine_similarity(qvec, cvec), 6) DESC, clabel) AS INT) AS prn
-        FROM qs CROSS JOIN cvecs)
-      WHERE prn <= (${probeScheduleSql("cvecs")})),
+  val topkIvfOracle: String = s"""${unitSql(label = true)},$labelProbeSql,
     sc AS (
       SELECT p.qid, c.vec_id AS nid,
         round(list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
                                      CAST(c.embedding AS DOUBLE[])), 6) AS cos
       FROM pr p
       JOIN embeddings q ON q.vec_id = p.qid
-      JOIN embeddings c ON c.label = p.clabel AND c.vec_id <> p.qid)
-    SELECT qid, nid, cos,
-      CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS INT) AS rn
-    FROM sc
-    QUALIFY rn <= $K
-    ORDER BY qid, rn"""
+      JOIN embeddings c ON c.label = p.clabel AND c.vec_id <> p.qid)${rankSql()}"""
 
   // ---- 3b. k-means-trained IVF ----------------------------------------
   // Lloyd's iterations as DataFrame loops (assign = broadcast-centroid
@@ -473,26 +533,11 @@ object Similarity {
     // trained centroids stay the driver seq they already are; the
     // (cid, cvec) frame below exists only for the probe join.
     val cents = kmeansCentroidSeqs(all, k = 10, iters = 3)
-    val centroids = centroidsDf(spark, cents)
     val cells = assignCellsCosine(all, cents)
       .select(col("vec_id"), col("vec"), col("cid")).cache()
-    val q = cells.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-    val probeW = Window.partitionBy(col("qid")).orderBy(col("ccos").desc, col("cid"))
-    val probes = q.join(broadcast(centroids), lit(true))
-      .select(col("qid"), col("qvec"), col("cid"),
-        VectorFns.cosine6(col("qvec"), col("cvec")).as("ccos"))
-      .withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= probeScheduleFor(cents.length))
-      .select(col("qid"), col("qvec"), col("cid"))
-    val scored = cells.join(broadcast(probes),
-      cells("cid") === probes("cid") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        VectorFns.dot6(col("qvec"), col("vec")).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .orderBy(col("qid"), col("rn"))
+    val probes = probesFrom(queryBatch(cells), centroidsDf(spark, cents),
+      probeScheduleFor(cents.length), cell = "cid")
+    rankCut(scanProbed(cells, probes, exactDot, "cos", cells("cid") === probes("cid")))
   }
 
   /** SQL twin of [[kmeansCentroids]]: Lloyd's iterations UNROLLED as
@@ -513,14 +558,7 @@ object Similarity {
     * different n re-derives k in BOTH engines or in neither. */
   private def kmeansSqlCtes(kSql: String, iters: Int): String = {
     val blocks = (0 until iters).map { n =>
-      s"""
-    a$n AS (
-      SELECT vec_id, vec, cid FROM (
-        SELECT u.vec_id, u.vec, c.cid,
-          CAST(row_number() OVER (PARTITION BY u.vec_id
-            ORDER BY round(list_cosine_similarity(u.vec, c.cvec), 6) DESC, c.cid) AS INT) AS rn
-        FROM unit u CROSS JOIN cent$n c)
-      WHERE rn = 1),
+      s"""${cosineCellsSql(s"a$n", s"cent$n")},
     u$n AS (
       SELECT cid, pos, CAST(sum(CAST(v AS DECIMAL(28,12))) / count(*) AS DOUBLE) AS c
       FROM (SELECT cid, unnest(range(len(vec))) AS pos, unnest(vec) AS v FROM a$n)
@@ -540,23 +578,23 @@ object Similarity {
       WHERE cid <= ($kSql))""" + blocks.mkString(",", ",", "")
   }
 
-  /** Exact twin of [[topkIvfTrained]]: k-means(k=10, 3 iterations) in
-    * SQL via [[kmeansSqlCtes]], then the same cell assignment, `Probes`-cell
-    * probe and in-cell exact top-k as [[topkIvfOracle]]. */
-  val topkIvfTrainedOracle: String = s"""
-    WITH nv AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw,
-        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
-      FROM embeddings),
-    unit AS (SELECT vec_id, list_transform(raw, x -> x / nrm) AS vec FROM nv),
-    ${kmeansSqlCtes(k = 10, iters = 3)},
-    cells AS (
+  /** SQL twin of [[assignCellsCosine]]: CTE `name`(vec_id, vec, cid),
+    * each `unit` row in its round-6-cosine-nearest cell of the centroid
+    * CTE `cent`, ties to the lowest cid. */
+  private def cosineCellsSql(name: String, cent: String): String = s"""
+    $name AS (
       SELECT vec_id, vec, cid FROM (
         SELECT u.vec_id, u.vec, c.cid,
           CAST(row_number() OVER (PARTITION BY u.vec_id
             ORDER BY round(list_cosine_similarity(u.vec, c.cvec), 6) DESC, c.cid) AS INT) AS rn
-        FROM unit u CROSS JOIN cent3 c)
-      WHERE rn = 1),
+        FROM unit u CROSS JOIN $cent c)
+      WHERE rn = 1)"""
+
+  /** Exact twin of [[topkIvfTrained]]: k-means(k=10, 3 iterations) in
+    * SQL via [[kmeansSqlCtes]], then the same cell assignment, `Probes`-cell
+    * probe and in-cell exact top-k as [[topkIvfOracle]]. */
+  val topkIvfTrainedOracle: String = s"""${unitSql()},
+    ${kmeansSqlCtes(k = 10, iters = 3)},${cosineCellsSql("cells", "cent3")},
     pr AS (
       SELECT qid, cid FROM (
         SELECT q.vec_id AS qid, c.cid,
@@ -572,12 +610,7 @@ object Similarity {
       FROM pr p
       JOIN cells m ON m.cid = p.cid AND m.vec_id <> p.qid
       JOIN embeddings q ON q.vec_id = p.qid
-      JOIN embeddings c ON c.vec_id = m.vec_id)
-    SELECT qid, nid, cos,
-      CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS INT) AS rn
-    FROM sc
-    QUALIFY rn <= $K
-    ORDER BY qid, rn"""
+      JOIN embeddings c ON c.vec_id = m.vec_id)${rankSql()}"""
 
   // ---- 3d. product-quantization ANN (round 7) --------------------------
   // PQ/ADC (Jégou et al. 2011, "Product Quantization for Nearest
@@ -775,10 +808,6 @@ object Similarity {
   // trains ALL sub-codebooks simultaneously — same shuffle count as one
   // flat codebook. Deterministic end-to-end (same seeds, argmins, and
   // decimal means as the flat path).
-  /** (vec_id, cid1 ∈ [1,k1], cid2 ∈ [1,k2]): two-level cell of every
-    * vector. `train` substitutes a (sample) training frame — standard
-    * practice at corpus scale; a top cell absent from the sample falls
-    * back to one zero codeword, so assignment still total-functions. */
   /** Trains the two-level codebook: (top centroids, per-top-cell sub
     * codebooks, indexed s = cid1 − 1). Both levels are driver-sized by
     * construction (k1 + k1·k2 vectors). */
@@ -820,6 +849,10 @@ object Similarity {
     assignWithTwoLevelVec(data, tops, cents2)
       .select(col("vec_id"), col("cid1"), col("cid2"))
 
+  /** (vec_id, cid1 ∈ [1,k1], cid2 ∈ [1,k2]): two-level cell of every
+    * vector. `train` substitutes a (sample) training frame — standard
+    * practice at corpus scale; a top cell absent from the sample falls
+    * back to one zero codeword, so assignment still total-functions. */
   def assignTwoLevel(data: DataFrame, k1: Int, k2: Int, iters: Int,
                      train: Option[DataFrame] = None): DataFrame = {
     val (tops, cents2) = trainTwoLevel(data, k1, k2, iters, train)
@@ -895,8 +928,7 @@ object Similarity {
       cents2: IndexedSeq[IndexedSeq[Seq[Double]]]): DataFrame = {
     val cbs = typedLit(cents2.map(_.map(_.toSeq).toSeq).toSeq) // k1·k2·dim ≤ 1024 doubles — literal budget
     val topsLit = typedLit(tops.map(_.toSeq).toSeq)
-    val q = cells.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("vec").as("qvec"))
+    val q = queryBatch(cells)
     val topW = Window.partitionBy(col("qid")).orderBy(col("tpd2"), col("pcid1"))
     val topProbes = q
       .select(col("qid"), col("qvec"),
@@ -932,14 +964,8 @@ object Similarity {
     val pairFilter = pairs
       .map { case (c1, c2) => col("cid1") === c1 && col("cid2") === c2 }
       .reduceOption(_ || _).getOrElse(lit(false))
-    val scored = cells.filter(pairFilter).join(broadcast(probes),
-        col("cid1") === col("pcid1") && col("cid2") === col("scid") &&
-          col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        VectorFns.dot6(col("qvec"), col("vec")).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= K)
-      .orderBy(col("qid"), col("rn"))
+    rankCut(scanProbed(cells.filter(pairFilter), probes, exactDot, "cos",
+      col("cid1") === col("pcid1"), col("cid2") === col("scid")))
   }
 
   /** Build the persistable two-level IVF index from a (vec_id, vec)
@@ -978,9 +1004,7 @@ object Similarity {
     val spark = cells.sparkSession
     import spark.implicits._
     val rows = subbooks.as[(Int, Int, Seq[Double])].collect()
-    if (rows.isEmpty) // empty corpus: no cells, no neighbors
-      return spark.emptyDataset[(Long, Long, Double, Int)]
-        .toDF("qid", "nid", "cos", "rn")
+    if (rows.isEmpty) return emptyTopk(spark) // empty corpus: no cells
     val tops = topsDf.orderBy(col("cid1")).select(col("tvec"))
       .as[Seq[Double]].collect().toIndexedSeq
     ivf2SearchCells(cells, tops, booksToNested(rows.toSeq))
@@ -991,19 +1015,16 @@ object Similarity {
     * provenance): both Lloyd loops and the corpus assignment are paid
     * once per corpus version; warm runs read stored cells + subbooks +
     * tops and never touch the raw embeddings table. */
-  def topkIvf2Indexed(spark: SparkSession, dir: String): DataFrame = {
-    val embPath = s"$dir/embeddings.parquet"
-    // data version + constants baked into the stored index (see
-    // topkIvfPqIndexed for the key convention); "tp" marks the round-12
-    // multi-top layout so a stored two-table index never serves it
-    val key = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${Layout.stateTag(spark, embPath)}" +
-      s"_pk${Ivf2K1}x${Ivf2K2}i${Ivf2Iters}ts"
-    val base = ivf2WriteIndex(spark, dir,
-      s"${Layout.cacheRoot(spark)}/ivf2_index/$key")
-    ivf2Of(ivf2ReadCells(spark, base),
-      spark.read.parquet(s"$base/subbooks"),
-      spark.read.parquet(s"$base/tops"))
-  }
+  def topkIvf2Indexed(spark: SparkSession, dir: String): DataFrame =
+    // constants baked into the stored index (see topkIvfPqIndexed for
+    // the key convention); "tp" marks the round-12 multi-top layout so
+    // a stored two-table index never serves it
+    servedIndex(spark, dir, "ivf2_index",
+        s"_pk${Ivf2K1}x${Ivf2K2}i${Ivf2Iters}ts")(ivf2WriteIndex) { base =>
+      ivf2Of(ivf2ReadCells(spark, base),
+        spark.read.parquet(s"$base/subbooks"),
+        spark.read.parquet(s"$base/tops"))
+    }
 
   /** Build + persist the two-level IVF index at `base` (idempotent).
     * The cells table — the corpus-sized artifact (full vectors + two
@@ -1034,12 +1055,7 @@ object Similarity {
       .parquet(s"$base/cells")
 
   /** Exact twin of [[topkIvf2]]. */
-  val topkIvf2Oracle: String = s"""
-    WITH nv AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw,
-        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
-      FROM embeddings),
-    unit AS (SELECT vec_id, list_transform(raw, x -> x / nrm) AS vec FROM nv),
+  val topkIvf2Oracle: String = s"""${unitSql()},
     ${kmeansSqlCtes(k = Ivf2K1, iters = Ivf2Iters)},
     ta AS (
       SELECT vec_id, vec, cid AS cid1 FROM (
@@ -1082,12 +1098,7 @@ object Similarity {
       FROM qp p
       JOIN cells m ON m.cid1 = p.pcid1 AND m.cid2 = p.scid AND m.vec_id <> p.qid
       JOIN embeddings eq ON eq.vec_id = p.qid
-      JOIN embeddings ec ON ec.vec_id = m.vec_id)
-    SELECT qid, nid, cos,
-      CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS INT) AS rn
-    FROM sc
-    QUALIFY rn <= $K
-    ORDER BY qid, rn"""
+      JOIN embeddings ec ON ec.vec_id = m.vec_id)${rankSql()}"""
 
   /** Build the persistable PQ index from a (vec_id, vec) frame:
     * (codes(s, vec_id, cid), books(s, cid, cvec)). The trained
@@ -1121,27 +1132,15 @@ object Similarity {
     * namespace self-exclusion contract of [[ivfPqOf]] applies here
     * verbatim. The LUT (query × subspace × codeword dots) broadcasts;
     * `codes` is the only corpus-sized input. */
-  def pqOf(codes: DataFrame, books: DataFrame, queries: DataFrame): DataFrame = {
-    val scored = pqScoresOf(codes, books, queries)
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("nid"))
-    scored
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= K)
-      .orderBy(col("qid"), col("rn"))
-  }
+  def pqOf(codes: DataFrame, books: DataFrame, queries: DataFrame): DataFrame =
+    rankCut(pqScoresOf(codes, books, queries), "adc")
 
   /** [[pqOf]]'s scoring stage without the rank cut — (qid, nid, adc)
     * for every (query, corpus) pair, the frame [[refineOf]] consumes
     * (`sim_topk_pq_refined`). */
   def pqScoresOf(codes: DataFrame, books: DataFrame,
                  queries: DataFrame): DataFrame = {
-    val qsub = pqSubvectors(
-      queries.select(col("qid").as("vec_id"), col("qvec").as("vec")))
-    val lut = qsub
-      .select(col("vec_id").as("qid"), col("s"), col("svec"))
-      .join(broadcast(books), Seq("s"))
-      .select(col("qid"), col("s"), col("cid"),
-        VectorFns.dot6(col("svec"), col("cvec")).as("d"))
-    codes.join(broadcast(lut), Seq("s", "cid"))
+    codes.join(broadcast(adcLut(queries, books)), Seq("s", "cid"))
       .filter(col("vec_id") =!= col("qid"))
       .groupBy(col("qid"), col("vec_id"))
       // exactly PqM six-dp terms per pair → DECIMAL sum is exact and
@@ -1149,6 +1148,15 @@ object Similarity {
       .agg(round(sum(col("d").cast("decimal(18,6)")).cast("double"), 6).as("adc"))
       .select(col("qid"), col("vec_id").as("nid"), col("adc"))
   }
+
+  /** The PQ ADC scorer's query side: (qid, s, cid, d), the dot of each
+    * query subvector with every codeword of its subspace. */
+  private def adcLut(queries: DataFrame, books: DataFrame): DataFrame =
+    pqSubvectors(queries.select(col("qid").as("vec_id"), col("qvec").as("vec")))
+      .select(col("vec_id").as("qid"), col("s"), col("svec"))
+      .join(broadcast(books), Seq("s"))
+      .select(col("qid"), col("s"), col("cid"),
+        VectorFns.dot6(col("svec"), col("cvec")).as("d"))
 
   /** Gated `sim_topk_pq_refined`: the PQ ADC candidate generator
     * composed with [[refineOf]] — the faiss IndexRefineFlat wrapping
@@ -1161,29 +1169,20 @@ object Similarity {
     * the true top-5 even at ADC recall .40); at 100 TB the candidate
     * stage stays code-table-sized and the refine reads are bounded. */
   def topkPqRefined(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val all = emb(spark, dir).cache()
     val (codes, books) = pqIndexOf(all)
-    if (books.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double, Int)]
-        .toDF("qid", "nid", "cos", "rn")
-    val queries = all.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-    refineOf(pqScoresOf(codes, books, queries), "adc", queries, all)
+    withBooks(books) {
+      val queries = queryBatch(all)
+      refineOf(pqScoresOf(codes, books, queries), "adc", queries, all)
+    }
   }
 
   /** PQ top-k: encode the corpus once, score by ADC, rank per query —
     * [[pqIndexOf]] composed with [[pqOf]] inline. */
   def topkPq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val all = emb(spark, dir).cache()
     val (codes, books) = pqIndexOf(all)
-    if (books.isEmpty) // empty corpus: no codes, no neighbors
-      return spark.emptyDataset[(Long, Long, Double, Int)]
-        .toDF("qid", "nid", "adc", "rn")
-    pqOf(codes, books,
-      all.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec")))
+    withBooks(books, "adc")(pqOf(codes, books, queryBatch(all)))
   }
 
   /** Gated twin of `sim_topk_pq` served from an mtime-keyed
@@ -1191,32 +1190,28 @@ object Similarity {
     * provenance): codebook training + corpus encode are paid once per
     * corpus version; warm runs touch only the stored codes/books plus
     * a pruned query-vector scan. */
-  def topkPqIndexed(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val embPath = s"$dir/embeddings.parquet"
-    // data version + constants baked into the stored index (see
-    // topkIvfPqIndexed for the key convention)
-    val key = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${Layout.stateTag(spark, embPath)}" +
-      s"_m${PqM}k${PqK}i$PqIters"
+  def topkPqIndexed(spark: SparkSession, dir: String): DataFrame =
+    // constants baked into the stored index (see topkIvfPqIndexed for
+    // the key convention)
+    servedIndex(spark, dir, "pq_index", s"_m${PqM}k${PqK}i$PqIters")(pqWriteIndex) { base =>
+      val books = spark.read.parquet(s"$base/books")
+      withBooks(books, "adc")(
+        pqOf(spark.read.parquet(s"$base/codes"), books, queryBatch(emb(spark, dir))))
+    }
+
+  /** Build + persist the PQ index under `keyDir` (idempotent); returns
+    * the committed generation dir. */
+  private def pqWriteIndex(spark: SparkSession, dir: String, keyDir: String): String =
     // completeness gates on the LAST-written table ("books"): a crash
     // between writes leaves the generation incomplete, so the next run
     // builds a fresh one instead of serving a torn cache. The
     // generation protocol (round 18) makes this object-store-exact:
     // each builder writes its OWN gen-dir and commits via _CURRENT
-    val base = Layout.generation(spark,
-      s"${Layout.cacheRoot(spark)}/pq_index/$key", "books") { g =>
+    Layout.generation(spark, keyDir, "books") { g =>
       val (codes, books) = pqIndexOf(emb(spark, dir).cache())
       codes.write.parquet(s"$g/codes")
       books.write.parquet(s"$g/books")
     }
-    val books = spark.read.parquet(s"$base/books")
-    if (books.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double, Int)]
-        .toDF("qid", "nid", "adc", "rn")
-    pqOf(spark.read.parquet(s"$base/codes"), books,
-      emb(spark, dir).filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec")))
-  }
 
   /** The round-6 L2² snippet both PQ SQL twins rank by — ONE definition
     * so plan/oracle can never drift apart. */
@@ -1256,35 +1251,30 @@ object Similarity {
       WHERE cid <= $k)""" + blocks.mkString(",", ",", "")
   }
 
-  /** SQL twins of the grouped subspace k-means: CTEs `sub` (subvectors)
-    * and `cb0`..`cb$iters` (codebooks); expects a `src(vec_id, vec)`
-    * CTE — `unit` for raw-vector PQ (22c), `res` for the residual
-    * IVFPQ encode (22i). */
+  /** SQL twins of the grouped subspace k-means and the encode: CTEs
+    * `sub` (subvectors), `cb0`..`cb$iters` (codebooks) and `codes`;
+    * expects a `src(vec_id, vec)` CTE — `unit` for raw-vector PQ (22c),
+    * `res` for the residual IVFPQ encode (22i). */
   private def pqSqlCtes(k: Int, iters: Int, src: String = "unit"): String =
     s"""
     sub AS (
       SELECT vec_id, s, vec[s*$PqSub+1 : s*$PqSub+$PqSub] AS svec
       FROM $src CROSS JOIN (SELECT unnest(range($PqM)) AS s)),
-    ${groupedLloydSqlCtes(k, iters)}"""
-
-  /** The full-corpus PQ/ADC chain shared by [[topkPqOracle]] and
-    * [[topkPqRefinedOracle]]: nv/unit, the grouped-Lloyd codebooks,
-    * codes, LUT, and `sc(qid, nid, adc)` — ONE definition so the plain
-    * and refined gates can never encode different ADC math. */
-  private def pqAdcSqlCtes: String = s"""
-    WITH nv AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw,
-        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
-      FROM embeddings),
-    unit AS (SELECT vec_id, list_transform(raw, x -> x / nrm) AS vec FROM nv),
-    ${pqSqlCtes(k = PqK, iters = PqIters)},
+    ${groupedLloydSqlCtes(k, iters)},
     codes AS (
       SELECT s, vec_id, cid FROM (
         SELECT b.s, b.vec_id, c.cid,
           CAST(row_number() OVER (PARTITION BY b.s, b.vec_id
             ORDER BY ${pqD2Sql("b.svec", "c.cvec")}, c.cid) AS INT) AS rn
-        FROM sub b JOIN cb$PqIters c USING (s))
-      WHERE rn = 1),
+        FROM sub b JOIN cb$iters c USING (s))
+      WHERE rn = 1)"""
+
+  /** The full-corpus PQ/ADC chain shared by [[topkPqOracle]] and
+    * [[topkPqRefinedOracle]]: nv/unit, the grouped-Lloyd codebooks,
+    * codes, LUT, and `sc(qid, nid, adc)` — ONE definition so the plain
+    * and refined gates can never encode different ADC math. */
+  private def pqAdcSqlCtes: String = s"""${unitSql()},
+    ${pqSqlCtes(k = PqK, iters = PqIters)},
     lut AS (
       SELECT q.vec_id AS qid, q.s, c.cid,
         round(list_dot_product(q.svec, c.cvec), 6) AS d
@@ -1300,18 +1290,12 @@ object Similarity {
   /** Exact twin of [[topkPq]]: same codebooks, codes, lookup table, and
     * ADC ranking, unrolled in SQL. */
   val topkPqOracle: String = s"""
-    $pqAdcSqlCtes
-    SELECT qid, nid, adc,
-      CAST(row_number() OVER (PARTITION BY qid ORDER BY adc DESC, nid) AS INT) AS rn
-    FROM sc
-    QUALIFY rn <= $K
-    ORDER BY qid, rn"""
+    $pqAdcSqlCtes${rankSql("adc")}"""
 
-  /** Exact twin of [[topkPqRefined]]: the shared ADC chain + the
-    * refine tail (ADC top-K·RefineFactor → exact-cosine re-rank) —
-    * the same `cand`/`rr` shape as the IVFPQ oracle's. */
-  val topkPqRefinedOracle: String = s"""
-    $pqAdcSqlCtes,
+  /** SQL twin of [[refineOf]] over CTE `sc`(qid, nid, adc): each
+    * query's ADC top-K·RefineFactor candidates `cand`, re-scored by
+    * exact cosine in `rr`, then the rank cut. */
+  private def refineSql: String = s"""
     cand AS (
       SELECT qid, nid FROM (
         SELECT qid, nid,
@@ -1325,12 +1309,13 @@ object Similarity {
                                      CAST(en.embedding AS DOUBLE[])), 6) AS cos
       FROM cand c
       JOIN embeddings eq ON eq.vec_id = c.qid
-      JOIN embeddings en ON en.vec_id = c.nid)
-    SELECT qid, nid, cos,
-      CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS INT) AS rn
-    FROM rr
-    QUALIFY rn <= $K
-    ORDER BY qid, rn"""
+      JOIN embeddings en ON en.vec_id = c.nid)${rankSql(from = "rr")}"""
+
+  /** Exact twin of [[topkPqRefined]]: the shared ADC chain + the
+    * refine tail (ADC top-K·RefineFactor → exact-cosine re-rank) —
+    * the same `cand`/`rr` shape as the IVFPQ oracle's. */
+  val topkPqRefinedOracle: String = s"""
+    $pqAdcSqlCtes,$refineSql"""
 
   // ---- 3e2. int8 scalar quantization (round 9) -------------------------
   // The faiss-SQ8 memory path: per-DIMENSION affine quantization of the
@@ -1399,33 +1384,36 @@ object Similarity {
     })
   }
 
-  def topkSq8(spark: SparkSession, dir: String): DataFrame = {
-    val raw = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), VectorFns.asDouble(col("embedding")).as("raw"))
+  /** The SQ8 scorer's corpus side: (vec_id[, keep], xh, nn) — every
+    * vector reconstructed from its one-byte codes alone, with its
+    * decimal-fold norm. */
+  private def sq8Rec(spark: SparkSession, dir: String, keep: String*): DataFrame = {
     val (mins, maxs) = sq8Stats(spark, dir)
-    val rec = sq8Reconstruct(sq8Codes(col("raw"), mins, maxs), mins, maxs)
-    val enc = raw.select(col("vec_id"), rec.as("xh"))
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id") +: keep.map(col) :+ sq8Reconstruct(sq8Codes(
+        VectorFns.asDouble(col("embedding")), mins, maxs), mins, maxs).as("xh"): _*)
       .withColumn("nn", sqrt(dotDec(col("xh"), col("xh")).cast("double")))
-    val q = enc.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("xh").as("qh"), col("nn").as("qn"))
-    val scored = enc.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        round(dotDec(col("qh"), col("xh")).cast("double") /
-          (col("qn") * col("nn")), 6).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= K)
-      .orderBy(col("qid"), col("rn"))
   }
 
-  /** Exact twin: same stats, codes, reconstruction, decimal-fold cosine. */
-  val topkSq8Oracle: String = s"""
-    WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+  /** The query batch of [[sq8Rec]] rows: (qid, qh, qn). */
+  private def sq8Queries(rec: DataFrame): DataFrame =
+    queryBatch(rec, qcols = Seq(col("xh").as("qh"), col("nn").as("qn")))
+
+  /** The SQ8 scorer: decimal-fold cosine of two reconstructions. */
+  private def sq8Cos: Column =
+    round(dotDec(col("qh"), col("xh")).cast("double") / (col("qn") * col("nn")), 6)
+
+  /** SQL twin of [[sq8Rec]]: CTEs `emb`, `dims`, `stats`, the per-dim
+    * reconstruction `rec`(vec_id[, label], i, xh) and `nrm`(vec_id, nn). */
+  private def sq8RecSql(label: Boolean): String = {
+    val (l, el) = if (label) ("label, ", "e.label, ") else ("", "")
+    s"""emb AS (SELECT vec_id, ${l}CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
     dims AS (SELECT CAST(unnest(range(1, len(v) + 1)) AS INT) AS i
              FROM (SELECT v FROM emb LIMIT 1)),
     stats AS (SELECT i, min(v[i]) AS mn, max(v[i]) AS mx
               FROM emb, dims GROUP BY i),
     rec AS (
-      SELECT e.vec_id, s.i,
+      SELECT e.vec_id, ${el}s.i,
         s.mn + (CASE WHEN s.mx = s.mn THEN 0
                 ELSE least($Sq8Levels, greatest(0,
                   floor((e.v[s.i] - s.mn) * $Sq8Levels / (s.mx - s.mn)))) END)
@@ -1433,7 +1421,17 @@ object Similarity {
       FROM emb e, stats s),
     nrm AS (SELECT vec_id,
         sqrt(CAST(sum(CAST(xh * xh AS DECIMAL(28,12))) AS DOUBLE)) AS nn
-      FROM rec GROUP BY vec_id),
+      FROM rec GROUP BY vec_id)"""
+  }
+
+  def topkSq8(spark: SparkSession, dir: String): DataFrame = {
+    val rec = sq8Rec(spark, dir)
+    rankCut(scanProbed(rec, sq8Queries(rec), sq8Cos, "cos"))
+  }
+
+  /** Exact twin: same stats, codes, reconstruction, decimal-fold cosine. */
+  val topkSq8Oracle: String = s"""
+    WITH ${sq8RecSql(label = false)},
     sc AS (
       SELECT q.vec_id AS qid, c.vec_id AS nid,
         round(CAST(sum(CAST(q.xh * c.xh AS DECIMAL(28,12))) AS DOUBLE) /
@@ -1442,12 +1440,7 @@ object Similarity {
         AND c.vec_id <> q.vec_id
       JOIN nrm qn ON qn.vec_id = q.vec_id
       JOIN nrm cn ON cn.vec_id = c.vec_id
-      GROUP BY q.vec_id, c.vec_id, qn.nn, cn.nn)
-    SELECT qid, nid, cos,
-      CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS INT) AS rn
-    FROM sc
-    QUALIFY rn <= $K
-    ORDER BY qid, rn"""
+      GROUP BY q.vec_id, c.vec_id, qn.nn, cn.nn)${rankSql()}"""
 
   // ---- 3e3. IVF candidates × SQ8 scoring (round 9) ---------------------
   // The production ANN shape at corpus scale, as ONE gated composition:
@@ -1461,63 +1454,15 @@ object Similarity {
   def topkIvfSq8(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir).cache()
     val probes = ivfProbes(all).select(col("qid"), col("clabel"))
-    val (mins, maxs) = sq8Stats(spark, dir)
-    val rec = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"),
-        sq8Reconstruct(sq8Codes(
-          VectorFns.asDouble(col("embedding")), mins, maxs), mins, maxs).as("xh"))
-      .withColumn("nn", sqrt(dotDec(col("xh"), col("xh")).cast("double")))
-    val q = rec.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("xh").as("qh"), col("nn").as("qn"))
-      .join(probes, "qid")
-    val scored = rec.join(broadcast(q),
-      col("label") === col("clabel") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        round(dotDec(col("qh"), col("xh")).cast("double") /
-          (col("qn") * col("nn")), 6).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= K)
-      .orderBy(col("qid"), col("rn"))
+    val rec = sq8Rec(spark, dir, "label")
+    rankCut(scanProbed(rec, sq8Queries(rec).join(probes, "qid"), sq8Cos, "cos",
+      labelCells))
   }
 
   /** Exact twin: the IVF oracle's probe CTEs composed with the SQ8
     * oracle's reconstruction CTEs. */
-  val topkIvfSq8Oracle: String = s"""
-    WITH nv AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS raw,
-        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
-      FROM embeddings),
-    unit AS (SELECT vec_id, label, list_transform(raw, x -> x / nrm) AS vec FROM nv),
-    cexp AS (SELECT label, unnest(range(len(vec))) AS pos, unnest(vec) AS v
-             FROM unit),
-    cpos AS (SELECT label, pos,
-               CAST(sum(CAST(v AS DECIMAL(28,12))) / count(*) AS DOUBLE) AS c
-             FROM cexp GROUP BY label, pos),
-    cvecs AS (SELECT label AS clabel, list(c ORDER BY pos) AS cvec
-              FROM cpos GROUP BY label),
-    qs AS (SELECT vec_id AS qid, vec AS qvec FROM unit WHERE vec_id < $NQueries),
-    pr AS (
-      SELECT qid, clabel FROM (
-        SELECT qid, clabel,
-          CAST(row_number() OVER (PARTITION BY qid
-            ORDER BY round(list_cosine_similarity(qvec, cvec), 6) DESC, clabel) AS INT) AS prn
-        FROM qs CROSS JOIN cvecs)
-      WHERE prn <= (${probeScheduleSql("cvecs")})),
-    emb AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    dims AS (SELECT CAST(unnest(range(1, len(v) + 1)) AS INT) AS i
-             FROM (SELECT v FROM emb LIMIT 1)),
-    stats AS (SELECT i, min(v[i]) AS mn, max(v[i]) AS mx
-              FROM emb, dims GROUP BY i),
-    rec AS (
-      SELECT e.vec_id, e.label, s.i,
-        s.mn + (CASE WHEN s.mx = s.mn THEN 0
-                ELSE least($Sq8Levels, greatest(0,
-                  floor((e.v[s.i] - s.mn) * $Sq8Levels / (s.mx - s.mn)))) END)
-          * (s.mx - s.mn) / $Sq8Levels AS xh
-      FROM emb e, stats s),
-    nrm AS (SELECT vec_id,
-        sqrt(CAST(sum(CAST(xh * xh AS DECIMAL(28,12))) AS DOUBLE)) AS nn
-      FROM rec GROUP BY vec_id),
+  val topkIvfSq8Oracle: String = s"""${unitSql(label = true)},$labelProbeSql,
+    ${sq8RecSql(label = true)},
     sc AS (
       SELECT p.qid, c.vec_id AS nid,
         round(CAST(sum(CAST(q.xh * c.xh AS DECIMAL(28,12))) AS DOUBLE) /
@@ -1527,12 +1472,7 @@ object Similarity {
       JOIN rec c ON c.i = q.i AND c.label = p.clabel AND c.vec_id <> p.qid
       JOIN nrm qn ON qn.vec_id = p.qid
       JOIN nrm cn ON cn.vec_id = c.vec_id
-      GROUP BY p.qid, c.vec_id, qn.nn, cn.nn)
-    SELECT qid, nid, cos,
-      CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS INT) AS rn
-    FROM sc
-    QUALIFY rn <= $K
-    ORDER BY qid, rn"""
+      GROUP BY p.qid, c.vec_id, qn.nn, cn.nn)${rankSql()}"""
 
   // ---- 3e4. IVF candidates × PQ ADC scoring (round 10) -----------------
   // The OTHER production ANN composition — the faiss IVFPQ shape: the
@@ -1592,20 +1532,6 @@ object Similarity {
     (codes, books, cells)
   }
 
-  /** Top-K from a (possibly parquet-roundtripped) IVFPQ index: probe
-    * `Probes` cells per query against the stored centroid table, ADC-score
-    * the stored codes of those cells against the query-side LUT. The
-    * only corpus-sized input is `codes`; everything query- or
-    * model-sized broadcasts. `queries` is a (qid, qvec) frame of unit
-    * vectors.
-    *
-    * Self-exclusion contract: `qid` and `vec_id` share ONE id
-    * namespace — the `vec_id =!= qid` filter implements the probe
-    * convention (queries are corpus rows asking for neighbors OTHER
-    * than themselves). A caller supplying external query batches must
-    * assign qids disjoint from corpus vec_ids (e.g. negative ids);
-    * a colliding qid would silently drop that unrelated corpus vector
-    * from its result list. */
   /** The IVF-family probe SCHEDULE (round 12; applied family-wide —
     * flat IVF, IVF∘SQ8, trained IVF, and IVFPQ all probe by it): the
     * faiss guidance is nprobe ~√nlist rather than a constant.
@@ -1629,6 +1555,20 @@ object Similarity {
     * safe for the oracle vals that textually precede this line.) */
   private[graft] final val RefineFactor = 10
 
+  /** Top-K from a (possibly parquet-roundtripped) IVFPQ index: probe
+    * `Probes` cells per query against the stored centroid table, ADC-score
+    * the stored codes of those cells against the query-side LUT. The
+    * only corpus-sized input is `codes`; everything query- or
+    * model-sized broadcasts. `queries` is a (qid, qvec) frame of unit
+    * vectors.
+    *
+    * Self-exclusion contract: `qid` and `vec_id` share ONE id
+    * namespace — the `vec_id =!= qid` filter implements the probe
+    * convention (queries are corpus rows asking for neighbors OTHER
+    * than themselves). A caller supplying external query batches must
+    * assign qids disjoint from corpus vec_ids (e.g. negative ids);
+    * a colliding qid would silently drop that unrelated corpus vector
+    * from its result list. */
   def ivfPqOf(codes: DataFrame, books: DataFrame, cells: DataFrame,
               queries: DataFrame, refine: Option[DataFrame] = None,
               refineFlat: Option[(DataFrame, Int)] = None): DataFrame = {
@@ -1674,13 +1614,7 @@ object Similarity {
       .join(broadcast(cellsL), Seq("clabel"))
       .select(col("qid"), col("clabel").as("label"),
         VectorFns.dot6(col("qvec"), col("cvec")).as("off"))
-    val qsub = pqSubvectors(
-      qloc.select(col("qid").as("vec_id"), col("qvec").as("vec")))
-    val lut = qsub
-      .select(col("vec_id").as("qid"), col("s"), col("svec"))
-      .join(broadcast(books), Seq("s"))
-      .select(col("qid"), col("s"), col("cid"),
-        VectorFns.dot6(col("svec"), col("cvec")).as("d"))
+    val lut = adcLut(qloc, books)
       .join(probes, "qid") // ×Probes cells per qid — still query-sized
     val scored = codesProbed.join(broadcast(lut), Seq("s", "cid"))
       .filter(col("vec_id") =!= col("qid") && col("label") === col("clabel"))
@@ -1693,14 +1627,11 @@ object Similarity {
       .select(col("qid"), col("vec_id").as("nid"),
         round((col("sd") + col("off").cast("decimal(18,6)")).cast("double"), 6)
           .as("adc"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("nid"))
     refine match {
       case None =>
         // code-only serve: ADC order IS the result (streaming serve /
         // stress path — zero full-vector reads)
-        scored
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= K)
-          .orderBy(col("qid"), col("rn"))
+        rankCut(scored, "adc")
       case Some(vecs) =>
         refineOf(scored, "adc", qloc, vecs, flatAlt = refineFlat)
     }
@@ -1725,8 +1656,6 @@ object Similarity {
                vecs: DataFrame, k: Int = K,
                flatAlt: Option[(DataFrame, Int)] = None): DataFrame = {
     val spark = cands.sparkSession
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col(scoreCol).desc, col("nid"))
     // candidate list is BOUNDED by construction (≤ queries × k ×
     // RefineFactor rows), so it caches and its id set collects safely —
     // the bm25Of releasing pattern. The collected ids become a LITERAL
@@ -1734,9 +1663,7 @@ object Similarity {
     // ([[vecStore]]) that is file-level bucket pruning — the refine
     // tail reads its candidates' buckets, not the corpus — and over a
     // flat frame it is a row filter the nid join subsumed anyway.
-    val cand = cands
-      .withColumn("arn", row_number().over(w))
-      .filter(col("arn") <= k * RefineFactor)
+    val cand = topPerQuery(cands, scoreCol, k * RefineFactor, rn = "arn")
       .select(col("qid"), col("nid"))
       .join(broadcast(queries), Seq("qid"))
       .cache()
@@ -1766,14 +1693,9 @@ object Similarity {
     val src = flatAlt match {
       case Some((flat, nb)) =>
         val covered =
-          if (!overBudget) {
-            val dt = cand.schema("nid").dataType
-            idsHead.map { v =>
-              val h = org.apache.spark.sql.catalyst.expressions
-                .Murmur3HashFunction.hash(v, dt, 42L).toInt
-              ((h % nb) + nb) % nb
-            }.distinct.length.toLong
-          } else
+          if (!overBudget)
+            bucketsOf(idsHead.toSeq, cand.schema("nid").dataType, nb).distinct.length.toLong
+          else
             cand.select(pmod(hash(col("nid")), lit(nb)).as("b"))
               .distinct().count()
         val takeFlat = covered * 2 > nb
@@ -1804,14 +1726,24 @@ object Similarity {
       .join(broadcast(cand), Seq("nid"))
       .select(col("qid"), col("nid"),
         VectorFns.dot6(col("qvec"), col("nvec")).as("cos"))
-    val wr = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("nid"))
-    val out = rer.withColumn("rn", row_number().over(wr)).filter(col("rn") <= k)
-      .orderBy(col("qid"), col("rn"))
-      .cache()
+    val out = rankCut(rer, k = k).cache()
     out.count() // forces both cand consumers; result is query-sized
     cand.unpersist()
     out
+  }
+
+  /** The buckets of a `nb`-bucket vec_id store that `ids` (collected
+    * values of a `dt` column) hash into — Spark's pmod(hash(id), nb)
+    * on the driver: Murmur3HashFunction is the hash() expression's
+    * interpreted form (seed 42), and it takes Catalyst values, so each
+    * external Row value converts first (a String hashes as the
+    * UTF8String hash() sees). One pass over the ids, no Spark job. */
+  private[graft] def bucketsOf(ids: Seq[Any], dt: DataType, nb: Int): Seq[Int] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    ids.map { v =>
+      val h = Murmur3HashFunction.hash(toCatalyst(v), dt, 42L).toInt
+      ((h % nb) + nb) % nb
+    }
   }
 
   /** [[ivfPqIndexOf]] over the standard embeddings table — the spec /
@@ -1836,16 +1768,9 @@ object Similarity {
   }
 
   def topkIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val all = emb(spark, dir).cache()
     val (codes, books, cells) = ivfPqIndexOf(all)
-    if (books.isEmpty) // empty corpus: no codes, no neighbors
-      return spark.emptyDataset[(Long, Long, Double, Int)]
-        .toDF("qid", "nid", "cos", "rn")
-    ivfPqOf(codes, books, cells,
-      all.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec")),
-      refine = Some(all))
+    withBooks(books)(ivfPqOf(codes, books, cells, queryBatch(all), refine = Some(all)))
   }
 
   /** Gated twin of `sim_topk_ivf_pq` served from an mtime-keyed
@@ -1853,9 +1778,7 @@ object Similarity {
     * provenance): the build pass (codebook training + corpus encode)
     * is paid once per corpus version; warm runs touch only the stored
     * codes/books/cells plus a pruned query-vector scan. */
-  def topkIvfPqIndexed(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val embPath = s"$dir/embeddings.parquet"
+  def topkIvfPqIndexed(spark: SparkSession, dir: String): DataFrame =
     // key = data version + the constants BAKED INTO the stored index
     // (codebook size / training rounds — codes and books change with
     // them). K/NQueries apply at serve time, so they don't key the
@@ -1863,26 +1786,19 @@ object Similarity {
     // "res" marks the round-12 residual encode, "p" the round-13
     // label-PARTITIONED codes layout — a stored index from an earlier
     // build must not serve under the new math or the new layout
-    val key = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${Layout.stateTag(spark, embPath)}" +
-      s"_respm${PqM}k${PqK}i$PqIters"
-    val base = ivfPqWriteIndex(spark, dir,
-      s"${Layout.cacheRoot(spark)}/ivfpq_index/$key")
-    val books = spark.read.parquet(s"$base/books")
-    if (books.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double, Int)]
-        .toDF("qid", "nid", "cos", "rn")
-    ivfPqOf(ivfPqReadCodes(spark, base), books,
-      spark.read.parquet(s"$base/cells"),
-      emb(spark, dir).filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("vec").as("qvec")),
-      refine = Some(vecStore(spark, dir)),
-      // flat twin of the same files: refineOf picks per batch from
-      // candidate bucket coverage (round 14 — at gated SFs K·10
-      // candidates cover most of the 16-bucket floor, so the flat
-      // view's finer splits win; at 1 M+ the derived count keeps the
-      // pruned bucketed path)
-      refineFlat = Some((vecStoreFlatView(spark, dir), vecBuckets(spark, dir))))
-  }
+    servedIndex(spark, dir, "ivfpq_index",
+        s"_respm${PqM}k${PqK}i$PqIters")(ivfPqWriteIndex) { base =>
+      val books = spark.read.parquet(s"$base/books")
+      withBooks(books)(ivfPqOf(ivfPqReadCodes(spark, base), books,
+        spark.read.parquet(s"$base/cells"), queryBatch(emb(spark, dir)),
+        refine = Some(vecStore(spark, dir)),
+        // flat twin of the same files: refineOf picks per batch from
+        // candidate bucket coverage (round 14 — at gated SFs K·10
+        // candidates cover most of the 16-bucket floor, so the flat
+        // view's finer splits win; at 1 M+ the derived count keeps the
+        // pruned bucketed path)
+        refineFlat = Some((vecStoreFlatView(spark, dir), vecBuckets(spark, dir)))))
+    }
 
   /** Vectors-per-bucket target for the derived vector-store layout
     * (round 14): ~1k full vectors per bucket keeps one bucket a small
@@ -2122,27 +2038,7 @@ object Similarity {
     * the same schedule as [[probeScheduleFor]] (regen-safe — a new
     * label cardinality re-derives it), and the `cand`/`rr` tail is the
     * exact-refine re-rank of [[ivfPqOf]]'s refine arm. */
-  val topkIvfPqOracle: String = s"""
-    WITH nv AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS raw,
-        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
-      FROM embeddings),
-    unit AS (SELECT vec_id, label, list_transform(raw, x -> x / nrm) AS vec FROM nv),
-    cexp AS (SELECT label, unnest(range(len(vec))) AS pos, unnest(vec) AS v
-             FROM unit),
-    cpos AS (SELECT label, pos,
-               CAST(sum(CAST(v AS DECIMAL(28,12))) / count(*) AS DOUBLE) AS c
-             FROM cexp GROUP BY label, pos),
-    cvecs AS (SELECT label AS clabel, list(c ORDER BY pos) AS cvec
-              FROM cpos GROUP BY label),
-    qs AS (SELECT vec_id AS qid, vec AS qvec FROM unit WHERE vec_id < $NQueries),
-    pr AS (
-      SELECT qid, clabel FROM (
-        SELECT qid, clabel,
-          CAST(row_number() OVER (PARTITION BY qid
-            ORDER BY round(list_cosine_similarity(qvec, cvec), 6) DESC, clabel) AS INT) AS prn
-        FROM qs CROSS JOIN cvecs)
-      WHERE prn <= (${probeScheduleSql("cvecs")})),
+  val topkIvfPqOracle: String = s"""${unitSql(label = true)},$labelProbeSql,
     resx AS (
       SELECT u.vec_id, unnest(range(len(u.vec))) AS pos, unnest(u.vec) AS v,
         unnest(c.cvec) AS cv
@@ -2150,13 +2046,6 @@ object Similarity {
     res AS (SELECT vec_id, list(v - cv ORDER BY pos) AS vec
             FROM resx GROUP BY vec_id),
     ${pqSqlCtes(k = PqK, iters = PqIters, src = "res")},
-    codes AS (
-      SELECT s, vec_id, cid FROM (
-        SELECT b.s, b.vec_id, c.cid,
-          CAST(row_number() OVER (PARTITION BY b.s, b.vec_id
-            ORDER BY ${pqD2Sql("b.svec", "c.cvec")}, c.cid) AS INT) AS rn
-        FROM sub b JOIN cb$PqIters c USING (s))
-      WHERE rn = 1),
     lab AS (SELECT vec_id, label FROM unit),
     qsub AS (
       SELECT vec_id, s, vec[s*$PqSub+1 : s*$PqSub+$PqSub] AS svec
@@ -2184,26 +2073,7 @@ object Similarity {
     sc AS (
       SELECT m.qid, m.nid,
         round(CAST(m.sd + CAST(o.off AS DECIMAL(18,6)) AS DOUBLE), 6) AS adc
-      FROM sums m JOIN ofs o ON o.qid = m.qid AND o.clabel = m.label),
-    cand AS (
-      SELECT qid, nid FROM (
-        SELECT qid, nid,
-          CAST(row_number() OVER (PARTITION BY qid
-            ORDER BY adc DESC, nid) AS INT) AS arn
-        FROM sc)
-      WHERE arn <= ${K * RefineFactor}),
-    rr AS (
-      SELECT c.qid, c.nid,
-        round(list_cosine_similarity(CAST(eq.embedding AS DOUBLE[]),
-                                     CAST(en.embedding AS DOUBLE[])), 6) AS cos
-      FROM cand c
-      JOIN embeddings eq ON eq.vec_id = c.qid
-      JOIN embeddings en ON en.vec_id = c.nid)
-    SELECT qid, nid, cos,
-      CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS INT) AS rn
-    FROM rr
-    QUALIFY rn <= $K
-    ORDER BY qid, rn"""
+      FROM sums m JOIN ofs o ON o.qid = m.qid AND o.clabel = m.label),$refineSql"""
 
   // ---- 3f. prototypicality ranking (round 8) ----------------------------
   // D4 (Tirumala et al. 2023, "D4: Improving LLM Pretraining via
@@ -2234,12 +2104,7 @@ object Similarity {
   /** Exact twin of [[prototypicality]]: same unrolled Lloyd rounds, the
     * row_number cell assignment (== first-max argmax), the winning
     * cosine as the score, and the same per-cell rank. */
-  val prototypicalityOracle: String = s"""
-    WITH nv AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw,
-        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
-      FROM embeddings),
-    unit AS (SELECT vec_id, list_transform(raw, x -> x / nrm) AS vec FROM nv),
+  val prototypicalityOracle: String = s"""${unitSql()},
     ${kmeansSqlCtes(k = 10, iters = 3)},
     cells AS (
       SELECT vec_id, cid, sim AS proto_cos FROM (
@@ -2332,23 +2197,11 @@ object Similarity {
     * min-reachable components via the same recursive-CTE closure the
     * dedup_clusters oracle uses. Value-grouping is engine-local, so
     * each engine only needs self-consistent float normalization. */
-  val dedupSemanticOracle: String = s"""
-    WITH RECURSIVE nv AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw,
-        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
-      FROM embeddings),
-    unitall AS (SELECT vec_id, list_transform(raw, x -> x / nrm) AS vec FROM nv),
+  val dedupSemanticOracle: String = s"""${unitSql(unit = "unitall", recursive = true)},
     g AS (SELECT vec, min(vec_id) AS base_id, list(vec_id) AS members
           FROM unitall GROUP BY vec),
     unit AS (SELECT base_id AS vec_id, vec FROM g),
-    ${kmeansSqlCtes(knnCellsForSql, iters = 3)},
-    cells AS (
-      SELECT vec_id, vec, cid FROM (
-        SELECT u.vec_id, u.vec, c.cid,
-          CAST(row_number() OVER (PARTITION BY u.vec_id
-            ORDER BY round(list_cosine_similarity(u.vec, c.cvec), 6) DESC, c.cid) AS INT) AS rn
-        FROM unit u CROSS JOIN cent3 c)
-      WHERE rn = 1),
+    ${kmeansSqlCtes(knnCellsForSql, iters = 3)},${cosineCellsSql("cells", "cent3")},
     prs AS (
       SELECT a.vec_id AS da, b.vec_id AS db
       FROM cells a JOIN cells b ON a.cid = b.cid AND a.vec_id < b.vec_id
@@ -2422,29 +2275,16 @@ object Similarity {
     val all = pre.withColumn("bucket",
       lshBucket(col("vec"), table = 0, planes = NPlanes, dim = vecDim(pre)))
       .cache()
-    val q = all.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("vec").as("qvec"), col("bucket"))
+    val q = queryBatch(all, qcols = Seq(col("vec").as("qvec"), col("bucket")))
       // multi-probe: own bucket + every single-bit flip
       .select(col("qid"), col("qvec"),
         explode(array(lit(0) +: (0 until NPlanes).map(j => lit(1 << j)): _*)).as("flip"),
         col("bucket"))
       .select(col("qid"), col("qvec"),
         col("bucket").bitwiseXOR(col("flip")).as("bucket"))
-    val scored = all.join(broadcast(q),
-      all("bucket") === q("bucket") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nid"),
-        VectorFns.dot6(col("qvec"), col("vec")).as("cos"))
-      .distinct()
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= K)
-      .orderBy(col("qid"), col("rn"))
+    rankCut(scanProbed(all, q, exactDot, "cos", all("bucket") === q("bucket")).distinct())
   }
 
-  /** Exact twin of [[topkLsh]]: the md5-derived plane signs make the
-    * 8-bit sign bucket, the query-side single-bit multi-probe, and the
-    * in-bucket exact top-k all SQL-expressible. DuckDB lambda indices
-    * are 1-based, hence `i - 1` in the sign hash. */
   /** DuckDB twin of [[lshBucket]] over a `vec` column (1-based lambda
     * index, hence `i - 1` inside the sign hash). */
   private def bucketSql(table: Int, planes: Int = NPlanes): String = {
@@ -2457,14 +2297,13 @@ object Similarity {
       .mkString(" + ")
   }
 
+  /** Exact twin of [[topkLsh]]: the md5-derived plane signs make the
+    * 8-bit sign bucket, the query-side single-bit multi-probe, and the
+    * in-bucket exact top-k all SQL-expressible. DuckDB lambda indices
+    * are 1-based, hence `i - 1` in the sign hash. */
   val topkLshOracle: String = {
     val flips = (0 +: (0 until NPlanes).map(1 << _)).mkString("[", ", ", "]")
-    s"""
-    WITH nv AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw,
-        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
-      FROM embeddings),
-    unit AS (SELECT vec_id, list_transform(raw, x -> x / nrm) AS vec FROM nv),
+    s"""${unitSql()},
     b AS (SELECT vec_id, ${bucketSql(0)} AS bucket FROM unit),
     probes AS (
       SELECT qid, xor(bucket, f) AS bucket FROM
@@ -2477,12 +2316,7 @@ object Similarity {
       FROM probes p
       JOIN b m ON m.bucket = p.bucket AND m.vec_id <> p.qid
       JOIN embeddings q ON q.vec_id = p.qid
-      JOIN embeddings c ON c.vec_id = m.vec_id)
-    SELECT qid, nid, cos,
-      CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS INT) AS rn
-    FROM sc
-    QUALIFY rn <= $K
-    ORDER BY qid, rn"""
+      JOIN embeddings c ON c.vec_id = m.vec_id)${rankSql()}"""
   }
 
   /** Exact twin of [[nearDupPairsLsh]]: exact-value collapse to min-id
@@ -2493,12 +2327,7 @@ object Similarity {
     * corpus-sized max(8, ceil(log2(n/64))) for every n ≤ 16384 — far
     * above the oracle SFs; beyond that the Spark side grows the bucket
     * space and this oracle would need regenerating. */
-  val nearDupPairsLshOracle: String = s"""
-    WITH nv AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw,
-        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
-      FROM embeddings),
-    unitall AS (SELECT vec_id, list_transform(raw, x -> x / nrm) AS vec FROM nv),
+  val nearDupPairsLshOracle: String = s"""${unitSql(unit = "unitall")},
     g AS (SELECT vec, list(vec_id ORDER BY vec_id) AS members
           FROM unitall GROUP BY vec),
     base AS (SELECT members[1] AS vec_id, vec FROM g),
@@ -2539,12 +2368,6 @@ object Similarity {
 
   private val KnnJ = 3
 
-  /** Per-vector top-[[KnnJ]] within-cell neighbor list:
-    * (vec_id, nid, sim, rn) — sim is round-6 cosine (dot of unit
-    * vectors), ties → lowest nid. Vectors alone in their cell emit no
-    * rows (no within-cell candidates); callers needing full coverage
-    * raise k-means k or add probe cells, the standard recall/cost knob
-    * this family documents. */
   /** The graph build over ANY pre-bucketed (vec_id, vec, cid) frame —
     * cid can come from flat k-means (the gated entry), two-level
     * assignment at real k (ScaleKnn: 1024 effective cells over 1 M
@@ -2563,6 +2386,12 @@ object Similarity {
       .orderBy(col("vec_id"), col("rn"))
   }
 
+  /** Per-vector top-[[KnnJ]] within-cell neighbor list:
+    * (vec_id, nid, sim, rn) — sim is round-6 cosine (dot of unit
+    * vectors), ties → lowest nid. Vectors alone in their cell emit no
+    * rows (no within-cell candidates); callers needing full coverage
+    * raise k-means k or add probe cells, the standard recall/cost knob
+    * this family documents. */
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir).cache()
     knnGraphOf(knnCells(all).cache())
@@ -2691,13 +2520,12 @@ object Similarity {
     * consumers re-paid the 12.5 s sf1 graph build each, ~30 s of the
     * decade total. */
   def knnGraphCached(spark: SparkSession, dir: String): DataFrame = {
-    val embPath = s"$dir/embeddings.parquet"
     // the EFFECTIVE adaptive k is part of the identity (a corpus
     // rewrite that changes n re-keys even at an unchanged mtime path)
     val k = knnCellsFor(emb(spark, dir).count())
     // the flat/two-level cutover changes the quantizer (cosine argmax
     // vs composed L2²) — fold it in so a conf flip re-keys
-    val key = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${Layout.stateTag(spark, embPath)}" +
+    val key = Layout.storeKey(spark, dir, "embeddings") +
       s"_j${KnnJ}_k${k}i${KnnKmIters}f${knnFlatMaxCells(spark)}"
     // generation protocol (round 18): fresh gen-dir + _CURRENT commit
     val path = Layout.generation(spark,
@@ -2712,20 +2540,8 @@ object Similarity {
     * count(unit) with the [[knnCellsFor]] formula (round 12; was a
     * hardcoded 10 that silently required n ≤ 2 000) — a testdata regen
     * at any n re-derives the same k both engines use. */
-  private def knnGraphSqlCtes: String = s"""
-    WITH nv AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw,
-        sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) AS nrm
-      FROM embeddings),
-    unit AS (SELECT vec_id, list_transform(raw, x -> x / nrm) AS vec FROM nv),
-    ${kmeansSqlCtes(knnCellsForSql, iters = 3)},
-    cells AS (
-      SELECT vec_id, vec, cid FROM (
-        SELECT u.vec_id, u.vec, c.cid,
-          CAST(row_number() OVER (PARTITION BY u.vec_id
-            ORDER BY round(list_cosine_similarity(u.vec, c.cvec), 6) DESC, c.cid) AS INT) AS rn
-        FROM unit u CROSS JOIN cent3 c)
-      WHERE rn = 1),
+  private def knnGraphSqlCtes: String = s"""${unitSql()},
+    ${kmeansSqlCtes(knnCellsForSql, iters = 3)},${cosineCellsSql("cells", "cent3")},
     sc AS (
       SELECT a.vec_id, b.vec_id AS nid,
         round(list_dot_product(a.vec, b.vec), 6) AS sim
@@ -2748,14 +2564,6 @@ object Similarity {
     * as a quantile of the kNN sims. */
   private val DensityTau = 0.40
 
-  /** SemDeDup-flavored diversity prune over the [[knnGraph]]: a
-    * vector's `close` set is its top-[[KnnJ]] neighbors at sim ≥ τ;
-    * `keep` = the vector has no close neighbor with a smaller id —
-    * every dense neighborhood keeps exactly its locally-minimal ids,
-    * sparse vectors keep trivially. One aggregation over the J-bounded
-    * graph (≤ J rows/vector), so the prune costs nothing beyond the
-    * graph itself. Output (vec_id, close_cnt, keep) — the downstream
-    * filter is `WHERE keep`. */
   /** The prune over ANY (vec_id, nid, sim) graph frame + (vec_id) node
     * frame — decomposed like [[pagerankOf]] so a materialized graph
     * serves every downstream consumer without a rebuild. */
@@ -2772,6 +2580,14 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
+  /** SemDeDup-flavored diversity prune over the [[knnGraph]]: a
+    * vector's `close` set is its top-[[KnnJ]] neighbors at sim ≥ τ;
+    * `keep` = the vector has no close neighbor with a smaller id —
+    * every dense neighborhood keeps exactly its locally-minimal ids,
+    * sparse vectors keep trivially. One aggregation over the J-bounded
+    * graph (≤ J rows/vector), so the prune costs nothing beyond the
+    * graph itself. Output (vec_id, close_cnt, keep) — the downstream
+    * filter is `WHERE keep`. */
   def densityPrune(spark: SparkSession, dir: String): DataFrame =
     densityPruneOf(emb(spark, dir).select(col("vec_id")),
       knnGraphCached(spark, dir))
@@ -2793,20 +2609,6 @@ object Similarity {
   private val PrE = 1000000000000L
   private val PrRounds = 3
 
-  /** PageRank over the [[knnGraph]] edges — graph centrality as a
-    * data-curation signal (hub vectors = over-represented regions;
-    * periphery = rare/diverse samples). The iterative-DataFrame shape:
-    * pr stays DISTRIBUTED (corpus-sized — never collected, unlike the
-    * bounded Lloyd codebooks); each round is one equi-keyed groupBy on
-    * the J-bounded edge list plus a broadcast-free left join back to
-    * the node frame. Exactness rules: per-edge contributions are
-    * double-divided (IEEE-portable), cast to DECIMAL(28,12) (12-dp
-    * deterministic rounding) so the per-target SUM is
-    * aggregation-order-independent, and each round's pr is rounded to
-    * 12 dp — the oracle unrolls identical rounds as CTEs. Dangling
-    * vectors (no out-edges) leak their mass (1−d keeps totals stable
-    * enough for RANKING, the curation use; full dangling redistribution
-    * would add an all-reduce per round for no ordering change). */
   /** PageRank over ANY (src, dst) edge frame + (vec_id) node frame —
     * the decomposed serve API: edges can come from a MATERIALIZED
     * (parquet-roundtripped) [[knnGraph]] so re-ranking never pays the
@@ -2854,6 +2656,20 @@ object Similarity {
     pr.select(col("vec_id"), col("pr")).orderBy(col("vec_id"))
   }
 
+  /** PageRank over the [[knnGraph]] edges — graph centrality as a
+    * data-curation signal (hub vectors = over-represented regions;
+    * periphery = rare/diverse samples). The iterative-DataFrame shape:
+    * pr stays DISTRIBUTED (corpus-sized — never collected, unlike the
+    * bounded Lloyd codebooks); each round is one equi-keyed groupBy on
+    * the J-bounded edge list plus a broadcast-free left join back to
+    * the node frame. Exactness rules: per-edge contributions are
+    * double-divided (IEEE-portable), cast to DECIMAL(28,12) (12-dp
+    * deterministic rounding) so the per-target SUM is
+    * aggregation-order-independent, and each round's pr is rounded to
+    * 12 dp — the oracle unrolls identical rounds as CTEs. Dangling
+    * vectors (no out-edges) leak their mass (1−d keeps totals stable
+    * enough for RANKING, the curation use; full dangling redistribution
+    * would add an all-reduce per round for no ordering change). */
   def graphPagerank(spark: SparkSession, dir: String): DataFrame =
     pagerankOf(emb(spark, dir).select(col("vec_id")),
       knnGraphCached(spark, dir)

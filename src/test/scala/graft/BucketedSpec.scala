@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.operators.Similarity
 import graft.sources.{Bucketed, Tables}
 
 class BucketedSpec extends AnyFunSuite {
@@ -10,21 +11,23 @@ class BucketedSpec extends AnyFunSuite {
 
   test("driver Murmur3 pmod == Spark pmod(hash(col), nb) for long ids") {
     // refineOf's within-budget bucket-coverage derivation (r21) hashes
-    // collected ids on the driver via Murmur3HashFunction — this pin
+    // collected ids on the driver (Similarity.bucketsOf) — this pin
     // fails loudly if Spark's hash() expression ever changes seed or
-    // algorithm, which would silently flip the flat/bucketed choice
-    val ids = Seq(0L, 1L, -1L, 42L, 9001L, Long.MaxValue, Long.MinValue,
+    // algorithm, or if a collected external value (a String, say) is
+    // hashed unconverted, either of which would silently flip the
+    // flat/bucketed choice or throw inside the literal budget
+    val longs = Seq(0L, 1L, -1L, 42L, 9001L, Long.MaxValue, Long.MinValue,
       123456789012345L) ++ (0L until 500L).map(i => i * 7919L - 250L)
     val nb = 16
-    val viaSpark = ids.toDF("nid")
-      .select(col("nid"), pmod(hash(col("nid")), lit(nb)).as("b"))
-      .as[(Long, Int)].collect().toMap
-    val viaDriver = ids.map { v =>
-      val h = org.apache.spark.sql.catalyst.expressions
-        .Murmur3HashFunction.hash(v, org.apache.spark.sql.types.LongType, 42L).toInt
-      v -> (((h % nb) + nb) % nb)
-    }.toMap
-    assert(viaSpark == viaDriver)
+    def check(ids: org.apache.spark.sql.DataFrame): Unit = {
+      val viaSpark = ids.select(pmod(hash(col("nid")), lit(nb))).as[Int].collect().toSeq
+      val rows = ids.collect().map(_.get(0)).toSeq
+      assert(Similarity.bucketsOf(rows, ids.schema("nid").dataType, nb) == viaSpark,
+        ids.schema("nid").dataType)
+    }
+    check(longs.toDF("nid"))
+    check(longs.map(v => (v ^ (v >>> 32)).toInt).toDF("nid"))
+    check((longs.map(v => s"doc-$v") :+ "" :+ "ünïcode").toDF("nid"))
   }
 
   test("bucketed fact-fact join plans with zero exchanges and matches the shuffle join") {

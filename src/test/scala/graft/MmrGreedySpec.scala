@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorFns
@@ -56,13 +57,19 @@ class MmrGreedySpec extends AnyFunSuite {
   /** The pre-r20 formulation, verbatim: K−1 driver rounds of
     * anti-join + pen aggregate + window argmax. */
   private def mmrDriverLoop(dir: String): Seq[(Long, Long, Double, Int)] = {
+    val all = Similarity.emb(spark, dir).select(col("vec_id"), col("vec"))
+    driverLoopOver(Similarity.cosineRanked(spark, dir, 5, 20)
+      .select(col("qid"), col("nid"), col("cos"))
+      .join(all.select(col("vec_id").as("nid"), col("vec")), "nid"), all)
+  }
+
+  /** The driver rounds over given candidates (qid, nid, cos, vec) and
+    * vectors (vec_id, vec). */
+  private def driverLoopOver(candRows: DataFrame,
+                             all: DataFrame): Seq[(Long, Long, Double, Int)] = {
     val MmrNum = 7
     val K = 5
-    val all = Similarity.emb(spark, dir).select(col("vec_id"), col("vec"))
-    val cands = Similarity.cosineRanked(spark, dir, 5, 20)
-      .select(col("qid"), col("nid"), col("cos"))
-      .join(all.select(col("vec_id").as("nid"), col("vec")), "nid")
-      .cache()
+    val cands = candRows.cache()
     val w0 = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
     val first = cands
       .withColumn("rnk", row_number().over(w0)).filter(col("rnk") === 1)
@@ -98,5 +105,24 @@ class MmrGreedySpec extends AnyFunSuite {
       .as[(Long, Long, Double, Int)].collect().toSeq
     assert(got == expect)
     assert(expect.nonEmpty && expect.map(_._4).max == 5)
+  }
+
+  test("in-task greedy ranks a NaN cos the way the Spark window does, wherever it sits by nid") {
+    // nids 2 and 4 carry a NaN cos. Spark's window (and DuckDB) order
+    // NaN above every number, so rounds 1 and 2 take them; a plain
+    // `>` lets a NaN win only as the first untaken candidate scanned
+    val rnd = new scala.util.Random(11)
+    val vecs = (0L until 8L).map(i => (i, Seq.fill(4)(rnd.nextDouble() * 2 - 1)))
+    val cands = vecs.map { case (nid, v) =>
+      (nid, if (nid == 2L || nid == 4L) Double.NaN else 0.9 - nid * 0.1, v)
+    }.toArray
+    val expect = driverLoopOver(
+      cands.toSeq.map { case (nid, c, v) => (100L, nid, c, v) }.toDF("qid", "nid", "cos", "vec"),
+      vecs.toDF("vec_id", "vec"))
+    def bits(rows: Seq[(Long, Double, Int)]) =
+      rows.map { case (nid, mmr, rn) => (nid, java.lang.Double.doubleToLongBits(mmr), rn) }
+    val got = Retrieval.mmrGreedy(cands)
+    assert(got.take(2).map(_._1) == Seq(2L, 4L), got)
+    assert(bits(got) == bits(expect.map(t => (t._2, t._3, t._4))))
   }
 }

@@ -27,6 +27,10 @@ object TextFns {
 
   def tokenCount(c: Column): Column = size(tokens(c))
 
+  /** The content fingerprint of a token array: md5 of the tokens joined
+    * by single spaces — the exact-dup key and the token checksum. */
+  def contentFp(toks: Column): Column = md5(concat_ws(" ", toks))
+
   // ---- script-aware tokenizer (round 19, TokVersion 2) -----------------
   // [[tokens]] is reference-faithful: tokens are maximal ASCII
   // [0-9A-Za-z_] runs, so a Japanese or Chinese document — which the

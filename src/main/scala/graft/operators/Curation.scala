@@ -948,7 +948,7 @@ object Curation {
     val fp = toks
       .join(kept, Seq("doc_id"))
       .select(col("doc_id"), col("n_tokens"),
-        md5(concat_ws(" ", col("t"))).as("content_fp"))
+        TextFns.contentFp(col("t")).as("content_fp"))
       .cache()
     val surv = fp.groupBy(col("content_fp"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
@@ -1272,8 +1272,9 @@ object Curation {
     * [[releaseShards]]: (doc_id, n_copies, source, split, n_pii,
     * n_ship_tokens, ship_text, contaminated) for every curated
     * survivor. ONE definition, so the card and the exported shards can
-    * never disagree about what ships. */
-  /** `tokVersion` (round 20, the r19 verdict's #2) threads the
+    * never disagree about what ships.
+    *
+    * `tokVersion` (round 20, the r19 verdict's #2) threads the
     * script-aware tokenizer through the release chain: under
     * [[TextFns.TokVersion2]] the corpus is seeded with the 20 held-out
     * multilingual docs, stage 1 runs the v2 tokens + ML gate
@@ -1350,16 +1351,6 @@ object Curation {
       .withColumn("contaminated", coalesce(col("contaminated"), lit(false)))
   }
 
-  /** [[releaseV2Frame]] MATERIALIZED once per corpus version (round 16,
-    * the clustersCached / 26q2 pattern): the curate→winnow→redact→split
-    * chain is the suite's most expensive composition (~4.5 s sf0.1,
-    * 12.5 s sf1 — a day-scale job at 100 TB), and a real release run
-    * consumes it TWICE (the card via [[releaseManifestV2]], the shipped
-    * bytes via [[releaseShards]]). The stateTag in the key re-keys the
-    * artifact on any corpus regen — same second included — and the df
-    * cap is part of the identity because the cluster stage depends on
-    * it (the splitLeakSafeComposed rule). Warm consumers pay a parquet
-    * read of exactly the columns they prune to. */
   /** CODE version baked into [[releaseV2FrameCached]]'s key (round 17,
     * the r16 verdict's #6): the artifact's identity is (corpus state,
     * df cap, AND the release semantics that computed it). Bump this
@@ -1370,8 +1361,9 @@ object Curation {
 
   /** The release-frame artifact path for an explicit code version —
     * split out so the bump-invalidates spec can prove a version bump
-    * re-keys (and therefore rebuilds) without mutating the constant. */
-  /** `tokVersion` folds into the key only when ≠ v1 so every existing
+    * re-keys (and therefore rebuilds) without mutating the constant.
+    *
+    * `tokVersion` folds into the key only when ≠ v1 so every existing
     * v1 artifact stays valid — the ML frame is a SIBLING generation
     * family member, not an invalidation of the v1 release. */
   private[graft] def releaseV2CachePath(spark: SparkSession, dir: String,
@@ -1383,6 +1375,16 @@ object Curation {
     s"${Layout.cacheRoot(spark)}/release_v2_cache/$key"
   }
 
+  /** [[releaseV2Frame]] MATERIALIZED once per corpus version (round 16,
+    * the clustersCached / 26q2 pattern): the curate→winnow→redact→split
+    * chain is the suite's most expensive composition (~4.5 s sf0.1,
+    * 12.5 s sf1 — a day-scale job at 100 TB), and a real release run
+    * consumes it TWICE (the card via [[releaseManifestV2]], the shipped
+    * bytes via [[releaseShards]]). The stateTag in the key re-keys the
+    * artifact on any corpus regen — same second included — and the df
+    * cap is part of the identity because the cluster stage depends on
+    * it (the splitLeakSafeComposed rule). Warm consumers pay a parquet
+    * read of exactly the columns they prune to. */
   private[graft] def releaseV2FrameCached(spark: SparkSession, dir: String,
                                           tokVersion: Int = TextFns.TokVersion): DataFrame = {
     // generation protocol (round 18): fresh gen-dir + _CURRENT commit
@@ -1752,7 +1754,7 @@ object Curation {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val verdicts = Dedup.incrementalOf(catalogFp, catalogSh, batch)
     val clusters2 = extendClusters(clusters, verdicts)
-    val (fp2, sh2) = Dedup.mergeIntoCatalog(catalogFp, catalogSh, batch, verdicts)
+    val Seq(fp2, sh2) = Dedup.ShingleCatalog.merge(Seq(catalogFp, catalogSh), batch, verdicts)
     val manifest = releaseManifestOf(released.unionByName(batch), clusters2)
     (manifest, fp2, sh2, clusters2)
   }

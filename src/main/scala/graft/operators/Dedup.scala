@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.sources.Tables
 import graft.functions.TextFns
 
@@ -69,7 +70,7 @@ object Dedup {
   def exact(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        md5(concat_ws(" ", TextFns.tokens(col("text")))).as("content_fp"))
+        TextFns.contentFp(TextFns.tokens(col("text"))).as("content_fp"))
       .groupBy(col("content_fp"))
       .agg(min(col("doc_id")).as("survivor_id"), count(lit(1)).as("n_copies"))
       .select(col("survivor_id"), col("n_copies"), col("content_fp"))
@@ -118,9 +119,6 @@ object Dedup {
   def ngramJaccardCapped(spark: SparkSession, dir: String, maxDf: Long): DataFrame =
     ngramJaccardImpl(shingleSets(Tables.documents(spark, dir)).cache(), Some(maxDf))
 
-  /** `ordered = false` skips the trailing global sort — consumers that
-    * feed the pair list into a join or connected components (where row
-    * order is meaningless) shouldn't pay a range exchange for it. */
   /** Profiling hook (tools/ProfClusters): the dedup_clusters edge plan
     * from an already-built rep-shingle frame. */
   private[graft] def profEdgesFrom(repSh: DataFrame): DataFrame =
@@ -128,6 +126,9 @@ object Dedup {
       logDropsAs = Some("prof_clusters"), ordered = false)
       .select(col("da").as("src"), col("db").as("dst"))
 
+  /** `ordered = false` skips the trailing global sort — consumers that
+    * feed the pair list into a join or connected components (where row
+    * order is meaningless) shouldn't pay a range exchange for it. */
   private def ngramJaccardImpl(sh: DataFrame, maxDf: Option[Long],
                                logDropsAs: Option[String] = None,
                                ordered: Boolean = true): DataFrame = {
@@ -312,7 +313,7 @@ object Dedup {
   def dedupPipeline(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val fp = docs.select(col("doc_id"),
-      md5(concat_ws(" ", TextFns.tokens(col("text")))).as("content_fp"))
+      TextFns.contentFp(TextFns.tokens(col("text"))).as("content_fp"))
       .cache() // feeds grouping, rep mapping, AND the final status join
     val exactGroups = fp.groupBy(col("content_fp"))
       .agg(min(col("doc_id")).as("exact_rep"))
@@ -372,10 +373,6 @@ object Dedup {
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
     dedupClustersOf(spark, dir, ordered = true)
 
-  /** `ordered = false` skips the trailing corpus-sized range sort —
-    * composing consumers (the leakage-safe split's join) destroy row
-    * order immediately, so they shouldn't pay the exchange for it
-    * (the ngramJaccardImpl precedent). */
   /** The effective shingle-df cap: canonical knob namespace is
     * spark.graft.*; the round-2 name graft.dedup.maxShingleDf stays
     * honored for compatibility. ONE definition — cache keys derived
@@ -386,6 +383,10 @@ object Dedup {
       .orElse(spark.conf.getOption("graft.dedup.maxShingleDf"))
       .map(_.toLong).getOrElse(DefaultMaxShingleDf)
 
+  /** `ordered = false` skips the trailing corpus-sized range sort —
+    * composing consumers (the leakage-safe split's join) destroy row
+    * order immediately, so they shouldn't pay the exchange for it
+    * (the ngramJaccardImpl precedent). */
   private[graft] def dedupClustersOf(spark: SparkSession, dir: String,
                                      ordered: Boolean): DataFrame =
     dedupClustersOfDocs(spark, Tables.documents(spark, dir), ordered)
@@ -407,7 +408,7 @@ object Dedup {
       .cache() // feeds fp + rep shingles (harness clears)
     val fp = toks
       .select(col("doc_id"),
-        when(size(col("__ts")) >= 3, md5(concat_ws(" ", col("__ts"))))
+        when(size(col("__ts")) >= 3, TextFns.contentFp(col("__ts")))
           .otherwise(concat(lit("noshingle:"), col("doc_id").cast("string")))
           .as("content_fp"))
     // rep assignment as ONE window min over the fingerprint — the
@@ -574,7 +575,7 @@ object Dedup {
     val winners = surv.filter(col("keep"))
       .select(col("cluster_id"), col("doc_id").as("survivor_id"))
     val fp = Tables.documents(spark, dir).select(col("doc_id"),
-      md5(concat_ws(" ", TextFns.tokens(col("text")))).as("content_fp"))
+      TextFns.contentFp(TextFns.tokens(col("text"))).as("content_fp"))
       .cache() // joined on both the doc and the survivor side
     surv.select(col("doc_id"), col("cluster_id"))
       .join(winners, Seq("cluster_id"))
@@ -648,7 +649,7 @@ object Dedup {
   def buildCatalog(docs: DataFrame): (DataFrame, DataFrame) = {
     val sh = shingleSets(Skew.maybeSpreadByConf(docs, "n_chars", "doc_id"))
     val fp = docs.select(col("doc_id"),
-      md5(concat_ws(" ", TextFns.tokens(col("text")))).as("fp"))
+      TextFns.contentFp(TextFns.tokens(col("text"))).as("fp"))
     val fpN = fp.join(
       sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh")),
       Seq("doc_id"), "left")
@@ -656,12 +657,56 @@ object Dedup {
     (fpN, sh)
   }
 
+  /** The input both text catalogs build from. */
+  private val DocsInput = StructType.fromDDL("doc_id BIGINT, text STRING")
+
+  /** The shingle catalog: [[buildCatalog]]'s (fingerprints, shingles)
+    * tables, merged, appended and read through [[BatchCatalog.Kind]].
+    * A catalog grown by batch-keyed appends keeps (doc_id, s) unique
+    * under retries — duplicate shingle rows would inflate
+    * [[incrementalOf]]'s intersection counts (Jaccard > 1) and flip
+    * novel→near_dup for later batches. */
+  val ShingleCatalog: BatchCatalog.Kind = BatchCatalog.Kind(DocsInput,
+    docs => { val (fp, sh) = buildCatalog(docs); Seq(fp, sh) })
+
   /** Production incremental dedup: classify `incoming` (doc_id, text)
     * against a persisted catalog (the two [[buildCatalog]] tables).
     * Returns (doc_id, status, match_id) for every incoming doc. */
   def incrementalOf(catalogFp: DataFrame, catalogSh: DataFrame,
                     incoming: DataFrame): DataFrame =
     incrementalOfTracked(catalogFp, catalogSh, incoming)._1
+
+  /** The catalog-side shingle/band df cap: `spark.graft.dedup.incrementalMaxDf`,
+    * default [[DefaultMaxShingleDf]]. */
+  private def incrementalMaxDf(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.dedup.incrementalMaxDf")
+      .map(_.toLong).getOrElse(DefaultMaxShingleDf)
+
+  /** The exact stage of both text catalogs: (doc_id, ex_id) for incoming
+    * docs whose content fingerprint is in the catalog (lowest catalog
+    * id), and the incoming rows it did not claim. */
+  private def exactMatches(catalogFp: DataFrame,
+                           incoming: DataFrame): (DataFrame, DataFrame) = {
+    val exactM = incoming.select(col("doc_id"),
+        TextFns.contentFp(TextFns.tokens(col("text"))).as("fp"))
+      .join(catalogFp.select(col("fp"), col("doc_id").as("cid")), Seq("fp"))
+      .groupBy(col("doc_id")).agg(min(col("cid")).as("ex_id"))
+    (exactM, incoming.join(exactM.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+  }
+
+  /** Verdicts of both text catalogs: exact match first, then near, else
+    * novel, one row per incoming doc; `extra` columns come from `nearM`. */
+  private def verdictsOf(incoming: DataFrame, exactM: DataFrame, nearM: DataFrame,
+                         extra: Column*): DataFrame =
+    incoming.select(col("doc_id"))
+      .join(exactM, Seq("doc_id"), "left")
+      .join(nearM, Seq("doc_id"), "left")
+      .select(Seq(col("doc_id"),
+        when(col("ex_id").isNotNull, "exact_dup")
+          .when(col("near_id").isNotNull, "near_dup")
+          .otherwise("novel").as("status"),
+        coalesce(col("ex_id"), col("near_id")).as("match_id")) ++ extra: _*)
+      .orderBy(col("doc_id"))
 
   /** [[incrementalOf]] plus the internal incoming-shingle cache handle:
     * a continuous-ingest caller (classifyBatch, one call per micro-batch
@@ -671,19 +716,9 @@ object Dedup {
     * Verify/Bench harness clears all caches per query). */
   private[graft] def incrementalOfTracked(catalogFp: DataFrame, catalogSh: DataFrame,
                     incoming: DataFrame): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = incoming.sparkSession
-    val maxDf = spark.conf.getOption("spark.graft.dedup.incrementalMaxDf")
-      .map(_.toLong).getOrElse(DefaultMaxShingleDf)
-    val inFp = incoming.select(col("doc_id"),
-      md5(concat_ws(" ", TextFns.tokens(col("text")))).as("fp"))
-    val exactM = inFp
-      .join(catalogFp.select(col("fp"), col("doc_id").as("cid")), Seq("fp"))
-      .groupBy(col("doc_id")).agg(min(col("cid")).as("ex_id"))
+    val (exactM, nonExact) = exactMatches(catalogFp, incoming)
     val inSh = shingleSets(Skew.maybeSpreadByConf(incoming, "n_chars", "doc_id"))
       .cache() // feeds the join + incoming sizes (see incrementalOfTracked doc)
-    val nonExact = incoming.select(col("doc_id"))
-      .join(exactM.select(col("doc_id")), Seq("doc_id"), "left_anti")
     val inSz = inSh.groupBy(col("doc_id")).agg(count(lit(1)).as("ni"))
     // stop-shingle cap on the CATALOG side: candidate fanout per shingle
     // is df_catalog × df_incoming, and the catalog is the unbounded,
@@ -693,121 +728,21 @@ object Dedup {
     // distinctPairs: catalog shingle tables come from buildCatalog's
     // array_distinct explode, and the idempotent batch-keyed appends keep
     // (doc_id, s) unique across the catalog's whole life
-    val cappedCat = Skew.capByFrequency(catalogSh, "s", "doc_id", maxDf,
+    val cappedCat = Skew.capByFrequency(catalogSh, "s", "doc_id",
+      incrementalMaxDf(incoming.sparkSession),
       logDropsAs = Some("dedup_incremental"), distinctPairs = true)
     val inter = inSh.join(nonExact, Seq("doc_id"), "left_semi")
       .join(cappedCat.select(col("doc_id").as("cid"), col("s")), Seq("s"))
       .groupBy(col("doc_id"), col("cid")).agg(count(lit(1)).as("inter"))
-    val wBest = Window.partitionBy(col("doc_id")).orderBy(col("j").desc, col("cid"))
-    val nearM = inter
+    val nearM = BatchCatalog.bestMatch(inter
       .join(inSz, Seq("doc_id"))
       .join(catalogFp.select(col("doc_id").as("cid"), col("n_sh").as("nc")), Seq("cid"))
       .select(col("doc_id"), col("cid"),
         round(col("inter").cast("double") /
           (col("ni") + col("nc") - col("inter")).cast("double"), 6).as("j"))
-      .filter(col("j") >= 0.5)
-      .withColumn("rn", row_number().over(wBest)).filter(col("rn") === 1)
+      .filter(col("j") >= 0.5), col("j").desc)
       .select(col("doc_id"), col("cid").as("near_id"))
-    val verdicts = incoming.select(col("doc_id"))
-      .join(exactM, Seq("doc_id"), "left")
-      .join(nearM, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("ex_id").isNotNull, "exact_dup")
-          .when(col("near_id").isNotNull, "near_dup")
-          .otherwise("novel").as("status"),
-        coalesce(col("ex_id"), col("near_id")).as("match_id"))
-      .orderBy(col("doc_id"))
-    (verdicts, inSh)
-  }
-
-  /** Close the nightly-ingest loop: extend the catalog with the batch
-    * [[incrementalOf]] just classified, so tomorrow's run sees today's
-    * documents. The DEFAULT appends every incoming doc's fingerprint +
-    * shingles, which is REBUILD-EQUIVALENT: merge(buildCatalog(C), A)
-    * produces exactly the tables buildCatalog(C ∪ A) would (one
-    * unionByName per table — the catalog side is never re-read or
-    * re-derived; only the new batch is tokenized, once). That invariant
-    * is what makes sequential ingests == one batch run (spec-proven):
-    * classify(B, merge(cat, A)) == classify(B, buildCatalog(C ∪ A)).
-    *
-    * `novelOnly = true` is the storage-lean production mode: only docs
-    * whose verdict was `novel` enter the catalog. Exact-dup
-    * classification of future batches is UNCHANGED (a future copy still
-    * fingerprint-matches the original catalog doc the dup pointed at),
-    * but near-dups whose only neighbor was a skipped non-novel batch
-    * doc can downgrade — the documented trade for not growing the
-    * catalog with redundant shingle sets.
-    *
-    * Scale shape: pure append — no shuffle touches the existing
-    * catalog; the only work is buildCatalog over the (small) batch and,
-    * in novelOnly mode, one left-semi join against its own verdicts. */
-  def mergeIntoCatalog(catalogFp: DataFrame, catalogSh: DataFrame,
-                       incoming: DataFrame, verdicts: DataFrame,
-                       novelOnly: Boolean = false): (DataFrame, DataFrame) = {
-    val keep =
-      if (novelOnly)
-        incoming.join(verdicts.filter(col("status") === "novel").select(col("doc_id")),
-          Seq("doc_id"), "left_semi")
-      else incoming
-    val (fp, sh) = buildCatalog(keep)
-    (catalogFp.unionByName(fp), catalogSh.unionByName(sh))
-  }
-
-  /** Persisted flavor of [[mergeIntoCatalog]]: append the batch's
-    * fingerprints + shingles to the parquet catalog tables in place
-    * (parquet append writes new files only — the existing catalog bytes
-    * are untouched, so the nightly job's write cost is O(batch), never
-    * O(catalog)). Same rebuild-equivalence as the DataFrame flavor.
-    *
-    * With `batchId = Some(id)` the append is IDEMPOTENT: the batch lands
-    * in its own `batch-<id>/` subdirectory with overwrite semantics, so
-    * a crash-retried batch REPLACES its earlier (possibly partial) files
-    * instead of duplicating rows — duplicate shingle rows would inflate
-    * [[incrementalOf]]'s intersection counts (Jaccard > 1 is possible)
-    * and flip novel→near_dup for later batches. A catalog grown this way
-    * must be read with `recursiveFileLookup=true` (see [[readCatalog]]). */
-  def appendToCatalog(fpPath: String, shPath: String,
-                      incoming: DataFrame, verdicts: DataFrame,
-                      novelOnly: Boolean = false,
-                      batchId: Option[Long] = None): Unit = {
-    val keep =
-      if (novelOnly)
-        incoming.join(verdicts.filter(col("status") === "novel").select(col("doc_id")),
-          Seq("doc_id"), "left_semi")
-      else incoming
-    val (fp, sh) = buildCatalog(keep)
-    batchId match {
-      case Some(id) =>
-        fp.write.mode("overwrite").parquet(s"$fpPath/batch-$id")
-        sh.write.mode("overwrite").parquet(s"$shPath/batch-$id")
-      case None =>
-        fp.write.mode("append").parquet(fpPath)
-        sh.write.mode("append").parquet(shPath)
-    }
-  }
-
-  /** Read a catalog table that may have grown `batch-<id>/` subdirectories
-    * via idempotent [[appendToCatalog]] appends. `excludeBatch` drops one
-    * batch's subdirectory from the view — the crash-retry case: when batch
-    * `id` is re-run, its own earlier (failed-attempt) append must not be
-    * visible or every doc in the batch would exact-match itself. The
-    * directory listing is one driver-side FS call against the catalog
-    * ROOT (children only, not a recursive walk), so it stays O(#batches)
-    * at any catalog size. */
-  def readCatalog(spark: SparkSession, root: String,
-                  excludeBatch: Option[Long] = None): DataFrame = {
-    val paths = excludeBatch match {
-      case None => Seq(root)
-      case Some(id) =>
-        val p = new org.apache.hadoop.fs.Path(root)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.listStatus(p).toSeq
-          .filterNot(st => st.getPath.getName.startsWith("_") ||
-            st.getPath.getName.startsWith(".") ||
-            st.getPath.getName == s"batch-$id")
-          .map(_.getPath.toString)
-    }
-    spark.read.option("recursiveFileLookup", "true").parquet(paths: _*)
+    (verdictsOf(incoming, exactM, nearM), inSh)
   }
 
   // ---- signature-only incremental catalog (round 15) -------------------
@@ -829,9 +764,15 @@ object Dedup {
     * signatures via the native zero-shuffle expression. */
   def buildSigCatalog(docs: DataFrame): (DataFrame, DataFrame) = {
     val fp = docs.select(col("doc_id"),
-      md5(concat_ws(" ", TextFns.tokens(col("text")))).as("fp"))
+      TextFns.contentFp(TextFns.tokens(col("text"))).as("fp"))
     (fp, minhashSignatures(docs))
   }
+
+  /** The signature catalog: [[buildSigCatalog]]'s (fingerprints,
+    * signatures) tables through [[BatchCatalog.Kind]] — the shingle
+    * catalog's merge, append and reader, with its `novelOnly` trade. */
+  val SigCatalog: BatchCatalog.Kind = BatchCatalog.Kind(DocsInput,
+    docs => { val (fp, sigs) = buildSigCatalog(docs); Seq(fp, sigs) })
 
   /** (doc_id, band, bh) from an ARRAY-signature frame — identical band
     * hashing to [[bandsOfSig]]'s column form (same longs, same
@@ -848,37 +789,26 @@ object Dedup {
 
   /** Classify `incoming` against a signature catalog:
     * (doc_id, status, match_id, est_jaccard). Near-dup = best
-    * band-candidate with estimated Jaccard ≥ `minEst` (ties → lowest
-    * catalog id, the incrementalOf rule). The catalog band side is
-    * df-capped like the shingle path — a boilerplate family's hot
-    * bucket would otherwise fan out candidates unboundedly (dropped
-    * keys are logged; recall loss is visible, never silent). */
+    * band-candidate with estimated Jaccard ≥ 0.5 (the shingle path's
+    * threshold; ties → lowest catalog id, the incrementalOf rule). The
+    * catalog band side is df-capped like the shingle path — a
+    * boilerplate family's hot bucket would otherwise fan out candidates
+    * unboundedly (dropped keys are logged; recall loss is visible,
+    * never silent). */
   def incrementalSigOf(catalogFp: DataFrame, catalogSig: DataFrame,
-                       incoming: DataFrame, minEst: Double = 0.5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = incoming.sparkSession
-    val maxDf = spark.conf.getOption("spark.graft.dedup.incrementalMaxDf")
-      .map(_.toLong).getOrElse(DefaultMaxShingleDf)
-    val inFp = incoming.select(col("doc_id"),
-      md5(concat_ws(" ", TextFns.tokens(col("text")))).as("fp"))
-    val exactM = inFp
-      .join(catalogFp.select(col("fp"), col("doc_id").as("cid")), Seq("fp"))
-      .groupBy(col("doc_id")).agg(min(col("cid")).as("ex_id"))
-    val nonExact = incoming
-      .join(exactM.select(col("doc_id")), Seq("doc_id"), "left_anti")
+                       incoming: DataFrame): DataFrame = {
+    val (exactM, nonExact) = exactMatches(catalogFp, incoming)
     val inSig = minhashSignatures(nonExact).cache()
     val catBands = Skew.capByFrequency(
       bandsOfSigArray(catalogSig)
         .withColumn("bkey", concat_ws(":", col("band"), col("bh"))),
-      "bkey", "doc_id", maxDf,
+      "bkey", "doc_id", incrementalMaxDf(incoming.sparkSession),
       logDropsAs = Some("dedup_incremental_sig"), distinctPairs = true)
     val cand = bandsOfSigArray(inSig)
       .join(catBands.select(col("doc_id").as("cid"), col("band"), col("bh")),
         Seq("band", "bh"))
       .select(col("doc_id"), col("cid")).distinct()
-    val wBest = Window.partitionBy(col("doc_id"))
-      .orderBy(col("est").desc, col("cid"))
-    val nearM = cand
+    val nearM = BatchCatalog.bestMatch(cand
       .join(inSig.select(col("doc_id"), col("sig").as("siga")), Seq("doc_id"))
       .join(catalogSig.select(col("doc_id").as("cid"), col("sig").as("sigb")), Seq("cid"))
       .select(col("doc_id"), col("cid"),
@@ -886,77 +816,25 @@ object Dedup {
           zip_with(col("siga"), col("sigb"),
             (x, y) => when(x === y, 1).otherwise(0)),
           lit(0), (a, x) => a + x).cast("double") / 32.0, 6).as("est"))
-      .filter(col("est") >= minEst)
-      .withColumn("rn", row_number().over(wBest)).filter(col("rn") === 1)
+      .filter(col("est") >= 0.5), col("est").desc)
       .select(col("doc_id"), col("cid").as("near_id"), col("est"))
-    val verdicts = incoming.select(col("doc_id"))
-      .join(exactM, Seq("doc_id"), "left")
-      .join(nearM, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("ex_id").isNotNull, "exact_dup")
-          .when(col("near_id").isNotNull, "near_dup")
-          .otherwise("novel").as("status"),
-        coalesce(col("ex_id"), col("near_id")).as("match_id"),
-        col("est").as("est_jaccard"))
-      .orderBy(col("doc_id"))
     // Materialize the (batch-sized) verdicts so inSig's cache can be
     // RELEASED here — in the nightly-driver loop this method is called per
     // batch, and an unreleased signature cache per batch accumulates
     // executor storage forever. The returned frame stays cached (4 narrow
     // columns × batch rows); loop drivers should unpersist it after
     // consuming if batches are large.
-    val out = verdicts.cache()
+    val out = verdictsOf(incoming, exactM, nearM, col("est").as("est_jaccard")).cache()
     out.count()
     inSig.unpersist()
     out
-  }
-
-  /** Append-merge for the signature catalog — rebuild-equivalent like
-    * [[mergeIntoCatalog]] (signatures are per-doc, the catalog side is
-    * never re-read); `novelOnly` trades future near-dup recall for not
-    * storing redundant signatures, exactly the shingle catalog's
-    * documented trade. */
-  def mergeIntoSigCatalog(catalogFp: DataFrame, catalogSig: DataFrame,
-                          incoming: DataFrame, verdicts: DataFrame,
-                          novelOnly: Boolean = false): (DataFrame, DataFrame) = {
-    val keep =
-      if (novelOnly)
-        incoming.join(verdicts.filter(col("status") === "novel").select(col("doc_id")),
-          Seq("doc_id"), "left_semi")
-      else incoming
-    val (fp, sigs) = buildSigCatalog(keep)
-    (catalogFp.unionByName(fp), catalogSig.unionByName(sigs))
-  }
-
-  /** Persisted flavor of [[mergeIntoSigCatalog]] — batch-keyed
-    * idempotent appends exactly like [[appendToCatalog]] (same
-    * `batch-<id>/` overwrite semantics, same [[readCatalog]] reader,
-    * same [[compactCatalog]] compaction). O(batch) write cost. */
-  def appendToSigCatalog(fpPath: String, sigPath: String,
-                         incoming: DataFrame, verdicts: DataFrame,
-                         novelOnly: Boolean = false,
-                         batchId: Option[Long] = None): Unit = {
-    val keep =
-      if (novelOnly)
-        incoming.join(verdicts.filter(col("status") === "novel").select(col("doc_id")),
-          Seq("doc_id"), "left_semi")
-      else incoming
-    val (fp, sigs) = buildSigCatalog(keep)
-    batchId match {
-      case Some(id) =>
-        fp.write.mode("overwrite").parquet(s"$fpPath/batch-$id")
-        sigs.write.mode("overwrite").parquet(s"$sigPath/batch-$id")
-      case None =>
-        fp.write.mode("append").parquet(fpPath)
-        sigs.write.mode("append").parquet(sigPath)
-    }
   }
 
   /** Compact a batch-grown catalog (round 15): rewrite the CURRENT
     * catalog view into one `base/` generation under a new root. Years
     * of nightly `batch-<id>/` appends leave thousands of
     * subdirectories — harmless to reads (recursive listing) but a
-    * growing driver listing in [[readCatalog]]'s excludeBatch path and
+    * growing driver listing in [[BatchCatalog.read]]'s excludeBatch path and
     * a small-files tax on the FS. Compaction is O(catalog), so it runs
     * on an ops cadence, not nightly; the caller swaps the root pointer
     * when both writes commit (write-beside-then-swap, the external-
@@ -964,10 +842,9 @@ object Dedup {
     * is IDENTICAL by construction — the catalog is a bag of rows and
     * only the file layout changes (spec-proven). */
   def compactCatalog(spark: SparkSession, fpPath: String, shPath: String,
-                     outFpPath: String, outShPath: String): Unit = {
-    readCatalog(spark, fpPath).write.mode("overwrite").parquet(s"$outFpPath/base")
-    readCatalog(spark, shPath).write.mode("overwrite").parquet(s"$outShPath/base")
-  }
+                     outFpPath: String, outShPath: String): Unit =
+    ShingleCatalog.read(spark, Seq(fpPath, shPath)).zip(Seq(outFpPath, outShPath))
+      .foreach { case (t, out) => t.write.mode("overwrite").parquet(s"$out/base") }
 
   def incremental(spark: SparkSession, dir: String): DataFrame = {
     // the oracle SQL pins DefaultMaxShingleDf; a conf override here would

@@ -300,11 +300,10 @@ object Multimodal {
     dhashDedupOf(spark, media(spark, dir).unionByName(seeds))
   }
 
-  /** (doc_id, b0..b3): the dHash of every payload as its four 16-bit
-    * blocks. 16 bits per block j: rows 2j, 2j+1; bit b = cell(r,c) >
-    * cell(r,c+1) at r = 2j + b/8, c = b%8 (element_at is 1-based). */
   /** The four 16-bit dHash block columns over a `grid` array column —
-    * shared by the image entry and the per-frame video dHash (r19). */
+    * shared by the image entry and the per-frame video dHash (r19).
+    * 16 bits per block j: rows 2j, 2j+1; bit b = cell(r,c) >
+    * cell(r,c+1) at r = 2j + b/8, c = b%8 (element_at is 1-based). */
   private[operators] def dhashBlockCols: Seq[org.apache.spark.sql.Column] =
     (0 until 4).map { j =>
       (0 until 16).map { b =>
@@ -314,6 +313,8 @@ object Multimodal {
       }.reduce(_ + _).as(s"b$j")
     }
 
+  /** (doc_id, b0..b3): the dHash of every payload as its four 16-bit
+    * blocks. */
   def dhashOf(spark: SparkSession, frame: DataFrame): DataFrame = {
     import spark.implicits._
     val grids = frame.select(col("doc_id"), col("payload")).as[MediaRow]
@@ -389,11 +390,17 @@ object Multimodal {
   // (doc_id, b0..b3) as the near-dup state (16 bytes per doc), classify
   // each incoming batch against the CATALOG ONLY — a batch never
   // self-joins, so the nightly cost is O(batch × catalog-candidates),
-  // never O(batch²) — and append O(batch) with the batch-<id>/
-  // idempotence [[Dedup.appendToCatalog]] established (crash-retried
-  // batches replace their partial files; reads go through
-  // [[Dedup.readCatalog]]). The catalog block side is df-capped like
-  // every mm candidate join.
+  // never O(batch²) — and append O(batch) through the batch-keyed
+  // layout of [[BatchCatalog]] (crash-retried batches replace their
+  // partial files; a retry reads the catalog without its own batch).
+  // The catalog block side is df-capped like every mm candidate join.
+
+  /** The dHash catalog: the hashed (doc_id, b0..b3) rows themselves — a
+    * union of batches IS the rebuild-equivalent merge. */
+  val DhashCatalog: BatchCatalog.Kind = BatchCatalog.Kind(
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id BIGINT, b0 INT, b1 INT, b2 INT, b3 INT"),
+    hashed => Seq(hashed))
 
   /** (doc_id, k, bv): the four pigeonhole candidate keys of a hashed
     * (doc_id, b0..b3) frame. */
@@ -406,13 +413,12 @@ object Multimodal {
   /** Classify an incoming hashed batch against a dHash catalog:
     * (doc_id, status exact_dup|near_dup|novel, match_id, hamming).
     * Best match = lowest Hamming, ties → lowest catalog id (the
-    * incrementalOf rule); exact_dup = Hamming 0. */
-  def dhashIncrementalOf(catalog: DataFrame, incoming: DataFrame,
-                         maxDf: Long = DefaultMaxBlockDf): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    * incrementalOf rule); exact_dup = Hamming 0. Catalog block keys
+    * hotter than [[DefaultMaxBlockDf]] docs leave candidate discovery. */
+  def dhashIncrementalOf(catalog: DataFrame, incoming: DataFrame): DataFrame = {
     val catBlocks = Skew.capByFrequency(
       blockKeys(catalog).withColumn("__hk", struct(col("k"), col("bv"))),
-      "__hk", "doc_id", maxDf, Some("mm_dhash_incremental"),
+      "__hk", "doc_id", DefaultMaxBlockDf, Some("mm_dhash_incremental"),
       distinctPairs = true).drop("__hk")
     val cand = blockKeys(incoming)
       .join(catBlocks.select(col("doc_id").as("cid"), col("k"), col("bv")),
@@ -427,10 +433,7 @@ object Multimodal {
         ((0 until 4).map(j => bit_count(col(s"ab$j").bitwiseXOR(col(s"bb$j"))))
           .reduce(_ + _)).cast("int").as("hamming"))
       .filter(col("hamming") <= 3)
-    val wBest = Window.partitionBy(col("doc_id"))
-      .orderBy(col("hamming"), col("cid"))
-    val best = hm.withColumn("rn", row_number().over(wBest))
-      .filter(col("rn") === 1)
+    val best = BatchCatalog.bestMatch(hm, col("hamming"))
       .select(col("doc_id"), col("cid"), col("hamming"))
     incoming.select(col("doc_id"))
       .join(best, Seq("doc_id"), "left")
@@ -440,38 +443,6 @@ object Multimodal {
           .otherwise("novel").as("status"),
         col("cid").as("match_id"), col("hamming"))
       .orderBy(col("doc_id"))
-  }
-
-  /** Append-merge: the catalog is a bag of per-doc signature rows, so
-    * a union IS the rebuild-equivalent merge; `novelOnly` trades future
-    * near-dup recall for not storing redundant signatures (the shingle
-    * catalog's documented trade). */
-  def mergeIntoDhashCatalog(catalog: DataFrame, incoming: DataFrame,
-                            verdicts: DataFrame,
-                            novelOnly: Boolean = false): DataFrame = {
-    val keep =
-      if (novelOnly)
-        incoming.join(verdicts.filter(col("status") === "novel")
-          .select(col("doc_id")), Seq("doc_id"), "left_semi")
-      else incoming
-    catalog.unionByName(keep)
-  }
-
-  /** Persisted flavor — batch-keyed idempotent appends exactly like
-    * [[Dedup.appendToCatalog]] (same `batch-<id>/` overwrite semantics,
-    * same [[Dedup.readCatalog]] reader). O(batch) write cost. */
-  def appendToDhashCatalog(path: String, incoming: DataFrame,
-                           verdicts: DataFrame, novelOnly: Boolean = false,
-                           batchId: Option[Long] = None): Unit = {
-    val keep =
-      if (novelOnly)
-        incoming.join(verdicts.filter(col("status") === "novel")
-          .select(col("doc_id")), Seq("doc_id"), "left_semi")
-      else incoming
-    batchId match {
-      case Some(id) => keep.write.mode("overwrite").parquet(s"$path/batch-$id")
-      case None     => keep.write.mode("append").parquet(path)
-    }
   }
 
   /** Gated `mm_dhash_incremental`: catalog = corpus docs below IncCut
@@ -545,10 +516,6 @@ object Multimodal {
     SELECT doc_id, ${(0 until 4).map(j => s"${dhashBlockSql(j)} AS b$j").mkString(", ")}
     FROM p ORDER BY doc_id"""
 
-  /** Exact twin of [[imageDhashDedup]] on the (ASCII) text stand-in
-    * corpus: byte-sample grid, the same block bits, pigeonhole
-    * candidate join, Hamming ≤ 3. The seed rows are generated from the
-    * SAME Scala constants as the Spark side, so the two can't drift. */
   /** The seeded-corpus dHash CTE chain up to `h(doc_id, b0..b3)` —
     * shared by the pair oracle and the incremental-catalog oracle so
     * the hash computation can never drift between them. */
@@ -563,6 +530,10 @@ object Multimodal {
     p AS (SELECT doc_id, list(v ORDER BY k) AS grid FROM g GROUP BY doc_id),
     h AS (SELECT doc_id, ${(0 until 4).map(j => s"${dhashBlockSql(j)} AS b$j").mkString(", ")} FROM p)"""
 
+  /** Exact twin of [[imageDhashDedup]] on the (ASCII) text stand-in
+    * corpus: byte-sample grid, the same block bits, pigeonhole
+    * candidate join, Hamming ≤ 3. The seed rows are generated from the
+    * SAME Scala constants as the Spark side, so the two can't drift. */
   val imageDhashDedupOracle: String = s"""
     WITH $dhashHashCtes,
     bl AS (

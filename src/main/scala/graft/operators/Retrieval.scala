@@ -389,15 +389,6 @@ object Retrieval {
       .getOrElse(Layout.buckets(
         Layout.tableCount(spark, dir, "documents"), PostingsDocsPerBucket))
 
-  /** Open (building if absent) the postings store for `key` as a
-    * term-BUCKETED catalog table (round 13): postings are written
-    * `bucketBy(postingsBuckets, "term")` (count derived per corpus, round 14), so [[bm25Of]]'s literal
-    * vocabulary IN filter prunes buckets — a query batch naming t
-    * terms reads ≤ t of the buckets instead of every posting file.
-    * The files outlive the JVM (external table under target/tmp, the
-    * mtime-keyed cache convention); the catalog entry is per-JVM, so
-    * a warm-file/cold-catalog run re-registers the DDL over the
-    * existing files instead of re-tokenizing the corpus. */
   /** Resolve-or-build the committed bm25 store generation for `key`:
     * stats first, bucketed postings LAST (its _SUCCESS completes the
     * generation). Object-store-exact via [[Layout.generation]]. */
@@ -436,6 +427,15 @@ object Retrieval {
       .replaceAll("[^A-Za-z0-9_]", "_").toLowerCase
   }
 
+  /** Open (building if absent) the postings store for `key` as a
+    * term-BUCKETED catalog table (round 13): postings are written
+    * `bucketBy(postingsBuckets, "term")` (count derived per corpus, round 14), so [[bm25Of]]'s literal
+    * vocabulary IN filter prunes buckets — a query batch naming t
+    * terms reads ≤ t of the buckets instead of every posting file.
+    * The files outlive the JVM (external table under target/tmp, the
+    * mtime-keyed cache convention); the catalog entry is per-JVM, so
+    * a warm-file/cold-catalog run re-registers the DDL over the
+    * existing files instead of re-tokenizing the corpus. */
   private[graft] def bm25OpenIndex(spark: SparkSession, dir: String,
                                    key: String, gen: String): DataFrame = {
     val nb = postingsBuckets(spark, dir)

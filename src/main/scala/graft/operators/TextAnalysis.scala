@@ -398,7 +398,7 @@ object TextAnalysis {
   def fingerprint(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        md5(concat_ws(" ", TextFns.tokens(col("text")))).as("content_fp"),
+        TextFns.contentFp(TextFns.tokens(col("text"))).as("content_fp"),
         coalesce(array_min(transform(TextFns.shingles(col("text"), 3), s => md5(s))),
           lit("")).as("min_shingle_fp"))
       .orderBy(col("doc_id"))
@@ -1245,6 +1245,13 @@ object TextAnalysis {
     when(size(upto) === 0, sym).otherwise(element_at(upto, -1).getField("s"))
   }
 
+  /** Hard cap on the adaptive speculative batch (round 18): the top
+    * fetch collects 3m+16 driver rows and the per-row change-log fold
+    * costs O(m·len), so unbounded growth would trade shuffle rounds for
+    * driver memory and fold CPU. 1024 puts the ceiling two orders above
+    * the r17 fixed m=16 while keeping the fetch ≤ ~3100 rows. */
+  private[graft] val BpeMaxSpecBatch = 1024
+
   /** The incremental-pair-count trainer body — see [[bpeLearnRounds]]
     * for the dispatch. Round 17 makes the batch acceptance SPECULATIVE
     * (the r16 verdict's #3): the strict-dominance rule
@@ -1288,13 +1295,6 @@ object TextAnalysis {
     * The IterCheckpoint truncation is load-bearing as before (nested
     * cached aggregate-lambda plans OOMed the driver's re-analysis at
     * hundreds of rounds; RDD-only truncation StackOverflowed past ~60). */
-  /** Hard cap on the adaptive speculative batch (round 18): the top
-    * fetch collects 3m+16 driver rows and the per-row change-log fold
-    * costs O(m·len), so unbounded growth would trade shuffle rounds for
-    * driver memory and fold CPU. 1024 puts the ceiling two orders above
-    * the r17 fixed m=16 while keeping the fetch ≤ ~3100 rows. */
-  private[graft] val BpeMaxSpecBatch = 1024
-
   private[graft] def bpeLearnRoundsInc(vocab0: DataFrame, maxMerges: Int,
       batch: Int = 1): (DataFrame, Seq[(Int, String, String, Long)], Int) = {
     // (cnt0, sym) → adjacent-pair counts summed over cnt0 (signed for deltas)
@@ -1504,9 +1504,7 @@ object TextAnalysis {
 
   private[graft] def bpeStoreKeyDir(spark: SparkSession, dir: String,
       maxMerges: Int): String = {
-    val tag = Layout.stateTag(spark, s"$dir/documents.parquet")
-    val key = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${tag}" +
-      s"_m${maxMerges}_tok${TextFns.TokVersion}"
+    val key = s"${Layout.storeKey(spark, dir, "documents")}_m${maxMerges}_tok${TextFns.TokVersion}"
     s"${Layout.cacheRoot(spark)}/bpe_vocab/$key"
   }
 
@@ -1789,8 +1787,9 @@ object TextAnalysis {
 
   /** DuckDB twin of [[gramFractions]]: CTE block yielding s2(doc_id,
     * top2) and s3(doc_id, dup3); expects a preceding `toks(doc_id, t)`
-    * CTE. Interpolated into both oracles. */
-  /** The `toks` CTE name is a parameter so a composition can run the
+    * CTE. Interpolated into both oracles.
+    *
+    * The `toks` CTE name is a parameter so a composition can run the
     * gram fractions over a SECOND tokenization living beside `toks`
     * (the ML release runs v1 `toks` for winnow + clusters and v2
     * `toksml` for the gate in one query). */
@@ -2165,7 +2164,7 @@ object TextAnalysis {
       .select(col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
         size(filter(col("t"), x => !x.rlike(singleton))).cast("long").as("n_words"),
-        md5(concat_ws(" ", col("t"))).as("tok_md5"))
+        TextFns.contentFp(col("t")).as("tok_md5"))
       .orderBy(col("doc_id"))
   }
 
@@ -2396,11 +2395,6 @@ object TextAnalysis {
         s => s.getField("units"))).as("us"))
   }
 
-  /** Oracle: same run extraction, then one island-alternation merge
-    * block per learned (l, r) literal — the [[bpeCtes]] v/mp/sel shapes
-    * with the pair-counting rounds replaced by the fixed literals
-    * (nothing is learned corpus-side; both engines APPLY the same
-    * fixture-derived list). */
   /** The seg CTE chain over a `(doc_id, text)` source CTE, ending in
     * `sseg(doc_id, ri, run, sym)` — parameterized so the gated entry
     * and any composing oracle (the garble gate) share one generator. */
@@ -2443,6 +2437,11 @@ object TextAnalysis {
              FROM sruns r JOIN sv${SegMerges.size} v ON v.w = r.run)"""
   }
 
+  /** Oracle: same run extraction, then one island-alternation merge
+    * block per learned (l, r) literal — the [[bpeCtes]] v/mp/sel shapes
+    * with the pair-counting rounds replaced by the fixed literals
+    * (nothing is learned corpus-side; both engines APPLY the same
+    * fixture-derived list). */
   val segUnspacedOracle: String = s"""
     WITH docsml2 AS ($mlDocs2CteSql),
     ${segCtesOver("docsml2")},

@@ -227,9 +227,6 @@ object Video {
     } finally reader.dispose()
   }
 
-  /** Clip near-dup pairs over any (doc_id, payload) multi-frame corpus:
-    * (da, db, n_frames, max_hamming) with equal frame counts and every
-    * aligned frame within Hamming 3. */
   /** (doc_id, frame_idx, b0..b3): every frame's dHash blocks via the
     * real reader walk — shared by the aligned and the winnow matchers. */
   private def frameHashFrame(clips: DataFrame): DataFrame = {
@@ -241,6 +238,9 @@ object Video {
       .select(col("doc_id") +: col("frame_idx") +: Multimodal.dhashBlockCols: _*)
   }
 
+  /** Clip near-dup pairs over any (doc_id, payload) multi-frame corpus:
+    * (da, db, n_frames, max_hamming) with equal frame counts and every
+    * aligned frame within Hamming 3. */
   def videoDhashDedupOf(clips: DataFrame,
                         maxDf: Option[Long] = Some(Multimodal.DefaultMaxBlockDf)): DataFrame = {
     val spark = clips.sparkSession

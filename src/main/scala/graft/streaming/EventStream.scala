@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.operators.{BatchCatalog, Dedup, Multimodal}
 
 /** Structured Streaming operators (SURVEY §2g) — the streaming twins of
   * `Analytics.eventsWindowedAgg` (#14) and `Analytics.eventsSessionize`
@@ -73,7 +74,7 @@ object EventStream {
                            horizon: String = "1 hour"): DataFrame =
     docs
       .select(col(tsCol), col("doc_id"),
-        md5(concat_ws(" ", graft.functions.TextFns.tokens(col("text")))).as("content_fp"))
+        graft.functions.TextFns.contentFp(graft.functions.TextFns.tokens(col("text"))).as("content_fp"))
       .withWatermark(tsCol, horizon)
       .dropDuplicatesWithinWatermark("content_fp")
 
@@ -118,10 +119,10 @@ object EventStream {
   }
 
   /** Streaming incremental classify — the continuous-ingest form of the
-    * nightly catalog loop (Dedup.incrementalOf + Dedup.appendToCatalog).
-    * Each micro-batch of documents (doc_id, text) is classified against
-    * the persisted parquet catalog with the SAME relational logic as the
-    * batch API, verdicts land in a parquet sink, and (by default) the
+    * nightly catalog loop (Dedup.incrementalOf + the shingle catalog's
+    * append). Each micro-batch of documents (doc_id, text) is classified
+    * against the persisted parquet catalog with the SAME relational
+    * logic as the batch API, verdicts land in a parquet sink, and the
     * batch's fingerprints + shingles are appended to the catalog in
     * place so the NEXT micro-batch sees this one's documents.
     *
@@ -136,101 +137,59 @@ object EventStream {
     *
     * Failure semantics: the loop is IDEMPOTENT under batch retry, which
     * makes it effectively exactly-once without a transactional format.
-    * Three pieces, all keyed on foreachBatch's `batchId` (stable across
-    * retries by Spark's contract): (1) verdicts land in
-    * `verdicts/batch-<id>/` with overwrite — a retry replaces, never
-    * duplicates; (2) catalog appends land in `batch-<id>/` subdirs the
-    * same way, so a retried batch can never double its shingle rows in
-    * the catalog (duplicate rows would double `inter` in incrementalOf
-    * while n_sh stayed single — Jaccard above 1, novel→near_dup flips
-    * for later batches); (3) classification reads the catalog through
-    * [[graft.operators.Dedup.readCatalog]] EXCLUDING the current batch's
-    * own subdir, so a retry sees exactly the catalog the first attempt
-    * saw (not its own half-appended docs, which would self-match every
-    * doc to exact_dup). Read the verdicts (and a streamed-into catalog)
-    * with `recursiveFileLookup=true`. */
+    * Verdicts and catalog appends both land in the batch-keyed layout
+    * of [[graft.operators.BatchCatalog]] (`batch-<id>/` with overwrite,
+    * keyed on foreachBatch's `batchId`, stable across retries), so a
+    * retried batch replaces, never duplicates — duplicate catalog
+    * shingle rows would double `inter` in incrementalOf while n_sh
+    * stayed single (Jaccard above 1, novel→near_dup flips for later
+    * batches). Classification reads the catalog EXCLUDING the current
+    * batch's own subdir, so a retry sees exactly the catalog the first
+    * attempt saw (not its own half-appended docs, which would
+    * self-match every doc to exact_dup). Read the verdicts (and a
+    * streamed-into catalog) with `recursiveFileLookup=true`. */
   def classifyAgainstCatalog(docs: DataFrame, fpPath: String, shPath: String,
                              verdictsPath: String, checkpoint: String,
-                             mergeBatches: Boolean = true,
-                             novelOnly: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          classifyBatch(batch.toDF(), batchId, fpPath, shPath, verdictsPath,
-            mergeBatches, novelOnly)
-        ()
-      }
-      .start()
+                             novelOnly: Boolean = false): StreamingQuery =
+    BatchCatalog.stream(docs, checkpoint)(
+      classifyBatch(_, _, fpPath, shPath, verdictsPath, novelOnly))
 
   /** One micro-batch of [[classifyAgainstCatalog]], callable directly so
     * the crash-retry path is spec-testable (run the same batchId twice).
-    * The verdict sink write is the ONLY action that evaluates the
-    * classification plan; the catalog append then re-reads the verdicts
-    * from the files just written — a deterministic materialization, so
-    * the append's lineage never re-reads the catalog paths it is
-    * appending to (a cached-but-evicted verdicts plan would). */
+    * The steps are [[graft.operators.BatchCatalog.Kind.classifyBatch]]'s;
+    * the per-batch incoming-shingle cache is released once the verdicts
+    * are written. */
   def classifyBatch(batch: DataFrame, batchId: Long,
                     fpPath: String, shPath: String, verdictsPath: String,
-                    mergeBatches: Boolean = true,
-                    novelOnly: Boolean = false): Unit = {
-    val sp = batch.sparkSession
-    val (verdicts, inShCache) = graft.operators.Dedup.incrementalOfTracked(
-      graft.operators.Dedup.readCatalog(sp, fpPath, excludeBatch = Some(batchId)),
-      graft.operators.Dedup.readCatalog(sp, shPath, excludeBatch = Some(batchId)),
-      batch)
-    val vDir = s"$verdictsPath/batch-$batchId"
-    verdicts.write.mode("overwrite").parquet(vDir)
-    // the write above is the plan's only action — the per-batch shingle
-    // cache is dead now; a forever-running stream must not accumulate one
-    inShCache.unpersist()
-    if (mergeBatches)
-      graft.operators.Dedup.appendToCatalog(fpPath, shPath, batch,
-        sp.read.parquet(vDir), novelOnly, batchId = Some(batchId))
-  }
+                    novelOnly: Boolean = false): Unit =
+    Dedup.ShingleCatalog.classifyBatch(batch, batchId, Seq(fpPath, shPath),
+        verdictsPath, novelOnly) { case Seq(fp, sh) =>
+      val (verdicts, inSh) = Dedup.incrementalOfTracked(fp, sh, batch)
+      (verdicts, Some(inSh))
+    }
 
   /** Streaming MEDIA near-dup catalog loop (round 20) — the 31g shape
     * for the dHash catalog: each micro-batch of (doc_id, b0..b3)
     * signatures classifies against the persisted catalog ONLY
     * ([[graft.operators.Multimodal.dhashIncrementalOf]] — batch members
     * never match each other), writes verdicts, then appends itself
-    * O(batch) via the batchId-idempotent `batch-<id>/` protocol. Same
-    * crash-retry contract as [[classifyBatch]]: a retried batch reads
-    * the catalog EXCLUDING its own earlier partial append and its
-    * re-append replaces, never duplicates. */
+    * O(batch) through the batch-keyed layout. Same crash-retry contract
+    * as [[classifyAgainstCatalog]]; a never-written catalog root reads
+    * as the empty catalog, so the first batch classifies all novel. */
   def classifyMediaAgainstCatalog(hashed: DataFrame, catPath: String,
                                   verdictsPath: String, checkpoint: String,
-                                  mergeBatches: Boolean = true,
-                                  novelOnly: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
-    hashed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          classifyMediaBatch(batch.toDF(), batchId, catPath, verdictsPath,
-            mergeBatches, novelOnly)
-        ()
-      }
-      .start()
+                                  novelOnly: Boolean = false): StreamingQuery =
+    BatchCatalog.stream(hashed, checkpoint)(
+      classifyMediaBatch(_, _, catPath, verdictsPath, novelOnly))
 
   /** One micro-batch of [[classifyMediaAgainstCatalog]], callable
-    * directly so the crash-retry path is spec-testable. The verdict
-    * write is the plan's only action; the append re-reads the verdicts
-    * from the files just written (the [[classifyBatch]] lineage rule). */
+    * directly so the crash-retry path is spec-testable. */
   def classifyMediaBatch(batch: DataFrame, batchId: Long, catPath: String,
-                         verdictsPath: String, mergeBatches: Boolean = true,
-                         novelOnly: Boolean = false): Unit = {
-    val sp = batch.sparkSession
-    val verdicts = graft.operators.Multimodal.dhashIncrementalOf(
-      graft.operators.Dedup.readCatalog(sp, catPath, excludeBatch = Some(batchId)),
-      batch)
-    val vDir = s"$verdictsPath/batch-$batchId"
-    verdicts.write.mode("overwrite").parquet(vDir)
-    if (mergeBatches)
-      graft.operators.Multimodal.appendToDhashCatalog(catPath, batch,
-        sp.read.parquet(vDir), novelOnly, batchId = Some(batchId))
-  }
+                         verdictsPath: String, novelOnly: Boolean = false): Unit =
+    Multimodal.DhashCatalog.classifyBatch(batch, batchId, Seq(catPath),
+        verdictsPath, novelOnly) { case Seq(cat) =>
+      (Multimodal.dhashIncrementalOf(cat, batch), None)
+    }
 
   /** Streaming DSIR scoring — the ingest-time form of
     * `Curation.dsirSample`'s scoring stage. The model is FIXED (trained
@@ -373,7 +332,7 @@ object EventStream {
       .select(col("doc_id"),
         size(col("t")).cast("long").as("n_tokens"),
         size(filter(col("t"), x => !x.rlike(singleton))).cast("long").as("n_words"),
-        md5(concat_ws(" ", col("t"))).as("tok_md5"))
+        TextFns.contentFp(col("t")).as("tok_md5"))
   }
 
   /** Ingest-time UNSPACED-SCRIPT SEGMENTATION (round 20) — the
@@ -597,16 +556,9 @@ object EventStream {
     * a crash retry rewrites its own subdirectory instead of
     * duplicating answers. */
   def annServeStream(queries: DataFrame, indexBase: String, outPath: String,
-                     checkpoint: String, refineDir: Option[String] = None):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) annServeBatch(batch.toDF(), batchId, indexBase, outPath, refineDir)
-        ()
-      }
-      .start()
+                     checkpoint: String, refineDir: Option[String] = None): StreamingQuery =
+    BatchCatalog.stream(queries, checkpoint)(
+      annServeBatch(_, _, indexBase, outPath, refineDir))
 
   /** One micro-batch of [[annServeStream]], callable directly so
     * batch-twin equality and crash-retry idempotence are spec-testable. */
@@ -631,31 +583,13 @@ object EventStream {
         refine = refineDir.map(d => Similarity.vecStore(sp, d)),
         refineFlat = refineDir.map(d =>
           (Similarity.vecStoreFlatView(sp, d), Similarity.vecBuckets(sp, d))))
-    served.write.mode("overwrite").parquet(s"$outPath/batch-$batchId")
+    BatchCatalog.write(served, outPath, batchId)
     // refineOf caches its query-sized result to decouple from its own
     // intermediate cache; a forever-running serve must release it per
     // batch or entries accumulate for the life of the query (ADVICE r13)
     served.unpersist()
   }
 
-  /** ONLINE HYBRID RETRIEVAL SERVING (round 13) — the streaming twin of
-    * `sim_hybrid_rrf` over the STORED index pair: each micro-batch of
-    * (qid, text, embedding) query rows is answered by the same two legs
-    * the batch entry ranks with — BM25 depth-[[graft.operators.Retrieval.FuseK]]
-    * over the term-BUCKETED postings store (the batch's literal
-    * vocabulary IN filter prunes to ≤ |vocab| buckets) and exact cosine
-    * depth-FuseK over the embedding store (queries broadcast against
-    * the one corpus-sized scan) — fused by the shared `rrfFuseOf` fold.
-    * Same tokenizer, same normalization, same fusion arithmetic, so a
-    * corpus query streams to bit-identical fused lists (spec).
-    *
-    * Scale shape: per batch the corpus-sized inputs are one pruned
-    * postings read and one embedding scan; everything else (vocabulary,
-    * query vectors, rank lists, fusion) is batch-sized. ZERO state-store
-    * rows — both stores are read-only shared state, maintained out of
-    * band by `bm25IndexMerge`/`ivfPqIndexMerge`. Results land
-    * batchId-keyed (idempotent overwrite, the [[annServeStream]]
-    * contract). */
   /** CONTINUOUS CRAWL INGEST (round 14) — the streaming front door of
     * the whole pipeline: a directory that crawl archives keep landing
     * in (`.warc[.gz]`, the Common Crawl delivery shape) becomes an
@@ -711,16 +645,8 @@ object EventStream {
     * relational work inside foreachBatch, the 31g classify shape) and
     * verdicts land batchId-keyed — a crash retry overwrites its own
     * subdirectory. */
-  def qualityGateStream(docs: DataFrame, outPath: String, checkpoint: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) qualityGateBatch(batch.toDF(), batchId, outPath)
-        ()
-      }
-      .start()
+  def qualityGateStream(docs: DataFrame, outPath: String, checkpoint: String): StreamingQuery =
+    BatchCatalog.stream(docs, checkpoint)(qualityGateBatch(_, _, outPath))
 
   /** One micro-batch of [[qualityGateStream]], callable directly so
     * batch-twin equality and retry idempotence are spec-testable. */
@@ -728,8 +654,7 @@ object EventStream {
     import graft.functions.TextFns
     import graft.operators.Curation
     val toks = batch.select(col("doc_id"), TextFns.tokens(col("text")).as("t"))
-    Curation.qualityGateOf(toks)
-      .write.mode("overwrite").parquet(s"$outPath/batch-$batchId")
+    BatchCatalog.write(Curation.qualityGateOf(toks), outPath, batchId)
   }
 
   /** Ingest-time MULTILINGUAL quality gating (round 19) — the
@@ -740,24 +665,15 @@ object EventStream {
     * batchId-keyed (crash retry overwrites its own subdirectory). The
     * CJK doc the v1 gate stream mis-drops passes here — same
     * definition as the gated entry, so the twins cannot drift. */
-  def qualityGateMlStream(docs: DataFrame, outPath: String, checkpoint: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) qualityGateMlBatch(batch.toDF(), batchId, outPath)
-        ()
-      }
-      .start()
+  def qualityGateMlStream(docs: DataFrame, outPath: String, checkpoint: String): StreamingQuery =
+    BatchCatalog.stream(docs, checkpoint)(qualityGateMlBatch(_, _, outPath))
 
   /** One micro-batch of [[qualityGateMlStream]]. */
   def qualityGateMlBatch(batch: DataFrame, batchId: Long, outPath: String): Unit = {
     import graft.functions.TextFns
     import graft.operators.Curation
     val toks = batch.select(col("doc_id"), TextFns.tokensScript(col("text")).as("t"))
-    Curation.qualityGateMlOf(toks)
-      .write.mode("overwrite").parquet(s"$outPath/batch-$batchId")
+    BatchCatalog.write(Curation.qualityGateMlOf(toks), outPath, batchId)
   }
 
   /** Ingest-time crawl hygiene (round 14) — the streaming twin of the
@@ -800,20 +716,31 @@ object EventStream {
     }
   }
 
+  /** The stream form of [[hybridServeBatch]]. */
   def hybridServeStream(queries: DataFrame, corpusDir: String, outPath: String,
-                        checkpoint: String, k: Int = 5):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) hybridServeBatch(batch.toDF(), batchId, corpusDir, outPath, k)
-        ()
-      }
-      .start()
+                        checkpoint: String, k: Int = 5): StreamingQuery =
+    BatchCatalog.stream(queries, checkpoint)(hybridServeBatch(_, _, corpusDir, outPath, k))
 
-  /** One micro-batch of [[hybridServeStream]], callable directly so
-    * batch-twin equality and crash-retry idempotence are spec-testable. */
+  /** ONLINE HYBRID RETRIEVAL SERVING (round 13): one micro-batch of
+    * [[hybridServeStream]], callable directly so batch-twin equality and
+    * crash-retry idempotence are spec-testable — the streaming twin of
+    * `sim_hybrid_rrf` over the STORED index pair. Each micro-batch of
+    * (qid, text, embedding) query rows is answered by the same two legs
+    * the batch entry ranks with — BM25 depth-[[graft.operators.Retrieval.FuseK]]
+    * over the term-BUCKETED postings store (the batch's literal
+    * vocabulary IN filter prunes to ≤ |vocab| buckets) and exact cosine
+    * depth-FuseK over the embedding store (queries broadcast against
+    * the one corpus-sized scan) — fused by the shared `rrfFuseOf` fold.
+    * Same tokenizer, same normalization, same fusion arithmetic, so a
+    * corpus query streams to bit-identical fused lists (spec).
+    *
+    * Scale shape: per batch the corpus-sized inputs are one pruned
+    * postings read and one embedding scan; everything else (vocabulary,
+    * query vectors, rank lists, fusion) is batch-sized. ZERO state-store
+    * rows — both stores are read-only shared state, maintained out of
+    * band by `bm25IndexMerge`/`ivfPqIndexMerge`. Results land
+    * batchId-keyed (idempotent overwrite, the [[annServeStream]]
+    * contract). */
   def hybridServeBatch(batch: DataFrame, batchId: Long, corpusDir: String,
                        outPath: String, k: Int): Unit = {
     val sp = batch.sparkSession
@@ -837,8 +764,7 @@ object EventStream {
     val vecList = Similarity
       .cosineRankedOf(qs, Similarity.emb(sp, corpusDir), Retrieval.FuseK)
       .select(col("qid"), col("nid").as("id"), col("rn"))
-    Retrieval.rrfFuseOf(Seq(textList, vecList), k)
-      .write.mode("overwrite").parquet(s"$outPath/batch-$batchId")
+    BatchCatalog.write(Retrieval.rrfFuseOf(Seq(textList, vecList), k), outPath, batchId)
   }
 
   /** Ingest-time SUB-DOCUMENT scrubbing against a growing SPAN catalog —
@@ -856,15 +782,8 @@ object EventStream {
     * per DISTINCT span corpus-wide), the batch side is the usual
     * ~n_tokens window rows, and both joins are hash equi-joins. */
   def scrubAgainstSpanCatalog(docs: DataFrame, spanPath: String, outPath: String,
-                              checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) scrubBatch(batch.toDF(), batchId, spanPath, outPath)
-        ()
-      }
-      .start()
+                              checkpoint: String): StreamingQuery =
+    BatchCatalog.stream(docs, checkpoint)(scrubBatch(_, _, spanPath, outPath))
 
   /** One micro-batch of [[scrubAgainstSpanCatalog]], callable directly
     * so the crash-retry and batch-twin-equality paths are spec-testable. */
@@ -874,7 +793,7 @@ object EventStream {
     import graft.operators.Curation
     val toks = Curation.substringToks(batch)
     val wins = Curation.windowHashes(toks).cache() // feeds dup detect + span append
-    val catalog = readSpanCatalog(sp, spanPath, excludeBatch = Some(batchId))
+    val catalog = SpanCatalog.read(sp, Seq(spanPath), Some(batchId)).head
     // a window is a duplicate if the catalog has its hash (ANY
     // occurrence, including the batch's first) OR an earlier (doc_id,
     // off) in THIS batch has it — exactly substringDedup's rule with
@@ -887,40 +806,20 @@ object EventStream {
     val batchDup = wins.join(first, Seq("wh"))
       .filter(col("doc_id") =!= col("f.doc_id") || col("off") =!= col("f.off"))
       .select(col("doc_id"), col("off"))
-    Curation.keptFromDups(toks, catHit.unionByName(batchDup))
-      .write.mode("overwrite").parquet(s"$outPath/batch-$batchId")
+    BatchCatalog.write(Curation.keptFromDups(toks, catHit.unionByName(batchDup)),
+      outPath, batchId)
     // grow the catalog: the batch's distinct NEW hashes, batchId-keyed
-    // idempotent overwrite (readSpanCatalog above already excluded this
+    // idempotent overwrite (the read above already excluded this
     // batch's own earlier append, so a retry recomputes the same rows)
-    wins.select(col("wh")).distinct()
-      .join(catalog, Seq("wh"), "left_anti")
-      .write.mode("overwrite").parquet(s"$spanPath/batch-$batchId")
+    BatchCatalog.write(SpanCatalog.build(wins).head.join(catalog, Seq("wh"), "left_anti"),
+      spanPath, batchId)
     wins.unpersist()
   }
 
-  /** Span catalog reader: batch-keyed subdirectories like
-    * [[graft.operators.Dedup.readCatalog]]; a missing root (first
-    * batch ever) reads as the empty catalog instead of failing. */
-  def readSpanCatalog(spark: SparkSession, root: String,
-                      excludeBatch: Option[Long] = None): DataFrame = {
-    import spark.implicits._
-    val empty = spark.emptyDataset[String].toDF("wh")
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // missing root = first batch ever; a root with NO usable batch-* dirs
-    // (empty dir, only _/. bookkeeping files, or only the excluded batch's
-    // own dir on a first-batch retry) reads empty too — Dedup.readCatalog
-    // would otherwise hand the parquet reader zero paths and die on
-    // schema inference. The guard is independent of excludeBatch.
-    if (!fs.exists(p)) empty
-    else {
-      val usable = fs.listStatus(p).map(_.getPath.getName).filter { n =>
-        n.startsWith("batch-") && !excludeBatch.exists(id => n == s"batch-$id")
-      }
-      if (usable.isEmpty) empty
-      else graft.operators.Dedup.readCatalog(spark, root, excludeBatch)
-    }
-  }
+  /** The span catalog: the distinct window hashes (wh) a batch adds. */
+  val SpanCatalog: BatchCatalog.Kind = BatchCatalog.Kind(
+    org.apache.spark.sql.types.StructType.fromDDL("wh STRING"),
+    wins => Seq(wins.select(col("wh")).distinct()))
 
   // ---- KMV distinct sketch with bounded state --------------------------
 

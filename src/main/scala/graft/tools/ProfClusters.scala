@@ -32,7 +32,7 @@ object ProfClusters {
       .select(col("doc_id"), TextFns.tokens(col("text")).as("__ts"))
       .cache()
     val fp = toks.select(col("doc_id"),
-      when(size(col("__ts")) >= 3, md5(concat_ws(" ", col("__ts"))))
+      when(size(col("__ts")) >= 3, graft.functions.TextFns.contentFp(col("__ts")))
         .otherwise(concat(lit("noshingle:"), col("doc_id").cast("string")))
         .as("content_fp"))
     val withRep = fp.select(col("doc_id"),

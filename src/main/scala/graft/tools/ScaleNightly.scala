@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Dedup, ShardExport}
+import graft.operators.{BatchCatalog, Curation, Dedup, ShardExport}
 
 /** Round-17 stress (VERDICT r16 #5): the NIGHTLY LOOP end-to-end, at a
   * corpus size where O(corpus) work per night would be visible on the
@@ -78,7 +78,7 @@ object ScaleNightly {
     val out = s"$root/release"
     val (_, tBoot) = time(s"bootstrap: catalog + clusters + v2 release of $nDocs docs") {
       val (fp0, sh0) = Dedup.buildCatalog(corpus.select(col("doc_id"), col("text")))
-      fp0.write.parquet(s"$fpPath/batch-0"); sh0.write.parquet(s"$shPath/batch-0")
+      BatchCatalog.write(fp0, fpPath, 0L); BatchCatalog.write(sh0, shPath, 0L)
       // the SAME cluster table the release chain materializes — persist
       // it as the nightly loop's extension base
       Dedup.clustersCached(spark, dir).write.parquet(cluPath)
@@ -112,8 +112,8 @@ object ScaleNightly {
       val batch = mkDocs(spark.range(20000000L + n * 1000L, 20000000L + (n + 1) * 1000L))
         .select(col("doc_id"), col("source"), col("text"))
       val (_, tNight) = time(s"night $n: classify + extend + refresh (1000 docs)") {
-        val catFp = Dedup.readCatalog(spark, fpPath, excludeBatch = Some(n.toLong))
-        val catSh = Dedup.readCatalog(spark, shPath, excludeBatch = Some(n.toLong))
+        val Seq(catFp, catSh) =
+          Dedup.ShingleCatalog.read(spark, Seq(fpPath, shPath), Some(n.toLong))
         val (verdicts, _) = time(s"  night $n: classify vs catalog") {
           val v = Dedup.incrementalOf(catFp, catSh,
             batch.select(col("doc_id"), col("text"))).cache()
@@ -125,8 +125,8 @@ object ScaleNightly {
           c.count(); c
         }
         time(s"  night $n: append catalog") {
-          Dedup.appendToCatalog(fpPath, shPath,
-            batch.select(col("doc_id"), col("text")), verdicts, batchId = Some(n.toLong))
+          Dedup.ShingleCatalog.append(Seq(fpPath, shPath),
+            batch.select(col("doc_id"), col("text")), verdicts, n.toLong)
         }
         time(s"  night $n: releaseShardsRefresh") {
           Curation.releaseShardsRefresh(batch, clusters2, dir, out, blocksPerShard = 1L)
@@ -231,13 +231,13 @@ object ScaleNightly {
       .select(col("doc_id"), col("source"), col("text"))
     val preNight4 = liveGens()
     val (_, tNight4) = time(s"night $n4 after GC: classify + extend + refresh (1000 docs)") {
-      val catFp = Dedup.readCatalog(spark, fpPath, excludeBatch = Some(n4.toLong))
-      val catSh = Dedup.readCatalog(spark, shPath, excludeBatch = Some(n4.toLong))
+      val Seq(catFp, catSh) =
+        Dedup.ShingleCatalog.read(spark, Seq(fpPath, shPath), Some(n4.toLong))
       val verdicts = Dedup.incrementalOf(catFp, catSh,
         batch4.select(col("doc_id"), col("text"))).cache()
       val clusters2 = Curation.extendClusters(spark.read.parquet(cluPath), verdicts).cache()
-      Dedup.appendToCatalog(fpPath, shPath,
-        batch4.select(col("doc_id"), col("text")), verdicts, batchId = Some(n4.toLong))
+      Dedup.ShingleCatalog.append(Seq(fpPath, shPath),
+        batch4.select(col("doc_id"), col("text")), verdicts, n4.toLong)
       Curation.releaseShardsRefresh(batch4, clusters2, dir, out, blocksPerShard = 1L)
       verdicts.unpersist(); clusters2.unpersist()
     }

@@ -1,7 +1,7 @@
 package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Analytics, Curation, Dedup, DomainCuration, Retrieval, ShardExport, Similarity, TextAnalysis}
+import graft.operators.{Analytics, BatchCatalog, Curation, Dedup, DomainCuration, Retrieval, ShardExport, Similarity, TextAnalysis}
 
 /** Two decades of scale, one representative per operator FAMILY
   * (round 15 — grown from the 3-headliner round-12 form): synthesize a
@@ -157,8 +157,7 @@ object ScaleSf10 {
         val t0 = System.nanoTime()
         val corpus = spark.read.parquet(s"$dir/documents.parquet")
         val (fp0, sh0) = Dedup.buildCatalog(corpus.select(col("doc_id"), col("text")))
-        fp0.write.mode("overwrite").parquet(s"$fpPath/batch-0")
-        sh0.write.mode("overwrite").parquet(s"$shPath/batch-0")
+        BatchCatalog.write(fp0, fpPath, 0L); BatchCatalog.write(sh0, shPath, 0L)
         Dedup.clustersCached(spark, dir).write.mode("overwrite").parquet(cluPath)
         Curation.releaseShards(spark, dir, out)
         new java.io.File(s"$root/_BOOTSTRAPPED").createNewFile()
@@ -169,13 +168,12 @@ object ScaleSf10 {
       // fixed batchId=1: re-runs take the crash-retry path and land
       // byte-identical — the timed work is the same classify/extend/
       // append/refresh either way
-      val catFp = Dedup.readCatalog(spark, fpPath, excludeBatch = Some(1L))
-      val catSh = Dedup.readCatalog(spark, shPath, excludeBatch = Some(1L))
+      val Seq(catFp, catSh) = Dedup.ShingleCatalog.read(spark, Seq(fpPath, shPath), Some(1L))
       val verdicts = Dedup.incrementalOf(catFp, catSh,
         batch.select(col("doc_id"), col("text"))).cache()
       val clusters2 = Curation.extendClusters(spark.read.parquet(cluPath), verdicts).cache()
-      Dedup.appendToCatalog(fpPath, shPath,
-        batch.select(col("doc_id"), col("text")), verdicts, batchId = Some(1L))
+      Dedup.ShingleCatalog.append(Seq(fpPath, shPath),
+        batch.select(col("doc_id"), col("text")), verdicts, 1L)
       Curation.releaseShardsRefresh(batch, clusters2, dir, out)
       verdicts.unpersist(); clusters2.unpersist()
       (System.nanoTime() - t0) / 1e9

@@ -30,6 +30,20 @@ class HarnessSpec extends AnyFunSuite {
     assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
+  test("foreachBatch and batch-keyed paths appear only in BatchCatalog") {
+    val main = Paths.get("src", "main", "scala")
+    val files = Files.walk(main).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toVector
+    def filesWith(needle: String): Vector[String] = files
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(needle))
+      .map(p => main.relativize(p).toString)
+    val batchModule = Vector(Paths.get("graft", "operators", "BatchCatalog.scala").toString)
+    val streams = filesWith(".foreachBatch")
+    assert(streams == batchModule, s"foreachBatch outside BatchCatalog: $streams")
+    val batchPaths = filesWith("/batch-$")
+    assert(batchPaths == batchModule, s"batch-keyed paths outside BatchCatalog: $batchPaths")
+  }
+
   test("SparkEntry.select: filters and sorts, and fails fast on an unknown name") {
     assert(SparkEntry.select(None).map(_._1) == SparkEntry.queries.keys.toSeq.sorted)
     assert(SparkEntry.select(Some("sim_mmr_rerank, q1_pricing_summary,sim_mmr_rerank"))

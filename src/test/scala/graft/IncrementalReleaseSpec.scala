@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Curation, Dedup}
+import graft.operators.{BatchCatalog, Curation, Dedup}
 
 /** Incremental release (round 15): nightly batches classify against the
   * dedup catalog, the cluster table EXTENDS by append (dups inherit
@@ -209,17 +209,17 @@ class IncrementalReleaseSpec extends AnyFunSuite {
     val base = docsDf((1L to 12L).map(i => i -> docText(i)))
     // night 0: bootstrap — build and persist catalog + clusters
     val (fp0, sh0) = Dedup.buildCatalog(base)
-    fp0.write.parquet(s"$fpPath/batch-0"); sh0.write.parquet(s"$shPath/batch-0")
+    BatchCatalog.write(fp0, fpPath, 0L); BatchCatalog.write(sh0, shPath, 0L)
     Dedup.dedupClustersOfDocs(spark, base, ordered = false).write.parquet(cluPath)
 
     // night 1: read state from disk, classify, extend, persist
     def night(batch: org.apache.spark.sql.DataFrame, id: Long): Unit = {
-      val catFp = Dedup.readCatalog(spark, fpPath, excludeBatch = Some(id))
-      val catSh = Dedup.readCatalog(spark, shPath, excludeBatch = Some(id))
+      val Seq(catFp, catSh) =
+        Dedup.ShingleCatalog.read(spark, Seq(fpPath, shPath), excludeBatch = Some(id))
       val verdicts = Dedup.incrementalOf(catFp, catSh, batch).cache()
       val clu2 = Curation.extendClusters(spark.read.parquet(cluPath), verdicts)
       clu2.write.mode("overwrite").parquet(s"$root/clusters_next")
-      Dedup.appendToCatalog(fpPath, shPath, batch, verdicts, batchId = Some(id))
+      Dedup.ShingleCatalog.append(Seq(fpPath, shPath), batch, verdicts, batchId = id)
       verdicts.unpersist()
       // atomic-ish swap for the spec (production: versioned table paths)
       val tmp = spark.read.parquet(s"$root/clusters_next").cache()
@@ -250,8 +250,8 @@ class IncrementalReleaseSpec extends AnyFunSuite {
     // catalog stayed idempotent too: classifying a copy of 21 still
     // exact-matches exactly one catalog doc (no duplicated fingerprints)
     val probe = docsDf(Seq(99L -> docText(21L)))
-    val v = Dedup.incrementalOf(
-      Dedup.readCatalog(spark, fpPath), Dedup.readCatalog(spark, shPath), probe)
+    val Seq(fpNow, shNow) = Dedup.ShingleCatalog.read(spark, Seq(fpPath, shPath))
+    val v = Dedup.incrementalOf(fpNow, shNow, probe)
       .as[(Long, String, java.lang.Long)].collect()
     assert(v.head._2 == "exact_dup" && v.head._3 == 21L,
       s"catalog after retry must classify a copy of 21 as its dup: ${v.toSeq}")
@@ -260,8 +260,8 @@ class IncrementalReleaseSpec extends AnyFunSuite {
     // classification identical, directory count collapses
     val (cFp, cSh) = (s"$root/fp_compact", s"$root/sh_compact")
     Dedup.compactCatalog(spark, fpPath, shPath, cFp, cSh)
-    val vc = Dedup.incrementalOf(
-      Dedup.readCatalog(spark, cFp), Dedup.readCatalog(spark, cSh), probe)
+    val Seq(fpCompact, shCompact) = Dedup.ShingleCatalog.read(spark, Seq(cFp, cSh))
+    val vc = Dedup.incrementalOf(fpCompact, shCompact, probe)
       .as[(Long, String, java.lang.Long)].collect()
     assert(vc.toSeq == v.toSeq, "compacted catalog must classify identically")
     val gens = new java.io.File(cFp).listFiles().filter(_.isDirectory).map(_.getName)

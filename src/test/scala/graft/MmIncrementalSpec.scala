@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.Multimodal
 
 /** Incremental dHash near-dup catalog (round 20): verdict semantics,
   * rebuild equivalence of the batch-grown catalog, and batch-keyed
@@ -53,15 +53,15 @@ class MmIncrementalSpec extends AnyFunSuite {
       (id, b16(0), b16(2), b16(4), b16(6))
     }: _*)
     // bootstrap: batch 0 straight into the catalog
-    Multimodal.appendToDhashCatalog(root, batch(0),
-      spark.emptyDataFrame, batchId = Some(0))
+    Multimodal.DhashCatalog.append(Seq(root), batch(0),
+      spark.emptyDataFrame, batchId = 0)
     // nightly loop: classify against the grown catalog, append
     for (i <- 1 to 2) {
-      val cat = Dedup.readCatalog(spark, root)
+      val cat = Multimodal.DhashCatalog.read(spark, Seq(root)).head
       val v = Multimodal.dhashIncrementalOf(cat, batch(i))
-      Multimodal.appendToDhashCatalog(root, batch(i), v, batchId = Some(i))
+      Multimodal.DhashCatalog.append(Seq(root), batch(i), v, batchId = i)
     }
-    val grown = Dedup.readCatalog(spark, root).collect()
+    val grown = Multimodal.DhashCatalog.read(spark, Seq(root)).head.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))).toSet
     val oneShot = (0 to 2).flatMap(i => batch(i).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)))).toSet
@@ -72,14 +72,14 @@ class MmIncrementalSpec extends AnyFunSuite {
     // batch (or its docs would exact-match themselves) and the
     // re-append must REPLACE, not duplicate
     val partial = batch(3).limit(2)
-    Multimodal.appendToDhashCatalog(root, partial,
-      spark.emptyDataFrame, batchId = Some(3))
-    val retryView = Dedup.readCatalog(spark, root, excludeBatch = Some(3))
+    Multimodal.DhashCatalog.append(Seq(root), partial,
+      spark.emptyDataFrame, batchId = 3)
+    val retryView = Multimodal.DhashCatalog.read(spark, Seq(root), excludeBatch = Some(3)).head
     val vRetry = Multimodal.dhashIncrementalOf(retryView, batch(3))
     assert(vRetry.filter(col("status") =!= "novel").count() == 0,
       "a retried batch must not match its own earlier partial append")
-    Multimodal.appendToDhashCatalog(root, batch(3), vRetry, batchId = Some(3))
-    val afterRetry = Dedup.readCatalog(spark, root).collect()
+    Multimodal.DhashCatalog.append(Seq(root), batch(3), vRetry, batchId = 3)
+    val afterRetry = Multimodal.DhashCatalog.read(spark, Seq(root)).head.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)))
     val wanted = (0 to 3).flatMap(i => batch(i).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))))

@@ -547,7 +547,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val vA = Dedup.incrementalOf(cat0Fp, cat0Sh, a)
     assert(vA.select("doc_id", "status").as[(Long, String)].collect().sortBy(_._1).toSeq ==
       Seq((250L, "exact_dup"), (251L, "near_dup"), (252L, "novel")))
-    val (fp1, sh1) = Dedup.mergeIntoCatalog(cat0Fp, cat0Sh, a, vA)
+    val Seq(fp1, sh1) = Dedup.ShingleCatalog.merge(Seq(cat0Fp, cat0Sh), a, vA)
     val seqB = Dedup.incrementalOf(fp1, sh1, b).collect().map(_.toSeq).toSeq
     val (rbFp, rbSh) = Dedup.buildCatalog(catalog.unionByName(a))
     val batchB = Dedup.incrementalOf(rbFp, rbSh, b).collect().map(_.toSeq).toSeq
@@ -576,12 +576,13 @@ class ScaleOpsSpec extends AnyFunSuite {
     cat0Fp.write.parquet(s"$tmp/fp.parquet")
     cat0Sh.write.parquet(s"$tmp/sh.parquet")
     // nightly job, day 1: read catalog → classify → append in place
-    val vA = Dedup.incrementalOf(
-      spark.read.parquet(s"$tmp/fp.parquet"), spark.read.parquet(s"$tmp/sh.parquet"), a)
-    Dedup.appendToCatalog(s"$tmp/fp.parquet", s"$tmp/sh.parquet", a, vA)
+    val roots = Seq(s"$tmp/fp.parquet", s"$tmp/sh.parquet")
+    val Seq(day1Fp, day1Sh) = Dedup.ShingleCatalog.read(spark, roots)
+    val vA = Dedup.incrementalOf(day1Fp, day1Sh, a)
+    Dedup.ShingleCatalog.append(roots, a, vA, batchId = 1L)
     // day 2: the appended catalog must classify B like a full rebuild
-    val seqB = Dedup.incrementalOf(
-      spark.read.parquet(s"$tmp/fp.parquet"), spark.read.parquet(s"$tmp/sh.parquet"), b)
+    val Seq(day2Fp, day2Sh) = Dedup.ShingleCatalog.read(spark, roots)
+    val seqB = Dedup.incrementalOf(day2Fp, day2Sh, b)
       .collect().map(_.toSeq).toSeq
     val (rbFp, rbSh) = Dedup.buildCatalog(catalog.unionByName(a))
     assert(seqB == Dedup.incrementalOf(rbFp, rbSh, b).collect().map(_.toSeq).toSeq)
@@ -591,7 +592,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // novelOnly: dup A-docs stay out of the catalog, yet exact dups of
     // HISTORY still classify exactly — a copy of dup-250 fingerprint-
     // matches the original 0; a copy of novel-252 matches 252
-    val (fpN, shN) = Dedup.mergeIntoCatalog(cat0Fp, cat0Sh, a, vA, novelOnly = true)
+    val Seq(fpN, shN) = Dedup.ShingleCatalog.merge(Seq(cat0Fp, cat0Sh), a, vA, novelOnly = true)
     assert(fpN.filter(col("doc_id").isin(250L, 251L)).count() == 0)
     val probe = Seq((400L, base), (401L, other)).toDF("doc_id", "text")
     assert(Dedup.incrementalOf(fpN, shN, probe)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{BatchCatalog, Dedup}
 
 /** Signature-only incremental catalog (round 15): near-dup state is 32
   * minhash longs per doc instead of the full shingle set. The spec pins
@@ -59,7 +59,7 @@ class SigCatalogSpec extends AnyFunSuite {
     // merge keeps classification rebuild-equivalent: after absorbing
     // the batch, a copy of the batch's novel doc exact-matches it
     val verdicts = Dedup.incrementalSigOf(fpG, sigG, batch)
-    val (fp2, sig2) = Dedup.mergeIntoSigCatalog(fpG, sigG, batch, verdicts)
+    val Seq(fp2, sig2) = Dedup.SigCatalog.merge(Seq(fpG, sigG), batch, verdicts)
     val probe = docsDf(Seq(200L -> docText(42L)))
     val v2 = Dedup.incrementalSigOf(fp2, sig2, probe)
       .as[(Long, String, java.lang.Long, java.lang.Double)].collect()
@@ -72,22 +72,22 @@ class SigCatalogSpec extends AnyFunSuite {
     val (fpPath, sigPath) = (s"$root/fp", s"$root/sig")
     val base = docsDf((1L to 10L).map(i => i -> docText(i)))
     val (fp0, sig0) = Dedup.buildSigCatalog(base)
-    fp0.write.parquet(s"$fpPath/batch-0"); sig0.write.parquet(s"$sigPath/batch-0")
+    BatchCatalog.write(fp0, fpPath, 0L); BatchCatalog.write(sig0, sigPath, 0L)
 
-    def classify(batch: org.apache.spark.sql.DataFrame, exclude: Option[Long]) =
-      Dedup.incrementalSigOf(
-        Dedup.readCatalog(spark, fpPath, exclude),
-        Dedup.readCatalog(spark, sigPath, exclude), batch)
+    def classify(batch: org.apache.spark.sql.DataFrame, exclude: Option[Long]) = {
+      val Seq(fp, sig) = Dedup.SigCatalog.read(spark, Seq(fpPath, sigPath), exclude)
+      Dedup.incrementalSigOf(fp, sig, batch)
+    }
 
     val batch = docsDf(Seq(20L -> docText(20L), 21L -> (docText(7L) + " extra tail")))
     val v1 = classify(batch, Some(1L))
-    Dedup.appendToSigCatalog(fpPath, sigPath, batch, v1, batchId = Some(1L))
+    Dedup.SigCatalog.append(Seq(fpPath, sigPath), batch, v1, batchId = 1L)
     // crash retry of the same batch: its own earlier append is excluded,
     // so nothing self-matches and the re-append overwrites cleanly
     val v1r = classify(batch, Some(1L))
     assert(v1r.select(col("doc_id"), col("status")).as[(Long, String)].collect().toMap ==
       Map(20L -> "novel", 21L -> "near_dup"), "retry must see the pre-batch catalog")
-    Dedup.appendToSigCatalog(fpPath, sigPath, batch, v1r, batchId = Some(1L))
+    Dedup.SigCatalog.append(Seq(fpPath, sigPath), batch, v1r, batchId = 1L)
     // next batch sees exactly one copy of batch-1's signatures
     val probe = docsDf(Seq(30L -> docText(20L)))
     val v2 = classify(probe, None)

@@ -513,13 +513,13 @@ class StreamingSpec extends AnyFunSuite {
     val got = spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$tmp/verdicts")
       .collect().map(_.toSeq).toSet
-    // batch twin: the sequential incrementalOf + mergeIntoCatalog loop
-    var cat = (fp0, sh0)
+    // batch twin: the sequential incrementalOf + ShingleCatalog.merge loop
+    var cat = Seq(fp0, sh0)
     val want = chunks.flatMap { c =>
       val df = c.toDF("doc_id", "text")
-      val v = Dedup.incrementalOf(cat._1, cat._2, df)
+      val v = Dedup.incrementalOf(cat(0), cat(1), df)
       val rows = v.collect().map(_.toSeq)
-      cat = Dedup.mergeIntoCatalog(cat._1, cat._2, df, v)
+      cat = Dedup.ShingleCatalog.merge(cat, df, v)
       rows
     }.toSet
     assert(got == want)
@@ -530,9 +530,9 @@ class StreamingSpec extends AnyFunSuite {
     // the in-place catalog equals a full rebuild over everything ingested
     val allDocs = catalog.unionByName(chunks.flatten.toDF("doc_id", "text"))
     val (rbFp, rbSh) = Dedup.buildCatalog(allDocs)
-    assert(Dedup.readCatalog(spark, s"$tmp/fp.parquet").collect().map(_.toSeq).toSet ==
+    assert(Dedup.ShingleCatalog.read(spark, Seq(s"$tmp/fp.parquet", s"$tmp/sh.parquet"))(0).collect().map(_.toSeq).toSet ==
       rbFp.collect().map(_.toSeq).toSet)
-    assert(Dedup.readCatalog(spark, s"$tmp/sh.parquet").collect().map(_.toSeq).toSet ==
+    assert(Dedup.ShingleCatalog.read(spark, Seq(s"$tmp/fp.parquet", s"$tmp/sh.parquet"))(1).collect().map(_.toSeq).toSet ==
       rbSh.collect().map(_.toSeq).toSet)
   }
 
@@ -560,8 +560,8 @@ class StreamingSpec extends AnyFunSuite {
     EventStream.classifyBatch(b0, 0L, s"$tmp/fp.parquet", s"$tmp/sh.parquet", s"$tmp/verdicts")
     val firstVerdicts = spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$tmp/verdicts").collect().map(_.toSeq).toSet
-    val firstFp = Dedup.readCatalog(spark, s"$tmp/fp.parquet").collect().map(_.toSeq).toSet
-    val firstSh = Dedup.readCatalog(spark, s"$tmp/sh.parquet").collect().map(_.toSeq).toSet
+    val firstFp = Dedup.ShingleCatalog.read(spark, Seq(s"$tmp/fp.parquet", s"$tmp/sh.parquet"))(0).collect().map(_.toSeq).toSet
+    val firstSh = Dedup.ShingleCatalog.read(spark, Seq(s"$tmp/fp.parquet", s"$tmp/sh.parquet"))(1).collect().map(_.toSeq).toSet
 
     // the retry: same batch, same batchId
     EventStream.classifyBatch(b0, 0L, s"$tmp/fp.parquet", s"$tmp/sh.parquet", s"$tmp/verdicts")
@@ -571,8 +571,8 @@ class StreamingSpec extends AnyFunSuite {
       "verdict sink must read clean after a retry, without dropDuplicates")
     assert(retryVerdicts.map(r => (r(0), r(1))).sortBy(_.toString).toSeq ==
       Seq((250L, "exact_dup"), (251L, "near_dup"), (252L, "novel")).map(t => (t._1, t._2)))
-    assert(Dedup.readCatalog(spark, s"$tmp/fp.parquet").collect().map(_.toSeq).toSet == firstFp)
-    val retrySh = Dedup.readCatalog(spark, s"$tmp/sh.parquet").collect().map(_.toSeq)
+    assert(Dedup.ShingleCatalog.read(spark, Seq(s"$tmp/fp.parquet", s"$tmp/sh.parquet"))(0).collect().map(_.toSeq).toSet == firstFp)
+    val retrySh = Dedup.ShingleCatalog.read(spark, Seq(s"$tmp/fp.parquet", s"$tmp/sh.parquet"))(1).collect().map(_.toSeq)
     assert(retrySh.toSet == firstSh && retrySh.length == retrySh.distinct.length,
       "catalog shingle rows must not duplicate under retry (duplicates inflate Jaccard)")
 
@@ -622,18 +622,37 @@ class StreamingSpec extends AnyFunSuite {
     val want = (sigs((1L, 10, 20, 30, 40), (2L, 100, 200, 300, 400)).collect() ++
       chunks.flatten.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3, t._4, t._5)))
       .map(_.toSeq).toSet
-    assert(Dedup.readCatalog(spark, s"$tmp/cat").collect().map(_.toSeq).toSet == want)
+    assert(Multimodal.DhashCatalog.read(spark, Seq(s"$tmp/cat")).head.collect().map(_.toSeq).toSet == want)
     // crash-retry: the same batchId re-runs — verdicts and catalog
     // unchanged (the retry must not see its own partial append)
-    val cat0 = Dedup.readCatalog(spark, s"$tmp/cat").count()
+    val cat0 = Multimodal.DhashCatalog.read(spark, Seq(s"$tmp/cat")).head.count()
     EventStream.classifyMediaBatch(sigs((400L, 9000, 9001, 9002, 9003)), 2L,
       s"$tmp/cat", s"$tmp/verdicts")
-    assert(Dedup.readCatalog(spark, s"$tmp/cat").count() == cat0,
+    assert(Multimodal.DhashCatalog.read(spark, Seq(s"$tmp/cat")).head.count() == cat0,
       "a retried append must replace, not duplicate")
     val retry = spark.read.parquet(s"$tmp/verdicts/batch-2")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
     assert(retry == Seq((400L, "exact_dup", 302L)),
       s"the retry must classify against the catalog minus its own append: $retry")
+  }
+
+  test("media catalog on a never-written root: the first batch is all novel, the next matches it") {
+    import graft.operators.Multimodal
+    val tmp = java.nio.file.Files.createTempDirectory("freshmm").toString
+    def sigs(rows: (Long, Int, Int, Int, Int)*) =
+      rows.toDF("doc_id", "b0", "b1", "b2", "b3")
+    EventStream.classifyMediaBatch(
+      sigs((1L, 10, 20, 30, 40), (2L, 100, 200, 300, 400)), 0L,
+      s"$tmp/cat", s"$tmp/verdicts")
+    EventStream.classifyMediaBatch(
+      sigs((3L, 10, 20, 30, 40), (4L, 7000, 7001, 7002, 7003)), 1L,
+      s"$tmp/cat", s"$tmp/verdicts")
+    def verdicts(id: Long) = spark.read.parquet(s"$tmp/verdicts/batch-$id").collect()
+      .map(r => (r.getLong(0), r.getString(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
+      .sortBy(_._1).toSeq
+    assert(verdicts(0) == Seq((1L, "novel", -1L), (2L, "novel", -1L)))
+    assert(verdicts(1) == Seq((3L, "exact_dup", 1L), (4L, "novel", -1L)))
+    assert(Multimodal.DhashCatalog.read(spark, Seq(s"$tmp/cat")).head.count() == 4)
   }
 
   test("stream-stream interval join == batch twin (click→purchase within 1h)") {
@@ -727,7 +746,7 @@ class StreamingSpec extends AnyFunSuite {
     // crash-retry of batch 1: identical outputs, no duplicated catalog rows
     EventStream.scrubBatch(b2, 1L, spanPath, outPath)
     assert(readOut() == got)
-    val spans = EventStream.readSpanCatalog(spark, spanPath).as[String].collect()
+    val spans = EventStream.SpanCatalog.read(spark, Seq(spanPath)).head.as[String].collect()
     assert(spans.length == spans.distinct.length, "retry duplicated span rows")
 
     // sequential scrubs == one batch substringDedup over the whole
@@ -741,20 +760,20 @@ class StreamingSpec extends AnyFunSuite {
 
     // retry of the FIRST batch ever: the catalog view excluding its own
     // append must read empty, not fail on a zero-path parquet read
-    val spans0 = EventStream.readSpanCatalog(spark, spanPath, excludeBatch = Some(0L))
+    val spans0 = EventStream.SpanCatalog.read(spark, Seq(spanPath), excludeBatch = Some(0L)).head
     assert(spans0.columns.toSeq == Seq("wh"))
     val freshRoot = s"$tmp/neverwritten"
-    assert(EventStream.readSpanCatalog(spark, freshRoot).count() == 0)
+    assert(EventStream.SpanCatalog.read(spark, Seq(freshRoot)).head.count() == 0)
 
     // a root that EXISTS but holds no batch dirs (empty, or only _/. files)
     // must read empty with excludeBatch=None too — not die on parquet
     // schema inference over zero paths (round-9 ADVICE fix)
     val emptyRoot = s"$tmp/existsempty"
     new java.io.File(emptyRoot).mkdirs()
-    assert(EventStream.readSpanCatalog(spark, emptyRoot).count() == 0)
+    assert(EventStream.SpanCatalog.read(spark, Seq(emptyRoot)).head.count() == 0)
     new java.io.File(s"$emptyRoot/_SUCCESS").createNewFile()
     new java.io.File(s"$emptyRoot/.hidden").createNewFile()
-    assert(EventStream.readSpanCatalog(spark, emptyRoot).count() == 0)
+    assert(EventStream.SpanCatalog.read(spark, Seq(emptyRoot)).head.count() == 0)
   }
 
   test("streaming sq8 encode == batch codes, zero state-store rows") {
@@ -1430,7 +1449,7 @@ class StreamingSpec extends AnyFunSuite {
       }
       (spark.read.option("recursiveFileLookup", "true").parquet(s"$tmp/verdicts")
          .collect().map(_.toSeq).toSet,
-       Dedup.readCatalog(spark, s"$tmp/sh.parquet").collect().map(_.toSeq).toSet)
+       Dedup.ShingleCatalog.read(spark, Seq(s"$tmp/fp.parquet", s"$tmp/sh.parquet"))(1).collect().map(_.toSeq).toSet)
     }
     val (vGold, cGold) = run(interrupted = false)
     val (vRestart, cRestart) = run(interrupted = true)

@@ -43,6 +43,30 @@ object VecNative {
     s
   }
 
+  /** [[dot]] over plain arrays, for driver- and task-side scoring. */
+  def dot(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** `VectorFns.cosine6` over plain arrays. */
+  def cosine6(a: Array[Double], b: Array[Double]): Double =
+    round6(dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))))
+
+  /** A 6-dp double as DECIMAL(18,6) micro-units — the exact value
+    * Spark's `CAST(d AS DECIMAL(18,6))` holds. */
+  def micros(d: Double): Long =
+    java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP)
+      .unscaledValue.longValueExact
+
+  /** Spark's `round(CAST(sum AS DOUBLE), 6)` of a DECIMAL(·,6) sum
+    * held as micro-units. */
+  def fromMicros(u: Long): Double =
+    round6(java.math.BigDecimal.valueOf(u, 6).doubleValue)
+
   /** 1-based first-position argmin of round((v·v + c·c) - 2*(v·c), 6)
     * over the codebook — the pqD2 assignment rule. Empty codebook → 0
     * (the `array_position` miss value). */

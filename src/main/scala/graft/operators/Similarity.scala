@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.catalyst.util.{SQLOrderingUtil, TypeUtils}
+import org.apache.spark.sql.types.{DataType, LongType, NullType}
+import scala.jdk.CollectionConverters._
 import graft.sources.Tables
 import graft.functions.{VecNative, VectorFns}
 
@@ -41,7 +43,7 @@ object Similarity {
   // candidate generator (none, label cells, k-means cells, two-level
   // cells, LSH buckets) that turns the batch into probes, the
   // probed-cell scan with a scorer (exact dot, SQ8 reconstruction, PQ
-  // ADC), optionally [[refineOf]], and the rank cut. Each oracle
+  // ADC), optionally [[refinePass]], and the rank cut. Each oracle
   // composes the SQL twins of the same stages (the *Sql builders).
 
   /** The query batch: the first `nq` corpus rows as (qid, `qcols`) —
@@ -80,11 +82,6 @@ object Similarity {
     import spark.implicits._
     spark.emptyDataset[(Long, Long, Double, Int)].toDF("qid", "nid", score, "rn")
   }
-
-  /** `serve`, or the empty rank cut when the codebooks are empty. */
-  private def withBooks(books: DataFrame, score: String = "cos")(
-      serve: => DataFrame): DataFrame =
-    if (books.isEmpty) emptyTopk(books.sparkSession, score) else serve
 
   /** Serve from the stored index of `family` over `dir`'s embeddings:
     * the key is the corpus state plus the build `constants` baked into
@@ -294,10 +291,10 @@ object Similarity {
     // reverted (see the kmeansCentroidSeqs formulation note).
     // Returned as a DRIVER-LOCAL relation (r21): the per-(label, pos)
     // means collect to |cells|×dim rows — model-sized by construction
-    // (this is the table every consumer broadcasts or localized()
-    // anyway) — so the assembly groupBy's exchange, the consumer-side
-    // cache materialization, and the localized() collect job all
-    // disappear; downstream broadcasts read local rows. Values
+    // (this is the table every consumer broadcasts or collects
+    // anyway) — so the assembly groupBy's exchange and the consumer-side
+    // cache materialization disappear; downstream broadcasts read local
+    // rows. Values
     // bit-identical: array_sort over struct(pos, c) with distinct pos
     // == sortBy(pos) on the driver.
     val spark = all.sparkSession
@@ -364,19 +361,6 @@ object Similarity {
         FROM qs CROSS JOIN cvecs)
       WHERE prn <= (${probeScheduleSql("cvecs")}))"""
 
-  /** Collect a MODEL-SIZED frame (centroid/cell tables — one row per
-    * cell, never corpus-sized) into a driver-local relation. Every
-    * downstream consumer — the schedule's count(), the probe broadcast,
-    * the per-cell offset join — then reads the collected rows instead
-    * of re-running the upstream aggregation per consumer (round 13,
-    * ADVICE: `cents.count()` used to pay the full per-label corpus
-    * aggregation twice per serve). */
-  private def localized(modelSized: DataFrame): DataFrame = {
-    val spark = modelSized.sparkSession
-    val rows = modelSized.collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), modelSized.schema)
-  }
-
   def topkIvf(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir).cache()
     rankCut(scanProbed(all, ivfProbes(all), exactDot, "cos", labelCells))
@@ -420,7 +404,7 @@ object Similarity {
 
   /** Candidate ids a refine may carry as a plan-literal IN filter
     * before the pruning filter ships as a broadcast semi-join instead
-    * (the [[literalMax]] discipline applied to [[refineOf]]'s id set).
+    * (the [[literalMax]] discipline applied to [[refinePass]]'s id set).
     * Conf-overridable so the differential spec can force the join path
     * at tiny batches and prove the two paths value-identical. */
   private val RefineLiteralMaxIds = 16384L
@@ -1130,36 +1114,16 @@ object Similarity {
     * [[ivfPqOf]] minus the probe stage (full-corpus ADC). `queries` is
     * a (qid, qvec) frame of unit vectors; the qid/vec_id shared-
     * namespace self-exclusion contract of [[ivfPqOf]] applies here
-    * verbatim. The LUT (query × subspace × codeword dots) broadcasts;
-    * `codes` is the only corpus-sized input. */
+    * verbatim. Served by the IVFPQ serve core with no cells: the
+    * codebooks and the query batch collect to the driver, the LUT
+    * ships in one broadcast, and `codes` is the only corpus-sized
+    * input, scanned by the one fused ADC pass. */
   def pqOf(codes: DataFrame, books: DataFrame, queries: DataFrame): DataFrame =
-    rankCut(pqScoresOf(codes, books, queries), "adc")
-
-  /** [[pqOf]]'s scoring stage without the rank cut — (qid, nid, adc)
-    * for every (query, corpus) pair, the frame [[refineOf]] consumes
-    * (`sim_topk_pq_refined`). */
-  def pqScoresOf(codes: DataFrame, books: DataFrame,
-                 queries: DataFrame): DataFrame = {
-    codes.join(broadcast(adcLut(queries, books)), Seq("s", "cid"))
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy(col("qid"), col("vec_id"))
-      // exactly PqM six-dp terms per pair → DECIMAL sum is exact and
-      // aggregation-order-independent
-      .agg(round(sum(col("d").cast("decimal(18,6)")).cast("double"), 6).as("adc"))
-      .select(col("qid"), col("vec_id").as("nid"), col("adc"))
-  }
-
-  /** The PQ ADC scorer's query side: (qid, s, cid, d), the dot of each
-    * query subvector with every codeword of its subspace. */
-  private def adcLut(queries: DataFrame, books: DataFrame): DataFrame =
-    pqSubvectors(queries.select(col("qid").as("vec_id"), col("qvec").as("vec")))
-      .select(col("vec_id").as("qid"), col("s"), col("svec"))
-      .join(broadcast(books), Seq("s"))
-      .select(col("qid"), col("s"), col("cid"),
-        VectorFns.dot6(col("svec"), col("cvec")).as("d"))
+    ivfPqServe(IvfPqModel(booksOf(books), cells = None), codes, queryRows(queries), None)
 
   /** Gated `sim_topk_pq_refined`: the PQ ADC candidate generator
-    * composed with [[refineOf]] — the faiss IndexRefineFlat wrapping
+    * composed with [[refinePass]] in the IVFPQ serve core, without
+    * cells — the faiss IndexRefineFlat wrapping
     * of IndexPQ, and the proof the refine stage is a composable
     * primitive rather than an IVFPQ special case. ADC (codes-only,
     * 64×-smaller store) ranks all pairs; the exact re-rank reads
@@ -1171,10 +1135,8 @@ object Similarity {
   def topkPqRefined(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir).cache()
     val (codes, books) = pqIndexOf(all)
-    withBooks(books) {
-      val queries = queryBatch(all)
-      refineOf(pqScoresOf(codes, books, queries), "adc", queries, all)
-    }
+    ivfPqServe(IvfPqModel(booksOf(books), cells = None), codes,
+      queryRows(queryBatch(all)), Some(RefineSource(all, None)))
   }
 
   /** PQ top-k: encode the corpus once, score by ADC, rank per query —
@@ -1182,7 +1144,7 @@ object Similarity {
   def topkPq(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir).cache()
     val (codes, books) = pqIndexOf(all)
-    withBooks(books, "adc")(pqOf(codes, books, queryBatch(all)))
+    pqOf(codes, books, queryBatch(all))
   }
 
   /** Gated twin of `sim_topk_pq` served from an mtime-keyed
@@ -1194,9 +1156,8 @@ object Similarity {
     // constants baked into the stored index (see topkIvfPqIndexed for
     // the key convention)
     servedIndex(spark, dir, "pq_index", s"_m${PqM}k${PqK}i$PqIters")(pqWriteIndex) { base =>
-      val books = spark.read.parquet(s"$base/books")
-      withBooks(books, "adc")(
-        pqOf(spark.read.parquet(s"$base/codes"), books, queryBatch(emb(spark, dir))))
+      pqOf(spark.read.parquet(s"$base/codes"), spark.read.parquet(s"$base/books"),
+        queryBatch(emb(spark, dir)))
     }
 
   /** Build + persist the PQ index under `keyDir` (idempotent); returns
@@ -1292,7 +1253,7 @@ object Similarity {
   val topkPqOracle: String = s"""
     $pqAdcSqlCtes${rankSql("adc")}"""
 
-  /** SQL twin of [[refineOf]] over CTE `sc`(qid, nid, adc): each
+  /** SQL twin of [[refinePass]] over CTE `sc`(qid, nid, adc): each
     * query's ADC top-K·RefineFactor candidates `cand`, re-scored by
     * exact cosine in `rr`, then the rank cut. */
   private def refineSql: String = s"""
@@ -1513,6 +1474,14 @@ object Similarity {
     * hard crash). */
   def ivfPqIndexOf(all: DataFrame, k: Int = PqK,
                    iters: Int = PqIters): (DataFrame, DataFrame, DataFrame) = {
+    val (codes, books, cells, _) = ivfPqIndexParts(all, k, iters)
+    (codes, books, cells)
+  }
+
+  /** [[ivfPqIndexOf]] plus the cached subvector frame its codes read,
+    * for a caller that releases it once the codes are written. */
+  private def ivfPqIndexParts(all: DataFrame, k: Int = PqK, iters: Int = PqIters)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val spark = all.sparkSession
     import spark.implicits._
     val cells = labelCentroids(all) // driver-local relation (r21) — no cache needed
@@ -1529,7 +1498,7 @@ object Similarity {
       else
         pqAssign(sub, booksToNested(bookRows))
           .select(col("vec_id"), col("s"), col("cid"), col("label"))
-    (codes, books, cells)
+    (codes, books, cells, sub)
   }
 
   /** The IVF-family probe SCHEDULE (round 12; applied family-wide —
@@ -1556,180 +1525,306 @@ object Similarity {
   private[graft] final val RefineFactor = 10
 
   /** Top-K from a (possibly parquet-roundtripped) IVFPQ index: probe
-    * `Probes` cells per query against the stored centroid table, ADC-score
-    * the stored codes of those cells against the query-side LUT. The
-    * only corpus-sized input is `codes`; everything query- or
-    * model-sized broadcasts. `queries` is a (qid, qvec) frame of unit
-    * vectors.
+    * [[probeScheduleFor]] cells per query against the centroid table,
+    * ADC-score the codes of those cells, and with `refine` re-rank each
+    * query's ADC top-K·[[RefineFactor]] by exact cosine against
+    * `refine`'s (vec_id, vec) true vectors — read through `refineFlat`,
+    * the flat twin of the same store with its bucket count, when the
+    * candidates cover most of its buckets. `queries` is a (qid, qvec)
+    * frame of unit vectors. The model-sized `books` and `cells` and the
+    * query batch collect to the driver; [[ivfPqServe]] serves it.
     *
     * Self-exclusion contract: `qid` and `vec_id` share ONE id
-    * namespace — the `vec_id =!= qid` filter implements the probe
-    * convention (queries are corpus rows asking for neighbors OTHER
-    * than themselves). A caller supplying external query batches must
-    * assign qids disjoint from corpus vec_ids (e.g. negative ids);
-    * a colliding qid would silently drop that unrelated corpus vector
-    * from its result list. */
+    * namespace — a code row never scores against the query with its
+    * own id, the probe convention (queries are corpus rows asking for
+    * neighbors OTHER than themselves). A caller supplying external
+    * query batches must assign qids disjoint from corpus vec_ids (e.g.
+    * negative ids); a colliding qid would silently drop that unrelated
+    * corpus vector from its result list. */
   def ivfPqOf(codes: DataFrame, books: DataFrame, cells: DataFrame,
               queries: DataFrame, refine: Option[DataFrame] = None,
-              refineFlat: Option[(DataFrame, Int)] = None): DataFrame = {
-    // one collect of the model-sized cell table feeds the schedule
-    // count, the probe broadcast, AND the offset join (round 13 —
-    // was cells.count() + broadcast(cells), paying the upstream
-    // aggregation/scan once per consumer)
-    val cellsL = localized(cells)
-    // The query batch localizes too (r21, guide §2.4): queries fed
-    // three broadcast subtrees (the probe window, the offset join, the
-    // LUT build) and each broadcast-exchange job re-ran the upstream
-    // query scan; one batch-sized collect makes them all local. The
-    // probe window then localizes as well — its rows feed the probes
-    // broadcast, the offset join, AND the probed-label set, which now
-    // derives on the driver instead of a distinct() job. Window
-    // determinism is unchanged: (ccos DESC, clabel) is a total order
-    // per qid, so row_number is input-order-independent.
-    val qloc = localized(queries)
-    val spark0 = qloc.sparkSession
-    val probesPlan = probesFrom(qloc, cellsL,
-      probeScheduleFor(cellsL.count().toInt))
-    val probeRows = probesPlan.collect()
-    val probesV = spark0.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val probes = probesV.select(col("qid"), col("clabel"))
-    // Probed-cell pruning (round 13): the distinct probed-label set is
-    // bounded by |cells| — model-sized no matter how many queries — so
-    // it collects safely and becomes a LITERAL IN filter on the codes
-    // scan. Over a label-partitioned codes store (topkIvfPqIndexed)
-    // this is file-level partition pruning: a 7-cell probe reads 7 of
-    // the store's directories; over a flat frame it is a no-op row
-    // filter the later label===clabel join condition subsumed anyway.
-    // (Distinct on the driver over the collected probe rows — label
-    // values are groupable atomics, so Seq.distinct == Spark distinct.)
-    val probedLabels = probeRows.map(_.getAs[Any]("clabel")).toSeq.distinct
-    val codesProbed =
-      if (probedLabels.isEmpty) codes.filter(lit(false))
-      else codes.filter(col("label").isInCollection(probedLabels))
-    // Residual ADC (see [[ivfPqIndexOf]]): dot(q, x) ≈ dot(q, c_cell)
-    // + Σ_s dot(q_s, codeword_s). The first term is this per-(query,
-    // probed-cell) offset — query×Probes rows, always broadcast-sized.
-    val offs = probesV
-      .join(broadcast(cellsL), Seq("clabel"))
-      .select(col("qid"), col("clabel").as("label"),
-        VectorFns.dot6(col("qvec"), col("cvec")).as("off"))
-    val lut = adcLut(qloc, books)
-      .join(probes, "qid") // ×Probes cells per qid — still query-sized
-    val scored = codesProbed.join(broadcast(lut), Seq("s", "cid"))
-      .filter(col("vec_id") =!= col("qid") && col("label") === col("clabel"))
-      .groupBy(col("qid"), col("vec_id"), col("label"))
-      // exactly PqM six-dp terms per surviving pair (one LUT row per
-      // subspace matches after the probe-cell filter) → exact DECIMAL sum
-      .agg(sum(col("d").cast("decimal(18,6)")).as("sd"))
-      .join(broadcast(offs), Seq("qid", "label"))
-      // PqM + 1 six-dp decimal terms per pair — exact, order-independent
-      .select(col("qid"), col("vec_id").as("nid"),
-        round((col("sd") + col("off").cast("decimal(18,6)")).cast("double"), 6)
-          .as("adc"))
+              refineFlat: Option[(DataFrame, Int)] = None): DataFrame =
+    ivfPqServe(ivfPqModelOf(books, cells), codes, queryRows(queries),
+      refine.map(RefineSource(_, refineFlat)))
+
+  // ---- 3e5. the IVFPQ serve core ---------------------------------------
+  // Every IVFPQ serve ([[ivfPqOf]], `sim_topk_ivf_pq[_indexed]`, the
+  // streaming ANN serve) and every PQ serve ([[pqOf]],
+  // `sim_topk_pq_refined`; no cells) run the same Spark passes per query
+  // batch. The query batch and the
+  // model-sized index halves (codebooks, cells) are on the driver, which
+  // computes the probes, the per-(query, cell) offsets and the ADC lookup
+  // table and ships them in one broadcast. The ADC pass scans the
+  // label-pruned codes, sums each (query, vector) pair's terms in one
+  // groupBy (the pass's only exchange) and keeps a partition-local top
+  // list per query; the refine pass scans the candidate-pruned vector
+  // store with no exchange at all. The driver merges both passes' top
+  // lists. The arithmetic is the SQL twins' exactly: VecNative's
+  // sequential dot fold, Spark's HALF_UP round(·, 6), and the
+  // DECIMAL(18,6) ADC sum as exact integer micro-units.
+
+  /** The model-sized halves of an IVFPQ index on the driver: codebooks
+    * indexed [s][cid-1], and the cells as (label, centroid) in Spark's
+    * ascending order of `labelType`, nulls first — the probe tie order.
+    * Plain PQ has no cells: every query scores every code, with no cell
+    * offset. */
+  private[graft] final case class IvfPqModel(
+      books: IndexedSeq[IndexedSeq[Array[Double]]],
+      cells: Option[IndexedSeq[(Any, Array[Double])]],
+      labelType: DataType = NullType)
+
+  private[graft] def ivfPqModelOf(books: DataFrame, cells: DataFrame): IvfPqModel = {
+    val dt = cells.schema("clabel").dataType
+    val order = TypeUtils.getInterpretedOrdering(dt)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val rows = cells.select(col("clabel"), col("cvec")).collect()
+      .map(r => (r.get(0), r.getSeq[Double](1).toArray))
+      .sortWith { case ((a, _), (b, _)) =>
+        b != null && (a == null || order.lt(toCatalyst(a), toCatalyst(b)))
+      }
+    IvfPqModel(booksOf(books), Some(rows.toIndexedSeq), dt)
+  }
+
+  private def booksOf(books: DataFrame): IndexedSeq[IndexedSeq[Array[Double]]] = {
+    import books.sparkSession.implicits._
+    booksToNested(books.as[(Int, Int, Seq[Double])].collect().toSeq).map(_.map(_.toArray))
+  }
+
+  /** Models of committed IVFPQ generation dirs, least recently used
+    * first. A committed generation dir never changes
+    * ([[Layout.generation]]), so a model read from one stays valid; the
+    * bound keeps a serve loop over many generations model-sized. */
+  private val storedModels =
+    new java.util.LinkedHashMap[String, IvfPqModel](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, IvfPqModel]): Boolean = size() > 8
+    }
+
+  private def storedModel(spark: SparkSession, base: String): IvfPqModel =
+    storedModels.synchronized {
+      Option(storedModels.get(base)).getOrElse {
+        val m = ivfPqModelOf(spark.read.parquet(s"$base/books"),
+          spark.read.parquet(s"$base/cells"))
+        storedModels.put(base, m)
+        m
+      }
+    }
+
+  /** Serve a (qid, qvec) batch from the committed IVFPQ generation
+    * `base` that [[ivfPqWriteIndex]] returned, refined against
+    * `refineDir`'s vector store when given — `sim_topk_ivf_pq_indexed`
+    * and the streaming ANN serve. Per batch the model costs no read. */
+  private[graft] def ivfPqServeStored(spark: SparkSession, base: String,
+      queries: DataFrame, refineDir: Option[String]): DataFrame = {
+    val model = storedModel(spark, base)
+    ivfPqServe(model, codesAt(spark, base, model.labelType), queryRows(queries),
+      refineDir.map(d => RefineSource(vecStore(spark, d),
+        Some((vecStoreFlatView(spark, d), vecBuckets(spark, d))))))
+  }
+
+  /** A (qid, qvec) batch on the driver. */
+  private def queryRows(queries: DataFrame): IndexedSeq[(Long, Array[Double])] = {
+    import queries.sparkSession.implicits._
+    queries.select(col("qid").cast("long"), col("qvec"))
+      .as[(Long, Array[Double])].collect().toIndexedSeq
+  }
+
+  /** Where a refine reads true vectors: a (vec_id, vec) store, and
+    * optionally the store's flat twin with its bucket count. */
+  private final case class RefineSource(vecs: DataFrame, flat: Option[(DataFrame, Int)])
+
+  /** (query index, id, score). */
+  private type Scored = (Int, Long, Double)
+
+  /** The IVFPQ serve core: (qid, nid, adc, rn) by ADC, or with
+    * `refine` (qid, nid, cos, rn) by exact cosine over the ADC
+    * candidates, rn ≤ K in (qid, rn) order, as a local relation. */
+  private def ivfPqServe(model: IvfPqModel, codes: DataFrame,
+                         qs: IndexedSeq[(Long, Array[Double])],
+                         refine: Option[RefineSource]): DataFrame = {
+    val adc =
+      if (model.books.isEmpty || qs.isEmpty) Map.empty[Int, Seq[Scored]]
+      else adcPass(model, codes, qs, if (refine.isEmpty) K else K * RefineFactor)
     refine match {
-      case None =>
-        // code-only serve: ADC order IS the result (streaming serve /
-        // stress path — zero full-vector reads)
-        rankCut(scored, "adc")
-      case Some(vecs) =>
-        refineOf(scored, "adc", qloc, vecs, flatAlt = refineFlat)
+      case None => topkFrame(codes.sparkSession, qs, adc, "adc")
+      case Some(src) => topkFrame(codes.sparkSession, qs, refinePass(src, qs, adc), "cos")
     }
   }
 
-  /** Exact refine re-rank (faiss IndexRefineFlat), composable over ANY
-    * scoring-limited candidate generator — shared by the IVFPQ refine
-    * arm and `sim_topk_pq_refined`: keep each query's top
-    * k·[[RefineFactor]] candidates by the generator's own `scoreCol`,
-    * re-score ONLY those against true vectors, emit exact-cosine
-    * top-k. The quantizer only GENERATES candidates — quantization
-    * error can reorder but no longer drop a neighbor that made the
-    * candidate list. Reads exactly k·RefineFactor full vectors per
-    * query: candidates broadcast against the vector table, never the
-    * reverse. `cands` = (qid, nid, scoreCol), `queries` = (qid, qvec)
-    * unit vectors, `vecs` = (vec_id, vec) the true-vector store.
-    * NOTE: refine lifts recall only when the generator's SCORING is
-    * the lossy stage (PQ/IVFPQ ADC); a probe-limited generator that
-    * already scores exact cosines in-cell (IVF, IVF2) gains nothing —
-    * its misses were never in the candidate set. */
-  def refineOf(cands: DataFrame, scoreCol: String, queries: DataFrame,
-               vecs: DataFrame, k: Int = K,
-               flatAlt: Option[(DataFrame, Int)] = None): DataFrame = {
-    val spark = cands.sparkSession
-    // candidate list is BOUNDED by construction (≤ queries × k ×
-    // RefineFactor rows), so it caches and its id set collects safely —
-    // the bm25Of releasing pattern. The collected ids become a LITERAL
-    // IN filter on the vector store: over a vec_id-BUCKETED store
-    // ([[vecStore]]) that is file-level bucket pruning — the refine
-    // tail reads its candidates' buckets, not the corpus — and over a
-    // flat frame it is a row filter the nid join subsumed anyway.
-    val cand = topPerQuery(cands, scoreCol, k * RefineFactor, rn = "arn")
-      .select(col("qid"), col("nid"))
-      .join(broadcast(queries), Seq("qid"))
-      .cache()
-    val ids = cand.select(col("nid")).distinct()
-    // ONE bounded job replaces the count-then-collect pair (r21): pull
-    // at most budget+1 distinct ids — within budget the result IS the
-    // whole set (so no separate count), over budget the semi-join path
-    // serves without the full id set ever reaching the driver (the
-    // round-15 concern, preserved — at most budget+1 rows land here).
-    // The budget is clamped BEFORE the +1: a Long.MaxValue conf would
-    // otherwise overflow into a wrong limit.
-    val budget = refineLiteralMax(spark)
-    val idsHead = ids.limit((math.min(budget, Int.MaxValue - 1L) + 1).toInt)
-      .collect().map(_.get(0))
-    val overBudget = idsHead.length > budget
+  /** What an ADC task reads: each query's id and lookup table
+    * [s][cid-1] in micro-units, and per probed cell label the probing
+    * queries with their offset micro-units (None: every query, 0). */
+  private final case class AdcTask(qids: Array[Long], lut: Array[Array[Array[Long]]],
+                                   probing: Option[Map[Any, Array[(Int, Long)]]])
+
+  /** Cell indices in probe order for query `q`: 6-dp centroid cosine
+    * desc under Spark's double ordering, ties to the earlier cell (the
+    * label order of [[IvfPqModel]]) — `probesFrom`'s window order. */
+  private[graft] def probeOrder(q: Array[Double],
+                                cells: IndexedSeq[(Any, Array[Double])]): IndexedSeq[Int] = {
+    val cos = cells.map(c => VecNative.cosine6(q, c._2))
+    cells.indices.sortWith { (a, b) =>
+      val c = SQLOrderingUtil.compareDoubles(cos(b), cos(a))
+      c < 0 || c == 0 && a < b
+    }
+  }
+
+  /** The ADC pass: each query's best `keep` (id, adc) by (adc desc,
+    * id). Residual ADC (see [[ivfPqIndexOf]]): adc = round(Σ_s lut +
+    * offset, 6), the offset dot(q, centroid) of the row's probed cell.
+    * It rides on the subspace-0 term: every encoded vector has one code
+    * row per subspace, so each pair sums it exactly once. */
+  private def adcPass(model: IvfPqModel, codes: DataFrame,
+                      qs: IndexedSeq[(Long, Array[Double])], keep: Int): Map[Int, Seq[Scored]] = {
+    val spark = codes.sparkSession
+    import spark.implicits._
+    def d6(a: Array[Double], b: Array[Double]): Long =
+      VecNative.micros(VecNative.round6(VecNative.dot(a, b)))
+    val lut = qs.map { case (_, q) =>
+      model.books.indices.map { s =>
+        val sub = q.slice(s * PqSub, s * PqSub + PqSub)
+        model.books(s).map(d6(sub, _)).toArray
+      }.toArray
+    }.toArray
+    val probing = model.cells.map { cells =>
+      val n = probeScheduleFor(cells.length)
+      qs.indices.flatMap { qi =>
+        val q = qs(qi)._2
+        probeOrder(q, cells).take(n).map(cells).collect {
+          // a null label never matches a code row, as in `label IN (...)`
+          case (label, c) if label != null => label -> (qi, d6(q, c))
+        }
+      }.groupBy(_._1).map { case (label, hits) => label -> hits.map(_._2).toArray }
+    }
+    // the probed-label IN filter: over the label-partitioned codes store
+    // this is file-level partition pruning
+    val scan = probing match {
+      case None => codes.select(col("s"), col("vec_id").cast("long"), col("cid"))
+      case Some(p) =>
+        (if (p.isEmpty) codes.filter(lit(false))
+         else codes.filter(col("label").isInCollection(p.keys.toSeq)))
+          .select(col("s"), col("vec_id").cast("long"), col("cid"),
+            col("label").cast(model.labelType))
+    }
+    val task = spark.sparkContext.broadcast(AdcTask(qs.map(_._1).toArray, lut, probing))
+    val terms = scan.mapPartitions { (rows: Iterator[Row]) =>
+      val t = task.value
+      val everyQuery = t.qids.indices.map(qi => (qi, 0L)).toArray
+      rows.flatMap { r =>
+        val (s, id, cid) = (r.getInt(0), r.getLong(1), r.getInt(2))
+        t.probing.fold(everyQuery)(_.getOrElse(r.get(3), Array.empty[(Int, Long)]))
+          .iterator.collect {
+            case (qi, off) if t.qids(qi) != id && s < t.lut(qi).length &&
+                cid >= 1 && cid <= t.lut(qi)(s).length =>
+              (qi, id, t.lut(qi)(s)(cid - 1) + (if (s == 0) off else 0L))
+          }
+      }
+    }
+    val top = terms.toDF("q", "vec_id", "u")
+      .groupBy(col("q"), col("vec_id")).agg(sum(col("u")))
+      .as[(Int, Long, Long)]
+      .mapPartitions(rows => localTop(
+        rows.map { case (q, id, u) => (q, id, VecNative.fromMicros(u)) }, keep))
+      .collect()
+    task.destroy()
+    mergeTop(top, keep)
+  }
+
+  /** What a refine task reads: the query vectors, and per candidate id
+    * the indices of the queries it is a candidate of. */
+  private final case class RefineTask(qvecs: Array[Array[Double]], byId: Map[Long, Array[Int]])
+
+  /** The exact refine (faiss IndexRefineFlat) over ANY score-limited
+    * candidate generator: re-score each query's candidates against true
+    * vectors, keep its best K by (cos desc, id). The quantizer only
+    * GENERATES candidates — quantization error can reorder but no longer
+    * drop a neighbor that made the candidate list. NOTE: refine lifts
+    * recall only when the generator's SCORING is the lossy stage (PQ,
+    * IVFPQ ADC); a probe-limited generator that scores exact cosines
+    * in-cell (IVF, IVF2) gains nothing. */
+  private def refinePass(src: RefineSource, qs: IndexedSeq[(Long, Array[Double])],
+                         cands: Map[Int, Seq[Scored]]): Map[Int, Seq[Scored]] = {
+    val ids = cands.valuesIterator.flatMap(_.map(_._2)).toSeq.distinct.sorted
+    if (ids.isEmpty) return Map.empty
+    val spark = src.vecs.sparkSession
+    import spark.implicits._
     // ADAPTIVE refine source (round 14, the bm25ServeStored pattern):
-    // when the caller supplies the store's flat-parquet twin, pick per
-    // batch from candidate bucket coverage — wide coverage means the
-    // bucketed layout prunes nothing and the flat view's finer file
-    // splits win on scan parallelism (the measured sf0.1 regression
-    // behind this), narrow coverage keeps file-level pruning. Logged
+    // wide candidate bucket coverage means the bucketed layout prunes
+    // nothing and the flat view's finer file splits win on scan
+    // parallelism; narrow coverage keeps file-level pruning. Logged
     // because a silent path flip would make perf records unexplainable.
-    // Within the literal budget the coverage derives on the DRIVER from
-    // the already-collected ids (r21) — Murmur3HashFunction IS the
-    // hash() expression's interpreted form (seed 42; BucketedSpec pins
-    // the equality), so the flat/bucketed choice is unchanged.
-    val src = flatAlt match {
+    val from = src.flat match {
       case Some((flat, nb)) =>
-        val covered =
-          if (!overBudget)
-            bucketsOf(idsHead.toSeq, cand.schema("nid").dataType, nb).distinct.length.toLong
-          else
-            cand.select(pmod(hash(col("nid")), lit(nb)).as("b"))
-              .distinct().count()
+        val covered = bucketsOf(ids, LongType, nb).distinct.length
         val takeFlat = covered * 2 > nb
         System.err.println(s"[graft] refine source: ${if (takeFlat) "flat"
           else "bucketed"} (candidates cover $covered of $nb vec buckets)")
-        if (takeFlat) flat else vecs
-      case None => vecs
+        if (takeFlat) flat else src.vecs
+      case None => src.vecs
     }
-    // LITERAL BUDGET (round 14, the withCodebook discipline): the id
-    // list is optimal as a plan literal at serve-batch sizes (file-level
-    // bucket pruning over the store), but plan size/serialization grow
-    // linearly in |ids| — a 10k-query production batch would put ~500k
-    // ids in every task's plan. Past the budget the filter ships as a
-    // broadcast semi-join on the id frame instead: same rows kept,
-    // value-identical (spec-forced at tiny size), no plan blowup.
-    val vecsPruned =
-      if (idsHead.isEmpty) src.filter(lit(false))
-      else if (!overBudget)
-        src.filter(col("vec_id").isInCollection(idsHead.toSeq))
+    // LITERAL BUDGET (round 14, the withCodebook discipline): the ids
+    // are optimal as a plan-literal IN filter at serve-batch sizes
+    // (bucket pruning over the store), but plan size grows linearly in
+    // |ids|; past the budget they ship as a broadcast semi-join instead.
+    val budget = refineLiteralMax(spark)
+    val pruned =
+      if (ids.length <= budget) from.filter(col("vec_id").isInCollection(ids))
       else {
         System.err.println(s"[graft] refine candidates: > literal " +
           s"budget $budget ids — pruning via broadcast semi-join")
-        src.join(broadcast(ids.withColumnRenamed("nid", "vec_id")),
-          Seq("vec_id"), "left_semi")
+        from.join(broadcast(ids.toDF("vec_id")), Seq("vec_id"), "left_semi")
       }
-    val rer = vecsPruned
-      .select(col("vec_id").as("nid"), col("vec").as("nvec"))
-      .join(broadcast(cand), Seq("nid"))
-      .select(col("qid"), col("nid"),
-        VectorFns.dot6(col("qvec"), col("nvec")).as("cos"))
-    val out = rankCut(rer, k = k).cache()
-    out.count() // forces both cand consumers; result is query-sized
-    cand.unpersist()
-    out
+    val byId = cands.toSeq.flatMap { case (qi, rs) => rs.map(r => (r._2, qi)) }
+      .groupBy(_._1).map { case (id, hits) => id -> hits.map(_._2).toArray }
+    val task = spark.sparkContext.broadcast(RefineTask(qs.map(_._2).toArray, byId))
+    val top = pruned.select(col("vec_id").cast("long"), col("vec"))
+      .as[(Long, Array[Double])]
+      .mapPartitions { rows =>
+        val t = task.value
+        localTop(rows.flatMap { case (id, v) =>
+          t.byId.getOrElse(id, Array.empty[Int]).iterator
+            .map(qi => (qi, id, VecNative.round6(VecNative.dot(t.qvecs(qi), v))))
+        }, K)
+      }
+      .collect()
+    task.destroy()
+    mergeTop(top, K)
+  }
+
+  /** Best first: score desc under Spark's double ordering, then id —
+    * the rank cut's (score desc, nid) order. */
+  private val bestFirst: Ordering[Scored] = (a, b) => {
+    val c = SQLOrderingUtil.compareDoubles(b._3, a._3)
+    if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+  }
+
+  /** Each query's best `keep` rows among `rows`. */
+  private def localTop(rows: Iterator[Scored], keep: Int): Iterator[Scored] = {
+    val worstFirst = scala.collection.mutable.HashMap.empty[Int, java.util.PriorityQueue[Scored]]
+    rows.foreach { r =>
+      val h = worstFirst.getOrElseUpdate(r._1, new java.util.PriorityQueue[Scored](bestFirst.reverse))
+      h.add(r)
+      if (h.size > keep) h.poll()
+    }
+    worstFirst.valuesIterator.flatMap(_.iterator.asScala)
+  }
+
+  /** The driver merge of partition-local top lists: each query's best
+    * `keep`, best first. */
+  private def mergeTop(rows: Array[Scored], keep: Int): Map[Int, Seq[Scored]] =
+    rows.groupBy(_._1).map { case (q, rs) => q -> rs.sorted(bestFirst).take(keep).toSeq }
+
+  /** Ranked lists as the rank cut's (qid, nid, `score`, rn) rows in
+    * (qid, rn) order — a local relation. */
+  private def topkFrame(spark: SparkSession, qs: IndexedSeq[(Long, Array[Double])],
+                        lists: Map[Int, Seq[Scored]], score: String): DataFrame = {
+    import spark.implicits._
+    lists.toSeq
+      .flatMap { case (qi, rs) =>
+        rs.zipWithIndex.map { case ((_, id, v), i) => (qs(qi)._1, id, v, i + 1) }
+      }
+      .sortBy(r => (r._1, r._4))
+      .toDF("qid", "nid", score, "rn")
   }
 
   /** The buckets of a `nb`-bucket vec_id store that `ids` (collected
@@ -1770,7 +1865,7 @@ object Similarity {
   def topkIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val all = emb(spark, dir).cache()
     val (codes, books, cells) = ivfPqIndexOf(all)
-    withBooks(books)(ivfPqOf(codes, books, cells, queryBatch(all), refine = Some(all)))
+    ivfPqOf(codes, books, cells, queryBatch(all), refine = Some(all))
   }
 
   /** Gated twin of `sim_topk_ivf_pq` served from an mtime-keyed
@@ -1788,16 +1883,12 @@ object Similarity {
     // build must not serve under the new math or the new layout
     servedIndex(spark, dir, "ivfpq_index",
         s"_respm${PqM}k${PqK}i$PqIters")(ivfPqWriteIndex) { base =>
-      val books = spark.read.parquet(s"$base/books")
-      withBooks(books)(ivfPqOf(ivfPqReadCodes(spark, base), books,
-        spark.read.parquet(s"$base/cells"), queryBatch(emb(spark, dir)),
-        refine = Some(vecStore(spark, dir)),
-        // flat twin of the same files: refineOf picks per batch from
-        // candidate bucket coverage (round 14 — at gated SFs K·10
-        // candidates cover most of the 16-bucket floor, so the flat
-        // view's finer splits win; at 1 M+ the derived count keeps the
-        // pruned bucketed path)
-        refineFlat = Some((vecStoreFlatView(spark, dir), vecBuckets(spark, dir)))))
+      // the refine picks the flat twin of the vector store per batch
+      // from candidate bucket coverage (round 14 — at gated SFs K·10
+      // candidates cover most of the 16-bucket floor, so the flat
+      // view's finer splits win; at 1 M+ the derived count keeps the
+      // pruned bucketed path)
+      ivfPqServeStored(spark, base, queryBatch(emb(spark, dir)), Some(dir))
     }
 
   /** Vectors-per-bucket target for the derived vector-store layout
@@ -1820,7 +1911,7 @@ object Similarity {
         Layout.tableCount(spark, dir, "embeddings"), VecsPerBucket))
 
   /** The vector table as a vec_id-BUCKETED catalog store (round 13) —
-    * the refine tail's input. [[refineOf]] turns its bounded candidate
+    * the refine tail's input. [[refinePass]] turns its bounded candidate
     * id set into a literal IN filter, so over this layout the exact
     * re-rank reads only the buckets its candidates hash into: the LAST
     * corpus-sized scan in the indexed serve path becomes file-pruned,
@@ -1837,13 +1928,15 @@ object Similarity {
 
   /** The SAME stored vector files read as plain parquet — identical
     * rows, finer maxPartitionBytes file splits, no bucket metadata.
-    * [[refineOf]]'s adaptive source takes this view when a batch's
+    * [[refinePass]]'s adaptive source takes this view when a batch's
     * candidates cover most buckets (pruning would win nothing, the
     * finer splits win scan parallelism) — the `bm25StoreFlatView`
     * twin for vectors. */
   private[graft] def vecStoreFlatView(spark: SparkSession, dir: String): DataFrame = {
     val gen = vecStoreGen(spark, dir) // builds if absent
-    spark.read.parquet(Layout.qualified(spark, s"$gen/vecs"))
+    // the registered table's schema: no schema-inference job per read
+    spark.read.schema(vecStore(spark, dir).schema)
+      .parquet(Layout.qualified(spark, s"$gen/vecs"))
   }
 
   /** Resolve-or-build the committed vector-store generation —
@@ -1915,10 +2008,12 @@ object Similarity {
     // gen-dir and commits via _CURRENT; returns the committed gen dir
     Layout.generation(spark, keyDir, "cells") { g =>
       val all = emb(spark, dir).cache()
-      val (codes, books, cells) = ivfPqIndexOf(all)
+      val (codes, books, cells, sub) = ivfPqIndexParts(all)
       codes.write.partitionBy("label").parquet(s"$g/codes")
       books.write.parquet(s"$g/books")
       cells.write.parquet(s"$g/cells")
+      sub.unpersist()
+      all.unpersist()
     }
 
   /** Read the stored codes back with the build schema stated
@@ -1931,12 +2026,12 @@ object Similarity {
     * RegenGate corpus uses strings where the shipped testdata uses
     * ints — inferring `label=c0` vs `label=0` per read would give the
     * two corpora different serve-side semantics. */
-  private[graft] def ivfPqReadCodes(spark: SparkSession, base: String): DataFrame = {
-    val labelType = spark.read.parquet(s"$base/cells")
-      .schema("clabel").dataType.sql
-    spark.read.schema(s"s INT, vec_id BIGINT, cid INT, label $labelType")
+  private[graft] def ivfPqReadCodes(spark: SparkSession, base: String): DataFrame =
+    codesAt(spark, base, spark.read.parquet(s"$base/cells").schema("clabel").dataType)
+
+  private def codesAt(spark: SparkSession, base: String, labelType: DataType): DataFrame =
+    spark.read.schema(s"s INT, vec_id BIGINT, cid INT, label ${labelType.sql}")
       .parquet(s"$base/codes")
-  }
 
   /** Incremental IVFPQ index maintenance — [[graft.operators.Retrieval.bm25IndexMerge]]'s
     * ANN twin: GIVEN THE FROZEN MODELS (books AND cells — the residual

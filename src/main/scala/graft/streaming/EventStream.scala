@@ -539,17 +539,18 @@ object EventStream {
     * embedding) rows is unit-normalized exactly like the batch side's
     * `emb` (same asDouble→norm→normalize chain, so a query vector
     * scores identically whether it arrives in a file or a stream) and
-    * answered by the SAME serve tail (`Similarity.ivfPqOf`): probe
-    * schedule → probed-label IN filter → residual ADC — over the
-    * label-PARTITIONED codes store that filter is file-level partition
-    * pruning, so a micro-batch reads only its probed directories, never
-    * the corpus. `refineDir` adds the exact re-rank tail (reads K·10
-    * candidate vectors per query via broadcast — never a vector-store
-    * shuffle).
+    * answered by the SAME serve core as the batch side
+    * (`Similarity.ivfPqServeStored`): probe schedule → probed-label IN
+    * filter → residual ADC — over the label-PARTITIONED codes store
+    * that filter is file-level partition pruning, so a micro-batch
+    * reads only its probed directories, never the corpus. `refineDir`
+    * adds the exact re-rank pass (reads K·10 candidate vectors per
+    * query — never a vector-store shuffle).
     *
     * Scale shape: per batch the only corpus-sized input is the pruned
-    * codes scan; LUT/offset/refine joins are all query-sized
-    * broadcasts, and there are ZERO state-store rows at any rate (the
+    * codes scan; the index models stay on the driver across batches,
+    * the LUT, offsets and candidate map ship in one broadcast per pass,
+    * and there are ZERO state-store rows at any rate (the
     * index IS the state, shared read-only with the 31n ingest path —
     * the composed StreamingSpec case grows it mid-stream). Results land
     * batchId-keyed (idempotent overwrite like [[scrubAgainstSpanCatalog]]):
@@ -571,23 +572,14 @@ object EventStream {
       .select(col("vec_id").as("qid"), VectorFns.asDouble(col("embedding")).as("raw"))
       .withColumn("__n", VectorFns.norm(col("raw")))
       .select(col("qid"), VectorFns.normalize(col("raw"), col("__n")).as("qvec"))
-    val served = Similarity.ivfPqOf(
-        Similarity.ivfPqReadCodes(sp, indexBase),
-        sp.read.parquet(s"$indexBase/books"),
-        sp.read.parquet(s"$indexBase/cells"),
-        qs,
-        // refine reads ride the vec_id-bucketed store (round 13): the
-        // candidate IN filter prunes buckets per micro-batch —
-        // adaptively falling back to the flat view of the same files
-        // when a batch's candidates cover most buckets (round 14)
-        refine = refineDir.map(d => Similarity.vecStore(sp, d)),
-        refineFlat = refineDir.map(d =>
-          (Similarity.vecStoreFlatView(sp, d), Similarity.vecBuckets(sp, d))))
-    BatchCatalog.write(served, outPath, batchId)
-    // refineOf caches its query-sized result to decouple from its own
-    // intermediate cache; a forever-running serve must release it per
-    // batch or entries accumulate for the life of the query (ADVICE r13)
-    served.unpersist()
+    // refine reads ride the vec_id-bucketed store (round 13): the
+    // candidate IN filter prunes buckets per micro-batch — adaptively
+    // falling back to the flat view of the same files when a batch's
+    // candidates cover most buckets (round 14). The served lists are a
+    // local relation: nothing is cached, so nothing accumulates over
+    // the life of the query.
+    BatchCatalog.write(Similarity.ivfPqServeStored(sp, indexBase, qs, refineDir),
+      outPath, batchId)
   }
 
   /** CONTINUOUS CRAWL INGEST (round 14) — the streaming front door of
@@ -753,8 +745,8 @@ object EventStream {
     val qterms = batch
       .select(col("qid"), explode(TextFns.tokens(col("text"))).as("term"))
       .distinct()
-    val textList = Retrieval.bm25ServeStored(sp, corpusDir, qterms, Retrieval.FuseK)
-      .select(col("qid"), col("doc_id").as("id"), col("rn"))
+    val bm25 = Retrieval.bm25ServeStored(sp, corpusDir, qterms, Retrieval.FuseK)
+    val textList = bm25.select(col("qid"), col("doc_id").as("id"), col("rn"))
     // vector leg: normalize exactly like the batch reader, then the
     // shared brute-force-cosine tail against the embedding store
     val qs = batch
@@ -765,6 +757,9 @@ object EventStream {
       .cosineRankedOf(qs, Similarity.emb(sp, corpusDir), Retrieval.FuseK)
       .select(col("qid"), col("nid").as("id"), col("rn"))
     BatchCatalog.write(Retrieval.rrfFuseOf(Seq(textList, vecList), k), outPath, batchId)
+    // the BM25 leg comes back cached (query-sized); a forever-running
+    // serve releases it per batch or entries accumulate
+    bm25.unpersist()
   }
 
   /** Ingest-time SUB-DOCUMENT scrubbing against a growing SPAN catalog —

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBridge
 import graft.operators.Similarity
 import graft.functions.VectorFns
 
@@ -100,12 +101,11 @@ object ScaleIvfPq {
     for (b <- 1 to 2) {
       val qb = corpus.filter(col("vec_id") >= lit((b - 1) * 5L) && col("vec_id") < lit(b * 5L))
         .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-      // .as[] creates its own QueryExecution — keep ONE Dataset so the
-      // collect and the plan-metric inspection see the same execution
-      val df = Similarity.ivfPqOf(codes, books, cells, qb)
-        .select(col("qid"), col("nid")).as[(Long, Long)]
-      val (rows, _) = time(s"ivfpq serve batch $b (5 queries, partitioned store)") {
-        df.collect()
+      // the serve answers with a local relation: its codes scan lives
+      // in the executed plan of the ADC pass it ran
+      val ((rows, passes), _) = time(s"ivfpq serve batch $b (5 queries, partitioned store)") {
+        ListenerBridge.withQueries(spark)(Similarity.ivfPqOf(codes, books, cells, qb)
+          .select(col("qid"), col("nid")).as[(Long, Long)].collect())
       }
       if (b == 1) {
         served = rows
@@ -122,8 +122,8 @@ object ScaleIvfPq {
           }
           p +: kids.flatMap(allNodes)
         }
-        def codesDirsRead(d: org.apache.spark.sql.Dataset[_]): Long = {
-          val reads = allNodes(d.queryExecution.executedPlan).collect {
+        def codesDirsRead(ran: Seq[(String, org.apache.spark.sql.execution.QueryExecution)]): Long = {
+          val reads = ran.flatMap(q => allNodes(q._2.executedPlan)).collect {
             case s: FileSourceScanExec
                 if s.relation.location.rootPaths.exists(_.toString.contains("codes")) =>
               s.metrics("numPartitions").value
@@ -134,17 +134,16 @@ object ScaleIvfPq {
         val sched = Similarity.probeScheduleFor(256)
         // the batch scan reads the UNION of the 5 queries' probe sets —
         // ≤ 5·schedule directories, never the whole store
-        val readB = codesDirsRead(df)
+        val readB = codesDirsRead(passes)
         println(s"[scale] codes directories read (5-query batch): $readB of 256 " +
           s"(<= 5 x schedule $sched)")
         require(readB <= 5L * sched && readB < 256,
           s"5-query serve read $readB label dirs, bound is ${5 * sched}")
         // ONE query reads exactly schedule-many directories
-        val df1 = Similarity.ivfPqOf(codes, books, cells,
-            qb.filter(col("qid") === 0L))
-          .select(col("qid"), col("nid")).as[(Long, Long)]
-        df1.collect()
-        val read1 = codesDirsRead(df1)
+        val (_, passes1) = ListenerBridge.withQueries(spark)(Similarity.ivfPqOf(
+            codes, books, cells, qb.filter(col("qid") === 0L))
+          .select(col("qid"), col("nid")).as[(Long, Long)].collect())
+        val read1 = codesDirsRead(passes1)
         println(s"[scale] codes directories read (1 query): $read1 of 256 (schedule $sched)")
         require(read1 == sched,
           s"single-query serve read $read1 label dirs, schedule is $sched")
@@ -179,10 +178,11 @@ object ScaleIvfPq {
     val vstore = Similarity.vecStore(spark, corpusDir)
     val qbR = corpus.filter(col("vec_id") < 5L)
       .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-    val (dfR, _) = time("ivfpq serve + refine (bucketed vec store, 1024 buckets)") {
-      Similarity.ivfPqOf(codes, books, cells, qbR, refine = Some(vstore))
+    val ((dfR, passesR), _) = time("ivfpq serve + refine (bucketed vec store, 1024 buckets)") {
+      ListenerBridge.withQueries(spark)(
+        Similarity.ivfPqOf(codes, books, cells, qbR, refine = Some(vstore)))
     }
-    val planR = dfR.queryExecution.executedPlan.toString
+    val planR = passesR.map(_._2.executedPlan.toString).mkString("\n")
     val selR = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(planR)
     require(selR.nonEmpty, "refine scan shows no bucket pruning in the executed plan")
     println(s"[scale] refine vector reads: ${selR.get.matched}")

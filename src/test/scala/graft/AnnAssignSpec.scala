@@ -320,6 +320,48 @@ class AnnAssignSpec extends AnyFunSuite {
     assert(mean >= 0.95, s"IVF2 recall@5 vs exact = $mean (per-query $recall)")
   }
 
+  test("IVFPQ probe order: driver-side probes == the (ccos desc, clabel) window, int and string labels with tied cosines") {
+    // every centroid appears under two labels, so each cosine ties with
+    // another cell's and the label order decides; the string labels
+    // include a pair that UTF-16 order ranks the other way round
+    // ("\uE000" vs an astral character), where Spark orders by UTF-8 bytes
+    val dim = 8
+    val rnd = new scala.util.Random(22)
+    val base = Seq.fill(6)(Seq.fill(dim)(rnd.nextGaussian()))
+    val cvecs = base ++ base
+    val qs = Seq.fill(5) {
+      val v = Seq.fill(dim)(rnd.nextGaussian())
+      val n = math.sqrt(v.map(x => x * x).sum)
+      v.map(_ / n)
+    }
+    val n = Similarity.probeScheduleFor(cvecs.size)
+    assert(n < cvecs.size)
+    val noBooks = spark.emptyDataset[(Int, Int, Seq[Double])].toDF("s", "cid", "cvec")
+    def check(cells: org.apache.spark.sql.DataFrame): Unit = {
+      val model = Similarity.ivfPqModelOf(noBooks, cells)
+      val driver = qs.zipWithIndex.flatMap { case (q, qi) =>
+        Similarity.probeOrder(q.toArray, model.cells.get).zipWithIndex.map { case (ci, r) =>
+          (qi.toLong, model.cells.get(ci)._1, r + 1)
+        }
+      }
+      val window = qs.zipWithIndex.map { case (q, qi) => (qi.toLong, q) }.toDF("qid", "qvec")
+        .crossJoin(cells)
+        .withColumn("pr", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy($"qid")
+            .orderBy(graft.functions.VectorFns.cosine6($"qvec", $"cvec").desc, $"clabel")))
+        .select($"qid", $"clabel", $"pr").collect()
+        .map(r => (r.getLong(0), r.get(1), r.getInt(2))).toSeq
+      assert(driver.sortBy(r => (r._1, r._3)) == window.sortBy(r => (r._1, r._3)))
+      // and the schedule cut: the probes are the first n of that order
+      assert(driver.filter(_._3 <= n).size == qs.size * n)
+    }
+    val intLabels = Seq(10, 3, 25, 7, 100, 1, 2, 30, 4, 8, 11, 9)
+    check(intLabels.zip(cvecs).toDF("clabel", "cvec"))
+    val strLabels = Seq("c10", "c3", "\uE000", "b", "c1", "a",
+      "c2", "c30", "\uD83D\uDE00", "B", "c11", "c9")
+    check(strLabels.zip(cvecs).toDF("clabel", "cvec"))
+  }
+
   test("residual telescoping: dot(q, centroid) + dot(q, vec - centroid) == dot(q, vec)") {
     // the identity the residual ADC rests on — checked on real data to
     // float precision, so a future change to residualsOf / the offset

@@ -10,7 +10,7 @@ class BucketedSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("driver Murmur3 pmod == Spark pmod(hash(col), nb) for long ids") {
-    // refineOf's within-budget bucket-coverage derivation (r21) hashes
+    // the refine pass's bucket-coverage derivation (r21) hashes
     // collected ids on the driver (Similarity.bucketsOf) — this pin
     // fails loudly if Spark's hash() expression ever changes seed or
     // algorithm, or if a collected external value (a String, say) is

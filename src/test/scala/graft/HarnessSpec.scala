@@ -99,12 +99,43 @@ class HarnessSpec extends AnyFunSuite {
       assert(mmr.jobs == 8, s"$mmr")
       assert(mmr.inputBytes > 0 && mmr.shuffleWriteBytes > 0, s"$mmr")
       // the stored-index serve entries, at most the jobs this test
-      // counted for them before their search stages were shared
-      Seq("sim_topk_ivf_pq_indexed" -> 33, "sim_topk_ivf2_indexed" -> 14)
+      // counted for them: the IVFPQ serve core's query batch, ADC and
+      // refine passes plus the count, and IVF2 since its search stages
+      // were shared
+      Seq("sim_topk_ivf_pq_indexed" -> 7, "sim_topk_ivf2_indexed" -> 14)
         .foreach { case (query, jobs) =>
           val (a, _) = twoRuns(query)
           assert(a.jobs <= jobs && a.inputBytes > 0, s"$query: $a")
         }
     } finally spark.sparkContext.removeSparkListener(counters)
+  }
+
+  test("annServeBatch serves a warm query batch in at most 5 Spark jobs") {
+    val sf = "/root/testdata/sf0.001"
+    import spark.implicits._
+    val base = graft.operators.Similarity.ivfPqWriteIndex(spark, sf,
+      Files.createTempDirectory("annjobs_idx").toString)
+    val out = Files.createTempDirectory("annjobs_out").toString
+    // foreign ids, as a served batch has: the corpus vectors of 0..7
+    val batch = graft.sources.Tables.embeddings(spark, sf).filter($"vec_id" < 8)
+      .select(($"vec_id" + 10000000L).as("vec_id"), $"embedding")
+      .as[(Long, Seq[Float])].collect().toSeq.toDF("vec_id", "embedding")
+    val counters = new Bench.GroupCounters
+    spark.sparkContext.addSparkListener(counters)
+    def serve(group: String, batchId: Long): Unit = {
+      spark.sparkContext.setJobGroup(group, group)
+      try graft.streaming.EventStream.annServeBatch(batch, batchId, base, out, Some(sf))
+      finally spark.sparkContext.clearJobGroup()
+    }
+    try {
+      // the warm-up call opens the index models and the vector store
+      serve("ann#warm", 0L)
+      serve("ann#1", 1L)
+      org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
+      val c = counters("ann#1")
+      // ADC map stage + ADC result, refine scan, batch write
+      assert(c.jobs >= 1 && c.jobs <= 5, s"annServeBatch: $c")
+    } finally spark.sparkContext.removeSparkListener(counters)
+    assert(spark.read.parquet(s"$out/batch-1").count() == 8 * 5)
   }
 }

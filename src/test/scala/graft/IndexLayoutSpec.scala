@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Retrieval, Similarity}
@@ -35,10 +36,25 @@ class IndexLayoutSpec extends AnyFunSuite {
 
   /** The file scans of an EXECUTED df whose path mentions `pathPart`. */
   private def scansOf(df: DataFrame, pathPart: String): Seq[FileSourceScanExec] =
-    allNodes(df.queryExecution.executedPlan).collect {
+    scansIn(df.queryExecution.executedPlan, pathPart)
+
+  private def scansIn(plan: SparkPlan, pathPart: String): Seq[FileSourceScanExec] =
+    allNodes(plan).collect {
       case s: FileSourceScanExec
           if s.relation.location.rootPaths.exists(_.toString.contains(pathPart)) => s
     }
+
+  /** `run`'s result, and the executed plans of the queries it ran. The
+    * IVFPQ serve answers with a local relation built from its ADC and
+    * refine passes, so its scans live in those passes' plans. */
+  private def withPlans[T](run: => T): (T, Seq[SparkPlan]) = {
+    val (out, queries) = ListenerBridge.withQueries(spark)(run)
+    (out, queries.map(_._2.executedPlan))
+  }
+
+  /** The plan strings of `plans` that scan the vector store. */
+  private def vecScans(plans: Seq[SparkPlan]): Seq[String] =
+    plans.map(_.toString).filter(_.contains("vec_store"))
 
   test("ivfpq codes store: label partitions, probe reads schedule-many directories") {
     val sf = "/root/testdata/sf0.001"
@@ -62,10 +78,9 @@ class IndexLayoutSpec extends AnyFunSuite {
     // the only corpus-sized read in the plan)
     val q1 = Similarity.emb(spark, sf).filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("vec").as("qvec"))
-    val served = Similarity.ivfPqOf(codes, books, cells, q1)
-    served.collect()
-    val scans = scansOf(served, "codes")
-    assert(scans.nonEmpty, "no codes scan found in the executed plan")
+    val (_, plans) = withPlans(Similarity.ivfPqOf(codes, books, cells, q1))
+    val scans = plans.flatMap(scansIn(_, "codes"))
+    assert(scans.nonEmpty, "no codes scan found in the executed plans")
     val read = scans.map(_.metrics("numPartitions").value).max
     assert(read == sched,
       s"probe of $sched cells read $read of $nCells codes directories")
@@ -149,18 +164,19 @@ class IndexLayoutSpec extends AnyFunSuite {
     // default derived layout (16-bucket floor): ~all corpus vectors are
     // candidates at this SF, coverage is wide → the serve should take
     // the FLAT view (no bucket metadata in the refine scan)
-    val viaDefault = Similarity.topkIvfPqIndexed(spark, sf)
-    val rDefault = viaDefault.as[(Long, Long, Double, Int)].collect().toSet
-    assert(!viaDefault.queryExecution.executedPlan.toString.contains("SelectedBucketsCount"),
+    val (rDefault, defaultPlans) = withPlans(Similarity.topkIvfPqIndexed(spark, sf)
+      .as[(Long, Long, Double, Int)].collect().toSet)
+    assert(vecScans(defaultPlans).nonEmpty, "no refine scan of the vector store")
+    assert(!vecScans(defaultPlans).exists(_.contains("SelectedBucketsCount")),
       "wide-coverage refine should have taken the flat view (no bucketed scan in plan)")
     // forced 512-bucket layout: the same candidate set covers a small
     // minority of buckets → the serve keeps the pruned bucketed scan
     spark.conf.set("spark.graft.vecBuckets", "512")
     try {
-      val viaWide = Similarity.topkIvfPqIndexed(spark, sf)
-      val rWide = viaWide.as[(Long, Long, Double, Int)].collect().toSet
+      val (rWide, widePlans) = withPlans(Similarity.topkIvfPqIndexed(spark, sf)
+        .as[(Long, Long, Double, Int)].collect().toSet)
       val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findFirstMatchIn(viaWide.queryExecution.executedPlan.toString)
+        .findFirstMatchIn(vecScans(widePlans).mkString("\n"))
       assert(sel.nonEmpty, "narrow-coverage refine should have kept the bucketed scan")
       assert(sel.get.group(2).toInt == 512, s"wrong layout in plan: ${sel.get.matched}")
       assert(rWide == rDefault, "refine source choice changed answers")
@@ -173,9 +189,9 @@ class IndexLayoutSpec extends AnyFunSuite {
       .as[(Long, Long, Double, Int)].collect().toSet
     spark.conf.set("spark.graft.ann.refineLiteralMaxIds", "1")
     try {
-      val viaJoin = Similarity.topkIvfPqIndexed(spark, sf)
-      val rJoin = viaJoin.as[(Long, Long, Double, Int)].collect().toSet
-      assert(viaJoin.queryExecution.executedPlan.toString.contains("LeftSemi"),
+      val (rJoin, joinPlans) = withPlans(Similarity.topkIvfPqIndexed(spark, sf)
+        .as[(Long, Long, Double, Int)].collect().toSet)
+      assert(vecScans(joinPlans).exists(_.contains("LeftSemi")),
         "over-budget refine should prune via a broadcast semi-join")
       assert(rJoin == rLiteral, "semi-join refine diverged from literal-IN refine")
       // an unbounded budget must not overflow the bounded id collect

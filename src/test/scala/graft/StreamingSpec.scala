@@ -1106,6 +1106,28 @@ class StreamingSpec extends AnyFunSuite {
     assert(served() == expected, "batch replay must be idempotent")
   }
 
+  test("hybrid serve batches release their caches: persistent RDDs stay at the starting count") {
+    // the BM25 leg comes back cached; a forever-running serve that never
+    // released it grew the session's persistent RDDs by one per batch
+    val raw = graft.sources.Tables.documents(spark, sf).filter($"doc_id" < 3)
+      .select($"doc_id", $"text")
+      .join(graft.sources.Tables.embeddings(spark, sf).filter($"vec_id" < 3)
+        .select($"vec_id", $"embedding"), $"doc_id" === $"vec_id")
+      .select($"doc_id".as("qid"), $"text", $"embedding")
+      .as[(Long, String, Seq[Float])].collect()
+    val outPath = java.nio.file.Files.createTempDirectory("hybcache_out").toString
+    // one call first, so the stores it opens exist before the count
+    EventStream.hybridServeBatch(raw.toSeq.toDF("qid", "text", "embedding"), 0L,
+      sf, outPath, 5)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    (1 to 3).foreach { b =>
+      EventStream.hybridServeBatch(raw.toSeq.toDF("qid", "text", "embedding"), b.toLong,
+        sf, outPath, 5)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == before,
+      s"persistent RDDs went from $before to ${spark.sparkContext.getPersistentRDDs.size}")
+  }
+
   test("streaming serves answer FOREIGN queries: a clone of corpus member 7 retrieves it") {
     // The production case the corpus-query equality specs can't cover:
     // a query id that is NOT in the corpus (no self-exclusion row, no

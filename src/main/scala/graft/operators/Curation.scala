@@ -82,11 +82,9 @@ object Curation {
 
   def prioritySample(spark: SparkSession, dir: String): DataFrame = {
     val key = priorityKeyCol(col("doc_id"), col("n_chars"))
-    val win = Window.orderBy(col("key").desc, col("doc_id"))
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("n_chars"), key.as("key"))
-      .withColumn("rk", row_number().over(win))
-      .filter(col("rk") <= PriorityK)
+    Sampling.topNumbered(
+        Tables.documents(spark, dir).select(col("doc_id"), col("n_chars"), key.as("key")),
+        Seq(col("key").desc, col("doc_id")), PriorityK, "rk")
       .select(col("rk"), col("doc_id"), col("n_chars"), col("key"))
       .orderBy(col("rk"))
   }
@@ -1918,13 +1916,7 @@ object Curation {
       .select(col("doc_id"), col("source"), col("logw"))
       .withColumn("score", round(col("logw") +
         expr(s"-ln(-ln(cast(conv(substring(md5(concat('dsirg:', cast(doc_id as string))), 1, 15), 16, 10) as double) / 1152921504606846976.0)) / $Ln2"), 6))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(DsirK)
-      // rank-without-window: ≤k rows on one sorted partition (the
-      // Sampling.sampleN idiom — no unpartitioned WindowExec)
-      .coalesce(1)
-      .sortWithinPartitions(col("score").desc, col("doc_id"))
-      .withColumn("rk", (monotonically_increasing_id() + 1).cast("int"))
+      .transform(Sampling.topNumbered(_, Seq(col("score").desc, col("doc_id")), DsirK, "rk"))
       .orderBy(col("rk"))
   }
 

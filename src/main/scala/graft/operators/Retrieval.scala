@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.types.StringType
 import graft.sources.Tables
 import graft.functions.{TextFns, VectorFns}
 
@@ -255,20 +256,26 @@ object Retrieval {
     * restriction equals corpus df (the filter is on `term` alone), so
     * scores are bit-identical to the inline plan's. */
   def bm25Of(postings: DataFrame, stats: DataFrame, qterms: DataFrame,
-             k: Int): DataFrame = {
+             k: Int): DataFrame =
+    bm25OfVocab(postings, stats, vocabOf(qterms), qterms, k)
+
+  /** A query batch's distinct terms, on the driver. The vocabulary is
+    * batch-sized (it already had to fit a broadcast). */
+  private def vocabOf(qterms: DataFrame): Seq[String] =
+    qterms.select(col("term")).distinct().collect().map(_.getString(0)).toSeq
+
+  /** [[bm25Of]] over the batch's collected vocabulary `vocab`. */
+  private def bm25OfVocab(postings: DataFrame, stats: DataFrame, vocab: Seq[String],
+                          qterms: DataFrame, k: Int): DataFrame = {
     val st = stats.head
     val nDocs = st.getLong(0)
     val tToks = st.getLong(1)
-    // The query vocabulary is batch-sized (it already had to fit a
-    // broadcast); collecting it turns the vocabulary restriction into
-    // a LITERAL IN filter on the postings scan (round 13 — was a
-    // broadcast join, which reaches every posting file). Over the
-    // term-BUCKETED store ([[bm25WriteIndex]]) Spark prunes buckets:
-    // a batch naming t distinct terms reads at most t of the store's
-    // buckets; over a flat frame it is the same semi filter as before
-    // (inner join on a distinct key == IN on that key).
-    val vocab = qterms.select(col("term")).distinct()
-      .collect().map(_.getString(0)).toSeq
+    // The vocabulary restriction is a LITERAL IN filter on the postings
+    // scan (round 13 — was a broadcast join, which reaches every posting
+    // file). Over the term-bucketed store ([[Postings]]) Spark prunes
+    // buckets: a batch naming t distinct terms reads at most t of the
+    // store's buckets; over a flat frame it is the same semi filter as
+    // before (inner join on a distinct key == IN on that key).
     val qposts = (if (vocab.isEmpty) postings.filter(lit(false))
                   else postings.filter(col("term").isInCollection(vocab)))
       .select(col("doc_id"), col("dl"), col("term"), col("tf"))
@@ -307,154 +314,54 @@ object Retrieval {
     bm25ServeStored(spark, dir, qterms, K)
   }
 
-  /** The production (postings, stats) pair for `dir`'s corpus — opens
-    * (building if absent) the term-bucketed store every stored-index
-    * serve path shares: [[bm25TopkIndexed]] batches and the streaming
-    * hybrid serve. */
-  private[graft] def bm25Store(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val key = bm25StoreKey(spark, dir)
-    val gen = bm25StoreGen(spark, dir, key)
-    (bm25OpenIndex(spark, dir, key, gen), spark.read.parquet(s"$gen/stats"))
-  }
-
-  // key = data version (dir+mtime) + every constant BAKED INTO the
-  // stored artifact (tokenizer version — postings are token rows).
-  // K/NQ apply at serve time over the stored index, so they don't
-  // key the cache (the splitLeakSafeComposed maxDf convention).
-  // "b<n>" carries the DERIVED bucket count (round 14) — a store laid
-  // out for one corpus size must not serve a regenerated corpus that
-  // derives a different count, and a flat round-12 store must not
-  // serve under the bucketed DDL at all
-  private[graft] def bm25StoreKey(spark: SparkSession, dir: String): String =
-    Layout.storeKey(spark, dir, "documents") +
-      s"_tok${TextFns.TokVersion}_b${postingsBuckets(spark, dir)}"
-
-  /** The SAME stored postings files read as plain parquet — identical
-    * rows, no bucket metadata, so the scan splits files arbitrarily
-    * instead of one-task-per-bucket. The escape hatch
-    * [[bm25ServeStored]] takes when pruning cannot help. */
-  private[graft] def bm25StoreFlatView(spark: SparkSession, dir: String): DataFrame = {
-    val gen = bm25StoreGen(spark, dir, bm25StoreKey(spark, dir)) // builds if absent
-    spark.read.parquet(Layout.qualified(spark, s"$gen/postings"))
-  }
-
-  /** Distinct term-bucket ids a query vocabulary hashes into —
-    * `pmod(hash(term), nb)` is the exact expression Spark's bucketed
-    * writer assigns files by (Murmur3, seed 42), so this predicts
-    * file-level pruning without touching the store. */
-  private[graft] def vocabBucketCoverage(qterms: DataFrame, nb: Int): Long =
-    qterms.select(pmod(hash(col("term")), lit(nb)).as("b"))
-      .distinct().count()
-
-  /** Adaptive stored-index serve (late round 13). Bucket pruning wins
-    * when the batch vocabulary touches FEW buckets (single-term serve:
-    * 0.04 s from 1 of 16 buckets vs 1.74 s flat at 1 M docs); a
-    * vocabulary covering most buckets prunes nothing and instead pays
-    * the bucketed scan's one-task-per-bucket parallelism floor
-    * (whole-vocab batch: 39-40 s bucketed vs 28-30 s flat —
-    * ScaleRetrieval, both measured at 1 M docs). Decide per batch from
-    * the vocabulary alone: ≤ half the buckets covered → bucketed
-    * (pruned) scan; more → flat view of the same files. Answers are
-    * layout-invariant either way (require-gated in ScaleRetrieval,
-    * spec-asserted in RetrievalSpec); only the scan strategy moves.
-    * The coverage probe is one batch-sized job — the serve already
-    * collects the vocabulary, so the asymptotic cost is unchanged. */
-  def bm25ServeStored(spark: SparkSession, dir: String, qterms: DataFrame,
-                      k: Int): DataFrame = {
-    val (postings, stats) = bm25Store(spark, dir)
-    val nb = postingsBuckets(spark, dir)
-    val covered = vocabBucketCoverage(qterms, nb)
-    val src = if (covered * 2 > nb) bm25StoreFlatView(spark, dir)
-              else postings
-    bm25Of(src, stats, qterms, k)
-  }
-
-  /** Docs-per-term-bucket target for the derived postings layout
-    * (round 14): ~8k docs of postings per bucket keeps one bucket an
-    * executor-friendly scan unit, and makes the derived count MOVE
-    * with the corpus (16 at the gated SFs via the floor, 128 at the
-    * 1 M-doc ScaleRetrieval store) instead of freezing the round-13
-    * local[32] calibration into a constant. */
-  private[graft] final val PostingsDocsPerBucket = 8192L
-
-  /** Term-bucket count for `dir`'s postings store — conf-pinnable
-    * (`spark.graft.postingsBuckets`) for forced-layout specs and
-    * cluster operators who know better, otherwise DERIVED from the
-    * corpus document count by the shared [[Layout.buckets]] formula.
-    * Deterministic per (corpus, conf), so the writer, the DDL, the
-    * store cache key, and the serve-side coverage probe all agree
-    * without reading the store. */
-  private[graft] def postingsBuckets(spark: SparkSession, dir: String): Int =
-    spark.conf.getOption("spark.graft.postingsBuckets").map(_.toInt)
-      .getOrElse(Layout.buckets(
-        Layout.tableCount(spark, dir, "documents"), PostingsDocsPerBucket))
-
-  /** Resolve-or-build the committed bm25 store generation for `key`:
-    * stats first, bucketed postings LAST (its _SUCCESS completes the
-    * generation). Object-store-exact via [[Layout.generation]]. */
-  private[graft] def bm25StoreGen(spark: SparkSession, dir: String,
-                                  key: String): String = {
-    val nb = postingsBuckets(spark, dir)
-    Layout.generation(spark,
-      s"${Layout.cacheRoot(spark)}/bm25_index/$key", "postings") { g =>
+  /** The postings store every stored-index serve shares
+    * ([[bm25TopkIndexed]] batches, the streaming hybrid serve): postings
+    * bucketed by term, so [[bm25Of]]'s literal vocabulary
+    * IN filter reads only the buckets a batch's terms hash into, and the
+    * corpus `stats` side table. The key folds the tokenizer version
+    * (postings are token rows); K and NQ apply at serve time and do not
+    * key it. ~8k docs of postings per bucket: 16 buckets at the gated
+    * SFs (the floor), 128 at the 1 M-doc ScaleRetrieval store. */
+  private[graft] val Postings = new Layout.BucketedStore("bm25_index", "bm25",
+      "documents", s"_tok${TextFns.TokVersion}", 8192L, "term", "postings")(
+    (spark, dir, g) => {
       val (p, s) = bm25IndexOf(Tables.documents(spark, dir))
       s.write.parquet(s"$g/stats")
-      // bucketed writes need saveAsTable; the per-gen build name is
-      // registered here and the serve path below re-derives the same
-      // name from the COMMITTED generation (ours, unless we lost an
-      // advisory-lease race — then the winner's name registers fresh)
-      p.write
-        .bucketBy(nb, "term")
-        .option("path", Layout.qualified(spark, s"$g/postings"))
-        .saveAsTable(bm25Tbl(spark, key, g))
-    }
+      p
+    })
+
+  /** The production (postings, stats) pair for `dir`'s corpus. */
+  private[graft] def bm25Store(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val store = Postings.open(spark, dir)
+    (store.bucketed, statsOf(store))
   }
 
-  /** Per-generation catalog name: the files are gen-addressed, the
-    * catalog entry is name-addressed — folding the generation token in
-    * (the [[Layout.rootTag]] treatment) means a generation change
-    * mid-session re-registers at the new location instead of serving
-    * the superseded one by name. */
-  private def bm25Tbl(spark: SparkSession, key: String, gen: String): String = {
-    // the generation token VERBATIM ('-'→'_' — already lowercase
-    // [a-z0-9-] and filesystem-safe), not a 32-bit hashCode hex: a hash
-    // collision between two generations of one key in a long session
-    // would make tableExists answer true for the new generation and
-    // silently serve the superseded (possibly GC-deleted) files by name
-    // (r18 judge finding)
-    val gtag = gen.substring(gen.lastIndexOf("gen-") + 4).replace('-', '_')
-    s"g_bm25_${Layout.rootTag(spark)}_${key}_$gtag"
-      .replaceAll("[^A-Za-z0-9_]", "_").toLowerCase
-  }
+  /** A postings store's `stats` side table, read with its stated schema
+    * (no schema-inference job per batch). */
+  private def statsOf(store: Layout.ServeStore): DataFrame =
+    store.bucketed.sparkSession.read.schema("n_docs BIGINT, t_toks BIGINT")
+      .parquet(s"${store.gen}/stats")
 
-  /** Open (building if absent) the postings store for `key` as a
-    * term-BUCKETED catalog table (round 13): postings are written
-    * `bucketBy(postingsBuckets, "term")` (count derived per corpus, round 14), so [[bm25Of]]'s literal
-    * vocabulary IN filter prunes buckets — a query batch naming t
-    * terms reads ≤ t of the buckets instead of every posting file.
-    * The files outlive the JVM (external table under target/tmp, the
-    * mtime-keyed cache convention); the catalog entry is per-JVM, so
-    * a warm-file/cold-catalog run re-registers the DDL over the
-    * existing files instead of re-tokenizing the corpus. */
-  private[graft] def bm25OpenIndex(spark: SparkSession, dir: String,
-                                   key: String, gen: String): DataFrame = {
-    val nb = postingsBuckets(spark, dir)
-    val tbl = bm25Tbl(spark, key, gen)
-    val loc = Layout.qualified(spark, s"$gen/postings")
-    if (!spark.catalog.tableExists(tbl)) {
-      // warm files, cold catalog (new JVM, or another process built the
-      // committed generation): register the bucketed DDL over the
-      // existing files — no rebuild, no re-tokenize
-      try spark.sql(
-        s"""CREATE TABLE $tbl (doc_id BIGINT, dl INT, term STRING, tf BIGINT)
-           USING parquet CLUSTERED BY (term) INTO $nb BUCKETS
-           LOCATION '$loc'""")
-      catch { // a concurrent registrar won the CREATE: serve its entry
-        case e: org.apache.spark.sql.AnalysisException
-          if spark.catalog.tableExists(tbl) => ()
-      }
-    }
-    spark.table(tbl)
+  /** Term-bucket count of `dir`'s postings store. */
+  private[graft] def postingsBuckets(spark: SparkSession, dir: String): Int =
+    Postings.buckets(spark, dir)
+
+  /** Distinct term buckets a query vocabulary hashes into — the store's
+    * driver-side rule over the collected vocabulary. */
+  private[graft] def vocabBucketCoverage(qterms: DataFrame, nb: Int): Long =
+    Layout.bucketsOf(vocabOf(qterms), StringType, nb).distinct.size.toLong
+
+  /** Adaptive stored-index serve: the batch vocabulary, collected once,
+    * picks the bucketed postings or their flat twin
+    * ([[Layout.ServeStore.pick]]) and becomes the literal IN filter of
+    * the postings scan. Answers are layout-invariant either way
+    * (require-gated in ScaleRetrieval, spec-asserted in RetrievalSpec);
+    * only the scan strategy moves. */
+  def bm25ServeStored(spark: SparkSession, dir: String, qterms: DataFrame,
+                      k: Int): DataFrame = {
+    val store = Postings.open(spark, dir)
+    val vocab = vocabOf(qterms)
+    bm25OfVocab(store.pick(vocab, StringType), statsOf(store), vocab, qterms, k)
   }
 
   /** The bm25 CTE stack, parameterized by list depth (shared with the

@@ -19,7 +19,7 @@ object Sampling {
     md5(concat(lit(seed.toString), lit(":"), key.cast("string")))
 
   /** First n rows by hash order, with a 1-based `sample_rank` column
-    * (rank window runs post-limit, over n rows only).
+    * (numbered post-limit, over n rows only, by [[topNumbered]]).
     *
     * Large-n path: a global top-n over the full table makes every
     * partition sort+ship n rows; instead pre-filter to the hash prefix
@@ -41,16 +41,18 @@ object Sampling {
           if (filtered.count() >= n) filtered else df.withColumn("__h", h)
         }
       }
-    // rank-without-window: the ≤n surviving rows are coalesced to one
-    // sorted partition and numbered by monotonically_increasing_id
-    // (ids 0..n-1 in sort order on partition 0) — identical to a global
-    // row_number without an unpartitioned WindowExec (which warns and
-    // would serialize at scale; here the input is already bounded by n)
-    base
-      .orderBy(col("__h"), key)
-      .limit(n)
-      .coalesce(1).sortWithinPartitions(col("__h"), key)
-      .withColumn("sample_rank", (monotonically_increasing_id() + 1).cast("int"))
-      .drop("__h")
+    topNumbered(base, Seq(col("__h"), key), n, "sample_rank").drop("__h")
   }
+
+  /** The first `k` rows of `df` by `order`, numbered from 1 in an INT
+    * column `name` without a window: the ordered limit plans as
+    * TakeOrderedAndProject (per-partition top-k, one merge), and its ≤k
+    * rows are numbered on one sorted partition by
+    * monotonically_increasing_id (ids 0..k-1 in sort order on
+    * partition 0) — a global row_number without an unpartitioned
+    * WindowExec, which warns and would serialize at scale. */
+  def topNumbered(df: DataFrame, order: Seq[Column], k: Int, name: String): DataFrame =
+    df.orderBy(order: _*).limit(k)
+      .coalesce(1).sortWithinPartitions(order: _*)
+      .withColumn(name, (monotonically_increasing_id() + 1).cast("int"))
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
 import org.apache.spark.sql.catalyst.util.{SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.types.{DataType, LongType, NullType}
 import scala.jdk.CollectionConverters._
@@ -1136,7 +1135,7 @@ object Similarity {
     val all = emb(spark, dir).cache()
     val (codes, books) = pqIndexOf(all)
     ivfPqServe(IvfPqModel(booksOf(books), cells = None), codes,
-      queryRows(queryBatch(all)), Some(RefineSource(all, None)))
+      queryRows(queryBatch(all)), Some(Layout.ServeStore.plain(all)))
   }
 
   /** PQ top-k: encode the corpus once, score by ADC, rank per query —
@@ -1545,7 +1544,9 @@ object Similarity {
               queries: DataFrame, refine: Option[DataFrame] = None,
               refineFlat: Option[(DataFrame, Int)] = None): DataFrame =
     ivfPqServe(ivfPqModelOf(books, cells), codes, queryRows(queries),
-      refine.map(RefineSource(_, refineFlat)))
+      refine.map(r => refineFlat.fold(Layout.ServeStore.plain(r)) { case (flat, nb) =>
+        new Layout.ServeStore(r, nb, "", "vecs", () => flat)
+      }))
 
   // ---- 3e5. the IVFPQ serve core ---------------------------------------
   // Every IVFPQ serve ([[ivfPqOf]], `sim_topk_ivf_pq[_indexed]`, the
@@ -1618,8 +1619,7 @@ object Similarity {
       queries: DataFrame, refineDir: Option[String]): DataFrame = {
     val model = storedModel(spark, base)
     ivfPqServe(model, codesAt(spark, base, model.labelType), queryRows(queries),
-      refineDir.map(d => RefineSource(vecStore(spark, d),
-        Some((vecStoreFlatView(spark, d), vecBuckets(spark, d))))))
+      refineDir.map(Vectors.open(spark, _)))
   }
 
   /** A (qid, qvec) batch on the driver. */
@@ -1629,10 +1629,6 @@ object Similarity {
       .as[(Long, Array[Double])].collect().toIndexedSeq
   }
 
-  /** Where a refine reads true vectors: a (vec_id, vec) store, and
-    * optionally the store's flat twin with its bucket count. */
-  private final case class RefineSource(vecs: DataFrame, flat: Option[(DataFrame, Int)])
-
   /** (query index, id, score). */
   private type Scored = (Int, Long, Double)
 
@@ -1641,7 +1637,7 @@ object Similarity {
     * candidates, rn ≤ K in (qid, rn) order, as a local relation. */
   private def ivfPqServe(model: IvfPqModel, codes: DataFrame,
                          qs: IndexedSeq[(Long, Array[Double])],
-                         refine: Option[RefineSource]): DataFrame = {
+                         refine: Option[Layout.ServeStore]): DataFrame = {
     val adc =
       if (model.books.isEmpty || qs.isEmpty) Map.empty[Int, Seq[Scored]]
       else adcPass(model, codes, qs, if (refine.isEmpty) K else K * RefineFactor)
@@ -1742,26 +1738,14 @@ object Similarity {
     * recall only when the generator's SCORING is the lossy stage (PQ,
     * IVFPQ ADC); a probe-limited generator that scores exact cosines
     * in-cell (IVF, IVF2) gains nothing. */
-  private def refinePass(src: RefineSource, qs: IndexedSeq[(Long, Array[Double])],
+  private def refinePass(src: Layout.ServeStore, qs: IndexedSeq[(Long, Array[Double])],
                          cands: Map[Int, Seq[Scored]]): Map[Int, Seq[Scored]] = {
     val ids = cands.valuesIterator.flatMap(_.map(_._2)).toSeq.distinct.sorted
     if (ids.isEmpty) return Map.empty
-    val spark = src.vecs.sparkSession
+    val spark = src.bucketed.sparkSession
     import spark.implicits._
-    // ADAPTIVE refine source (round 14, the bm25ServeStored pattern):
-    // wide candidate bucket coverage means the bucketed layout prunes
-    // nothing and the flat view's finer file splits win on scan
-    // parallelism; narrow coverage keeps file-level pruning. Logged
-    // because a silent path flip would make perf records unexplainable.
-    val from = src.flat match {
-      case Some((flat, nb)) =>
-        val covered = bucketsOf(ids, LongType, nb).distinct.length
-        val takeFlat = covered * 2 > nb
-        System.err.println(s"[graft] refine source: ${if (takeFlat) "flat"
-          else "bucketed"} (candidates cover $covered of $nb vec buckets)")
-        if (takeFlat) flat else src.vecs
-      case None => src.vecs
-    }
+    // the candidates pick the bucketed store or its flat twin
+    val from = src.pick(ids, LongType)
     // LITERAL BUDGET (round 14, the withCodebook discipline): the ids
     // are optimal as a plan-literal IN filter at serve-batch sizes
     // (bucket pruning over the store), but plan size grows linearly in
@@ -1827,20 +1811,6 @@ object Similarity {
       .toDF("qid", "nid", score, "rn")
   }
 
-  /** The buckets of a `nb`-bucket vec_id store that `ids` (collected
-    * values of a `dt` column) hash into — Spark's pmod(hash(id), nb)
-    * on the driver: Murmur3HashFunction is the hash() expression's
-    * interpreted form (seed 42), and it takes Catalyst values, so each
-    * external Row value converts first (a String hashes as the
-    * UTF8String hash() sees). One pass over the ids, no Spark job. */
-  private[graft] def bucketsOf(ids: Seq[Any], dt: DataType, nb: Int): Seq[Int] = {
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
-    ids.map { v =>
-      val h = Murmur3HashFunction.hash(toCatalyst(v), dt, 42L).toInt
-      ((h % nb) + nb) % nb
-    }
-  }
-
   /** [[ivfPqIndexOf]] over the standard embeddings table — the spec /
     * tooling entry point. */
   def ivfPqIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
@@ -1891,105 +1861,27 @@ object Similarity {
       ivfPqServeStored(spark, base, queryBatch(emb(spark, dir)), Some(dir))
     }
 
-  /** Vectors-per-bucket target for the derived vector-store layout
-    * (round 14): ~1k full vectors per bucket keeps one bucket a small
-    * exact-rerank scan unit and puts the derived count ≫ the
-    * k·[[RefineFactor]]·|batch| candidate count once the corpus is
-    * large (1 M vectors → 1024 buckets, the ScaleIvfPq calibration),
-    * while the gated SFs sit on the floor (16). */
-  private[graft] final val VecsPerBucket = 1024L
+  /** The vector table as a vec_id-bucketed store — the refine tail's
+    * input. [[refinePass]] turns its bounded candidate id set into a
+    * literal IN filter, so over this layout the exact re-rank reads only
+    * the buckets its candidates hash into. ~1k full vectors per bucket
+    * keeps one bucket a small re-rank scan unit and puts the derived
+    * count far above the K·[[RefineFactor]]·|batch| candidates once the
+    * corpus is large (1 M vectors → 1024 buckets, the ScaleIvfPq
+    * calibration); the gated SFs sit on the floor (16). */
+  private[graft] val Vectors = new Layout.BucketedStore("vec_store", "vecs",
+      "embeddings", "", 1024L, "vec_id", "vecs")(
+    (spark, dir, _) => emb(spark, dir).select(col("vec_id"), col("vec")))
 
-  /** Bucket count for `dir`'s stored vector table — conf-pinnable
-    * (`spark.graft.vecBuckets`) for forced-layout specs and cluster
-    * operators who know better, otherwise DERIVED from the corpus
-    * vector count by the shared [[Layout.buckets]] formula, so a 100×
-    * regen re-sizes the store instead of freezing one calibration
-    * (the `probeScheduleFor` discipline applied to layout). */
+  // the vector store's bucketed table, flat twin and bucket count
+  private[graft] def vecStore(spark: SparkSession, dir: String): DataFrame =
+    Vectors.open(spark, dir).bucketed
+
+  private[graft] def vecStoreFlatView(spark: SparkSession, dir: String): DataFrame =
+    Vectors.open(spark, dir).flat
+
   private[graft] def vecBuckets(spark: SparkSession, dir: String): Int =
-    spark.conf.getOption("spark.graft.vecBuckets").map(_.toInt)
-      .getOrElse(Layout.buckets(
-        Layout.tableCount(spark, dir, "embeddings"), VecsPerBucket))
-
-  /** The vector table as a vec_id-BUCKETED catalog store (round 13) —
-    * the refine tail's input. [[refinePass]] turns its bounded candidate
-    * id set into a literal IN filter, so over this layout the exact
-    * re-rank reads only the buckets its candidates hash into: the LAST
-    * corpus-sized scan in the indexed serve path becomes file-pruned,
-    * completing the codes-partition / postings-bucket storage story.
-    * Same mtime-keyed external-table conventions as
-    * `Retrieval.bm25OpenIndex` (files outlive the JVM; a warm-file
-    * cold-catalog run re-registers DDL derived from the stored footer
-    * instead of rebuilding; `_SUCCESS`-guarded against torn writes). */
-  private[graft] def vecStoreKey(spark: SparkSession, dir: String): String = {
-    val embPath = s"$dir/embeddings.parquet"
-    s"${dir}_${Layout.stateTag(spark, embPath)}_b${vecBuckets(spark, dir)}"
-      .replaceAll("[^A-Za-z0-9_]", "_").toLowerCase
-  }
-
-  /** The SAME stored vector files read as plain parquet — identical
-    * rows, finer maxPartitionBytes file splits, no bucket metadata.
-    * [[refinePass]]'s adaptive source takes this view when a batch's
-    * candidates cover most buckets (pruning would win nothing, the
-    * finer splits win scan parallelism) — the `bm25StoreFlatView`
-    * twin for vectors. */
-  private[graft] def vecStoreFlatView(spark: SparkSession, dir: String): DataFrame = {
-    val gen = vecStoreGen(spark, dir) // builds if absent
-    // the registered table's schema: no schema-inference job per read
-    spark.read.schema(vecStore(spark, dir).schema)
-      .parquet(Layout.qualified(spark, s"$gen/vecs"))
-  }
-
-  /** Resolve-or-build the committed vector-store generation —
-    * object-store-exact via [[Layout.generation]] (round 18): each
-    * builder writes its own gen-dir, commits via _CURRENT; a lost
-    * advisory-lease race costs a duplicate build, never a torn store. */
-  private def vecStoreGen(spark: SparkSession, dir: String): String = {
-    val nb = vecBuckets(spark, dir)
-    val key = vecStoreKey(spark, dir)
-    Layout.generation(spark,
-      s"${Layout.cacheRoot(spark)}/vec_store/$key", "vecs") { g =>
-      // bucketed writes need saveAsTable; the per-gen name registered
-      // here is the one the serve path re-derives from the committed gen
-      emb(spark, dir).select(col("vec_id"), col("vec"))
-        .write.bucketBy(nb, "vec_id")
-        .option("path", Layout.qualified(spark, s"$g/vecs"))
-        .saveAsTable(vecTbl(spark, key, g))
-    }
-  }
-
-  /** Per-generation catalog name (the [[Layout.rootTag]] treatment for
-    * generations): a generation change mid-session re-registers at the
-    * new location instead of serving the superseded one by name. */
-  private def vecTbl(spark: SparkSession, key: String, gen: String): String = {
-    // gen token verbatim, not a 32-bit hashCode (r18 judge finding —
-    // a collision would serve the superseded generation by name);
-    // tokens are lowercase [a-z0-9-], '-'→'_' keeps the name legal
-    val gtag = gen.substring(gen.lastIndexOf("gen-") + 4).replace('-', '_')
-    s"g_vecs_${Layout.rootTag(spark)}_${key}_$gtag"
-  }
-
-  private[graft] def vecStore(spark: SparkSession, dir: String): DataFrame = {
-    val nb = vecBuckets(spark, dir)
-    val key = vecStoreKey(spark, dir)
-    val gen = vecStoreGen(spark, dir)
-    val tbl = vecTbl(spark, key, gen)
-    val loc = Layout.qualified(spark, s"$gen/vecs")
-    if (!spark.catalog.tableExists(tbl))
-      // warm files, cold catalog (new JVM, or another process built the
-      // committed generation): DDL types come from the stored footer
-      // (vec_id is corpus-typed, like ivfPqReadCodes' label)
-      try {
-        val ddl = spark.read.parquet(loc).schema.toDDL
-        spark.sql(
-          s"""CREATE TABLE $tbl ($ddl)
-             USING parquet CLUSTERED BY (vec_id) INTO $nb BUCKETS
-             LOCATION '$loc'""")
-      } catch { // a concurrent registrar won the CREATE: serve its entry
-        case e: org.apache.spark.sql.AnalysisException
-          if spark.catalog.tableExists(tbl) => ()
-      }
-    spark.table(tbl)
-  }
+    Vectors.buckets(spark, dir)
 
   /** Build + persist the IVFPQ index at `base` (idempotent — a
     * complete store is left alone). The codes table — the ONLY

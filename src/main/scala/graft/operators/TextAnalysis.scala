@@ -694,12 +694,8 @@ object TextAnalysis {
         round(log2((col("pair_n").cast("double") * col("nn") * col("nn")) /
                    (col("mm").cast("double") * col("ca") * col("cb"))), 6)
           .as("pmi"))
-      .orderBy(col("pmi").desc, col("term_a"), col("term_b"))
-      .limit(PmiTopK)
-      // rank-without-window idiom: the input is already limit(K)-bounded
-      .coalesce(1)
-      .withColumn("rn", row_number().over(
-        Window.orderBy(col("pmi").desc, col("term_a"), col("term_b"))).cast("int"))
+      .transform(Sampling.topNumbered(_,
+        Seq(col("pmi").desc, col("term_a"), col("term_b")), PmiTopK, "rn"))
       .select(col("rn"), col("term_a"), col("term_b"), col("pair_n"), col("pmi"))
       .orderBy(col("rn"))
   }

@@ -175,7 +175,7 @@ object ScaleIvfPq {
     require(nbVec == 1024 && nbVecGated == 16 && nbVec != nbVecGated,
       s"derived vec-bucket counts must move with corpus size: 1M -> $nbVec (want 1024), " +
         s"gated -> $nbVecGated (want the 16 floor)")
-    val vstore = Similarity.vecStore(spark, corpusDir)
+    val vstore = Similarity.Vectors.open(spark, corpusDir).bucketed
     val qbR = corpus.filter(col("vec_id") < 5L)
       .select(col("vec_id").as("qid"), col("vec").as("qvec"))
     val ((dfR, passesR), _) = time("ivfpq serve + refine (bucketed vec store, 1024 buckets)") {

@@ -84,7 +84,7 @@ object ScaleRetrieval {
     // materialized index (round 10; round 13 layout): pay the tokenize
     // scan ONCE at build, then serve query batches from stored postings
     // — batch 2+ never re-reads `text`. The store is the PRODUCTION
-    // term-BUCKETED catalog table (bm25OpenIndex), so a query batch's
+    // term-BUCKETED catalog table (Retrieval.Postings), so a query batch's
     // literal vocabulary IN filter prunes buckets at the file level. A
     // flat parquet copy of the same postings measures what the layout
     // buys at 54 M token occurrences.
@@ -101,11 +101,7 @@ object ScaleRetrieval {
     require(nb == 128 && nbGated == 16 && nb != nbGated,
       s"derived postings-bucket counts must move with corpus size: 1M -> $nb (want 128), " +
         s"gated -> $nbGated (want the 16 floor)")
-    val key = Retrieval.bm25StoreKey(spark, dir)
-    val gen = Retrieval.bm25StoreGen(spark, dir, key)
-    val postings = Retrieval.bm25OpenIndex(spark, dir, key, gen)
-    postings.count() // force the build inside the timer
-    val stats = spark.read.parquet(s"$gen/stats")
+    val (postings, stats) = Retrieval.bm25Store(spark, dir) // builds inside the timer
     println(f"[scale] bm25 bucketed index build+persist 1M docs: ${(System.nanoTime() - t2) / 1e9}%.2f s (paid once)")
     val idxBase = "target/tmp/bm25_index_1m"
     val tFlat0 = System.nanoTime()

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.Layout
 import graft.sources.{Bucketed, Tables}
 
 class BucketedSpec extends AnyFunSuite {
@@ -10,8 +10,8 @@ class BucketedSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("driver Murmur3 pmod == Spark pmod(hash(col), nb) for long ids") {
-    // the refine pass's bucket-coverage derivation (r21) hashes
-    // collected ids on the driver (Similarity.bucketsOf) — this pin
+    // the serve stores' source choice hashes collected keys on the
+    // driver (Layout.bucketsOf) — this pin
     // fails loudly if Spark's hash() expression ever changes seed or
     // algorithm, or if a collected external value (a String, say) is
     // hashed unconverted, either of which would silently flip the
@@ -22,7 +22,7 @@ class BucketedSpec extends AnyFunSuite {
     def check(ids: org.apache.spark.sql.DataFrame): Unit = {
       val viaSpark = ids.select(pmod(hash(col("nid")), lit(nb))).as[Int].collect().toSeq
       val rows = ids.collect().map(_.get(0)).toSeq
-      assert(Similarity.bucketsOf(rows, ids.schema("nid").dataType, nb) == viaSpark,
+      assert(Layout.bucketsOf(rows, ids.schema("nid").dataType, nb) == viaSpark,
         ids.schema("nid").dataType)
     }
     check(longs.toDF("nid"))

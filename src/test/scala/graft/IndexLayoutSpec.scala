@@ -169,18 +169,23 @@ class IndexLayoutSpec extends AnyFunSuite {
     assert(vecScans(defaultPlans).nonEmpty, "no refine scan of the vector store")
     assert(!vecScans(defaultPlans).exists(_.contains("SelectedBucketsCount")),
       "wide-coverage refine should have taken the flat view (no bucketed scan in plan)")
-    // forced 512-bucket layout: the same candidate set covers a small
-    // minority of buckets → the serve keeps the pruned bucketed scan
-    spark.conf.set("spark.graft.vecBuckets", "512")
-    try {
-      val (rWide, widePlans) = withPlans(Similarity.topkIvfPqIndexed(spark, sf)
-        .as[(Long, Long, Double, Int)].collect().toSet)
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findFirstMatchIn(vecScans(widePlans).mkString("\n"))
-      assert(sel.nonEmpty, "narrow-coverage refine should have kept the bucketed scan")
-      assert(sel.get.group(2).toInt == 512, s"wrong layout in plan: ${sel.get.matched}")
-      assert(rWide == rDefault, "refine source choice changed answers")
-    } finally spark.conf.unset("spark.graft.vecBuckets")
+    // a store forced to 512 buckets: the same candidate set covers a
+    // small minority of buckets → the serve keeps the pruned bucketed scan
+    val store = Similarity.Vectors.open(spark, sf, Some(512))
+    val base = Similarity.ivfPqWriteIndex(spark, sf,
+      java.nio.file.Files.createTempDirectory("ivfpq_narrow").toString + "/idx")
+    val (rNarrow, narrowPlans) = withPlans(Similarity.ivfPqOf(
+        Similarity.ivfPqReadCodes(spark, base),
+        spark.read.parquet(s"$base/books"), spark.read.parquet(s"$base/cells"),
+        Similarity.emb(spark, sf).filter(col("vec_id") < 5)
+          .select(col("vec_id").as("qid"), col("vec").as("qvec")),
+        refine = Some(store.bucketed), refineFlat = Some((store.flat, store.nb)))
+      .as[(Long, Long, Double, Int)].collect().toSet)
+    val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
+      .findFirstMatchIn(vecScans(narrowPlans).mkString("\n"))
+    assert(sel.nonEmpty, "narrow-coverage refine should have kept the bucketed scan")
+    assert(sel.get.group(2).toInt == 512, s"wrong layout in plan: ${sel.get.matched}")
+    assert(rNarrow == rDefault, "refine source choice changed answers")
   }
 
   test("refine literal budget: forced broadcast semi-join path is value-identical (r14)") {
@@ -204,13 +209,12 @@ class IndexLayoutSpec extends AnyFunSuite {
 
   test("bm25 postings store: term buckets, a small vocabulary prunes buckets") {
     val sf = "/root/testdata/sf0.001"
-    val key = s"spec_${System.nanoTime}"
-    val postings = Retrieval.bm25OpenIndex(spark, sf, key,
-      Retrieval.bm25StoreGen(spark, sf, key))
+    val store = Retrieval.Postings.open(spark, sf)
+    val postings = store.bucketed
     val term1 = postings.select(col("term")).head.getString(0)
     val pruned = postings.filter(col("term").isInCollection(Seq(term1)))
     val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains(s"SelectedBucketsCount: 1 out of ${Retrieval.postingsBuckets(spark, sf)}"),
+    assert(plan.contains(s"SelectedBucketsCount: 1 out of ${store.nb}"),
       s"bucket pruning missing from plan:\n$plan")
     // and the real serve tail returns the same lists as the inline plan
     val inline = Retrieval.bm25Topk(spark, sf)
@@ -238,10 +242,6 @@ class IndexLayoutSpec extends AnyFunSuite {
     assert(ladder == ladder.sorted, s"not monotone: $ladder")
     // every result a power of two
     assert(ladder.forall(b => Integer.bitCount(b) == 1))
-    // conf pin overrides derivation (forced-layout spec hook)
-    spark.conf.set("spark.graft.vecBuckets", "64")
-    try assert(Similarity.vecBuckets(spark, "/root/testdata/sf0.001") == 64)
-    finally spark.conf.unset("spark.graft.vecBuckets")
   }
 
   test("Layout.tableCount: same-second regen invalidates the memo (part-listing key)") {

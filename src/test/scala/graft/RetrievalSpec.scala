@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions.lit
 import graft.operators.Retrieval
 
@@ -169,10 +170,16 @@ class RetrievalSpec extends AnyFunSuite {
     // derive the broad vocabulary from the FLAT view so the only scan
     // in the serve plan below is the serve's own postings read (the
     // qterms lineage would otherwise contribute a bucketed scan)
-    val qAll = Retrieval.bm25StoreFlatView(spark, sf).select($"term").distinct()
+    val qAll = Retrieval.Postings.open(spark, sf).flat.select($"term").distinct()
       .select(lit(7L).as("qid"), $"term")
     assert(Retrieval.vocabBucketCoverage(qAll, nb) * 2 > nb,
       "corpus vocabulary should cover most term buckets")
+    // the driver rule counts exactly the buckets Spark's bucketed writer
+    // assigns the vocabulary to
+    def sparkCoverage(q: org.apache.spark.sql.DataFrame): Long =
+      q.select(functions.pmod(functions.hash($"term"), lit(nb))).distinct().count()
+    assert(Retrieval.vocabBucketCoverage(q1, nb) == sparkCoverage(q1))
+    assert(Retrieval.vocabBucketCoverage(qAll, nb) == sparkCoverage(qAll))
 
     // narrow branch: the executed plan reads 1 of the nb bucket files
     val narrow = Retrieval.bm25ServeStored(spark, sf, q1, 5)

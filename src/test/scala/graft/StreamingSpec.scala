@@ -1107,25 +1107,37 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("hybrid serve batches release their caches: persistent RDDs stay at the starting count") {
-    // the BM25 leg comes back cached; a forever-running serve that never
-    // released it grew the session's persistent RDDs by one per batch
+    // a forever-running serve must not grow the session per batch: the
+    // BM25 leg comes back cached and is released after the write, and
+    // each serve store registers one catalog table per generation, not
+    // one per batch
     val raw = graft.sources.Tables.documents(spark, sf).filter($"doc_id" < 3)
       .select($"doc_id", $"text")
       .join(graft.sources.Tables.embeddings(spark, sf).filter($"vec_id" < 3)
         .select($"vec_id", $"embedding"), $"doc_id" === $"vec_id")
       .select($"doc_id".as("qid"), $"text", $"embedding")
-      .as[(Long, String, Seq[Float])].collect()
-    val outPath = java.nio.file.Files.createTempDirectory("hybcache_out").toString
-    // one call first, so the stores it opens exist before the count
-    EventStream.hybridServeBatch(raw.toSeq.toDF("qid", "text", "embedding"), 0L,
-      sf, outPath, 5)
-    val before = spark.sparkContext.getPersistentRDDs.size
-    (1 to 3).foreach { b =>
-      EventStream.hybridServeBatch(raw.toSeq.toDF("qid", "text", "embedding"), b.toLong,
-        sf, outPath, 5)
+      .as[(Long, String, Seq[Float])].collect().toSeq
+    val base = graft.operators.Similarity.ivfPqWriteIndex(spark, sf,
+      java.nio.file.Files.createTempDirectory("anncache_idx").toString)
+    val hybridOut = java.nio.file.Files.createTempDirectory("hybcache_out").toString
+    val annOut = java.nio.file.Files.createTempDirectory("anncache_out").toString
+    val serves: Seq[(String, Long => Unit)] = Seq(
+      "hybridServeBatch" -> (b => EventStream.hybridServeBatch(
+        raw.toDF("qid", "text", "embedding"), b, sf, hybridOut, 5)),
+      "annServeBatch" -> (b => EventStream.annServeBatch(
+        raw.map(r => (r._1, r._3)).toDF("vec_id", "embedding"), b, base, annOut, Some(sf))))
+    def storeTables(prefix: String): Int =
+      spark.catalog.listTables().collect().count(_.name.startsWith(prefix))
+    def state(): (Int, Int, Int) = (spark.sparkContext.getPersistentRDDs.size,
+      storeTables("g_bm25_"), storeTables("g_vecs_"))
+    serves.foreach { case (name, serve) =>
+      // one call first, so the stores it opens exist before the count
+      serve(0L)
+      val before = state()
+      (1 to 3).foreach(b => serve(b.toLong))
+      assert(state() == before,
+        s"$name: (persistent RDDs, g_bm25_ tables, g_vecs_ tables) went from $before to ${state()}")
     }
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
-      s"persistent RDDs went from $before to ${spark.sparkContext.getPersistentRDDs.size}")
   }
 
   test("streaming serves answer FOREIGN queries: a clone of corpus member 7 retrieves it") {

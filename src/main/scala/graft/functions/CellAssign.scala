@@ -27,11 +27,14 @@ import org.apache.spark.sql.types._
   */
 object VecNative {
 
-  /** Spark `round(d, 6)`: BigDecimal.valueOf + HALF_UP, NaN/Inf kept. */
-  def round6(d: Double): Double =
+  /** Spark `round(d, scale)`: BigDecimal.valueOf + HALF_UP, NaN/Inf kept. */
+  def roundTo(d: Double, scale: Int): Double =
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) d
     else java.math.BigDecimal.valueOf(d)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** Spark `round(d, 6)`. */
+  def round6(d: Double): Double = roundTo(d, 6)
 
   /** Sequential left-fold dot over the common prefix — the
     * [[DotProduct]] contract, shared so encode can never drift. */

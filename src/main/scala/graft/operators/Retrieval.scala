@@ -2,11 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.types.StringType
 import graft.sources.Tables
-import graft.functions.{TextFns, VectorFns}
+import graft.functions.{TextFns, VecNative}
 
 /** Retrieval ranking over the `documents` corpus (SURVEY §2e/§2d) — the
   * query side the reference's IR datasets (CISI, wikIR — api.py's whole
@@ -23,13 +22,14 @@ import graft.functions.{TextFns, VectorFns}
   * probe doc, and candidates exclude the probe itself.
   *
   * Scale shape: everything query-sized (term sets, per-term idf, both
-  * ranked lists) is broadcast; the ONLY corpus-sized work is one
-  * tokenize scan for corpus stats and one explode whose output is
-  * filtered against the broadcast query vocabulary BEFORE the tf
-  * aggregate — so the shuffle carries query-term POSTINGS, not the
-  * corpus vocabulary. df comes from the same cached postings frame. At
-  * 100 TB with a fixed query set this is a semi-join-pruned scan plus
-  * postings-sized aggregates; nothing all-pairs, nothing vocab-wide.
+  * ranked lists, the fusion) lives on the driver; the ONLY corpus-sized
+  * work is one tokenize scan for corpus stats and one explode whose
+  * output is filtered against the literal query vocabulary BEFORE the
+  * tf aggregate — so the shuffle carries query-term POSTINGS, not the
+  * corpus vocabulary. df and the contributions come from two narrow
+  * passes over those postings (the BM25 core below). At 100 TB with a
+  * fixed query set this is a pruned scan plus postings-sized
+  * aggregates; nothing all-pairs, nothing vocab-wide.
   *
   * Cross-engine exactness (the proven §2e recipe): idf is a difference
   * of log2 over INTEGERS — the +0.5 Lucene smoothing is multiplied
@@ -51,49 +51,109 @@ object Retrieval {
   private[graft] val FuseK = 20 // per-system list depth feeding RRF
   private val RrfC = 60 // the standard RRF constant
 
-  /** The shared BM25 scoring tail: query-vocabulary postings
-    * (doc_id, dl, term, tf) + query term sets (qid, term) + corpus
-    * scalars → top-`k` (qid, rn, doc_id, score). Both the inline plan
-    * (postings semi-filtered BEFORE the tf aggregate) and the
-    * materialized-index plan ([[bm25Of]]) produce the same qposts
-    * relation on the query vocabulary, so sharing this tail makes their
-    * equality structural, not coincidental. Caller caches `qposts` — it
-    * feeds both the df aggregate and the candidate join. */
-  private def bm25Score(qposts: DataFrame, qterms: DataFrame,
-                        nDocs: Long, tToks: Long, k: Int): DataFrame = {
-    val dfreq = qposts.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val qidf = dfreq.join(qterms, "term") // both frames are query-sized
-      .select(col("qid"), col("term"),
-        round(log2(lit(2L * nDocs + 2L)) - log2(col("df") * 2L + lit(1L)), 8)
-          .as("idf"))
-    val contrib = qposts.join(broadcast(qidf), "term")
-      .filter(col("doc_id") =!= col("qid"))
-      .select(col("qid"), col("doc_id"),
-        round(col("idf") *
-          round((col("tf") * lit(22L * tToks)).cast("double") /
-            (col("tf") * lit(10L * tToks) + lit(3L * tToks) +
-              col("dl") * lit(9L * nDocs)).cast("double"), 8), 6).as("c"))
-    val scored = contrib.groupBy(col("qid"), col("doc_id"))
-      .agg(round(sum(col("c").cast("decimal(28,12)")).cast("double"), 4)
-        .as("score"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("qid"), col("rn"), col("doc_id"), col("score"))
-      .orderBy(col("qid"), col("rn"))
+  // ---- the BM25 serve core -------------------------------------------
+  // Every BM25 entry (the inline plans, the stored-index serve, the
+  // streaming hybrid serve) ranks through the same two Spark passes over
+  // the query-vocabulary postings (doc_id, dl, term, tf): a df pass that
+  // counts each batch term's postings per partition (no exchange), and a
+  // contribution pass that emits each (query, doc) pair's per-term
+  // contribution as exact DECIMAL(28,12) units, sums them in one
+  // groupBy(q, doc_id) — the pass's only exchange — and keeps a
+  // partition-local top list per query. The driver merges both passes
+  // (Similarity §3e5's `localTop`/`mergeTop`/`topkFrame`), so the answer
+  // is a local relation and no cache outlives the call. The arithmetic
+  // is the SQL twins' exactly (property-spec'd in Bm25ArithSpec).
+
+  /** A double as the unscaled value of Spark's `CAST(d AS DECIMAL(28,12))`. */
+  private[graft] def units12(d: Double): Long =
+    java.math.BigDecimal.valueOf(d).setScale(12, java.math.RoundingMode.HALF_UP)
+      .unscaledValue.longValueExact
+
+  /** `CAST(sum AS DOUBLE)` of a DECIMAL(·,12) sum held as units. */
+  private[graft] def fromUnits12(u: Long): Double =
+    java.math.BigDecimal.valueOf(u, 12).doubleValue
+
+  /** Spark's `log2`: StrictMath.log(x) / StrictMath.log(2). */
+  private def log2d(x: Long): Double = StrictMath.log(x.toDouble) / StrictMath.log(2)
+
+  /** idf = round(log2(2N+2) − log2(2·df+1), 8). */
+  private[graft] def bm25Idf(df: Long, nDocs: Long): Double =
+    VecNative.roundTo(log2d(2L * nDocs + 2L) - log2d(df * 2L + 1L), 8)
+
+  /** The tf factor, one exact-integer ratio divided as doubles:
+    * round(22·tf·T / (10·tf·T + 3·T + 9·dl·N), 8). The products overflow
+    * exactly where Spark's ANSI long arithmetic fails. */
+  private[graft] def bm25TfPart(tf: Long, dl: Long, nDocs: Long, tToks: Long): Double = {
+    import java.lang.Math.{addExact, multiplyExact}
+    val num = multiplyExact(tf, multiplyExact(22L, tToks))
+    val den = addExact(addExact(multiplyExact(tf, multiplyExact(10L, tToks)),
+      multiplyExact(3L, tToks)), multiplyExact(dl, multiplyExact(9L, nDocs)))
+    VecNative.roundTo(num.toDouble / den.toDouble, 8)
   }
 
-  /** [[bm25Score]] with cache lifecycle: materialize the query-sized
-    * result (≤ k rows/query), then RELEASE `qposts` — the serve paths
-    * run once per query batch in a long-lived session, and leaving a
-    * postings-sized cache behind per batch accumulates in executor
-    * storage memory. The returned frame stays cached (tiny); a caller
-    * serving unbounded batches owns unpersisting it when done. */
-  private def bm25ScoreReleasing(qposts: DataFrame, qterms: DataFrame,
-                                 nDocs: Long, tToks: Long, k: Int): DataFrame = {
-    val out = bm25Score(qposts, qterms, nDocs, tToks, k).cache()
-    out.count() // forces both qposts consumers (df agg + candidate join)
-    qposts.unpersist()
-    out
+  /** One posting's contribution round(idf · tf part, 6) as DECIMAL(28,12) units. */
+  private[graft] def bm25Contrib(idf: Double, tfPart: Double): Long =
+    units12(VecNative.roundTo(idf * tfPart, 6))
+
+  /** A pair's score from its summed contribution units: round(·, 4). */
+  private[graft] def bm25Score(units: Long): Double = VecNative.roundTo(fromUnits12(units), 4)
+
+  /** What a contribution task reads: the query ids, the corpus scalars,
+    * and per batch term its idf and the indices of the querying queries. */
+  private final case class Bm25Task(qids: Array[Long], nDocs: Long, tToks: Long,
+                                    terms: Map[String, (Double, Array[Int])])
+
+  /** The BM25 serve core: top-`k` (qid, rn, doc_id, score) per query of
+    * the (qid, term) batch `qterms` (duplicates allowed) over `qposts`,
+    * the postings of the batch vocabulary, as a local relation in
+    * (qid, rn) order; a query never ranks its own doc_id. */
+  private def bm25Core(qposts: DataFrame, qterms: Seq[(Long, String)],
+                       nDocs: Long, tToks: Long, k: Int): DataFrame = {
+    val spark = qposts.sparkSession
+    import spark.implicits._
+    val pairs = qterms.distinct
+    val qids = pairs.map(_._1).distinct.toIndexedSeq
+    val qIndex = qids.zipWithIndex.toMap
+    val lists =
+      if (pairs.isEmpty) Map.empty[Int, Seq[Similarity.Scored]]
+      else {
+        // df pass: per-partition term counts, summed on the driver
+        val df = qposts.select(col("term")).as[String]
+          .mapPartitions { terms =>
+            val n = scala.collection.mutable.HashMap.empty[String, Long]
+            terms.foreach(t => n(t) = n.getOrElse(t, 0L) + 1L)
+            n.iterator
+          }
+          .collect()
+          .groupMapReduce(_._1)(_._2)(_ + _)
+        val terms = pairs.groupMap(_._2)(p => qIndex(p._1)).collect {
+          case (t, qs) if df.contains(t) => t -> (bm25Idf(df(t), nDocs), qs.toArray)
+        }
+        val task = spark.sparkContext.broadcast(Bm25Task(qids.toArray, nDocs, tToks, terms))
+        val contrib = qposts
+          .select(col("doc_id").cast("long"), col("dl").cast("long"), col("term"),
+            col("tf").cast("long"))
+          .as[(Long, Long, String, Long)]
+          .mapPartitions { rows =>
+            val t = task.value
+            rows.flatMap { case (doc, dl, term, tf) =>
+              t.terms.get(term).iterator.flatMap { case (idf, qs) =>
+                val u = bm25Contrib(idf, bm25TfPart(tf, dl, t.nDocs, t.tToks))
+                qs.iterator.collect { case qi if t.qids(qi) != doc => (qi, doc, u) }
+              }
+            }
+          }
+        val top = contrib.toDF("q", "doc_id", "u")
+          .groupBy(col("q"), col("doc_id")).agg(sum(col("u")))
+          .as[(Int, Long, Long)]
+          .mapPartitions(rows => Similarity.localTop(
+            rows.map { case (q, doc, u) => (q, doc, bm25Score(u)) }, k))
+          .collect()
+        task.destroy()
+        Similarity.mergeTop(top, k)
+      }
+    Similarity.topkFrame(spark, qids, lists, "score")
+      .select(col("qid"), col("rn"), col("nid").as("doc_id"), col("score"))
   }
 
   /** BM25 top-`k` per probe query: (qid, rn, doc_id, score). */
@@ -109,12 +169,11 @@ object Retrieval {
   private def bm25RankedFrom(toks0: DataFrame, isQuery: org.apache.spark.sql.Column,
                              k: Int): DataFrame = {
     // TOKENIZE ONCE (r20 optimization, guide §1.2/§2.3): the tokenized
-    // frame has four consumers — the corpus-scalar aggregate, the query
-    // term sets (read twice: qvocab + the idf join), and the postings
-    // explode. Uncached, each consumer re-derived the full tokenize
-    // scan (the seg-token variant re-ran the whole segmentation chain
-    // per consumer — measured 7.1 s for text_bm25_topk_seg at sf0.1,
-    // ~3 full corpus passes); cached, the corpus is tokenized exactly
+    // frame has three consumers — the corpus-scalar aggregate, the query
+    // term sets and the postings explode. Uncached, each consumer
+    // re-derived the full tokenize scan (the seg-token variant re-ran
+    // the whole segmentation chain per consumer — measured 7.1 s for
+    // text_bm25_topk_seg at sf0.1, ~3 full corpus passes); cached, the corpus is tokenized exactly
     // once and released as soon as the query-sized result materializes
     // (the pipelineCurateOf precedent). The cache spills to disk past
     // storage memory; the production serve path remains the stored
@@ -126,29 +185,24 @@ object Retrieval {
     // (coalesce: an empty corpus yields T=0, not a NULL→getLong NPE);
     // this action also materializes the tokenize cache
     val st = toks.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head
-    val nDocs = st.getLong(0)
-    val tToks = st.getLong(1)
-    // query term sets: probe-doc rows of the cache, broadcast everywhere;
-    // cached because bm25Score's idf join reads them again beside qvocab
-    val qterms = toks.filter(isQuery)
-      .select(col("doc_id").as("qid"), explode(col("ts")).as("term"))
-      .distinct()
-      .cache()
-    val qvocab = qterms.select(col("term")).distinct()
-    // postings of query-vocabulary terms ONLY: the broadcast semi-filter
+    // query term sets: the probe-doc rows of the cache, on the driver
+    val qterms = termRows(toks.filter(isQuery)
+      .select(col("doc_id").as("qid"), explode(col("ts")).as("term")))
+    val vocab = qterms.map(_._2).distinct
+    // postings of query-vocabulary terms ONLY: the literal IN filter
     // runs before the tf aggregate, so the one corpus shuffle is
-    // postings-sized.
+    // postings-sized. Cached: the core's df and contribution passes
+    // both read it.
     val qposts = toks
       .select(col("doc_id"), col("dl"), explode(col("ts")).as("term"))
-      .join(broadcast(qvocab), "term")
+      .filter(if (vocab.isEmpty) lit(false) else col("term").isInCollection(vocab))
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
       .cache()
-    val out = bm25ScoreReleasing(qposts, qterms, nDocs, tToks, k)
-    // out is materialized (bm25ScoreReleasing counts it) — the corpus-
-    // sized tokenize cache and the query-sized term cache are done
+    val out = bm25Core(qposts, qterms, st.getLong(0), st.getLong(1), k)
+    // the answer is a local relation: both caches are done
+    qposts.unpersist()
     toks.unpersist()
-    qterms.unpersist()
     out
   }
 
@@ -256,20 +310,26 @@ object Retrieval {
     * restriction equals corpus df (the filter is on `term` alone), so
     * scores are bit-identical to the inline plan's. */
   def bm25Of(postings: DataFrame, stats: DataFrame, qterms: DataFrame,
-             k: Int): DataFrame =
-    bm25OfVocab(postings, stats, vocabOf(qterms), qterms, k)
+             k: Int): DataFrame = {
+    val st = stats.head
+    bm25OfTerms(postings, st.getLong(0), st.getLong(1), termRows(qterms), k)
+  }
 
-  /** A query batch's distinct terms, on the driver. The vocabulary is
-    * batch-sized (it already had to fit a broadcast). */
+  /** A (qid, term) batch on the driver — batch-sized (the vocabulary
+    * already had to fit a literal IN filter); duplicates are harmless. */
+  private def termRows(qterms: DataFrame): Seq[(Long, String)] = {
+    import qterms.sparkSession.implicits._
+    qterms.select(col("qid").cast("long"), col("term")).as[(Long, String)].collect().toSeq
+  }
+
+  /** A query batch's distinct terms, on the driver. */
   private def vocabOf(qterms: DataFrame): Seq[String] =
     qterms.select(col("term")).distinct().collect().map(_.getString(0)).toSeq
 
-  /** [[bm25Of]] over the batch's collected vocabulary `vocab`. */
-  private def bm25OfVocab(postings: DataFrame, stats: DataFrame, vocab: Seq[String],
-                          qterms: DataFrame, k: Int): DataFrame = {
-    val st = stats.head
-    val nDocs = st.getLong(0)
-    val tToks = st.getLong(1)
+  /** [[bm25Of]] over a collected batch and the corpus scalars. */
+  private def bm25OfTerms(postings: DataFrame, nDocs: Long, tToks: Long,
+                          qterms: Seq[(Long, String)], k: Int): DataFrame = {
+    val vocab = qterms.map(_._2).distinct
     // The vocabulary restriction is a LITERAL IN filter on the postings
     // scan (round 13 — was a broadcast join, which reaches every posting
     // file). Over the term-bucketed store ([[Postings]]) Spark prunes
@@ -279,8 +339,7 @@ object Retrieval {
     val qposts = (if (vocab.isEmpty) postings.filter(lit(false))
                   else postings.filter(col("term").isInCollection(vocab)))
       .select(col("doc_id"), col("dl"), col("term"), col("tf"))
-      .cache()
-    bm25ScoreReleasing(qposts, qterms, nDocs, tToks, k)
+    bm25Core(qposts, qterms, nDocs, tToks, k)
   }
 
   /** Incremental index maintenance — the `dedup_incremental` catalog
@@ -342,6 +401,26 @@ object Retrieval {
     store.bucketed.sparkSession.read.schema("n_docs BIGINT, t_toks BIGINT")
       .parquet(s"${store.gen}/stats")
 
+  /** (N, T) of committed postings generation dirs, least recently used
+    * first. A committed generation dir never changes, so its scalars
+    * stay valid; the bound keeps a serve loop over many generations
+    * small (the `Similarity.storedModel` memo). */
+  private val storedStats =
+    new java.util.LinkedHashMap[String, (Long, Long)](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, (Long, Long)]): Boolean =
+        size() > 8
+    }
+
+  private def storedScalars(store: Layout.ServeStore): (Long, Long) =
+    storedStats.synchronized {
+      Option(storedStats.get(store.gen)).getOrElse {
+        val st = statsOf(store).head
+        val nt = (st.getLong(0), st.getLong(1))
+        storedStats.put(store.gen, nt)
+        nt
+      }
+    }
+
   /** Term-bucket count of `dir`'s postings store. */
   private[graft] def postingsBuckets(spark: SparkSession, dir: String): Int =
     Postings.buckets(spark, dir)
@@ -351,17 +430,19 @@ object Retrieval {
   private[graft] def vocabBucketCoverage(qterms: DataFrame, nb: Int): Long =
     Layout.bucketsOf(vocabOf(qterms), StringType, nb).distinct.size.toLong
 
-  /** Adaptive stored-index serve: the batch vocabulary, collected once,
-    * picks the bucketed postings or their flat twin
-    * ([[Layout.ServeStore.pick]]) and becomes the literal IN filter of
-    * the postings scan. Answers are layout-invariant either way
+  /** Adaptive stored-index serve: the batch, collected once, picks the
+    * bucketed postings or their flat twin ([[Layout.ServeStore.pick]])
+    * by its vocabulary, which becomes the literal IN filter of the
+    * postings scan. Answers are layout-invariant either way
     * (require-gated in ScaleRetrieval, spec-asserted in RetrievalSpec);
-    * only the scan strategy moves. */
+    * only the scan strategy moves. The answer is a local relation;
+    * per batch the corpus scalars cost no read. */
   def bm25ServeStored(spark: SparkSession, dir: String, qterms: DataFrame,
                       k: Int): DataFrame = {
     val store = Postings.open(spark, dir)
-    val vocab = vocabOf(qterms)
-    bm25OfVocab(store.pick(vocab, StringType), statsOf(store), vocab, qterms, k)
+    val batch = termRows(qterms)
+    val (nDocs, tToks) = storedScalars(store)
+    bm25OfTerms(store.pick(batch.map(_._2).distinct, StringType), nDocs, tToks, batch, k)
   }
 
   /** The bm25 CTE stack, parameterized by list depth (shared with the
@@ -422,20 +503,30 @@ object Retrieval {
   /** Composable fusion over any materialized rank lists — (qid, id, rn)
     * frames — so production reuses per-system retrieval outputs instead
     * of recomputing them per fusion (the `splitLeakSafeOf` pattern).
-    * Contributions 1/(C+rank) are 8-dp-rounded doubles summed as
-    * DECIMAL(28,12) — identical rank lists fuse identically. */
+    * The lists are batch × depth sized, so they collect to the driver
+    * (no job for a local relation) and fuse there: contributions
+    * round(1/(C+rank), 8) summed as DECIMAL(28,12) units, rounded to 8
+    * dp — identical rank lists fuse identically. (qid, rn, id, rrf) by
+    * (rrf desc, id), a local relation in (qid, rn) order. */
   def rrfFuseOf(lists: Seq[DataFrame], k: Int): DataFrame = {
-    val both = lists.reduce(_ unionByName _)
-      .select(col("qid"), col("id"),
-        round(lit(1.0) / (col("rn") + lit(RrfC)), 8).as("c"))
-    val fused = both.groupBy(col("qid"), col("id"))
-      .agg(round(sum(col("c").cast("decimal(28,12)")).cast("double"), 8)
-        .as("rrf"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("rrf").desc, col("id"))
-    fused.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("qid"), col("rn"), col("id"), col("rrf"))
-      .orderBy(col("qid"), col("rn"))
+    val spark = lists.head.sparkSession
+    import spark.implicits._
+    val fused = lists.flatMap(_.select(col("qid").cast("long"), col("id").cast("long"),
+        col("rn").cast("int")).as[(Long, Long, Int)].collect())
+      .groupMapReduce(r => (r._1, r._2))(r => rrfTerm(r._3))(_ + _)
+    val qids = fused.keys.map(_._1).toIndexedSeq.distinct
+    val qIndex = qids.zipWithIndex.toMap
+    val scored = fused.map { case ((qid, id), u) => (qIndex(qid), id, rrfScore(u)) }.toArray
+    Similarity.topkFrame(spark, qids, Similarity.mergeTop(scored, k), "rrf")
+      .select(col("qid"), col("rn"), col("nid").as("id"), col("rrf"))
   }
+
+  /** One list's contribution round(1/(C+rn), 8) as DECIMAL(28,12) units. */
+  private[graft] def rrfTerm(rn: Int): Long =
+    units12(VecNative.roundTo(1.0 / (rn + RrfC).toDouble, 8))
+
+  /** A fused score from its summed units: round(·, 8). */
+  private[graft] def rrfScore(units: Long): Double = VecNative.roundTo(fromUnits12(units), 8)
 
   /** Hybrid retrieval: RRF over the BM25 and embedding-cosine lists
     * (depth [[FuseK]] each), fused top-[[K]]: (qid, rn, id, rrf). */
@@ -472,9 +563,9 @@ object Retrieval {
         .select(col("qid"), col("nid").as("id"), col("rn"))
         .write.parquet(s"$g/vec")
     }
-    rrfFuseOf(Seq(
-      spark.read.parquet(s"$base/text"),
-      spark.read.parquet(s"$base/vec")), K)
+    // read with the stored lists' schema: no inference job per fusion
+    rrfFuseOf(Seq("text", "vec").map(l =>
+      spark.read.schema("qid BIGINT, id BIGINT, rn INT").parquet(s"$base/$l")), K)
   }
 
   val hybridRrfOracle: String = s"""
@@ -516,10 +607,7 @@ object Retrieval {
     * replication recipe from round 18): BigDecimal.valueOf + HALF_UP,
     * NaN/Infinity passed through — property-spec'd against the Round
     * expression in MmrGreedySpec. */
-  private[graft] def mmrRound6(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  private[graft] def mmrRound6(x: Double): Double = VecNative.round6(x)
 
   /** Spark-exact `dot6` (the [[graft.functions.DotProduct]] sequential
     * left fold, then [[mmrRound6]]) — same summation order, bit-identical. */

@@ -124,11 +124,15 @@ object Similarity {
 
   /** Composable exact-cosine top-`k`: any (qid, qvec) unit-vector query
     * batch against any (vec_id, vec) store — the brute-force leg shared
-    * by [[cosineRanked]] and the streaming hybrid serve. Queries
-    * broadcast against the ONE corpus-sized scan; a stored query id
-    * never matches itself (the gated self-exclusion). */
-  def cosineRankedOf(qs: DataFrame, vecs: DataFrame, k: Int): DataFrame =
-    rankCut(scanProbed(vecs, qs, exactDot, "cos"), k = k)
+    * by [[cosineRanked]] and the streaming hybrid serve. The batch is
+    * collected once and scored in ONE narrow pass over the store
+    * ([[scorePass]], §3e5), a stored query id never matching itself (the
+    * gated self-exclusion); (qid, nid, cos, rn) as a local relation. */
+  def cosineRankedOf(qs: DataFrame, vecs: DataFrame, k: Int): DataFrame = {
+    val rows = queryRows(qs)
+    topkFrame(vecs.sparkSession, rows.map(_._1),
+      if (rows.isEmpty) Map.empty else scorePass(vecs, rows, None, k), "cos")
+  }
 
   def topkBruteforce(spark: SparkSession, dir: String): DataFrame =
     cosineRanked(spark, dir, NQueries, K)
@@ -1630,7 +1634,7 @@ object Similarity {
   }
 
   /** (query index, id, score). */
-  private type Scored = (Int, Long, Double)
+  private[operators] type Scored = (Int, Long, Double)
 
   /** The IVFPQ serve core: (qid, nid, adc, rn) by ADC, or with
     * `refine` (qid, nid, cos, rn) by exact cosine over the ADC
@@ -1642,8 +1646,8 @@ object Similarity {
       if (model.books.isEmpty || qs.isEmpty) Map.empty[Int, Seq[Scored]]
       else adcPass(model, codes, qs, if (refine.isEmpty) K else K * RefineFactor)
     refine match {
-      case None => topkFrame(codes.sparkSession, qs, adc, "adc")
-      case Some(src) => topkFrame(codes.sparkSession, qs, refinePass(src, qs, adc), "cos")
+      case None => topkFrame(codes.sparkSession, qs.map(_._1), adc, "adc")
+      case Some(src) => topkFrame(codes.sparkSession, qs.map(_._1), refinePass(src, qs, adc), "cos")
     }
   }
 
@@ -1726,10 +1730,6 @@ object Similarity {
     mergeTop(top, keep)
   }
 
-  /** What a refine task reads: the query vectors, and per candidate id
-    * the indices of the queries it is a candidate of. */
-  private final case class RefineTask(qvecs: Array[Array[Double]], byId: Map[Long, Array[Int]])
-
   /** The exact refine (faiss IndexRefineFlat) over ANY score-limited
     * candidate generator: re-score each query's candidates against true
     * vectors, keep its best K by (cos desc, id). The quantizer only
@@ -1760,30 +1760,54 @@ object Similarity {
       }
     val byId = cands.toSeq.flatMap { case (qi, rs) => rs.map(r => (r._2, qi)) }
       .groupBy(_._1).map { case (id, hits) => id -> hits.map(_._2).toArray }
-    val task = spark.sparkContext.broadcast(RefineTask(qs.map(_._2).toArray, byId))
-    val top = pruned.select(col("vec_id").cast("long"), col("vec"))
+    scorePass(pruned, qs, Some(byId), K)
+  }
+
+  /** What a scoring task reads: the query ids and vectors, and, for a
+    * refine, per candidate id the indices of the queries it is a
+    * candidate of (None: every row is a candidate of every query). */
+  private final case class ScoreTask(qids: Array[Long], qvecs: Array[Array[Double]],
+                                     byId: Option[Map[Long, Array[Int]]])
+
+  /** The exact-cosine scoring pass shared by [[cosineRankedOf]] and
+    * [[refinePass]]: one narrow scan of a (vec_id, vec) frame, each row
+    * scored against its queries with `dot6` (the sequential
+    * [[VecNative.dot]] fold, then Spark's round(·, 6)), a query never
+    * scoring its own id; each query's best `keep` by (cos desc, id),
+    * partition-local top lists merged on the driver. No exchange. */
+  private def scorePass(vecs: DataFrame, qs: IndexedSeq[(Long, Array[Double])],
+                        byId: Option[Map[Long, Array[Int]]],
+                        keep: Int): Map[Int, Seq[Scored]] = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val task = spark.sparkContext.broadcast(
+      ScoreTask(qs.map(_._1).toArray, qs.map(_._2).toArray, byId))
+    val top = vecs.select(col("vec_id").cast("long"), col("vec"))
       .as[(Long, Array[Double])]
       .mapPartitions { rows =>
         val t = task.value
+        val everyQuery = t.qids.indices.toArray
         localTop(rows.flatMap { case (id, v) =>
-          t.byId.getOrElse(id, Array.empty[Int]).iterator
-            .map(qi => (qi, id, VecNative.round6(VecNative.dot(t.qvecs(qi), v))))
-        }, K)
+          t.byId.fold(everyQuery)(_.getOrElse(id, Array.empty[Int])).iterator
+            .collect { case qi if t.qids(qi) != id =>
+              (qi, id, VecNative.round6(VecNative.dot(t.qvecs(qi), v)))
+            }
+        }, keep)
       }
       .collect()
     task.destroy()
-    mergeTop(top, K)
+    mergeTop(top, keep)
   }
 
   /** Best first: score desc under Spark's double ordering, then id —
     * the rank cut's (score desc, nid) order. */
-  private val bestFirst: Ordering[Scored] = (a, b) => {
+  private[operators] val bestFirst: Ordering[Scored] = (a, b) => {
     val c = SQLOrderingUtil.compareDoubles(b._3, a._3)
     if (c != 0) c else java.lang.Long.compare(a._2, b._2)
   }
 
   /** Each query's best `keep` rows among `rows`. */
-  private def localTop(rows: Iterator[Scored], keep: Int): Iterator[Scored] = {
+  private[operators] def localTop(rows: Iterator[Scored], keep: Int): Iterator[Scored] = {
     val worstFirst = scala.collection.mutable.HashMap.empty[Int, java.util.PriorityQueue[Scored]]
     rows.foreach { r =>
       val h = worstFirst.getOrElseUpdate(r._1, new java.util.PriorityQueue[Scored](bestFirst.reverse))
@@ -1795,17 +1819,17 @@ object Similarity {
 
   /** The driver merge of partition-local top lists: each query's best
     * `keep`, best first. */
-  private def mergeTop(rows: Array[Scored], keep: Int): Map[Int, Seq[Scored]] =
+  private[operators] def mergeTop(rows: Array[Scored], keep: Int): Map[Int, Seq[Scored]] =
     rows.groupBy(_._1).map { case (q, rs) => q -> rs.sorted(bestFirst).take(keep).toSeq }
 
   /** Ranked lists as the rank cut's (qid, nid, `score`, rn) rows in
-    * (qid, rn) order — a local relation. */
-  private def topkFrame(spark: SparkSession, qs: IndexedSeq[(Long, Array[Double])],
-                        lists: Map[Int, Seq[Scored]], score: String): DataFrame = {
+    * (qid, rn) order — a local relation; `qids` maps query indices. */
+  private[operators] def topkFrame(spark: SparkSession, qids: IndexedSeq[Long],
+                                   lists: Map[Int, Seq[Scored]], score: String): DataFrame = {
     import spark.implicits._
     lists.toSeq
       .flatMap { case (qi, rs) =>
-        rs.zipWithIndex.map { case ((_, id, v), i) => (qs(qi)._1, id, v, i + 1) }
+        rs.zipWithIndex.map { case ((_, id, v), i) => (qids(qi), id, v, i + 1) }
       }
       .sortBy(r => (r._1, r._4))
       .toDF("qid", "nid", score, "rn")

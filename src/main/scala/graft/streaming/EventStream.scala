@@ -716,50 +716,50 @@ object EventStream {
   /** ONLINE HYBRID RETRIEVAL SERVING (round 13): one micro-batch of
     * [[hybridServeStream]], callable directly so batch-twin equality and
     * crash-retry idempotence are spec-testable — the streaming twin of
-    * `sim_hybrid_rrf` over the STORED index pair. Each micro-batch of
-    * (qid, text, embedding) query rows is answered by the same two legs
-    * the batch entry ranks with — BM25 depth-[[graft.operators.Retrieval.FuseK]]
+    * `sim_hybrid_rrf` over the STORED postings and vector stores. Each
+    * micro-batch of (qid, text, embedding) query rows is answered by the
+    * same two legs the batch entry ranks with — BM25 depth-[[graft.operators.Retrieval.FuseK]]
     * over the term-BUCKETED postings store (the batch's literal
     * vocabulary IN filter prunes to ≤ |vocab| buckets) and exact cosine
-    * depth-FuseK over the embedding store (queries broadcast against
-    * the one corpus-sized scan) — fused by the shared `rrfFuseOf` fold.
-    * Same tokenizer, same normalization, same fusion arithmetic, so a
-    * corpus query streams to bit-identical fused lists (spec).
+    * depth-FuseK over the vector store's flat twin (the normalized
+    * `emb` rows, read with the registered table's schema) — fused by the
+    * shared `rrfFuseOf` fold. Same tokenizer, same normalization, same
+    * fusion arithmetic, so a corpus query streams to bit-identical fused
+    * lists (spec).
     *
-    * Scale shape: per batch the corpus-sized inputs are one pruned
-    * postings read and one embedding scan; everything else (vocabulary,
-    * query vectors, rank lists, fusion) is batch-sized. ZERO state-store
-    * rows — both stores are read-only shared state, maintained out of
-    * band by `bm25IndexMerge`/`ivfPqIndexMerge`. Results land
-    * batchId-keyed (idempotent overwrite, the [[annServeStream]]
-    * contract). */
+    * Scale shape: per batch the corpus-sized inputs are two pruned
+    * postings scans (the BM25 core's df and contribution passes) and one
+    * vector scan; everything else (the batch, its vocabulary, query
+    * vectors, rank lists, fusion) is batch-sized and on the driver, so
+    * each leg answers with a local relation and nothing is cached. ZERO
+    * state-store rows — both stores are read-only shared state,
+    * maintained out of band by `bm25IndexMerge`/`ivfPqIndexMerge`.
+    * Results land batchId-keyed (idempotent overwrite, the
+    * [[annServeStream]] contract). */
   def hybridServeBatch(batch: DataFrame, batchId: Long, corpusDir: String,
                        outPath: String, k: Int): Unit = {
     val sp = batch.sparkSession
     import graft.functions.{TextFns, VectorFns}
     import graft.operators.{Retrieval, Similarity}
-    // text leg: the query's distinct term set (same tokenizer the
-    // postings were built with) against the stored index — the
-    // ADAPTIVE serve, so a typical short-query batch takes the
-    // bucket-pruned scan and an adversarially broad one the flat view
+    // text leg: the query's term set (same tokenizer the postings were
+    // built with; the core drops repeated terms on the driver) against
+    // the stored index — the ADAPTIVE serve, so a typical short-query
+    // batch takes the bucket-pruned scan and an adversarially broad one
+    // the flat view
     val qterms = batch
       .select(col("qid"), explode(TextFns.tokens(col("text"))).as("term"))
-      .distinct()
-    val bm25 = Retrieval.bm25ServeStored(sp, corpusDir, qterms, Retrieval.FuseK)
-    val textList = bm25.select(col("qid"), col("doc_id").as("id"), col("rn"))
+    val textList = Retrieval.bm25ServeStored(sp, corpusDir, qterms, Retrieval.FuseK)
+      .select(col("qid"), col("doc_id").as("id"), col("rn"))
     // vector leg: normalize exactly like the batch reader, then the
-    // shared brute-force-cosine tail against the embedding store
+    // shared brute-force-cosine pass over the vector store
     val qs = batch
       .select(col("qid"), VectorFns.asDouble(col("embedding")).as("raw"))
       .withColumn("__n", VectorFns.norm(col("raw")))
       .select(col("qid"), VectorFns.normalize(col("raw"), col("__n")).as("qvec"))
     val vecList = Similarity
-      .cosineRankedOf(qs, Similarity.emb(sp, corpusDir), Retrieval.FuseK)
+      .cosineRankedOf(qs, Similarity.vecStoreFlatView(sp, corpusDir), Retrieval.FuseK)
       .select(col("qid"), col("nid").as("id"), col("rn"))
     BatchCatalog.write(Retrieval.rrfFuseOf(Seq(textList, vecList), k), outPath, batchId)
-    // the BM25 leg comes back cached (query-sized); a forever-running
-    // serve releases it per batch or entries accumulate
-    bm25.unpersist()
   }
 
   /** Ingest-time SUB-DOCUMENT scrubbing against a growing SPAN catalog —

@@ -107,6 +107,14 @@ class HarnessSpec extends AnyFunSuite {
           val (a, _) = twoRuns(query)
           assert(a.jobs <= jobs && a.inputBytes > 0, s"$query: $a")
         }
+      // the BM25 serve core's batch collect, df pass and contribution
+      // pass, and, for the hybrid, the cosine pass over the embeddings
+      // and the inline BM25 leg's tokenize passes
+      Seq("text_bm25_topk_indexed" -> 6, "sim_hybrid_rrf" -> 15)
+        .foreach { case (query, jobs) =>
+          val (a, _) = twoRuns(query)
+          assert(a.jobs <= jobs && a.inputBytes > 0, s"$query: $a")
+        }
     } finally spark.sparkContext.removeSparkListener(counters)
   }
 
@@ -135,6 +143,38 @@ class HarnessSpec extends AnyFunSuite {
       val c = counters("ann#1")
       // ADC map stage + ADC result, refine scan, batch write
       assert(c.jobs >= 1 && c.jobs <= 5, s"annServeBatch: $c")
+    } finally spark.sparkContext.removeSparkListener(counters)
+    assert(spark.read.parquet(s"$out/batch-1").count() == 8 * 5)
+  }
+
+  test("hybridServeBatch serves a warm query batch in at most 6 Spark jobs") {
+    val sf = "/root/testdata/sf0.001"
+    import spark.implicits._
+    val out = Files.createTempDirectory("hybjobs_out").toString
+    // foreign ids, as a served batch has: the corpus text and vectors of 0..7
+    val batch = graft.sources.Tables.documents(spark, sf).filter($"doc_id" < 8)
+      .select($"doc_id", $"text")
+      .join(graft.sources.Tables.embeddings(spark, sf).select($"vec_id", $"embedding"),
+        $"doc_id" === $"vec_id")
+      .select(($"doc_id" + 10000000L).as("qid"), $"text", $"embedding")
+      .as[(Long, String, Seq[Float])].collect().toSeq.toDF("qid", "text", "embedding")
+    val counters = new Bench.GroupCounters
+    spark.sparkContext.addSparkListener(counters)
+    def serve(group: String, batchId: Long): Unit = {
+      spark.sparkContext.setJobGroup(group, group)
+      try graft.streaming.EventStream.hybridServeBatch(batch, batchId, sf, out, 5)
+      finally spark.sparkContext.clearJobGroup()
+    }
+    try {
+      // the warm-up call opens the postings and vector stores and reads
+      // the corpus scalars
+      serve("hyb#warm", 0L)
+      serve("hyb#1", 1L)
+      org.apache.spark.sql.graft.ListenerBridge.drain(spark.sparkContext)
+      val c = counters("hyb#1")
+      // batch terms collect, BM25 df pass, BM25 contribution pass (map
+      // stage + result), cosine pass, batch write
+      assert(c.jobs >= 1 && c.jobs <= 6, s"hybridServeBatch: $c")
     } finally spark.sparkContext.removeSparkListener(counters)
     assert(spark.read.parquet(s"$out/batch-1").count() == 8 * 5)
   }

@@ -181,20 +181,26 @@ class RetrievalSpec extends AnyFunSuite {
     assert(Retrieval.vocabBucketCoverage(q1, nb) == sparkCoverage(q1))
     assert(Retrieval.vocabBucketCoverage(qAll, nb) == sparkCoverage(qAll))
 
+    // the serve answers with a local relation: its postings scans live
+    // in the executed plans of the passes it ran
+    def servePlans(q: org.apache.spark.sql.DataFrame) = {
+      val (out, ran) = org.apache.spark.sql.graft.ListenerBridge.withQueries(spark)(
+        Retrieval.bm25ServeStored(spark, sf, q, 5))
+      (out, ran.map(_._2.executedPlan.toString).mkString("\n"))
+    }
+
     // narrow branch: the executed plan reads 1 of the nb bucket files
-    val narrow = Retrieval.bm25ServeStored(spark, sf, q1, 5)
-    narrow.collect()
-    assert(narrow.queryExecution.executedPlan.toString
-      .contains(s"SelectedBucketsCount: 1 out of $nb"),
+    val (_, narrowPlan) = servePlans(q1)
+    assert(narrowPlan.contains(s"SelectedBucketsCount: 1 out of $nb"),
       "narrow-vocab serve should take the pruned bucketed scan")
 
     // broad branch: same files through the flat view — no bucket
     // metadata in the plan, bit-identical answers to the bucketed serve
-    val broad = Retrieval.bm25ServeStored(spark, sf, qAll, 5)
+    val (broad, broadPlan) = servePlans(qAll)
     val broadRows = broad
       .select($"qid", $"rn", $"doc_id", $"score")
       .as[(Long, Int, Long, Double)].collect().toSet
-    assert(!broad.queryExecution.executedPlan.toString.contains("SelectedBucketsCount"),
+    assert(!broadPlan.contains("SelectedBucketsCount"),
       "broad-vocab serve should bypass the bucketed table")
     val viaBucketed = Retrieval.bm25Of(postings, stats, qAll, 5)
       .select($"qid", $"rn", $"doc_id", $"score")

@@ -1107,10 +1107,9 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("hybrid serve batches release their caches: persistent RDDs stay at the starting count") {
-    // a forever-running serve must not grow the session per batch: the
-    // BM25 leg comes back cached and is released after the write, and
-    // each serve store registers one catalog table per generation, not
-    // one per batch
+    // a forever-running serve must not grow the session per batch: each
+    // leg answers with an uncached local relation, and each serve store
+    // registers one catalog table per generation, not one per batch
     val raw = graft.sources.Tables.documents(spark, sf).filter($"doc_id" < 3)
       .select($"doc_id", $"text")
       .join(graft.sources.Tables.embeddings(spark, sf).filter($"vec_id" < 3)
@@ -1125,7 +1124,13 @@ class StreamingSpec extends AnyFunSuite {
       "hybridServeBatch" -> (b => EventStream.hybridServeBatch(
         raw.toDF("qid", "text", "embedding"), b, sf, hybridOut, 5)),
       "annServeBatch" -> (b => EventStream.annServeBatch(
-        raw.map(r => (r._1, r._3)).toDF("vec_id", "embedding"), b, base, annOut, Some(sf))))
+        raw.map(r => (r._1, r._3)).toDF("vec_id", "embedding"), b, base, annOut, Some(sf))),
+      // the BM25 leg on its own, its answer read and then dropped
+      // without an unpersist, as a caller that only ranks does
+      "bm25ServeStored" -> (_ => graft.operators.Retrieval.bm25ServeStored(spark, sf,
+        raw.map(r => (r._1, r._2)).toDF("qid", "text")
+          .select($"qid", explode(graft.functions.TextFns.tokens($"text")).as("term")), 5)
+        .collect()))
     def storeTables(prefix: String): Int =
       spark.catalog.listTables().collect().count(_.name.startsWith(prefix))
     def state(): (Int, Int, Int) = (spark.sparkContext.getPersistentRDDs.size,

@@ -59,16 +59,22 @@ object VecNative {
   def cosine6(a: Array[Double], b: Array[Double]): Double =
     round6(dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))))
 
-  /** A 6-dp double as DECIMAL(18,6) micro-units — the exact value
-    * Spark's `CAST(d AS DECIMAL(18,6))` holds. */
-  def micros(d: Double): Long =
-    java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP)
+  /** A double as the unscaled value Spark's `CAST(d AS DECIMAL(·,scale))`
+    * holds. */
+  def units(d: Double, scale: Int): Long =
+    java.math.BigDecimal.valueOf(d).setScale(scale, java.math.RoundingMode.HALF_UP)
       .unscaledValue.longValueExact
+
+  /** `CAST(sum AS DOUBLE)` of a DECIMAL(·,scale) sum held as units. */
+  def fromUnits(u: Long, scale: Int): Double =
+    java.math.BigDecimal.valueOf(u, scale).doubleValue
+
+  /** A 6-dp double as DECIMAL(18,6) micro-units. */
+  def micros(d: Double): Long = units(d, 6)
 
   /** Spark's `round(CAST(sum AS DOUBLE), 6)` of a DECIMAL(·,6) sum
     * held as micro-units. */
-  def fromMicros(u: Long): Double =
-    round6(java.math.BigDecimal.valueOf(u, 6).doubleValue)
+  def fromMicros(u: Long): Double = round6(fromUnits(u, 6))
 
   /** 1-based first-position argmin of round((v·v + c·c) - 2*(v·c), 6)
     * over the codebook — the pqD2 assignment rule. Empty codebook → 0

@@ -65,13 +65,10 @@ object Retrieval {
   // is the SQL twins' exactly (property-spec'd in Bm25ArithSpec).
 
   /** A double as the unscaled value of Spark's `CAST(d AS DECIMAL(28,12))`. */
-  private[graft] def units12(d: Double): Long =
-    java.math.BigDecimal.valueOf(d).setScale(12, java.math.RoundingMode.HALF_UP)
-      .unscaledValue.longValueExact
+  private[graft] def units12(d: Double): Long = VecNative.units(d, 12)
 
   /** `CAST(sum AS DOUBLE)` of a DECIMAL(·,12) sum held as units. */
-  private[graft] def fromUnits12(u: Long): Double =
-    java.math.BigDecimal.valueOf(u, 12).doubleValue
+  private[graft] def fromUnits12(u: Long): Double = VecNative.fromUnits(u, 12)
 
   /** Spark's `log2`: StrictMath.log(x) / StrictMath.log(2). */
   private def log2d(x: Long): Double = StrictMath.log(x.toDouble) / StrictMath.log(2)

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.ListenerBridge
 import graft.functions.TextFns
 import graft.operators.Retrieval
 
@@ -134,12 +135,15 @@ object ScaleRetrieval {
     // (plan-asserted), the flat copy filters every posting file
     val term1 = postings.select(col("term")).head.getString(0)
     val q1 = Seq((9999999L, term1)).toDF("qid", "term")
-    val servedB = Retrieval.bm25Of(postings, stats, q1, 5)
+    // the serve answers with a local relation: its postings scans live
+    // in the executed plans of the passes it ran
+    def passPlans(ran: Seq[(String, org.apache.spark.sql.execution.QueryExecution)]): String =
+      ran.map(_._2.executedPlan.toString).mkString("\n")
     val tb1 = System.nanoTime()
+    val (servedB, passesB) = ListenerBridge.withQueries(spark)(Retrieval.bm25Of(postings, stats, q1, 5))
     val rb = servedB.collect().toSet
     val wallB = (System.nanoTime() - tb1) / 1e9
-    val planStr = servedB.queryExecution.executedPlan.toString
-    require(planStr.contains(s"SelectedBucketsCount: 1 out of $nb"),
+    require(passPlans(passesB).contains(s"SelectedBucketsCount: 1 out of $nb"),
       "single-term serve did not prune to 1 bucket")
     spark.catalog.clearCache()
     val tb2 = System.nanoTime()
@@ -159,7 +163,7 @@ object ScaleRetrieval {
     // ≤ cov of nb buckets. (The flat-view decision branch stays gated
     // at the natural-vocab sf0.001 corpus in RetrievalSpec.)
     // vocabulary derived from the flat copy so the require below sees
-    // only the SERVE's own postings scan in the plan
+    // only the SERVE's own postings scans in the passes' plans
     val qa = postingsFlat.filter(col("doc_id") < 5L)
       .select(col("doc_id").as("qid"), col("term"))
     val cov = Retrieval.vocabBucketCoverage(qa, nb)
@@ -167,11 +171,12 @@ object ScaleRetrieval {
       s"synthetic vocab should cover a minority of the derived layout: $cov of $nb buckets")
     require(Retrieval.vocabBucketCoverage(q1, nb) == 1L, "1-term vocab must cover 1 bucket")
     val tA = System.nanoTime()
-    val servedA = Retrieval.bm25ServeStored(spark, dir, qa, 5)
+    val (servedA, passesA) = ListenerBridge.withQueries(spark)(
+      Retrieval.bm25ServeStored(spark, dir, qa, 5))
     val rA = servedA.agg(count(lit(1)), sum(col("score"))).first()
     val wallA = (System.nanoTime() - tA) / 1e9
     val selA = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-      .findFirstMatchIn(servedA.queryExecution.executedPlan.toString)
+      .findFirstMatchIn(passPlans(passesA))
     require(selA.nonEmpty,
       "minority-coverage adaptive serve should have taken the pruned bucketed scan")
     require(selA.get.group(1).toLong <= cov && selA.get.group(2).toInt == nb,
